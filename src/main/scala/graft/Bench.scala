@@ -9,6 +9,9 @@ import scala.collection.immutable.ListMap
   * every operator and projection executes (a bare .count() would let
   * Catalyst prune compute columns). Failures are recorded per query in an
   * `errors` map instead of being silently folded into the total.
+  * Catalog rows that cannot run here (the corpus-dependent rows while the
+  * reference metadata corpus is absent) are not timed; they are listed
+  * under `unavailable` with the reason instead.
   */
 object Bench {
 
@@ -101,12 +104,16 @@ object Bench {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    val byName = Queries.catalog.map { case (n, fn, _) => n -> fn }.toMap ++ Queries.benchExtra
+    val byName = SparkEntry.queries ++ Queries.benchExtra
     // optional dev filter: `runMain graft.Bench name1,name2` times just
     // those queries (same shape as Verify's filter)
     val filter = args.headOption.map(_.split(',').map(_.trim).filter(_.nonEmpty).toSet)
-    val names = Queries.benchNames.filter(byName.contains)
+    val unavailable: Map[String, String] =
+      Queries.catalog.flatMap(e => e.unavailableReason.map(e.name -> _)).toMap
+    val (skipped, names) = Queries.benchNames.filter(byName.contains)
       .filter(n => filter.forall(_.contains(n)))
+      .partition(unavailable.contains)
+    skipped.foreach(n => System.err.println(s"[bench] $n unavailable: ${unavailable(n)}"))
     // untimed warmup: initializes parquet reader, codegen, and the noop
     // committer so the first timed query measures the query, not JVM
     // startup (reads one row, not the dataset)
@@ -181,6 +188,7 @@ object Bench {
       "\"" + esc(k) + "\":[" + l.map(x => f"$x%.2f").mkString(",") + "]"
     }.mkString("{", ",", "}")
     val es = errors.map { case (k, v) => "\"" + esc(k) + "\":\"" + esc(v) + "\"" }.mkString("{", ",", "}")
+    val us = skipped.map(k => "\"" + esc(k) + "\":\"" + esc(unavailable(k)) + "\"").mkString("{", ",", "}")
     val total = results.map(_._2._1.min).sum
     // controls block: raw start/end seconds, the recorded baselines,
     // and the drift ratio (geometric mean of sec/baseline across the
@@ -204,7 +212,7 @@ object Bench {
     spark.stop()
     // Full artifact first (complete per-query mins + raw runs + load
     // samples) for any consumer capturing whole stdout...
-    val fullJson = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"runs":$rs,"load":$ls,"controls":$ctl,"load_avg_before":$loadBefore,"load_avg_after":$loadAfter,"errors":$es,"sf":"$sfDir"}"""
+    val fullJson = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"runs":$rs,"load":$ls,"controls":$ctl,"load_avg_before":$loadBefore,"load_avg_after":$loadAfter,"errors":$es,"unavailable":$us,"sf":"$sfDir"}"""
     println(fullJson)
     // ...and the same artifact as a SIDECAR FILE (launcher-independent
     // machine-readable contract: BENCH_r01..r18 all record parsed=null
@@ -233,7 +241,8 @@ object Bench {
     // above) — a handful of 200-char messages would blow the 2000-byte
     // tail budget this line exists to respect
     val errNames = errors.keys.take(10).map(k => "\"" + esc(k) + "\"").mkString("[", ",", "]")
+    val unavailableNames = skipped.take(10).map(k => "\"" + esc(k) + "\"").mkString("[", ",", "]")
     val driftCompact = drift(controlsEnd).map(d => f"$d%.2f").getOrElse("null")
-    println(s"""{"metric":"total","value":${f"$total%.2f"},"unit":"sec","n":${results.size},"error_count":${errors.size},"errored":$errNames,"drift":$driftCompact,"top_slowest":$topJson,"sf":"$sfDir"}""")
+    println(s"""{"metric":"total","value":${f"$total%.2f"},"unit":"sec","n":${results.size},"error_count":${errors.size},"errored":$errNames,"unavailable":$unavailableNames,"drift":$driftCompact,"top_slowest":$topJson,"sf":"$sfDir"}""")
   }
 }

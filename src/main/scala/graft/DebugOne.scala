@@ -23,8 +23,7 @@ object DebugOne {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    val fn = Queries.catalog.collectFirst { case (`name`, f, _) => f }
-      .getOrElse(sys.error(s"unknown query $name"))
+    val fn = SparkEntry.queries.getOrElse(name, sys.error(s"unknown query $name"))
     val df = fn(spark, sfDir)
     if (args.contains("explain")) df.explain("formatted")
     df.show(20, truncate = false)

@@ -49,8 +49,7 @@ object ProfilePhases {
       Dedup.simHashCandidates(docs, maxDistance = 16, bands = 8, maxBucketSize = 1000)
     }
     bench("full simhash_near_dups") {
-      Queries.catalog.collectFirst { case ("simhash_near_dups", f, _) => f }
-        .get(spark, sfDir)
+      SparkEntry.queries("simhash_near_dups")(spark, sfDir)
     }
     // pass-level attribution inside candidate generation: rebuild the
     // banded frame exactly as Dedup.bandedSlices does and time each

@@ -34,7 +34,7 @@ object ProfileQuery {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     Files.createDirectories(Paths.get(planDir))
-    val byName = Queries.catalog.map { case (n, fn, _) => n -> fn }.toMap ++ Queries.benchExtra
+    val byName = SparkEntry.queries ++ Queries.benchExtra
     // same warmup as Bench: parquet reader + codegen + noop committer
     try spark.read.parquet(s"$sfDir/region.parquet").limit(1)
       .write.mode("overwrite").format("noop").save()

@@ -5094,197 +5094,242 @@ items:
 
   // ------------------------------------------------------------------ registry
 
-  /** name -> (query, oracle SQL or None). Ordered for stable bench diffs. */
-  val catalog: Seq[(String, (SparkSession, String) => DataFrame, Option[String])] = Seq(
-    ("q1_agg", q1Agg _, Some(q1Sql)),
-    ("b1_clean", b1Clean _, Some(b1Sql)),
-    ("b2_replace", b2Replace _, Some(b2Sql)),
-    ("b4_cast", b4Cast _, Some(b4Sql)),
-    ("b5_union", b5Union _, Some(b5Sql)),
-    ("c1c2_literals", c1c2Literals _, Some(c1c2Sql)),
-    ("c6_order", c6Order _, Some(c6Sql)),
-    ("c7_numeric", c7Numeric _, Some(c7Sql)),
-    ("c8_categorical", c8Categorical _, Some(c8Sql)),
-    ("c9_filter", c9Filter _, Some(c9Sql)),
-    ("c10_groupby_sum", c10GroupbySum _, Some(c10SumSql)),
-    ("agg_rollup", aggRollup _, Some(aggRollupSql)),
-    ("agg_cube", aggCube _, Some(aggCubeSql)),
-    ("window_funcs", windowFuncs _, Some(windowFuncsSql)),
-    ("c10_melt", c10Melt _, Some(c10MeltSql)),
-    ("c12_join", c12Join _, Some(c12Sql)),
-    ("c13_members", c13Members _, Some(c13Sql)),
-    ("c14_equivalence", c14Equivalence _, Some(c14Sql)),
-    ("c15_season", c15Season _, Some(c15Sql)),
-    ("d1_classification", d1Classification _, Some(d1Sql)),
-    ("d1_expr_classification", d1ExprClassification _, Some(d1Sql)),
-    ("d1_real_commodities", d1RealCommodities _, Some(d1RealSql)),
-    ("d1_golden_commodities", d1GoldenCommodities _, Some(d1GoldenSql)),
-    ("d1_golden_occupations", d1GoldenOccupations _, Some(d1GoldenOccSql)),
-    ("d2_attribute", d2Attribute _, Some(d2Sql)),
-    ("e5_select", e5Select _, Some(e5Sql)),
-    ("e16_geo", e16Geo _, Some(e16Sql)),
-    ("e16_geo_region", e16GeoRegion _, Some(e16RegionSql)),
-    ("d2_county_external", d2CountyExternal _, Some(d2CountySql)),
-    ("a1_csv_roundtrip", a1CsvRoundtrip _, Some(a1Sql)),
-    ("a3_http_parquet", a3HttpParquet _, Some(a3Sql)),
-    ("jsonl_roundtrip", jsonlRoundtrip _, Some(jsonlSql)),
-    ("orc_roundtrip", orcRoundtrip _, Some(jsonlSql)),
-    ("zorder_roundtrip", zorderRoundtrip _, Some(zorderSql)),
-    ("compact_roundtrip", compactRoundtrip _, Some(jsonlSql)),
-    ("e6_weight", e6Weight _, Some(e6Sql)),
-    ("e10_weighted_avg", e10WeightedAvg _, Some(e10Sql)),
-    ("e11_average_table", e11AverageTable _, Some(e11SqlReal)),
-    ("e12_quantile", e12Quantile _, Some(e12Sql)),
-    ("e12d_attr_quantile", e12dAttrQuantile _, Some(e12dSql)),
-    ("e12e_equiv_quantile", e12eEquivQuantile _, Some(e12eSql)),
-    ("e13_decile", e13Decile _, Some(e13Sql)),
-    ("e12b_weighted_median", e12bWeightedMedian _, Some(e12bSql)),
-    ("e12c_median_sketch", e12cMedianSketch _, Some(e12cSql)),
-    ("e7e8_cpi", e7e8Cpi _, Some(e7e8Sql)),
-    ("e9_equivalence", e9Equivalence _, Some(e9Sql)),
-    ("isc_summary", iscSummary _, Some(iscSummarySql)),
-    ("isc_summary_bucketed", iscSummaryBucketed _, Some(iscSummarySql)),
-    ("dedup_exact", dedupExact _, Some(dedupExactSql)),
-    ("dedup_paragraphs", dedupParagraphsQ _, Some(dedupParagraphsSql)),
-    ("remove_frequent_lines", removeFrequentLinesQ _, Some(removeFrequentLinesSql)),
-    ("dedup_spans", dedupSpansQ _, Some(dedupSpansSql)),
-    ("dedup_spans_hashed", dedupSpansHashedQ _, Some(dedupSpansSql)),
-    ("dedup_spans_sample", dedupSpansSampleQ _, Some(dedupSpansSampleSql)),
-    ("dedup_spans_hashed_sample", dedupSpansHashedSampleQ _, Some(dedupSpansSampleSql)),
-    ("dedup_spans_invariants", dedupSpansInvariantsQ _, Some(dedupSpansInvariantsSql)),
-    ("lm_score", lmScoreQ _, Some(lmScoreSql)),
-    ("ccnet_buckets", ccnetBuckets _, Some(ccnetBucketsSql)),
-    ("ccnet_buckets_scaled", ccnetBucketsScaled _, Some(ccnetBucketsScaledSql)),
-    ("ccnet_buckets_sample", ccnetBucketsSample _, Some(ccnetBucketsSampleSql)),
-    ("text_stats", textStats _, Some(textStatsSql)),
-    ("rep_signals", repSignals _, Some(repSignalsSql)),
-    ("pii_redact", piiRedact _, Some(piiRedactSql)),
-    ("contamination", contamination _, Some(contaminationSql)),
-    ("decontaminate", decontaminate _, Some(decontaminateSql)),
-    ("pack_shards", packShards _, Some(packShardsSql)),
-    ("chunk_docs", chunkDocs _, Some(chunkDocsSql)),
-    ("assign_splits", assignSplits _, Some(assignSplitsSql)),
-    ("hash_sample", hashSample _, Some(hashSampleSql)),
-    ("stratified_sample", stratifiedSample _, Some(stratifiedSampleSql)),
-    ("mix_sources", mixSources _, Some(mixSourcesSql)),
-    ("curation_pipeline", curationPipeline _, Some(curationPipelineSql)),
-    ("lang_id", langId _, Some(langIdSql)),
-    ("quality_score", qualityScore _, Some(qualityScoreSql)),
-    ("ngram_jaccard", ngramJaccard _, Some(ngramJaccardSql)),
-    ("minhash_pairs", minhashPairs _, Some(minhashPairsSql)),
-    ("minhash_near_dups", minhashNearDups _, Some(minhashNearDupsSql)),
-    ("minhash_near_dups_sample", minhashNearDupsSample _, Some(minhashNearDupsSampleSql)),
-    ("minhash_sigs", minhashSigs _, Some(minhashSigsSql)),
-    ("simhash_pairs", simhashPairs _, Some(simhashPairsSql)),
-    ("simhash_pairs_capped", simhashPairsCapped _, Some(simhashPairsSql)),
-    ("simhash_pairs_saturated", simhashPairsSaturated _, Some(simhashPairsSaturatedSql)),
-    ("simhash_near_dups", simhashNearDups _, Some(simhashNearDupsSql)),
-    ("near_dups_auto", nearDupsAutoQ _, Some(nearDupsAutoSql)),
-    ("near_dups_auto_saturated", nearDupsAutoSaturatedQ _, Some(nearDupsAutoSaturatedSql)),
-    ("ann_brute_topk", annBruteTopK _, Some(annBruteSql)),
-    ("ann_int8_topk", annInt8TopK _, Some(annInt8Sql)),
-    ("ann_lsh_topk", annLshTopK _, Some(annLshTopKSql)),
-    ("ann_cosine_dedup", annCosineDedup _, Some(annCosineDedupSql)),
-    ("ann_cosine_dedup_clustered", annCosineDedupClusteredQ _, Some(annCosineDedupClusteredSql)),
-    ("semantic_dedup", semanticDedupQ _, Some(semanticDedupSql)),
-    ("semantic_dedup_k32", semanticDedupK32Q _, Some(semanticDedupK32Sql)),
-    ("semantic_dedup_distributed", semanticDedupDistributedQ _, Some(semanticDedupK32Sql)),
-    ("multimodal_features", multimodalFeatures _, Some(multimodalSql)),
-    ("dedup_clusters", dedupClusters _, Some(dedupClustersSql)),
-    ("dedup_clusters_sample", dedupClustersSample _, Some(dedupClustersSampleSql)),
-    ("dedup_best_quality", dedupBestQuality _, Some(dedupBestQualitySql)),
-    ("ivf_topk", ivfTopK _, Some(annBruteSql)),
-    ("ivf_int8_topk", ivfInt8TopK _, Some(annInt8Sql)),
-    ("kmeans_step", kmeansStep _, Some(kmeansStepSql)),
-    ("kmeans_converged", kmeansConverged _, Some(kmeansConvergedSql)),
-    ("ann_pipeline", annPipeline _, Some(annPipelineSql)),
-    ("skew_salted_agg", skewSaltedAgg _, Some(skewSaltedSql)),
-    ("events_window_agg", eventsWindowAgg _, Some(eventsWindowSql)),
-    ("events_window_stream", eventsWindowStream _, Some(eventsWindowSql)),
-    ("events_stream_sink", eventsStreamSink _, Some(eventsWindowSql)),
-    ("events_stream_recovery", eventsStreamRecovery _, Some(eventsWindowSql)),
-    ("events_dedup_stream", eventsDedupStream _, Some(eventsDedupStreamSql)),
-    ("events_sessionize", eventsSessionize _, Some(eventsSessionizeSql)),
-    ("events_session_window", eventsSessionWindow _, Some(eventsSessionWindowSql)),
-    ("events_session_stream", eventsSessionStream _, Some(eventsSessionWindowSql)),
-    ("events_sessionize_fmgws", eventsSessionizeFmgws _, Some(eventsSessionizeFmgwsSql)),
-    ("asof_join", asofJoinQ _, Some(asofJoinSql)),
-    ("asof_join_forward", asofJoinForwardQ _, Some(asofJoinForwardSql)),
-    ("asof_join_nearest", asofJoinNearestQ _, Some(asofJoinNearestSql)),
-    ("events_rolling", eventsRolling _, Some(eventsRollingSql)),
-    ("events_pivot", eventsPivot _, Some(eventsPivotSql)),
-    ("set_ops", setOps _, Some(setOpsSql)),
-    ("json_extract", jsonExtract _, Some(jsonExtractSql)),
-    ("events_daily_active", eventsDailyActive _, Some(eventsDailyActiveSql)),
-    ("skew_salted_join", skewSaltedJoin _, Some(skewSaltedJoinSql)),
-    ("approx_distinct", approxDistinct _, Some(approxDistinctSql)),
-    ("events_enrich_stream", eventsEnrichStream _, Some(eventsEnrichStreamSql)),
-    ("events_stream_join", eventsStreamJoin _, Some(eventsStreamJoinSql)),
-    ("tfidf_topk", tfidfTopK _, Some(tfidfTopKSql)),
-    ("ngram_topk", ngramTopK _, Some(ngramTopKSql)),
-    ("winnow_fingerprints", winnowFingerprintsQ _, Some(winnowFingerprintsSql)),
-    ("winnow_near_dups", winnowNearDupsQ _, Some(winnowNearDupsSql)),
-    ("incremental_near_dups", incrementalNearDupsQ _, Some(incrementalNearDupsSql)),
-    ("rp_topk", rpTopK _, Some(rpTopKSql)),
-    ("ann_lsh_full_recall", annLshFullRecall _, Some(annBruteSql)),
-    ("topk", topK _, Some(topKSql)),
+  type QueryFn = (SparkSession, String) => DataFrame
+
+  /** What a catalog row needs of the reference metadata corpus
+    * ([[RealMeta]]) beyond the synthetic fixtures. */
+  sealed trait CorpusUse
+  /** Runs on the synthetic fixtures alone. */
+  case object NoCorpus extends CorpusUse
+  /** The query reads the corpus; its oracle SQL is a literal string. */
+  case object CorpusQuery extends CorpusUse
+  /** The query reads the corpus and its oracle SQL is generated from it. */
+  case object CorpusQueryAndSql extends CorpusUse
+
+  /** One catalog row. The oracle SQL is built on first use, so a row
+    * whose SQL is generated from the corpus costs nothing until asked for.
+    */
+  final class CatalogEntry(val name: String, val query: QueryFn, sql: => String,
+      val corpus: CorpusUse) {
+    lazy val oracleSql: String = sql
+    /** The query can run in this environment. */
+    def runnable: Boolean = corpus == NoCorpus || RealMeta.available
+    /** The oracle SQL can be built in this environment. */
+    def sqlBuildable: Boolean = corpus != CorpusQueryAndSql || RealMeta.available
+    /** Why the query cannot run here, for the `unavailable` records of
+      * Verify and Bench; None when it can. */
+    def unavailableReason: Option[String] =
+      if (runnable) None
+      else Some(s"needs the reference metadata corpus, not found at ${RealMeta.root}" +
+        " (set GRAFT_REFERENCE_METADATA)")
+  }
+
+  private def entry(name: String, query: QueryFn, sql: => String,
+      corpus: CorpusUse = NoCorpus): CatalogEntry =
+    new CatalogEntry(name, query, sql, corpus)
+
+  /** Every query with its DuckDB oracle SQL; ordered for stable bench
+    * diffs. Every row carries an oracle SQL. 21 rows need the reference
+    * metadata corpus (`GRAFT_REFERENCE_METADATA`, default
+    * [[graft.meta.RealMeta.root]]): `d1_real_commodities`, the two
+    * `d1_golden_*` rows, `e16_geo`, `e16_geo_region`,
+    * `d2_county_external` and the 15 `real_*` rows. They are tagged by
+    * [[CorpusUse]]: where [[RealMeta.available]] is false their queries
+    * cannot run, and the three [[CorpusQueryAndSql]] rows cannot build
+    * their oracle SQL either. Callers that walk the catalog leave those
+    * rows out only then, by [[CatalogEntry.runnable]] /
+    * [[CatalogEntry.sqlBuildable]].
+    */
+  val catalog: Seq[CatalogEntry] = Seq(
+    entry("q1_agg", q1Agg _, q1Sql),
+    entry("b1_clean", b1Clean _, b1Sql),
+    entry("b2_replace", b2Replace _, b2Sql),
+    entry("b4_cast", b4Cast _, b4Sql),
+    entry("b5_union", b5Union _, b5Sql),
+    entry("c1c2_literals", c1c2Literals _, c1c2Sql),
+    entry("c6_order", c6Order _, c6Sql),
+    entry("c7_numeric", c7Numeric _, c7Sql),
+    entry("c8_categorical", c8Categorical _, c8Sql),
+    entry("c9_filter", c9Filter _, c9Sql),
+    entry("c10_groupby_sum", c10GroupbySum _, c10SumSql),
+    entry("agg_rollup", aggRollup _, aggRollupSql),
+    entry("agg_cube", aggCube _, aggCubeSql),
+    entry("window_funcs", windowFuncs _, windowFuncsSql),
+    entry("c10_melt", c10Melt _, c10MeltSql),
+    entry("c12_join", c12Join _, c12Sql),
+    entry("c13_members", c13Members _, c13Sql),
+    entry("c14_equivalence", c14Equivalence _, c14Sql),
+    entry("c15_season", c15Season _, c15Sql),
+    entry("d1_classification", d1Classification _, d1Sql),
+    entry("d1_expr_classification", d1ExprClassification _, d1Sql),
+    entry("d1_real_commodities", d1RealCommodities _, d1RealSql, CorpusQueryAndSql),
+    entry("d1_golden_commodities", d1GoldenCommodities _, d1GoldenSql, CorpusQuery),
+    entry("d1_golden_occupations", d1GoldenOccupations _, d1GoldenOccSql, CorpusQuery),
+    entry("d2_attribute", d2Attribute _, d2Sql),
+    entry("e5_select", e5Select _, e5Sql),
+    entry("e16_geo", e16Geo _, e16Sql, CorpusQueryAndSql),
+    entry("e16_geo_region", e16GeoRegion _, e16RegionSql, CorpusQueryAndSql),
+    entry("d2_county_external", d2CountyExternal _, d2CountySql, CorpusQuery),
+    entry("a1_csv_roundtrip", a1CsvRoundtrip _, a1Sql),
+    entry("a3_http_parquet", a3HttpParquet _, a3Sql),
+    entry("jsonl_roundtrip", jsonlRoundtrip _, jsonlSql),
+    entry("orc_roundtrip", orcRoundtrip _, jsonlSql),
+    entry("zorder_roundtrip", zorderRoundtrip _, zorderSql),
+    entry("compact_roundtrip", compactRoundtrip _, jsonlSql),
+    entry("e6_weight", e6Weight _, e6Sql),
+    entry("e10_weighted_avg", e10WeightedAvg _, e10Sql),
+    entry("e11_average_table", e11AverageTable _, e11SqlReal),
+    entry("e12_quantile", e12Quantile _, e12Sql),
+    entry("e12d_attr_quantile", e12dAttrQuantile _, e12dSql),
+    entry("e12e_equiv_quantile", e12eEquivQuantile _, e12eSql),
+    entry("e13_decile", e13Decile _, e13Sql),
+    entry("e12b_weighted_median", e12bWeightedMedian _, e12bSql),
+    entry("e12c_median_sketch", e12cMedianSketch _, e12cSql),
+    entry("e7e8_cpi", e7e8Cpi _, e7e8Sql),
+    entry("e9_equivalence", e9Equivalence _, e9Sql),
+    entry("isc_summary", iscSummary _, iscSummarySql),
+    entry("isc_summary_bucketed", iscSummaryBucketed _, iscSummarySql),
+    entry("dedup_exact", dedupExact _, dedupExactSql),
+    entry("dedup_paragraphs", dedupParagraphsQ _, dedupParagraphsSql),
+    entry("remove_frequent_lines", removeFrequentLinesQ _, removeFrequentLinesSql),
+    entry("dedup_spans", dedupSpansQ _, dedupSpansSql),
+    entry("dedup_spans_hashed", dedupSpansHashedQ _, dedupSpansSql),
+    entry("dedup_spans_sample", dedupSpansSampleQ _, dedupSpansSampleSql),
+    entry("dedup_spans_hashed_sample", dedupSpansHashedSampleQ _, dedupSpansSampleSql),
+    entry("dedup_spans_invariants", dedupSpansInvariantsQ _, dedupSpansInvariantsSql),
+    entry("lm_score", lmScoreQ _, lmScoreSql),
+    entry("ccnet_buckets", ccnetBuckets _, ccnetBucketsSql),
+    entry("ccnet_buckets_scaled", ccnetBucketsScaled _, ccnetBucketsScaledSql),
+    entry("ccnet_buckets_sample", ccnetBucketsSample _, ccnetBucketsSampleSql),
+    entry("text_stats", textStats _, textStatsSql),
+    entry("rep_signals", repSignals _, repSignalsSql),
+    entry("pii_redact", piiRedact _, piiRedactSql),
+    entry("contamination", contamination _, contaminationSql),
+    entry("decontaminate", decontaminate _, decontaminateSql),
+    entry("pack_shards", packShards _, packShardsSql),
+    entry("chunk_docs", chunkDocs _, chunkDocsSql),
+    entry("assign_splits", assignSplits _, assignSplitsSql),
+    entry("hash_sample", hashSample _, hashSampleSql),
+    entry("stratified_sample", stratifiedSample _, stratifiedSampleSql),
+    entry("mix_sources", mixSources _, mixSourcesSql),
+    entry("curation_pipeline", curationPipeline _, curationPipelineSql),
+    entry("lang_id", langId _, langIdSql),
+    entry("quality_score", qualityScore _, qualityScoreSql),
+    entry("ngram_jaccard", ngramJaccard _, ngramJaccardSql),
+    entry("minhash_pairs", minhashPairs _, minhashPairsSql),
+    entry("minhash_near_dups", minhashNearDups _, minhashNearDupsSql),
+    entry("minhash_near_dups_sample", minhashNearDupsSample _, minhashNearDupsSampleSql),
+    entry("minhash_sigs", minhashSigs _, minhashSigsSql),
+    entry("simhash_pairs", simhashPairs _, simhashPairsSql),
+    entry("simhash_pairs_capped", simhashPairsCapped _, simhashPairsSql),
+    entry("simhash_pairs_saturated", simhashPairsSaturated _, simhashPairsSaturatedSql),
+    entry("simhash_near_dups", simhashNearDups _, simhashNearDupsSql),
+    entry("near_dups_auto", nearDupsAutoQ _, nearDupsAutoSql),
+    entry("near_dups_auto_saturated", nearDupsAutoSaturatedQ _, nearDupsAutoSaturatedSql),
+    entry("ann_brute_topk", annBruteTopK _, annBruteSql),
+    entry("ann_int8_topk", annInt8TopK _, annInt8Sql),
+    entry("ann_lsh_topk", annLshTopK _, annLshTopKSql),
+    entry("ann_cosine_dedup", annCosineDedup _, annCosineDedupSql),
+    entry("ann_cosine_dedup_clustered", annCosineDedupClusteredQ _, annCosineDedupClusteredSql),
+    entry("semantic_dedup", semanticDedupQ _, semanticDedupSql),
+    entry("semantic_dedup_k32", semanticDedupK32Q _, semanticDedupK32Sql),
+    entry("semantic_dedup_distributed", semanticDedupDistributedQ _, semanticDedupK32Sql),
+    entry("multimodal_features", multimodalFeatures _, multimodalSql),
+    entry("dedup_clusters", dedupClusters _, dedupClustersSql),
+    entry("dedup_clusters_sample", dedupClustersSample _, dedupClustersSampleSql),
+    entry("dedup_best_quality", dedupBestQuality _, dedupBestQualitySql),
+    entry("ivf_topk", ivfTopK _, annBruteSql),
+    entry("ivf_int8_topk", ivfInt8TopK _, annInt8Sql),
+    entry("kmeans_step", kmeansStep _, kmeansStepSql),
+    entry("kmeans_converged", kmeansConverged _, kmeansConvergedSql),
+    entry("ann_pipeline", annPipeline _, annPipelineSql),
+    entry("skew_salted_agg", skewSaltedAgg _, skewSaltedSql),
+    entry("events_window_agg", eventsWindowAgg _, eventsWindowSql),
+    entry("events_window_stream", eventsWindowStream _, eventsWindowSql),
+    entry("events_stream_sink", eventsStreamSink _, eventsWindowSql),
+    entry("events_stream_recovery", eventsStreamRecovery _, eventsWindowSql),
+    entry("events_dedup_stream", eventsDedupStream _, eventsDedupStreamSql),
+    entry("events_sessionize", eventsSessionize _, eventsSessionizeSql),
+    entry("events_session_window", eventsSessionWindow _, eventsSessionWindowSql),
+    entry("events_session_stream", eventsSessionStream _, eventsSessionWindowSql),
+    entry("events_sessionize_fmgws", eventsSessionizeFmgws _, eventsSessionizeFmgwsSql),
+    entry("asof_join", asofJoinQ _, asofJoinSql),
+    entry("asof_join_forward", asofJoinForwardQ _, asofJoinForwardSql),
+    entry("asof_join_nearest", asofJoinNearestQ _, asofJoinNearestSql),
+    entry("events_rolling", eventsRolling _, eventsRollingSql),
+    entry("events_pivot", eventsPivot _, eventsPivotSql),
+    entry("set_ops", setOps _, setOpsSql),
+    entry("json_extract", jsonExtract _, jsonExtractSql),
+    entry("events_daily_active", eventsDailyActive _, eventsDailyActiveSql),
+    entry("skew_salted_join", skewSaltedJoin _, skewSaltedJoinSql),
+    entry("approx_distinct", approxDistinct _, approxDistinctSql),
+    entry("events_enrich_stream", eventsEnrichStream _, eventsEnrichStreamSql),
+    entry("events_stream_join", eventsStreamJoin _, eventsStreamJoinSql),
+    entry("tfidf_topk", tfidfTopK _, tfidfTopKSql),
+    entry("ngram_topk", ngramTopK _, ngramTopKSql),
+    entry("winnow_fingerprints", winnowFingerprintsQ _, winnowFingerprintsSql),
+    entry("winnow_near_dups", winnowNearDupsQ _, winnowNearDupsSql),
+    entry("incremental_near_dups", incrementalNearDupsQ _, incrementalNearDupsSql),
+    entry("rp_topk", rpTopK _, rpTopKSql),
+    entry("ann_lsh_full_recall", annLshFullRecall _, annBruteSql),
+    entry("topk", topK _, topKSql),
     // engine path: metadata doc -> schema DAG -> clean -> pipeline -> cache
-    ("e1_load_table", EngineQueries.e1LoadTable _, Some(EngineQueries.e1Sql)),
-    ("c17_multiyear", EngineQueries.c17MultiYear _, Some(EngineQueries.c17Sql)),
-    ("e2_schema_table", EngineQueries.e2SchemaTable _, Some(EngineQueries.e2Sql)),
-    ("a9_cache", EngineQueries.a9Cache _, Some(EngineQueries.a9Sql)),
-    ("a9_cache_bucketed", EngineQueries.a9CacheBucketed _, Some(EngineQueries.a9Sql)),
-    ("e14_external", EngineQueries.e14External _, Some(EngineQueries.e14Sql)),
-    ("e14_cleaned", EngineQueries.e14Cleaned _, Some(EngineQueries.e14CleanedSql)),
-    ("e15_view", EngineQueries.e15View _, Some(Queries.d1Sql)),
-    ("e18_availability", EngineQueries.e18Availability _, Some(EngineQueries.e18Sql)),
+    entry("e1_load_table", EngineQueries.e1LoadTable _, EngineQueries.e1Sql),
+    entry("c17_multiyear", EngineQueries.c17MultiYear _, EngineQueries.c17Sql),
+    entry("e2_schema_table", EngineQueries.e2SchemaTable _, EngineQueries.e2Sql),
+    entry("a9_cache", EngineQueries.a9Cache _, EngineQueries.a9Sql),
+    entry("a9_cache_bucketed", EngineQueries.a9CacheBucketed _, EngineQueries.a9Sql),
+    entry("e14_external", EngineQueries.e14External _, EngineQueries.e14Sql),
+    entry("e14_cleaned", EngineQueries.e14Cleaned _, EngineQueries.e14CleanedSql),
+    entry("e15_view", EngineQueries.e15View _, Queries.d1Sql),
+    entry("e18_availability", EngineQueries.e18Availability _, EngineQueries.e18Sql),
     // real-metadata DAG execution: raw (era-correct columns) -> cleaned
     // -> Original_Expenditures -> Expenditures -> Total_Expenditure
-    ("real_total_expenditure", RealPipeline.realTotalExpenditure _,
-      Some(RealPipeline.realTotalExpenditureSql)),
-    ("real_income_breakdown", RealPipeline.realIncomeBreakdown _,
-      Some(RealPipeline.realIncomeBreakdownSql)),
-    ("real_total_income", RealPipeline.realTotalIncome _,
-      Some(RealPipeline.realTotalIncomeSql)),
-    ("real_members_income_breakdown", RealPipeline.realMembersIncomeBreakdown _,
-      Some(RealPipeline.realMembersIncomeBreakdownSql)),
-    ("real_members_total_income", RealPipeline.realMembersTotalIncome _,
-      Some(RealPipeline.realMembersTotalIncomeSql)),
-    ("real_total_outlay", RealPipeline.realTotalOutlay _,
-      Some(RealPipeline.realTotalOutlaySql)),
-    ("real_expenditure_breakdown", RealPipeline.realExpenditureBreakdown _,
-      Some(RealPipeline.realExpenditureBreakdownSql)),
+    entry("real_total_expenditure", RealPipeline.realTotalExpenditure _,
+      RealPipeline.realTotalExpenditureSql, CorpusQuery),
+    entry("real_income_breakdown", RealPipeline.realIncomeBreakdown _,
+      RealPipeline.realIncomeBreakdownSql, CorpusQuery),
+    entry("real_total_income", RealPipeline.realTotalIncome _,
+      RealPipeline.realTotalIncomeSql, CorpusQuery),
+    entry("real_members_income_breakdown", RealPipeline.realMembersIncomeBreakdown _,
+      RealPipeline.realMembersIncomeBreakdownSql, CorpusQuery),
+    entry("real_members_total_income", RealPipeline.realMembersTotalIncome _,
+      RealPipeline.realMembersTotalIncomeSql, CorpusQuery),
+    entry("real_total_outlay", RealPipeline.realTotalOutlay _,
+      RealPipeline.realTotalOutlaySql, CorpusQuery),
+    entry("real_expenditure_breakdown", RealPipeline.realExpenditureBreakdown _,
+      RealPipeline.realExpenditureBreakdownSql, CorpusQuery),
     // full-archive (one-plan) gates: every family across its entire
     // real availability span, oracled end-to-end
-    ("real_total_expenditure_39y",
+    entry("real_total_expenditure_39y",
       ((s: SparkSession, dir: String) =>
         RealPipeline.realTotalExpenditureMultiYear(s, dir).orderBy("Year", "ID")),
-      Some(RealPipeline.realTotalExpenditure39ySql)),
-    ("real_members_income_multiyear",
+      RealPipeline.realTotalExpenditure39ySql, CorpusQuery),
+    entry("real_members_income_multiyear",
       ((s: SparkSession, dir: String) =>
         RealPipeline.realMembersIncomeBreakdownMultiYear(s, dir)
           .orderBy("Year", "ID", "Member_Number", "Income_Type")),
-      Some(RealPipeline.realMembersIncomeMultiYearSql)),
-    ("real_members_total_income_multiyear",
+      RealPipeline.realMembersIncomeMultiYearSql, CorpusQuery),
+    entry("real_members_total_income_multiyear",
       ((s: SparkSession, dir: String) =>
         RealPipeline.realMembersTotalIncomeMultiYear(s, dir)
           .orderBy("Year", "ID", "Member_Number")),
-      Some(RealPipeline.realMembersTotalIncomeMultiYearSql)),
-    ("real_income_breakdown_multiyear",
+      RealPipeline.realMembersTotalIncomeMultiYearSql, CorpusQuery),
+    entry("real_income_breakdown_multiyear",
       ((s: SparkSession, dir: String) =>
         RealPipeline.realIncomeBreakdownMultiYear(s, dir)
           .orderBy("Year", "ID", "Income_Type")),
-      Some(RealPipeline.realIncomeBreakdownMultiYearSql)),
-    ("real_total_outlay_multiyear",
+      RealPipeline.realIncomeBreakdownMultiYearSql, CorpusQuery),
+    entry("real_total_outlay_multiyear",
       ((s: SparkSession, dir: String) =>
         RealPipeline.realTotalOutlayMultiYear(s, dir).orderBy("Year", "ID")),
-      Some(RealPipeline.realTotalOutlayMultiYearSql)),
-    ("real_number_of_members", RealPipeline.realNumberOfMembers _,
-      Some(RealPipeline.realNumberOfMembersSql)),
-    ("real_equivalence_scale", RealPipeline.realEquivalenceScale _,
-      Some(RealPipeline.realEquivalenceScaleSql)),
-    ("real_weights", RealPipeline.realWeights _,
-      Some(RealPipeline.realWeightsSql)),
+      RealPipeline.realTotalOutlayMultiYearSql, CorpusQuery),
+    entry("real_number_of_members", RealPipeline.realNumberOfMembers _,
+      RealPipeline.realNumberOfMembersSql, CorpusQuery),
+    entry("real_equivalence_scale", RealPipeline.realEquivalenceScale _,
+      RealPipeline.realEquivalenceScaleSql, CorpusQuery),
+    entry("real_weights", RealPipeline.realWeights _,
+      RealPipeline.realWeightsSql, CorpusQuery),
   )
 
   /** Bench-only queries: timed by Bench, absent from the correctness

@@ -2,7 +2,13 @@ package graft
 import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+  * plus oracle_sql.json, for the driver's DuckDB compare.
+  *
+  * Catalog rows that cannot run here (the corpus-dependent rows while
+  * the reference metadata corpus is absent, [[Queries.CatalogEntry.runnable]])
+  * are not run and get no oracle SQL; unavailable.json names each with
+  * its reason, so they read as skipped rather than as failed queries.
+  */
 object Verify {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
@@ -13,8 +19,9 @@ object Verify {
     // dump without re-running any query (oracle-SQL-only edits)
     val sqlOnly = args.lift(2).contains("--sql-only")
     val only: Option[Set[String]] =
-      if (sqlOnly) Some(Set.empty) else args.lift(2).map(_.split(",").toSet)
-    def keep(name: String): Boolean = only.forall(_.contains(name))
+      if (sqlOnly) None else args.lift(2).map(_.split(",").toSet)
+    val (runnable, unavailable) =
+      Queries.catalog.filter(e => only.forall(_.contains(e.name))).partition(_.runnable)
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
@@ -36,18 +43,18 @@ object Verify {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
-    SparkEntry.queries.foreach { case (name, fn) =>
-      if (keep(name)) {
-        try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-          .parquet(s"$outDir/$name")
-        catch { case e: Throwable =>
-          System.err.println(s"[verify] $name failed: ${e.getMessage}")
-        }
-        // unmanaged near-dup pipelines pin session-lifetime caches by
-        // design; drop them between dumps so a 70-query run's memory
-        // stays flat (same discipline as Bench.runOnce)
-        spark.catalog.clearCache()
+    unavailable.foreach(e =>
+      System.err.println(s"[verify] ${e.name} unavailable: ${e.unavailableReason.get}"))
+    if (!sqlOnly) runnable.foreach { e =>
+      try e.query(spark, sfDir).coalesce(1).write.mode("overwrite")
+        .parquet(s"$outDir/${e.name}")
+      catch { case t: Throwable =>
+        System.err.println(s"[verify] ${e.name} failed: ${t.getMessage}")
       }
+      // unmanaged near-dup pipelines pin session-lifetime caches by
+      // design; drop them between dumps so a 70-query run's memory
+      // stays flat (same discipline as Bench.runOnce)
+      spark.catalog.clearCache()
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the
@@ -61,9 +68,11 @@ object Verify {
       case c if c < ' ' => f"\\u${c.toInt}%04x"
       case c => c.toString
     } + "\""
-    val json = SparkEntry.oracleSql.filter(kv => sqlOnly || keep(kv._1))
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    def write(file: String, kvs: Seq[(String, String)]): Unit =
+      Files.writeString(Paths.get(s"$outDir/$file"),
+        kvs.map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}"))
+    write("oracle_sql.json", runnable.map(e => e.name -> e.oracleSql))
+    write("unavailable.json", unavailable.map(e => e.name -> e.unavailableReason.get))
     spark.stop()
   }
 }

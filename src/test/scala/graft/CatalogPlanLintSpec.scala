@@ -15,6 +15,11 @@ import org.apache.spark.sql.execution.joins.{BroadcastNestedLoopJoinExec, Cartes
   * constants (a degenerate shuffle that funnels every row to one
   * partition). Queries whose SEMANTICS are all-pairs against a small,
   * broadcast side declare themselves below with the reason.
+  *
+  * Rows tagged as needing the reference metadata corpus are planned only
+  * where the corpus is present; the run log names the rows left out. An
+  * untagged row that reads the corpus fails here, so the test also
+  * checks the tag.
   */
 class CatalogPlanLintSpec extends SparkSpec {
 
@@ -67,8 +72,14 @@ class CatalogPlanLintSpec extends SparkSpec {
 
   test("no catalog query plans a cartesian/nested-loop join or a constant-keyed Exchange") {
     assume(new File(sfDir).exists(), s"$sfDir not present")
-    val violations = Queries.catalog.flatMap { case (name, fn, _) =>
-      val nodes = allNodes(fn(spark, sfDir).queryExecution.executedPlan)
+    val (planned, unavailable) = Queries.catalog.partition(_.runnable)
+    info(s"planning ${planned.size} catalog queries")
+    if (unavailable.nonEmpty)
+      info(s"not planned, reference metadata corpus absent (${unavailable.size}): " +
+        unavailable.map(_.name).mkString(", "))
+    val violations = planned.flatMap { e =>
+      val name = e.name
+      val nodes = allNodes(e.query(spark, sfDir).queryExecution.executedPlan)
       val joins = nodes.collect {
         case j: CartesianProductExec => s"$name: CartesianProduct"
         case j: BroadcastNestedLoopJoinExec if !intentionalNestedLoop(name) =>

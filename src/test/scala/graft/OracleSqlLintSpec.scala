@@ -16,11 +16,26 @@ import org.scalatest.funsuite.AnyFunSuite
   * column would still slip through (none exist: bare column sums in
   * the catalog are all DOUBLE). Whitespace is normalized first so
   * line breaks inside the call cannot hide a match.
+  *
+  * Every oracle SQL that can be built here is linted, including the
+  * literal SQL of rows whose queries need the reference metadata corpus;
+  * only the SQL generated from the corpus is left out while the corpus
+  * is absent, and the run log names it.
   */
 class OracleSqlLintSpec extends AnyFunSuite {
 
+  private def lintedSql(): Seq[(String, String)] = {
+    val sql = SparkEntry.oracleSql.toSeq.sortBy(_._1)
+    val notBuilt = Queries.catalog.filterNot(_.sqlBuildable).map(_.name)
+    info(s"linting ${sql.size} oracle SQL strings")
+    if (notBuilt.nonEmpty)
+      info("not linted, SQL generated from the absent reference metadata corpus: " +
+        notBuilt.mkString(", "))
+    sql
+  }
+
   test("every integer-shaped sum in oracle SQL is wrapped in an outer CAST") {
-    val bad = SparkEntry.oracleSql.toSeq.sortBy(_._1).flatMap { case (name, sql) =>
+    val bad = lintedSql().flatMap { case (name, sql) =>
       val compact = sql.replaceAll("\\s+", " ")
         .replaceAll("\\(\\s+", "(") // "sum( CAST(" -> "sum(CAST("
       "(?i)sum\\((?:CAST|coalesce)\\(".r.findAllMatchIn(compact).toList.collect {
@@ -60,7 +75,7 @@ class OracleSqlLintSpec extends AnyFunSuite {
       "real_members_total_income_multiyear" -> Set("income"),
       "real_income_breakdown_multiyear" -> Set("income"),
     ).withDefaultValue(Set.empty)
-    val bad = SparkEntry.oracleSql.toSeq.sortBy(_._1).flatMap { case (name, sql) =>
+    val bad = lintedSql().flatMap { case (name, sql) =>
       val compact = sql.replaceAll("\\s+", " ").replaceAll("\\(\\s+", "(")
       "(?i)sum\\(([a-z_][a-z0-9_.]*)\\)".r.findAllMatchIn(compact).toList.collect {
         case m if !compact.regionMatches(true, m.start - 5, "CAST(", 0, 5) &&
