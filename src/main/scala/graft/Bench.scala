@@ -156,19 +156,20 @@ object Bench {
     // Per-query load sampling: BENCH_r08 recorded 2-11x "regressions"
     // that were pure machine contention (load_avg 2->11.7 across the
     // whole run, regressed queries contiguous in run order) — whole-run
-    // before/after load could not localize it. Each run now records the
-    // 1-min load average sampled right after it, and when every run of a
-    // query landed under load (> cpus/4), up to two extra runs are taken
-    // so at least one sample has a chance of clean machine state. min()
-    // over all runs still measures the plan.
-    val loadGate = cpus.toDouble / 4.0
+    // before/after load could not localize it. Each run records the
+    // 1-min load average sampled right after it. When the machine was
+    // already loaded (> cpus/4) before the first query, every query takes
+    // up to two extra runs, so at least one sample has a chance of clean
+    // machine state. The gate reads the sample taken before the run, not
+    // the per-run samples: those include the bench's own load, which
+    // alone trips cpus/4 on a small box (every query took 5 runs at 4
+    // cores). min() over all runs still measures the plan.
+    val extraRuns = if (loadBefore > cpus.toDouble / 4.0) 2 else 0
     val results: Seq[(String, (Seq[Double], Seq[Double]))] = names.map { name =>
       val runs = scala.collection.mutable.ArrayBuffer.empty[Double]
       val loads = scala.collection.mutable.ArrayBuffer.empty[Double]
       def run(): Unit = { runs += runOnce(name); loads += osBean.getSystemLoadAverage }
-      run(); run(); run()
-      var extra = 0
-      while (extra < 2 && loads.forall(_ > loadGate)) { run(); extra += 1 }
+      for (_ <- 1 to 3 + extraRuns) run()
       System.err.println(f"[bench] $name%-24s ${runs.min}%8.2fs  (runs: ${runs.map(r => f"$r%.2f").mkString(", ")}; load: ${loads.map(l => f"$l%.1f").mkString(", ")})")
       name -> (runs.toSeq, loads.toSeq)
     }
@@ -243,6 +244,13 @@ object Bench {
     val errNames = errors.keys.take(10).map(k => "\"" + esc(k) + "\"").mkString("[", ",", "]")
     val unavailableNames = skipped.take(10).map(k => "\"" + esc(k) + "\"").mkString("[", ",", "]")
     val driftCompact = drift(controlsEnd).map(d => f"$d%.2f").getOrElse("null")
-    println(s"""{"metric":"total","value":${f"$total%.2f"},"unit":"sec","n":${results.size},"error_count":${errors.size},"errored":$errNames,"unavailable":$unavailableNames,"drift":$driftCompact,"top_slowest":$topJson,"sf":"$sfDir"}""")
+    // every timed query's min, positionally in Queries.benchNames order
+    // (null: not timed in this run), so per-query geomeans compute from
+    // this line; a name-keyed map of all ~93 rows would not fit the
+    // 2000-byte tail
+    val mins = results.map { case (k, (v, _)) => k -> v.min }.toMap
+    val minsJson = Queries.benchNames.map(n => mins.get(n).map(v => f"$v%.2f").getOrElse("null"))
+      .mkString("[", ",", "]")
+    println(s"""{"metric":"total","value":${f"$total%.2f"},"unit":"sec","n":${results.size},"error_count":${errors.size},"errored":$errNames,"unavailable":$unavailableNames,"drift":$driftCompact,"top_slowest":$topJson,"mins":$minsJson,"sf":"$sfDir"}""")
   }
 }

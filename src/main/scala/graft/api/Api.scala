@@ -15,7 +15,13 @@ import org.apache.spark.sql.functions._
   *
   * Thin, stateless delegation onto the engine + operator layers; every
   * method is lazy DataFrame algebra, so user call chains compose into one
-  * Catalyst plan.
+  * Catalyst plan, and over frames the engine built a call starts no Spark
+  * job: the survey years come from the plan's lineage
+  * ([[graft.engine.YearLineage]]). A frame the user built has no such
+  * lineage, so calls that need its years probe them with a small query.
+  * [[addClassificationAuto]] with an explicit code column keeps its
+  * magnitude probe on purpose: the classification it picks depends on
+  * the data.
   */
 class Api(
     val spark: SparkSession,
@@ -161,7 +167,7 @@ class Api(
   /** E9 adjust_by_equivalence_scale. */
   def adjustByEquivalenceScale(
       df: DataFrame, columns: Seq[String], scale: String = "Per_Capita"): DataFrame = {
-    val years = df.select(col("Year").cast("int")).distinct().collect().map(_.getInt(0)).toSeq
+    val years = repo.yearsOf(df)
     Stats.adjustByEquivalenceScale(df, repo.table("Equivalence_Scale", years), columns, scale)
   }
 
@@ -204,7 +210,7 @@ class Api(
       broadcastQuantiles: Boolean = true,
   ): DataFrame = {
     val (tableName, valueCol) = variableTables(on)
-    val years = df.select(col("Year").cast("int")).distinct().collect().map(_.getInt(0)).toSeq
+    val years = repo.yearsOf(df)
     var values = repo.table(tableName, years)
       .select(col("Year"), col("ID"), col(valueCol).as("_values"))
     values = equivalenceScale.fold(values)(scale =>

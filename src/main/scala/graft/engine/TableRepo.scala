@@ -1,9 +1,12 @@
 package graft.engine
 
+import scala.util.control.NonFatal
+
 import graft.meta._
 import graft.ops._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** E1/E2/C16/C17/A9 — the table engine: turns (table name, years) into a
   * lazy DataFrame by recursing the metadata schema DAG
@@ -26,6 +29,10 @@ import org.apache.spark.sql.functions._
   * The A9 result cache persists a built table as parquet keyed by a
   * dependency fingerprint (schema tree + dependency sizes), mirroring
   * data_engine.py:515-610's size-based invalidation.
+  *
+  * Building a plan starts no Spark job: the per-year metadata decorators
+  * read the survey years off the plan ([[YearLineage]]), and A9 reads
+  * reuse the schema each entry was written or first read with.
   */
 final case class RepoConfig(
     resolver: ResolverSettings = ResolverSettings(),
@@ -255,15 +262,21 @@ class TableRepo(
       scala.util.hashing.MurmurHash3.stringHash(parts.mkString("|") + layout).toLong & 0xFFFFFFFFL)
   }
 
-  private def cachePath(name: String, year: Int): String =
-    s"${config.cacheDir.get}/${name}_${year}_${fingerprint(name, year)}.parquet"
+  /** An entry's name. A `yearMarked` entry was written from a plan whose
+    * lineage shows `Year` is the literal `year` in every row, so its reads
+    * project `Year` as that literal again and keep the lineage a plain
+    * parquet scan loses. Other entries read `Year` from the files.
+    */
+  private def cacheEntry(name: String, year: Int, yearMarked: Boolean): String =
+    s"${name}_${year}_${fingerprint(name, year)}${if (yearMarked) "_year" else ""}"
+
+  private def cachePath(entry: String): String = s"${config.cacheDir.get}/$entry.parquet"
 
   /** Catalog identifier for a bucketed cache entry. The fingerprint is
     * part of the name, so a metadata/upstream change registers a NEW
     * table rather than silently serving a stale layout.
     */
-  private def cacheTableName(name: String, year: Int): String =
-    s"graft_cache_${name}_${year}_${fingerprint(name, year)}".toLowerCase
+  private def cacheTableName(entry: String): String = s"graft_cache_$entry".toLowerCase
 
   private def bucketKeysFor(df: DataFrame): Seq[String] =
     if (config.cacheBucketKeys.nonEmpty &&
@@ -279,46 +292,83 @@ class TableRepo(
     hp.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(hp)
   }
 
-  private def readCache(name: String, year: Int): Option[DataFrame] = {
-    val p = cachePath(name, year)
-    if (!pathExists(p)) None
-    else if (config.cacheBucketKeys.isEmpty) Some(spark.read.parquet(p))
-    else {
-      val t = cacheTableName(name, year)
-      if (spark.catalog.tableExists(t)) Some(spark.table(t))
-      else {
-        // a previous session wrote this entry; re-attach the bucket
-        // metadata IF the files carry every key (plain-parquet fallback
-        // entries — key column absent — read as plain parquet)
-        val schema = spark.read.parquet(p).schema
-        if (config.cacheBucketKeys.forall(k => schema.fieldNames.contains(k)))
-          Some(graft.sources.RawSources.registerBucketed(
-            spark, t, p, config.cacheBucketKeys, config.cacheBucketCount))
-        else Some(spark.read.parquet(p))
-      }
+  /** The schema of each plain-parquet entry, by path, filled by the write
+    * or by the first read. Paths are content-addressed, so a schema never
+    * goes stale; reading with it skips the schema-inference job that
+    * `spark.read.parquet` starts on every read.
+    */
+  private val cacheSchemas = new java.util.concurrent.ConcurrentHashMap[String, StructType]()
+
+  private def readParquet(p: String): DataFrame =
+    Option(cacheSchemas.get(p)) match {
+      case Some(schema) => spark.read.schema(schema).parquet(p)
+      case None =>
+        val df = spark.read.parquet(p)
+        cacheSchemas.put(p, df.schema)
+        df
     }
-  }
+
+  private def withLiteralYear(df: DataFrame, year: Int): DataFrame =
+    df.withColumn("Year", lit(year).cast(df.schema("Year").dataType))
+
+  private def readCache(name: String, year: Int): Option[DataFrame] =
+    Seq(true, false).iterator.map(marked => (marked, cacheEntry(name, year, marked)))
+      .find { case (_, entry) => pathExists(cachePath(entry)) }
+      .map { case (marked, entry) =>
+        val p = cachePath(entry)
+        val t = cacheTableName(entry)
+        val df =
+          if (config.cacheBucketKeys.isEmpty) readParquet(p)
+          else if (spark.catalog.tableExists(t)) spark.table(t)
+          else {
+            // a previous session wrote this entry; re-attach the bucket
+            // metadata IF the files carry every key (plain-parquet fallback
+            // entries — key column absent — read as plain parquet)
+            val plain = readParquet(p)
+            if (config.cacheBucketKeys.forall(k => plain.schema.fieldNames.contains(k)))
+              graft.sources.RawSources.registerBucketed(
+                spark, t, p, config.cacheBucketKeys, config.cacheBucketCount)
+            else plain
+          }
+        if (marked) withLiteralYear(df, year) else df
+      }
 
   private def writeCache(df: DataFrame, name: String, year: Int): DataFrame = {
-    val p = cachePath(name, year)
     val keys = bucketKeysFor(df)
-    if (keys.nonEmpty) {
-      graft.sources.RawSources.writeBucketed(
-        df, cacheTableName(name, year), p, keys, config.cacheBucketCount)
-      spark.table(cacheTableName(name, year))
-    } else {
-      df.write.mode("overwrite").parquet(p)
-      spark.read.parquet(p)
-    }
+    // a literal Year would hide the bucket layout's partitioning on a Year key
+    val marked = df.columns.contains("Year") && !keys.contains("Year") &&
+      YearLineage.of(df).contains(Seq(year))
+    val entry = cacheEntry(name, year, marked)
+    val p = cachePath(entry)
+    val written =
+      if (keys.nonEmpty) {
+        graft.sources.RawSources.writeBucketed(df, cacheTableName(entry), p, keys, config.cacheBucketCount)
+        spark.table(cacheTableName(entry))
+      } else {
+        df.write.mode("overwrite").parquet(p)
+        cacheSchemas.put(p, df.schema)
+        readParquet(p)
+      }
+    if (marked) withLiteralYear(written, year) else written
   }
 
   // ------------------------------------------------------------------ weights (E6)
+
+  /** The sorted distinct years in `df`'s year column. They are read from
+    * the plan's lineage ([[YearLineage]]) when it is known, so no job runs,
+    * and probed from the data otherwise: a frame the user built, or a
+    * computed or null-filled year. Lineage can list a year whose rows a
+    * filter or join removed; per-year metadata compiled for such a year
+    * adds nothing to a result keyed by `Year`.
+    */
+  def yearsOf(df: DataFrame, yearCol: String = "Year"): Seq[Int] =
+    YearLineage.of(df, yearCol).getOrElse(probeYears(df, yearCol))
 
   /** Distinct years present in a table — driver-side, but bounded by the
     * survey's ~40 years (the reference iterates the same set,
     * data_engine.py:782-785).
     */
-  private def distinctYears(df: DataFrame, yearCol: String = "Year"): Seq[Int] = {
+  private def probeYears(df: DataFrame, yearCol: String): Seq[Int] = {
     val years = df.select(col(yearCol).cast("int").as("_y")).distinct().collect()
     // a null year (missing column null-filled by a union, or a value
     // that failed the int cast) must be a diagnosable error, not a bare
@@ -327,6 +377,20 @@ class TableRepo(
       s"column $yearCol contains null/non-numeric years — cannot resolve per-year metadata")
     years.map(_.getInt(0)).toSeq.sorted
   }
+
+  /** `compile` over the years of `df`. A year that lineage lists but the
+    * rows no longer hold need not compile (its household table may be
+    * absent), and the probe would never have asked for it. So a compile
+    * that fails on lineage years is retried on the probed years, which are
+    * exact; a failure there is the caller's, as before.
+    */
+  private def compileForYears[T](df: DataFrame, yearCol: String = "Year")(compile: Seq[Int] => T): T =
+    YearLineage.of(df, yearCol) match {
+      case Some(years) =>
+        try compile(years)
+        catch { case NonFatal(_) => compile(probeYears(df, yearCol)) }
+      case None => compile(probeYears(df, yearCol))
+    }
 
   /** Per-year weight table (Year, ID, Weight): external parquet for years
     * <= externalWeightsYearMax, household_information.Weight after
@@ -361,7 +425,7 @@ class TableRepo(
   def addWeights(df: DataFrame): DataFrame = addWeights(df, adjustForHouseholdSize = false)
 
   def addWeights(df: DataFrame, adjustForHouseholdSize: Boolean): DataFrame =
-    Stats.addWeight(df, weights(distinctYears(df), adjustForHouseholdSize))
+    Stats.addWeight(df, compileForYears(df)(weights(_, adjustForHouseholdSize)))
 
   // ------------------------------------------------------- decoders (D1/D2)
 
@@ -384,11 +448,10 @@ class TableRepo(
       columnNames = settings.get("column_names").map(_.asList.map(_.asStr)).getOrElse(base.columnNames),
       aspects = settings.get("aspects").map(_.asList.map(_.asStr)).getOrElse(base.aspects),
     )
-    val years = distinctYears(df, s.yearCol)
     // non-item_key aspects label from per-item metadata fields — they
     // must be compiled into the items or their columns would be null
-    val items = Classifier.compile(doc, years,
-      extraAspects = s.aspects.filterNot(_ == "item_key"), resolver = config.resolver)
+    val items = compileForYears(df, s.yearCol)(Classifier.compile(doc, _,
+      extraAspects = s.aspects.filterNot(_ == "item_key"), resolver = config.resolver))
     Classifier.addClassification(df, items, s)
   }
 
@@ -399,8 +462,7 @@ class TableRepo(
       case m: MMap => (m("name").asStr, m.get("aspects").map(_.asList.head.asStr).getOrElse("name"))
       case other   => throw new IllegalArgumentException(s"bad settings: $other")
     }
-    val years = distinctYears(df)
-    val versions = IdDecoder.compile(householdMeta, name, years, config.resolver)
+    val versions = compileForYears(df)(IdDecoder.compile(householdMeta, name, _, config.resolver))
     IdDecoder.addAttribute(df, versions, IdDecoder.Settings(name, aspect = aspect))
   }
 
@@ -410,8 +472,7 @@ class TableRepo(
     */
   def selectBy(df: DataFrame, attribute: String, value: String): DataFrame = {
     val helper = s"_sel_$attribute"
-    val years = distinctYears(df)
-    val versions = IdDecoder.compile(householdMeta, attribute, years, config.resolver)
+    val versions = compileForYears(df)(IdDecoder.compile(householdMeta, attribute, _, config.resolver))
     IdDecoder.addAttribute(df, versions, IdDecoder.Settings(attribute, outputCol = Some(helper)))
       .where(col(helper) === lit(value))
       .drop(helper)

@@ -1,5 +1,7 @@
 package graft.ops
 
+import scala.jdk.CollectionConverters._
+
 import graft.meta._
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
@@ -125,7 +127,9 @@ object Classifier {
     } yield Row.fromSeq(
       Seq[Any](it.year, it.level, r.start, r.end, r.step, it.key) ++
         aspects.map(a => if (a == "item_key") it.key else it.aspects.get(a).orNull))
-    spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), schema)
+    // a local relation, not an RDD: equal metadata gives an equal plan, so
+    // a repeated call finds the matched dictionary it persisted before
+    spark.createDataFrame(rows.asJava, schema)
   }
 
   /** D1 plan (b) — SURVEY §2: compile ONE (level, aspect) to a pure
@@ -159,6 +163,30 @@ object Classifier {
     }
   }
 
+  /** Whether, within some (year, level), ranges of two DISTINCT item keys
+    * intersect: the only metadata under which one code can map to two
+    * items. Per (year, level), the ranges are sorted by start and swept
+    * once, keeping the furthest end seen and the furthest end of any other
+    * key. A stepped range counts by its whole span, so two interleaved
+    * stepped ranges count as intersecting even where no code is in both.
+    */
+  private[ops] def rangesIntersect(items: Seq[ClassItem]): Boolean =
+    items.groupBy(i => (i.year, i.level)).valuesIterator.exists { group =>
+      val spans = group.flatMap(i => i.codes.ranges.collect {
+        case r if r.start < r.end => (r.start, r.end, i.key)
+      }).sortBy(_._1)
+      var end1 = Long.MinValue
+      var key1: String = null
+      var end2 = Long.MinValue
+      spans.exists { case (start, end, key) =>
+        val hit = (if (key == key1) end2 else end1) > start
+        if (key == key1) end1 = math.max(end1, end)
+        else if (end > end1) { end2 = end1; end1 = end; key1 = key }
+        else end2 = math.max(end2, end)
+        hit
+      }
+    }
+
   /** Add classification columns to `df`. Raises IllegalStateException when
     * an ambiguous mapping exists (reference parity, decoder.py:436-444).
     */
@@ -176,7 +204,8 @@ object Classifier {
     val spark = df.sparkSession
     val y = settings.yearCol
     val c = settings.codeCol
-    val its = itemsDF(spark, items.filter(i => settings.levels.contains(i.level)), settings.aspects)
+    val levelItems = items.filter(i => settings.levels.contains(i.level))
+    val its = itemsDF(spark, levelItems, settings.aspects)
 
     val codes = df.select(col(y).cast(IntegerType).as(y), col(c).cast(LongType).as(c))
       .where(col(c).isNotNull).distinct()
@@ -184,22 +213,27 @@ object Classifier {
     val joinCond = col(y) === col("_cls_year") &&
       col(c) >= col("_cls_lo") && col(c) < col("_cls_hi") &&
       (col("_cls_step") === lit(1L) || pmod(col(c) - col("_cls_lo"), col("_cls_step")) === lit(0L))
-    // persisted: consumed twice (eager uniqueness validation + pivot agg)
-    // and bounded by the distinct-code dictionary size
+    // persisted: bounded by the distinct-code dictionary, and re-read by
+    // every action over the returned plan and the plans built on it
     val matched = handle.persist(codes.join(broadcast(its), joinCond, "inner"))
 
     // Uniqueness validation: one ITEM per (Year, Code, level) — counted
     // as distinct item keys, not matched range rows, so an item whose
     // own ranges overlap a code (e.g. a range plus a contained
     // singleton) is legal, exactly like the reference's item-level check
-    // (decoder.py:436-444). Runs on the distinct-code dictionary
-    // (small), not the fact table.
-    val dups = matched.groupBy(col(y), col(c), col("_cls_level"))
-      .agg(countDistinct(col("_cls_key")).as("_n_items"))
-      .where(col("_n_items") > 1).limit(10).collect()
-    if (dups.nonEmpty)
-      throw new IllegalStateException(
-        s"Classification is not valid — ambiguous (year, code, level): ${dups.mkString("; ")}")
+    // (decoder.py:436-444). When no two items' ranges intersect, no code
+    // can be ambiguous and the metadata alone settles it. Otherwise the
+    // reference fails only on codes that are present, so the check runs
+    // on the data: on the distinct-code dictionary (small), not the fact
+    // table.
+    if (rangesIntersect(levelItems)) {
+      val dups = matched.groupBy(col(y), col(c), col("_cls_level"))
+        .agg(countDistinct(col("_cls_key")).as("_n_items"))
+        .where(col("_n_items") > 1).limit(10).collect()
+      if (dups.nonEmpty)
+        throw new IllegalStateException(
+          s"Classification is not valid — ambiguous (year, code, level): ${dups.mkString("; ")}")
+    }
 
     // level -> columns (the reference's unstack): conditional first per
     // requested (aspect, level); uniqueness above makes `first` exact.

@@ -1,5 +1,9 @@
 package graft
 
+import java.util.concurrent.{CountDownLatch, TimeUnit}
+import java.util.concurrent.atomic.AtomicInteger
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
@@ -16,4 +20,38 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
     .getOrCreate()
 
   override def afterAll(): Unit = spark.stop()
+
+  /** `body`'s result and the number of Spark jobs it started. A listener
+    * counts the jobs started between two marker jobs run before and after
+    * `body`; the listener bus delivers events in order, so once the second
+    * marker arrives every job of `body` has been counted.
+    */
+  def jobsDuring[T](body: => T): (T, Int) = {
+    val sc = spark.sparkContext
+    val key = "graft.test.marker"
+    val jobs = new AtomicInteger
+    val begun = new CountDownLatch(1)
+    val ended = new CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p => Option(p.getProperty(key))) match {
+          case Some("begin") => begun.countDown()
+          case Some("end")   => ended.countDown()
+          case _ => if (begun.getCount == 0 && ended.getCount == 1) jobs.incrementAndGet()
+        }
+    }
+    def marker(name: String): Unit = {
+      sc.setLocalProperty(key, name)
+      try sc.parallelize(Seq(1), 1).count() finally sc.setLocalProperty(key, null)
+    }
+    sc.addSparkListener(listener)
+    try {
+      marker("begin")
+      assert(begun.await(30, TimeUnit.SECONDS), "the begin marker never reached the listener")
+      val result = body
+      marker("end")
+      assert(ended.await(30, TimeUnit.SECONDS), "the end marker never reached the listener")
+      (result, jobs.get)
+    } finally sc.removeSparkListener(listener)
+  }
 }

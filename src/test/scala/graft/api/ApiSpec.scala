@@ -3,6 +3,7 @@ package graft.api
 import graft.SparkSpec
 import graft.engine.HbsFixtures
 import graft.meta._
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 class ApiSpec extends SparkSpec {
@@ -165,6 +166,28 @@ items:
     val noBc = a.addQuantileOn(tot, bins = 10, out = "Decile", broadcastQuantiles = false)
       .collect().map(r => r.getAs[Long]("ID") -> r.getAs[Int]("Decile")).toMap
     assert(noBc == deciles)
+  }
+
+  test("building the analyst chain over engine-built frames starts no Spark job") {
+    val years = Seq(1399, 1400)
+    def chain(a: Api): DataFrame = {
+      val exp = a.loadTable("Expenditures", years)
+      val weighted = a.addWeight(a.addAttribute(a.addClassification(exp, "Food_NonFood"), "Urban_Rural"))
+      val avg = a.averageTable(weighted, Seq("Gross_Expenditure"), Seq("Year", "ID", "Urban_Rural"))
+      a.adjustByEquivalenceScale(a.addDecile(avg), Seq("Gross_Expenditure"))
+    }
+    val cacheDir = java.nio.file.Files.createTempDirectory("graft_api_jobs").toString
+    val cached = new Api(spark, HbsFixtures.repo(spark, cacheDir = Some(cacheDir)))
+    // the first load writes the A9 entries, which is a job of its own
+    cached.loadTable("Expenditures", years)
+    for ((label, a) <- Seq("without an A9 cache" -> new Api(spark, HbsFixtures.repo(spark)),
+                           "with an A9 cache" -> cached)) {
+      val (df, jobs) = jobsDuring(chain(a))
+      assert(jobs == 0, s"$label: building the chain started $jobs jobs")
+      // one row per (Year, household), each with a decile
+      val out = df.collect()
+      assert(out.length == 8 && out.forall(r => !r.isNullAt(r.fieldIndex("Decile"))), label)
+    }
   }
 
   test("nearDuplicatePairs + duplicateClusters: managed handle owns every cache") {

@@ -44,6 +44,66 @@ items:
     assert(out.length == 1 && out.head.getAs[String]("item_key_1") == "a")
   }
 
+  test("D1 metadata without intersecting ranges settles uniqueness with no job") {
+    import spark.implicits._
+    val meta = Meta.fromYaml("""
+defaults:
+  levels: [1, 2]
+items:
+  coarse:
+    level: 1
+    code: {start: 0, end: 100}
+  fine_low:
+    level: 2
+    code: [{start: 0, end: 50}, {start: 10, end: 20}]
+  fine_high:
+    level: 2
+    code: {start: 50, end: 100}
+""")
+    val df = Seq((1400, 25L), (1400, 75L)).toDF("Year", "Code")
+    val items = Classifier.compile(meta, Seq(1400), resolver = resolver)
+    assert(!Classifier.rangesIntersect(items))
+    val (out, jobs) = jobsDuring(Classifier.addClassification(df, items, Classifier.settingsFromMeta(meta)))
+    assert(jobs == 0, s"building the classification started $jobs jobs")
+    assert(out.collect().map(r => r.getAs[String]("item_key_2")).toSet == Set("fine_low", "fine_high"))
+  }
+
+  test("D1 intersecting metadata with no ambiguous code present still decodes") {
+    import spark.implicits._
+    val meta = Meta.fromYaml("""
+items:
+  a:
+    level: 1
+    code: {start: 0, end: 100}
+  b:
+    level: 1
+    code: {start: 50, end: 150}
+""")
+    val df = Seq((1400, 25L), (1400, 120L)).toDF("Year", "Code")
+    val items = Classifier.compile(meta, Seq(1400), resolver = resolver)
+    assert(Classifier.rangesIntersect(items))
+    val out = Classifier.addClassification(df, items).collect()
+      .map(r => r.getAs[Long]("Code") -> r.getAs[String]("item_key_1")).toMap
+    assert(out == Map(25L -> "a", 120L -> "b"))
+  }
+
+  test("D1 range intersection: distinct keys only, per (year, level), stepped ranges by span") {
+    def item(key: String, ranges: (Long, Long, Long)*)(year: Int = 1400, level: Int = 1) =
+      Classifier.ClassItem(year, key, level, Argham(MList(ranges.toVector.map { case (lo, hi, step) =>
+        Meta.map(Meta.k("start") -> MInt(lo), Meta.k("end") -> MInt(hi), Meta.k("step") -> MInt(step))
+      })))
+    import Classifier.rangesIntersect
+    assert(!rangesIntersect(Seq(item("a", (0L, 10L, 1L))(), item("b", (10L, 20L, 1L))())))
+    assert(rangesIntersect(Seq(item("a", (0L, 10L, 1L))(), item("b", (9L, 20L, 1L))())))
+    // a range nested in another key's range, after a third key's ranges
+    assert(rangesIntersect(Seq(item("a", (0L, 100L, 1L))(), item("c", (100L, 120L, 1L), (130L, 140L, 1L))(),
+      item("b", (110L, 115L, 1L))())))
+    assert(!rangesIntersect(Seq(item("a", (0L, 10L, 1L), (5L, 8L, 1L))())))
+    assert(!rangesIntersect(Seq(item("a", (0L, 10L, 1L))(1399), item("b", (0L, 10L, 1L))(1400))))
+    assert(!rangesIntersect(Seq(item("a", (0L, 10L, 1L))(level = 1), item("b", (0L, 10L, 1L))(level = 2))))
+    assert(rangesIntersect(Seq(item("even", (0L, 10L, 2L))(), item("odd", (1L, 11L, 2L))())))
+  }
+
   test("D1 non-overlapping levels pivot to separate columns") {
     import spark.implicits._
     val meta = Meta.fromYaml("""
