@@ -2,6 +2,8 @@ package graft
 import org.apache.spark.sql.SparkSession
 import scala.collection.immutable.ListMap
 
+import graft.Json.fixed
+
 /** Benchmark main: runs the headline queries ([[Queries.benchNames]]) on
   * SPARK_GRAFT_SF_DIR and prints one JSON line.
   *
@@ -91,19 +93,8 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      // subset-key co-partitioning (see Verify.scala): lets the
-      // bucketed-by-ID layout carry (Year, ID) joins without re-shuffle
-      .config("spark.sql.requireAllClusterKeysForCoPartition", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = GraftSession.defaultCpus
+    val spark = GraftSession.local(cpus)
     val byName = SparkEntry.queries ++ Queries.benchExtra
     // optional dev filter: `runMain graft.Bench name1,name2` times just
     // those queries (same shape as Verify's filter)
@@ -177,43 +168,39 @@ object Bench {
     System.err.println(s"[bench] controls(end):   " +
       controlsEnd.map { case (k, v) => f"$k=$v%.3f" }.mkString(" "))
     val loadAfter = osBean.getSystemLoadAverage
-    def esc(s: String) = s.flatMap {
-      case '"' => "\\\""; case '\\' => "\\\\"; case '\n' => "\\n"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"; case c => c.toString
-    }
-    val qs = results.map { case (k, (v, _)) => "\"" + esc(k) + "\":" + f"${v.min}%.3f" }.mkString("{", ",", "}")
-    val rs = results.map { case (k, (v, _)) =>
-      "\"" + esc(k) + "\":[" + v.map(r => f"$r%.3f").mkString(",") + "]"
-    }.mkString("{", ",", "}")
-    val ls = results.map { case (k, (_, l)) =>
-      "\"" + esc(k) + "\":[" + l.map(x => f"$x%.2f").mkString(",") + "]"
-    }.mkString("{", ",", "}")
-    val es = errors.map { case (k, v) => "\"" + esc(k) + "\":\"" + esc(v) + "\"" }.mkString("{", ",", "}")
-    val us = skipped.map(k => "\"" + esc(k) + "\":\"" + esc(unavailable(k)) + "\"").mkString("{", ",", "}")
+    def byQuery[V](f: (Seq[Double], Seq[Double]) => V) =
+      ListMap(results.map { case (k, (runs, loads)) => k -> f(runs, loads) }: _*)
     val total = results.map(_._2._1.min).sum
     // controls block: raw start/end seconds, the recorded baselines,
     // and the drift ratio (geometric mean of sec/baseline across the
     // controls, per end) — the self-normalizing ambient-load record
     // that replaces per-round load archaeology.
-    def ctlJson(m: ListMap[String, Double]) =
-      m.map { case (k, v) => "\"" + esc0(k) + "\":" + f"$v%.3f" }.mkString("{", ",", "}")
-    def esc0(s: String) = s // control names are fixed identifiers
     def drift(m: ListMap[String, Double]): Option[Double] = {
       val rs = m.toSeq.flatMap { case (k, v) => controlBaseline.get(k).map(v / _) }
       if (rs.isEmpty) None
       else Some(math.exp(rs.map(math.log).sum / rs.size))
     }
-    val ctl = {
-      val base = controlBaseline.map { case (k, v) => "\"" + k + "\":" + f"$v%.3f" }
-        .mkString("{", ",", "}")
-      val dS = drift(controlsStart).map(d => f"$d%.3f").getOrElse("null")
-      val dE = drift(controlsEnd).map(d => f"$d%.3f").getOrElse("null")
-      s"""{"start":${ctlJson(controlsStart)},"end":${ctlJson(controlsEnd)},"baseline":$base,"drift_start":$dS,"drift_end":$dE}"""
-    }
+    def ctlJson(m: Iterable[(String, Double)]) =
+      ListMap(m.toSeq.map { case (k, v) => k -> fixed(v, 3) }: _*)
+    val ctl = ListMap(
+      "start" -> ctlJson(controlsStart),
+      "end" -> ctlJson(controlsEnd),
+      "baseline" -> ctlJson(controlBaseline),
+      "drift_start" -> drift(controlsStart).map(fixed(_, 3)),
+      "drift_end" -> drift(controlsEnd).map(fixed(_, 3)))
     spark.stop()
     // Full artifact first (complete per-query mins + raw runs + load
     // samples) for any consumer capturing whole stdout...
-    val fullJson = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"runs":$rs,"load":$ls,"controls":$ctl,"load_avg_before":$loadBefore,"load_avg_after":$loadAfter,"errors":$es,"unavailable":$us,"sf":"$sfDir"}"""
+    val fullJson = Json.write(ListMap(
+      "metric" -> "total", "value" -> total, "unit" -> "sec",
+      "queries" -> byQuery((runs, _) => fixed(runs.min, 3)),
+      "runs" -> byQuery((runs, _) => runs.map(fixed(_, 3))),
+      "load" -> byQuery((_, loads) => loads.map(fixed(_, 2))),
+      "controls" -> ctl,
+      "load_avg_before" -> loadBefore, "load_avg_after" -> loadAfter,
+      "errors" -> errors,
+      "unavailable" -> ListMap(skipped.map(k => k -> unavailable(k)): _*),
+      "sf" -> sfDir))
     println(fullJson)
     // ...and the same artifact as a SIDECAR FILE (launcher-independent
     // machine-readable contract: BENCH_r01..r18 all record parsed=null
@@ -237,20 +224,22 @@ object Bench {
     // Nothing may print to stdout after it (Spark logs go to stderr;
     // spark.stop() already ran above).
     val topN = results.map { case (k, (v, _)) => k -> v.min }.sortBy(-_._2).take(15)
-    val topJson = topN.map { case (k, v) => "\"" + esc(k) + "\":" + f"$v%.2f" }.mkString("{", ",", "}")
-    // error NAMES only here (full messages live in the detailed line
-    // above) — a handful of 200-char messages would blow the 2000-byte
-    // tail budget this line exists to respect
-    val errNames = errors.keys.take(10).map(k => "\"" + esc(k) + "\"").mkString("[", ",", "]")
-    val unavailableNames = skipped.take(10).map(k => "\"" + esc(k) + "\"").mkString("[", ",", "]")
-    val driftCompact = drift(controlsEnd).map(d => f"$d%.2f").getOrElse("null")
     // every timed query's min, positionally in Queries.benchNames order
     // (null: not timed in this run), so per-query geomeans compute from
     // this line; a name-keyed map of all ~93 rows would not fit the
     // 2000-byte tail
     val mins = results.map { case (k, (v, _)) => k -> v.min }.toMap
-    val minsJson = Queries.benchNames.map(n => mins.get(n).map(v => f"$v%.2f").getOrElse("null"))
-      .mkString("[", ",", "]")
-    println(s"""{"metric":"total","value":${f"$total%.2f"},"unit":"sec","n":${results.size},"error_count":${errors.size},"errored":$errNames,"unavailable":$unavailableNames,"drift":$driftCompact,"top_slowest":$topJson,"mins":$minsJson,"sf":"$sfDir"}""")
+    println(Json.write(ListMap(
+      "metric" -> "total", "value" -> fixed(total, 2), "unit" -> "sec",
+      "n" -> results.size, "error_count" -> errors.size,
+      // error NAMES only here (full messages live in the detailed line
+      // above) — a handful of 200-char messages would blow the 2000-byte
+      // tail budget this line exists to respect
+      "errored" -> errors.keys.take(10),
+      "unavailable" -> skipped.take(10),
+      "drift" -> drift(controlsEnd).map(fixed(_, 2)),
+      "top_slowest" -> ListMap(topN.map { case (k, v) => k -> fixed(v, 2) }: _*),
+      "mins" -> Queries.benchNames.map(n => mins.get(n).map(fixed(_, 2))),
+      "sf" -> sfDir)))
   }
 }

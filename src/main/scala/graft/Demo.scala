@@ -13,13 +13,7 @@ import org.apache.spark.sql.functions._
   */
 object Demo {
   def main(args: Array[String]): Unit = {
-    val spark: SparkSession = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark: SparkSession = GraftSession.local()
     import spark.implicits._
 
     val tablesMeta = Meta.fromYaml("""

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{FloatType, LongType}
 
@@ -34,13 +34,7 @@ object InflateSf {
     val factor = args.lift(2).map(_.toInt).getOrElse(10)
     val STRIDE = 100000000L // > any sf0.1 key; % 25 == 0
 
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local()
 
     def copy(name: String): Unit =
       spark.read.parquet(s"$src/$name.parquet")

@@ -1,6 +1,6 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
+import scala.collection.immutable.ListMap
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare.
   *
@@ -22,26 +22,7 @@ object Verify {
       if (sqlOnly) None else args.lift(2).map(_.split(",").toSet)
     val (runnable, unavailable) =
       Queries.catalog.filter(e => only.forall(_.contains(e.name))).partition(_.runnable)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // events.parquet carries TIMESTAMP(NANOS); read as nanos-long
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      // allow reusing a subset-key hash partitioning for joins on a
-      // superset of those keys (e.g. bucketed-by-ID tables joining on
-      // (Year, ID)): the engine's at-rest layout buckets by the
-      // household ID alone, which co-partitions every (Year, ID) join
-      // correctly — the conservative default would re-shuffle both
-      // sides. Tradeoff (why Spark defaults to true): fewer partition
-      // keys can mean coarser key distribution; our bucket counts are
-      // sized for that.
-      .config("spark.sql.requireAllClusterKeysForCoPartition", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local()
     new java.io.File(outDir).mkdirs()
     unavailable.foreach(e =>
       System.err.println(s"[verify] ${e.name} unavailable: ${e.unavailableReason.get}"))
@@ -56,21 +37,8 @@ object Verify {
       // stays flat (same discipline as Bench.runOnce)
       spark.catalog.clearCache()
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
     def write(file: String, kvs: Seq[(String, String)]): Unit =
-      Files.writeString(Paths.get(s"$outDir/$file"),
-        kvs.map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}"))
+      Files.writeString(Paths.get(s"$outDir/$file"), Json.write(ListMap(kvs: _*)))
     write("oracle_sql.json", runnable.map(e => e.name -> e.oracleSql))
     write("unavailable.json", unavailable.map(e => e.name -> e.unavailableReason.get))
     spark.stop()

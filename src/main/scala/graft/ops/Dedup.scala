@@ -439,7 +439,7 @@ object Dedup {
     * `counts` may be null only when `maxBucketSize <= 0` (exact,
     * uncapped semantics).
     */
-  private[graft] def simHashCandidatesFromBanded(
+  private def simHashCandidatesFromBanded(
       banded: DataFrame,
       counts: DataFrame,
       idCol: String,

@@ -29,11 +29,12 @@ import org.apache.spark.storage.StorageLevel
 final class StorageHandle private[graft] (val managed: Boolean) {
   private val tracked = ArrayBuffer.empty[DataFrame]
 
-  /** Persist `df` (MEMORY_AND_DISK) and, when managed, remember it for
-    * [[release]].
+  /** Persist `df` (MEMORY_AND_DISK) unless its plan is already cached,
+    * and, when managed, remember it for [[release]].
     */
   private[graft] def persist(df: DataFrame): DataFrame = {
-    val p = df.persist(StorageLevel.MEMORY_AND_DISK)
+    val p =
+      if (df.storageLevel == StorageLevel.NONE) df.persist(StorageLevel.MEMORY_AND_DISK) else df
     if (managed) synchronized { tracked += p }
     p
   }

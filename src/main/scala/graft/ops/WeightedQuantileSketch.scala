@@ -120,19 +120,6 @@ object WeightedQuantileSketch {
     b.vs.last // numeric tail guard (cum ≈ total < target by ulps)
   }
 
-  final class WeightedPercentile(p: Double, maxCentroids: Int)
-      extends Aggregator[(Double, Double), WQBuf, Double] {
-    require(p >= 0 && p <= 1, s"percentile must be in [0,1], got $p")
-    require(maxCentroids >= 2, s"need at least 2 centroids, got $maxCentroids")
-    override def zero: WQBuf = WQBuf(Array.empty, Array.empty)
-    override def reduce(b: WQBuf, in: (Double, Double)): WQBuf =
-      bufInsert(b, in._1, in._2, maxCentroids)
-    override def merge(a: WQBuf, b: WQBuf): WQBuf = bufMerge(a, b, maxCentroids)
-    override def finish(b: WQBuf): Double = bufPercentile(b, p)
-    override def bufferEncoder: Encoder[WQBuf] = Encoders.product[WQBuf]
-    override def outputEncoder: Encoder[Double] = Encoders.scalaDouble
-  }
-
   /** Any number of percentiles from the SAME single-pass buffer. */
   final class WeightedPercentiles(ps: Seq[Double], maxCentroids: Int)
       extends Aggregator[(Double, Double), WQBuf, Seq[Double]] {
@@ -148,18 +135,12 @@ object WeightedQuantileSketch {
     override def outputEncoder: Encoder[Seq[Double]] = ExpressionEncoder()
   }
 
-  /** Column form: `wq(value, weight)` usable in any groupBy.agg.
-    * Aggregator/udaf path — kept as the cross-check twin of the native
-    * form (WeightedQuantileSketchSpec asserts they agree bit-for-bit);
-    * prefer [[weightedPercentilesNativeAgg]] in production plans.
-    */
-  def weightedPercentileAgg(p: Double, maxCentroids: Int = 128): (Column, Column) => Column = {
-    val u = udaf(new WeightedPercentile(p, maxCentroids))
-    (v, w) => u(v, w)
-  }
-
-  /** Column form returning array<double>, one element per requested p
-    * (Aggregator/udaf path — see [[weightedPercentileAgg]]).
+  /** Column form returning array<double>, one element per requested p.
+    * Aggregator/udaf path — the fallback for sessions without
+    * [[graft.plans.GraftExtensions]], and the cross-check twin of the
+    * native form (WeightedQuantileSketchSpec asserts they agree
+    * bit-for-bit); prefer [[weightedPercentilesNativeAgg]] in production
+    * plans.
     */
   def weightedPercentilesAgg(ps: Seq[Double], maxCentroids: Int = 128): (Column, Column) => Column = {
     val u = udaf(new WeightedPercentiles(ps, maxCentroids))

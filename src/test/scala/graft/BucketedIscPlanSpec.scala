@@ -23,12 +23,11 @@ class BucketedIscPlanSpec extends SparkSpec {
   test("iscSummaryBucketed: no household-keyed exchange; results match the unbucketed flagship") {
     assume(new File(sfDir).exists(), s"$sfDir not present")
     // plan-shape assertions need the real tree (AQE wraps it) and joins
-    // too big to broadcast away; subset-key co-partitioning matches the
-    // Verify/Bench session config — without it the (Year, ID) weight
-    // join re-shuffles both sides despite the ID bucketing
+    // too big to broadcast away; the session's subset-key
+    // co-partitioning (GraftSession) is what lets the (Year, ID) weight
+    // join reuse the ID bucketing without re-shuffling both sides
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    spark.conf.set("spark.sql.requireAllClusterKeysForCoPartition", "false")
     try {
       val df = Queries.iscSummaryBucketed(spark, sfDir)
       val plan = df.queryExecution.executedPlan
@@ -70,7 +69,6 @@ class BucketedIscPlanSpec extends SparkSpec {
     } finally {
       spark.conf.set("spark.sql.adaptive.enabled", "true")
       spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
-      spark.conf.unset("spark.sql.requireAllClusterKeysForCoPartition")
     }
   }
 }

@@ -2,7 +2,6 @@ package graft
 
 import java.io.File
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
 import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
@@ -22,17 +21,6 @@ import org.apache.spark.sql.execution.joins.{BroadcastNestedLoopJoinExec, Cartes
   * checks the tag.
   */
 class CatalogPlanLintSpec extends SparkSpec {
-
-  override lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[2]")
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-    // events.parquet carries TIMESTAMP(NANOS)
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .appName(getClass.getSimpleName)
-    .getOrCreate()
 
   // sf0.01, not sf0.001: several fixtures carry data-derived
   // preconditions (planted-pair invariants) that hold at the gate's

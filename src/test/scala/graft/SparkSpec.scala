@@ -10,14 +10,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local SparkSession for operator specs. */
 trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[2]")
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-    .appName(getClass.getSimpleName)
-    .getOrCreate()
+  lazy val spark: SparkSession = GraftSession.local(2)
 
   override def afterAll(): Unit = spark.stop()
 

@@ -1,10 +1,8 @@
 package graft.engine
 
+import graft.SparkSpec
 import graft.meta._
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
 
 /** End-to-end engine test over HBSIR-shaped fixtures (FIXTURES.md §2):
   * raw -> clean -> pipeline -> schema-DAG union -> weights -> decoders ->
@@ -12,17 +10,7 @@ import org.scalatest.BeforeAndAfterAll
   * shape of the reference's ISC test
   * (tests/test_package/package/test_by_examples.py:7-69).
   */
-class TableRepoSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[2]")
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-    .appName("TableRepoSpec")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class TableRepoSpec extends SparkSpec {
 
   import HbsFixtures.{U1, U2, R1, R2}
 
