@@ -145,42 +145,31 @@ object Ann {
       seed: Long = 42L,
   ): DataFrame = {
     require(numPlanes % bands == 0, "bands must divide numPlanes")
-    val r = numPlanes / bands
     val planes = hyperplanes(numPlanes, dim, seed)
-    val mask = (1L << r) - 1
     // candidate generation on SLIM (id, band, key) rows: the corpus pass
     // computes signatures and bucket keys only — no vectors ride the
-    // collision rows or the distinct shuffle (the minHashPairs shape)
-    def bandedSlim(df: DataFrame, id: String): DataFrame = {
-      val sig = signBits(col(vecCol), planes)
-      // static unrolling (bands is a plan-time constant): the
-      // transform(sequence(...)) lambda would evaluate interpreted per
-      // row — the Dedup.bandKeys discipline
-      df.select(col(idCol).as(id), sig.as("_sig"))
-        .select(col(id), explode(array((0 until bands).map { b =>
-          struct(lit(b).as("band"),
-            call_function("shiftright", col("_sig"), lit(b * r)).bitwiseAND(lit(mask)).as("key"))
-        }: _*)).as("_bk"))
-        .select(col(id), col("_bk.band").as("_b"), col("_bk.key").as("_k"))
-    }
-    val c = bandedSlim(Dedup.scatter(corpus), "neighbor_id")
-    val q = bandedSlim(queries, queryIdCol)
-    val pairs = c.join(broadcast(q), Seq("_b", "_k"))
+    // collision rows or the distinct shuffle (the minHashPairs shape).
+    // No scatter: on an under-partitioned corpus it would shuffle every
+    // vector to spread the signature work.
+    def bandedSlim(df: DataFrame, id: String): DataFrame =
+      df.select(col(idCol).as(id), signBits(col(vecCol), planes).as("_sig"))
+        .select(col(id), posexplode(array(
+          Dedup.bitSlices(col("_sig"), bands, numPlanes / bands): _*)).as(Seq("_b", "_k")))
+    val pairs = bandedSlim(corpus, "neighbor_id")
+      .join(broadcast(bandedSlim(queries, queryIdCol)), Seq("_b", "_k"))
       .where(col("neighbor_id") =!= col(queryIdCol))
       .select(queryIdCol, "neighbor_id").distinct()
     // vectors re-attach via broadcast of the (small: |queries| × bucket
     // collisions) pair set — the corpus is re-scanned pruned to
     // (id, vector) with no shuffle at all
-    val scored = Dedup.scatter(corpus)
+    val scored = corpus
       .select(col(idCol).as("neighbor_id"), col(vecCol).as("_cvec"))
       .join(broadcast(pairs), Seq("neighbor_id"))
       .join(broadcast(queries.select(col(idCol).as(queryIdCol), col(vecCol).as("_qvec"))),
         Seq(queryIdCol))
       .select(col(queryIdCol), col("neighbor_id"),
         cosine(col("_qvec"), col("_cvec")).as("cosine"))
-    val win = Window.partitionBy(queryIdCol)
-      .orderBy(col("cosine").desc, col("neighbor_id").asc)
-    scored.withColumn("rank", row_number().over(win)).where(col("rank") <= k)
+    topKByCosine(scored, k, queryIdCol)
   }
 
   /** Embedding-cosine near-duplicate pairs: sign-bucket LSH self-join
@@ -253,12 +242,7 @@ object Ann {
       handle: StorageHandle = StorageHandle.unmanaged,
       centroids: Option[Seq[(Int, Array[Double])]] = None,
   ): DataFrame = {
-    require(numPlanes % bands == 0, "bands must divide numPlanes")
     require(centroids.forall(_.nonEmpty), "centroid list, when given, must be non-empty")
-    val r = numPlanes / bands
-    val planes = hyperplanes(numPlanes, dim, seed)
-    val mask = (1L << r) - 1
-    val sig = signBits(col(vecCol), planes)
     // Optional centroid split (the semanticDedup candidate bound,
     // reusable here because a sign-LSH band bucket's quadratic residue
     // at a FIXED operating point grows with n² — the measured sf10
@@ -270,36 +254,57 @@ object Ann {
     // vectors co-assign except exactly at boundary ties, and k ∝ n
     // keeps the per-cluster residue constant as the corpus grows. The
     // default (None) remains the cluster-free oracled fixed point.
-    val clusterCol = centroids.map(cs => nearestCentroid(col(vecCol), cs).getField("id"))
-    // persist: the signature pass runs once, not once per self-join side;
-    // scatter: small-file corpora would otherwise compute on one task.
-    // Norms are precomputed HERE, once per vector: the join projection
-    // then pays one vec_dot per candidate instead of three (dot + both
-    // norms), cutting the dominant Σ bucket² compute 3× — with
-    // bit-identical results, since norm(a)·norm(b) runs the exact same
-    // operations in the same order as the inline cosine() form.
-    val sigs = handle.persist(
-      Dedup.scatter(corpus).select(Seq(col(idCol), col(vecCol), sig.as("_sig"),
-        norm(col(vecCol)).as("_n")) ++ clusterCol.map(_.as("_cl")): _*))
-    // static unrolling keeps the band-key projection in whole-stage
-    // codegen — a transform/sequence formulation evaluates interpreted
-    // (higher-order functions have no doGenCode), the same rule
-    // Dedup.bandKeys documents
-    val bandCols = array((0 until bands).map(b =>
-      shiftright(col("_sig"), b * r).bitwiseAND(lit(mask))): _*)
-    val joinKeys = (if (clusterCol.isDefined) Seq("_cl") else Nil) ++ Seq("_b", "_k")
-    def side(id: String, vec: String, nrm: String): DataFrame = sigs.select(
-      Seq(col(idCol).as(id), col(vecCol).as(vec), col("_n").as(nrm)) ++
-        clusterCol.map(_ => col("_cl")) ++
-        Seq(posexplode(bandCols).as(Seq("_b", "_k"))): _*)
-    val denom = col("_na") * col("_nb")
-    side("id_a", "_va", "_na").join(side("id_b", "_vb", "_nb"), joinKeys)
-      .where(col("id_a") < col("id_b"))
-      .select(col("id_a"), col("id_b"),
-        when(denom > 0, dot(col("_va"), col("_vb")) / denom)
-          .otherwise(lit(0.0)).as("cosine"))
+    val clusterCol = centroids.map(cs => nearestCentroid(col(vecCol), cs).getField("id").as("_cl"))
+    // scatter: small-file corpora would otherwise compute on one task
+    val rows = Dedup.scatter(corpus).select(Seq(col(idCol), col(vecCol)) ++ clusterCol: _*)
+    val (_, pairs) = bandedCosinePairs(rows, clusterCol.map(_ => "_cl").toSeq, Nil,
+      threshold, dim, numPlanes, bands, idCol, vecCol, seed, handle)
+    pairs.select("id_a", "id_b", "cosine").distinct()
+  }
+
+  /** The banded cosine self-join of [[cosineNearDupPairs]] and
+    * [[semanticDedupCore]]. `rows` carries (idCol, vecCol) plus the extra
+    * equi-join `keys` and the `carry` columns. Signature and norm are
+    * computed in ONE persisted pass (returned first) that both join sides
+    * read; pairs sharing a band key and every `keys` value come back as
+    * (id_a, id_b, cosine, carry c_a / c_b …), cosine ≥ `threshold` —
+    * once per shared band, so callers dedup.
+    *
+    * Norms are precomputed in the persisted pass, once per vector: the
+    * join projection then pays one vec_dot per candidate instead of three
+    * (dot + both norms), cutting the dominant Σ bucket² compute 3× — with
+    * bit-identical results, since norm(a)·norm(b) runs the exact same
+    * operations in the same order as the inline cosine() form. The
+    * threshold filter sits in the join's own projection, so no candidate
+    * row is materialized or shuffled.
+    */
+  private def bandedCosinePairs(
+      rows: DataFrame,
+      keys: Seq[String],
+      carry: Seq[String],
+      threshold: Double,
+      dim: Int,
+      numPlanes: Int,
+      bands: Int,
+      idCol: String,
+      vecCol: String,
+      seed: Long,
+      handle: StorageHandle,
+  ): (DataFrame, DataFrame) = {
+    require(numPlanes % bands == 0, "bands must divide numPlanes")
+    val planes = hyperplanes(numPlanes, dim, seed)
+    val sigs = handle.persist(rows.select(rows.columns.map(col) ++ Seq(
+      signBits(col(vecCol), planes).as("_sig"), norm(col(vecCol)).as("_n")): _*))
+    val banded = sigs.select((Seq(idCol, vecCol, "_n") ++ keys ++ carry).map(col) :+
+      posexplode(array(Dedup.bitSlices(col("_sig"), bands, numPlanes / bands): _*))
+        .as(Seq("_b", "_k")): _*)
+    val denom = col("_n_a") * col("_n_b")
+    val pairs = Dedup.bandSelfJoin(banded, idCol, keys ++ Seq("_b", "_k"),
+      Seq(vecCol, "_n") ++ carry)
+      .withColumn("cosine", when(denom > 0, dot(col(s"${vecCol}_a"), col(s"${vecCol}_b")) / denom)
+        .otherwise(lit(0.0)))
       .where(col("cosine") >= threshold)
-      .distinct()
+    (sigs, pairs)
   }
 
   /** Per-vector max-abs scale for int8 quantization (double). */
@@ -830,30 +835,10 @@ object Ann {
       seed: Long,
       handle: StorageHandle,
   ): DataFrame = {
-    require(numPlanes % bands == 0, "bands must divide numPlanes")
-    val r = numPlanes / bands
-    val planes = hyperplanes(numPlanes, dim, seed)
-    val mask = (1L << r) - 1
-    val rows = handle.persist(assigned
-      .select(col(idCol), col(vecCol), col("cluster"), col("_csim"),
-        signBits(col(vecCol), planes).as("_sig"), norm(col(vecCol)).as("_n")))
-    // static unrolling keeps the band-key projection in whole-stage
-    // codegen — a transform/sequence formulation evaluates interpreted
-    // (higher-order functions have no doGenCode), the same rule
-    // Dedup.bandKeys documents
-    val bandCols = array((0 until bands).map(b =>
-      shiftright(col("_sig"), b * r).bitwiseAND(lit(mask))): _*)
-    def side(id: String, vec: String, nrm: String, cs: String): DataFrame = rows.select(
-      Seq(col(idCol).as(id), col(vecCol).as(vec), col("_n").as(nrm),
-        col("cluster"), col("_csim").as(cs),
-        posexplode(bandCols).as(Seq("_b", "_k"))): _*)
-    val denom = col("_na") * col("_nb")
-    val dropped = side("id_a", "_va", "_na", "_ca")
-      .join(side("id_b", "_vb", "_nb", "_cb"), Seq("cluster", "_b", "_k"))
-      .where(col("id_a") < col("id_b"))
-      .where(when(denom > 0, dot(col("_va"), col("_vb")) / denom)
-        .otherwise(lit(0.0)) >= threshold)
-      .select(when(struct(col("_ca"), col("id_a")) < struct(col("_cb"), col("id_b")),
+    val (rows, pairs) = bandedCosinePairs(assigned, Seq("cluster"), Seq("_csim"),
+      threshold, dim, numPlanes, bands, idCol, vecCol, seed, handle)
+    val dropped = pairs
+      .select(when(struct(col("_csim_a"), col("id_a")) < struct(col("_csim_b"), col("id_b")),
         col("id_b")).otherwise(col("id_a")).as("_drop"))
       .distinct()
     rows.join(dropped, col(idCol) === col("_drop"), "left_anti")

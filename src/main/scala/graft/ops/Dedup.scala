@@ -1,6 +1,7 @@
 package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -143,12 +144,9 @@ object Dedup {
     val banded = sigs.select(col(idCol),
       explode(bandKeys(col("_sig"), numHashes, bands)).as("_band"))
       .select(col(idCol), col("_band.band").as("_b"), col("_band.key").as("_k"))
-    val a = banded.select(col(idCol).as("id_a"), col("_b"), col("_k"))
-    val b = banded.select(col(idCol).as("id_b"), col("_b"), col("_k"))
     // persist: the pair set feeds both the participant-id prune and the
     // final estimate join
-    val candidates = handle.persist(a.join(b, Seq("_b", "_k"))
-      .where(col("id_a") < col("id_b"))
+    val candidates = handle.persist(bandSelfJoin(banded, idCol, Seq("_b", "_k"))
       .select("id_a", "id_b").distinct())
     // signature agreement only for surviving distinct pairs: prune the
     // cached signatures to pair participants. Unmanaged mode materializes
@@ -193,6 +191,203 @@ object Dedup {
   /** Hamming distance between two 64-bit SimHashes. */
   def hammingDistance(a: Column, b: Column): Column =
     bit_count(a.bitwiseXOR(b))
+
+  /** The `bands` `width`-bit slices of a 64-bit signature, lowest slice
+    * first: `(sig >> b·width) & mask` — the band keys of every banded
+    * projection in Dedup and Ann. Static unrolling (bands is a plan-time
+    * constant): a transform(sequence(...)) form would evaluate its lambda
+    * interpreted per row (higher-order functions have no doGenCode).
+    */
+  private[ops] def bitSlices(sig: Column, bands: Int, width: Int): Seq[Column] = {
+    val mask = if (width == 64) -1L else (1L << width) - 1
+    (0 until bands).map(b => shiftright(sig, b * width).bitwiseAND(lit(mask)))
+  }
+
+  /** The banded self-join: each side renames `idCol` to id_a / id_b and
+    * every `carry` column c to c_a / c_b, the sides equi-join on the
+    * bucket `keys` (a shuffle join on high-cardinality keys, never
+    * all-pairs), and each unordered pair is kept as id_a < id_b — once
+    * per shared bucket, so callers dedup.
+    */
+  private[ops] def bandSelfJoin(
+      rows: DataFrame,
+      idCol: String,
+      keys: Seq[String],
+      carry: Seq[String] = Nil,
+  ): DataFrame = {
+    def side(s: String) = rows.select(
+      (col(idCol).as(s"id_$s") +: carry.map(c => col(c).as(s"${c}_$s"))) ++ keys.map(col): _*)
+    side("a").join(side("b"), keys).where(col("id_a") < col("id_b"))
+  }
+
+  /** Members per bucket: `(keys…, _n)`. */
+  private def bucketCounts(rows: DataFrame, keys: String*): DataFrame =
+    rows.groupBy(keys.map(col): _*).agg(count(lit(1)).as("_n"))
+
+  /** Hamming-scored pairs (id_a, id_b, hamming) of SimHashed rows
+    * `(idCol, _sh, keys…)` bucketed on `keys`. Without a census every
+    * bucket runs the pairwise [[bandSelfJoin]]. With one (`counts`, as
+    * `(keys…, _n)`), only buckets of at most `cap` members do; each larger
+    * bucket orders its members by full hash and compares each to its next
+    * `window` neighbors (lead() over one window sort — a single shuffle
+    * bounded by hot membership, output bounded by membership × window).
+    */
+  private def cappedBucketPairs(
+      rows: DataFrame,
+      idCol: String,
+      keys: Seq[String],
+      counts: Option[DataFrame],
+      cap: Int,
+      window: Int,
+  ): DataFrame = {
+    def sized(keep: Column) = counts.fold(rows)(c => rows.join(c.where(keep), keys, "left_semi"))
+    val joined = bandSelfJoin(sized(col("_n") <= cap), idCol, keys, Seq("_sh"))
+      .select(col("id_a"), col("id_b"), hammingDistance(col("_sh_a"), col("_sh_b")).as("hamming"))
+    if (counts.isEmpty) joined
+    else {
+      val sortWin = Window.partitionBy(keys.map(col): _*).orderBy(col("_sh"), col(idCol))
+      val leads = array((1 to window).map(i =>
+        lead(struct(col(idCol).as("nid"), col("_sh").as("nsh")), i).over(sortWin)): _*)
+      // window exprs are illegal inside a generator: project the lead
+      // array first, explode in a second select
+      val neighbors = sized(col("_n") > cap)
+        .select(col(idCol), col("_sh"), leads.as("_leads"))
+        .select(col(idCol), col("_sh"), explode(col("_leads")).as("_nb"))
+        .where(col("_nb.nid").isNotNull)
+        .select(
+          least(col(idCol), col("_nb.nid")).as("id_a"),
+          greatest(col(idCol), col("_nb.nid")).as("id_b"),
+          hammingDistance(col("_sh"), col("_nb.nsh")).as("hamming"))
+      joined.union(neighbors)
+    }
+  }
+
+  /** The banding projection shared by [[simHashCandidates]] and
+    * [[simHashBucketCensus]]: one row per (doc, band) carrying the
+    * band's [[bitSlices]] key, as `(idCol, _sh, _q, _k)`.
+    */
+  private def bandedSlices(hashed: DataFrame, idCol: String, bands: Int): DataFrame = {
+    require(64 % bands == 0, s"bands=$bands must divide 64")
+    hashed.select(col(idCol), col("_sh"),
+      posexplode(array(bitSlices(col("_sh"), bands, 64 / bands): _*)).as(Seq("_q", "_k")))
+  }
+
+  /** The corpus SimHashed and banded ONCE through `handle`, with its
+    * bucket census persisted beside it when `cap` > 0. The census (at
+    * most bands·2^width rows) is joined back as left-semi filters, so no
+    * count column rides the pairwise join. The capped candidate path
+    * reads it three times (cool, hot and cap-adjacent filters);
+    * unpersisted, each read re-aggregates the full banded frame — three
+    * extra passes over n·bands rows at corpus scale (guide §2.4).
+    */
+  private def persistedBands(
+      df: DataFrame,
+      textCol: String,
+      idCol: String,
+      bands: Int,
+      cap: Int,
+      handle: StorageHandle,
+  ): (DataFrame, Option[DataFrame]) = {
+    val banded = handle.persist(bandedSlices(simHashes(df, textCol, idCol), idCol, bands))
+    (banded, if (cap > 0) Some(handle.persist(bucketCounts(banded, "_q", "_k"))) else None)
+  }
+
+  /** Per-(band, key) bucket census of [[simHashCandidates]]'s banding:
+    * `(_q, _k, _n)` rows, at most bands·2^(64/bands) of them.
+    * Introspection for gates and specs that pin WHICH hot-bucket
+    * regime a corpus puts the operator in (cool / cap-adjacent /
+    * saturated past 8·cap) and derive candidate-volume bounds from the
+    * same bit algebra the operator runs — without replicating it.
+    */
+  def simHashBucketCensus(
+      df: DataFrame,
+      textCol: String = "text",
+      idCol: String = "doc_id",
+      bands: Int = 4,
+  ): DataFrame =
+    bucketCounts(bandedSlices(simHashes(df, textCol, idCol), idCol, bands), "_q", "_k")
+
+  /** Census-driven near-dup candidate routing — the engine ACTING on
+    * the saturation boundary round 16 measured instead of documenting
+    * the hand-off: run the SimHash bucket census; if the corpus is
+    * COOL (no (band, key) bucket holds more than 8·maxBucketSize
+    * members — the regime [[simHashCandidates]]' pass 3 is gated to,
+    * past which no SimHash pass guarantees recall) use banded SimHash
+    * candidates (one 64-bit hash per doc — the cheaper signature); if
+    * SATURATED, the 8-bit band keyspace has collapsed under corpus
+    * density and the recall contract belongs to MinHash banding, whose
+    * 2^64-keyed buckets track TRUE shingle-similarity groups rather
+    * than corpus/2^8 — hash-exact at sf100 where SimHash measured
+    * 65.2 % (`minhash_near_dups_sample`, CORRECTNESS_sf100_r16).
+    *
+    * Returns (route, candidate pairs (id_a, id_b)); callers verify
+    * candidates with exact Jaccard exactly as with either operator
+    * alone. The corpus is hashed and banded ONCE (persisted via
+    * `handle`): the routing census and, on the cool route, candidate
+    * generation both read that single pass — at 100 TB the census is
+    * then a near-free aggregate over cached slim rows, the price of
+    * not discovering mid-job that the banded join's hot buckets have
+    * quadratic mass.
+    */
+  def nearDupsAuto(
+      df: DataFrame,
+      textCol: String = "text",
+      idCol: String = "doc_id",
+      maxDistance: Int = 16,
+      bands: Int = 8,
+      maxBucketSize: Int = 1000,
+      minhashBands: Int = 32,
+      handle: StorageHandle = StorageHandle.unmanaged,
+  ): (String, DataFrame) = {
+    val (route, cands, _) = nearDupsAutoDetail(df, textCol, idCol, maxDistance,
+      bands, maxBucketSize, minhashBands, handle)
+    (route, cands)
+  }
+
+  /** [[nearDupsAuto]] plus the routing census itself —
+    * (route, candidate pairs, (_q, _k, _n) census). The census is the
+    * already-persisted ≤ bands·2^(64/bands)-row frame the routing
+    * decision aggregated, handed out so callers that need a saturation
+    * readout (the gate queries) don't re-hash the corpus a second time
+    * to reconstruct it (guide §2.4: the census costs a full
+    * corpus-hash pass at scale).
+    */
+  def nearDupsAutoDetail(
+      df: DataFrame,
+      textCol: String = "text",
+      idCol: String = "doc_id",
+      maxDistance: Int = 16,
+      bands: Int = 8,
+      maxBucketSize: Int = 1000,
+      minhashBands: Int = 32,
+      handle: StorageHandle = StorageHandle.unmanaged,
+  ): (String, DataFrame, DataFrame) = {
+    require(maxBucketSize > 0, "saturation is defined relative to a positive cap")
+    val (banded, census) = persistedBands(df, textCol, idCol, bands, maxBucketSize, handle)
+    val counts = census.get
+    // count(), not isEmpty: isEmpty's limit-1 job can leave the census
+    // cache PARTIALLY filled, and on the saturated route banded is
+    // dropped next — un-filled census partitions would then recompute
+    // through a fresh corpus-hash pass. The full count (over the cached
+    // banded rows, ≤ bands·2^width groups) materializes every census
+    // partition in one tiny job.
+    val saturated = counts.where(col("_n") > 8L * maxBucketSize).count() > 0
+    if (saturated) {
+      // MinHash keys on shingle content, not SimHash slices — the
+      // banded cache is useless on that route; drop it before the
+      // heavy pass rather than letting it squat on executor memory.
+      // `counts` stays: the count() readout above already materialized
+      // its (tiny) cache independent of banded, and detail callers
+      // aggregate it for the saturation evidence.
+      banded.unpersist()
+      ("minhash",
+        minHashCandidates(df, textCol, idCol, bands = minhashBands, handle = handle),
+        counts)
+    } else
+      ("simhash", simHashCandidatesFromBanded(banded, census, idCol, maxDistance, bands,
+        maxBucketSize, neighborWindow = 8, handle).select("id_a", "id_b"),
+        counts)
+  }
 
   /** SimHash near-dup candidates: bucket by the `bands` equal bit-slices
     * of the 64-bit hash (any pair within Hamming distance `bands - 1`
@@ -261,152 +456,6 @@ object Dedup {
     * With the cap the output is a documented subset; with
     * maxBucketSize = 0 semantics are exact.
     */
-  /** The banding projection shared by [[simHashCandidates]] and
-    * [[simHashBucketCensus]]: one row per (doc, band) carrying the
-    * band's bit-slice key. Static unrolling (bands is a plan-time
-    * constant): the transform(sequence(...)) form would evaluate its
-    * lambda interpreted per row — the bandKeys discipline.
-    */
-  private def bandedSlices(hashed: DataFrame, idCol: String, bands: Int): DataFrame = {
-    val width = 64 / bands
-    val mask = if (width == 64) -1L else (1L << width) - 1
-    hashed.select(col(idCol), col("_sh"),
-      explode(array((0 until bands).map { q =>
-        struct(lit(q).as("q"),
-          call_function("shiftright", col("_sh"), lit(q * width)).bitwiseAND(lit(mask)).as("key"))
-      }: _*)).as("_band"))
-      .select(col(idCol), col("_sh"), col("_band.q").as("_q"), col("_band.key").as("_k"))
-  }
-
-  /** Per-(band, key) bucket census of [[simHashCandidates]]'s banding:
-    * `(_q, _k, _n)` rows, at most bands·2^(64/bands) of them.
-    * Introspection for gates and specs that pin WHICH hot-bucket
-    * regime a corpus puts the operator in (cool / cap-adjacent /
-    * saturated past 8·cap) and derive candidate-volume bounds from the
-    * same bit algebra the operator runs — without replicating it.
-    */
-  def simHashBucketCensus(
-      df: DataFrame,
-      textCol: String = "text",
-      idCol: String = "doc_id",
-      bands: Int = 4,
-  ): DataFrame = {
-    require(64 % bands == 0, s"bands=$bands must divide 64")
-    bandedSlices(simHashes(df, textCol, idCol), idCol, bands)
-      .groupBy("_q", "_k").agg(count(lit(1)).as("_n"))
-  }
-
-  /** Census verdict for [[nearDupsAuto]]: is this corpus SATURATED for
-    * bands-banded SimHash at this cap — i.e. does any (band, key)
-    * bucket exceed the sub-band recovery regime (`n > 8·maxBucketSize`,
-    * the bound [[simHashCandidates]]'s pass 3 is gated to)? Past that
-    * boundary NO pass guarantees recall (star + sorted-window only —
-    * measured 65.2 % recall at full sf100 saturation, SCALE.md round
-    * 16), so the threshold is the operator's own documented contract
-    * boundary, not a tuned constant. One tiny aggregate over the slim
-    * banded rows (≤ bands·2^(64/bands) groups) and a 1-row readout —
-    * the decision is bounded driver traffic at any corpus size.
-    */
-  def simHashSaturated(
-      df: DataFrame,
-      textCol: String = "text",
-      idCol: String = "doc_id",
-      bands: Int = 8,
-      maxBucketSize: Int = 1000,
-  ): Boolean = {
-    require(maxBucketSize > 0, "saturation is defined relative to a positive cap")
-    !simHashBucketCensus(df, textCol, idCol, bands)
-      .where(col("_n") > 8L * maxBucketSize)
-      .isEmpty
-  }
-
-  /** Census-driven near-dup candidate routing — the engine ACTING on
-    * the saturation boundary round 16 measured instead of documenting
-    * the hand-off: run the SimHash bucket census; if the corpus is
-    * COOL (every bucket within the recovery passes' contract regime,
-    * [[simHashSaturated]] = false) use banded SimHash candidates (one
-    * 64-bit hash per doc — the cheaper signature); if SATURATED, the
-    * 8-bit band keyspace has collapsed under corpus density and the
-    * recall contract belongs to MinHash banding, whose 2^64-keyed
-    * buckets track TRUE shingle-similarity groups rather than
-    * corpus/2^8 — hash-exact at sf100 where SimHash measured 65.2 %
-    * (`minhash_near_dups_sample`, CORRECTNESS_sf100_r16).
-    *
-    * Returns (route, candidate pairs (id_a, id_b)); callers verify
-    * candidates with exact Jaccard exactly as with either operator
-    * alone. The corpus is hashed and banded ONCE (persisted via
-    * `handle`): the routing census and, on the cool route, candidate
-    * generation both read that single pass — at 100 TB the census is
-    * then a near-free aggregate over cached slim rows, the price of
-    * not discovering mid-job that the banded join's hot buckets have
-    * quadratic mass.
-    */
-  def nearDupsAuto(
-      df: DataFrame,
-      textCol: String = "text",
-      idCol: String = "doc_id",
-      maxDistance: Int = 16,
-      bands: Int = 8,
-      maxBucketSize: Int = 1000,
-      minhashBands: Int = 32,
-      handle: StorageHandle = StorageHandle.unmanaged,
-  ): (String, DataFrame) = {
-    val (route, cands, _) = nearDupsAutoDetail(df, textCol, idCol, maxDistance,
-      bands, maxBucketSize, minhashBands, handle)
-    (route, cands)
-  }
-
-  /** [[nearDupsAuto]] plus the routing census itself —
-    * (route, candidate pairs, (_q, _k, _n) census). The census is the
-    * already-persisted ≤ bands·2^(64/bands)-row frame the routing
-    * decision aggregated, handed out so callers that need a saturation
-    * readout (the gate queries) don't re-hash the corpus a second time
-    * to reconstruct it (guide §2.4: the census costs a full
-    * corpus-hash pass at scale).
-    */
-  def nearDupsAutoDetail(
-      df: DataFrame,
-      textCol: String = "text",
-      idCol: String = "doc_id",
-      maxDistance: Int = 16,
-      bands: Int = 8,
-      maxBucketSize: Int = 1000,
-      minhashBands: Int = 32,
-      handle: StorageHandle = StorageHandle.unmanaged,
-  ): (String, DataFrame, DataFrame) = {
-    require(maxBucketSize > 0, "saturation is defined relative to a positive cap")
-    val banded = handle.persist(bandedSlices(simHashes(df, textCol, idCol), idCol, bands))
-    // persist the census too (≤ bands·2^(64/bands) slim rows): the
-    // saturation readout below is the action that fills it, and on the
-    // cool route simHashCandidatesFromBanded consumes it THREE more
-    // times (cool filter, hot filter, cap-adjacent filter) — without the
-    // persist each consumer re-aggregates the full banded frame, three
-    // extra passes over n·bands rows at corpus scale (guide §2.4)
-    val counts = handle.persist(banded.groupBy("_q", "_k").agg(count(lit(1)).as("_n")))
-    // count(), not isEmpty: isEmpty's limit-1 job can leave the census
-    // cache PARTIALLY filled, and on the saturated route banded is
-    // dropped next — un-filled census partitions would then recompute
-    // through a fresh corpus-hash pass. The full count (over the cached
-    // banded rows, ≤ bands·2^width groups) materializes every census
-    // partition in one tiny job.
-    val saturated = counts.where(col("_n") > 8L * maxBucketSize).count() > 0
-    if (saturated) {
-      // MinHash keys on shingle content, not SimHash slices — the
-      // banded cache is useless on that route; drop it before the
-      // heavy pass rather than letting it squat on executor memory.
-      // `counts` stays: the isEmpty readout above already materialized
-      // its (tiny) cache independent of banded, and detail callers
-      // aggregate it for the saturation evidence.
-      banded.unpersist()
-      ("minhash",
-        minHashCandidates(df, textCol, idCol, bands = minhashBands, handle = handle),
-        counts)
-    } else
-      ("simhash", simHashCandidatesFromBanded(banded, counts, idCol, maxDistance, bands,
-        maxBucketSize, neighborWindow = 8, handle).select("id_a", "id_b"),
-        counts)
-  }
-
   def simHashCandidates(
       df: DataFrame,
       textCol: String = "text",
@@ -417,17 +466,7 @@ object Dedup {
       neighborWindow: Int = 8,
       handle: StorageHandle = StorageHandle.unmanaged,
   ): DataFrame = {
-    require(64 % bands == 0, s"bands=$bands must divide 64")
-    val banded = handle.persist(bandedSlices(simHashes(df, textCol, idCol), idCol, bands))
-    // bucket census: one tiny aggregate over the cached slim rows (at
-    // most bands·2^width groups); joined back as a left-semi filter so
-    // no count column rides the pairwise join. Persisted: the capped
-    // path consumes it three times (cool/hot/cap-adjacent filters) and
-    // re-aggregating the banded frame per consumer is three extra
-    // full passes at corpus scale (guide §2.4)
-    val counts =
-      if (maxBucketSize <= 0) null
-      else handle.persist(banded.groupBy("_q", "_k").agg(count(lit(1)).as("_n")))
+    val (banded, counts) = persistedBands(df, textCol, idCol, bands, maxBucketSize, handle)
     simHashCandidatesFromBanded(banded, counts, idCol, maxDistance, bands,
       maxBucketSize, neighborWindow, handle)
   }
@@ -436,174 +475,121 @@ object Dedup {
     * frame plus its census — the shared-pass entry point
     * [[nearDupsAuto]] routes through so the corpus is hashed once for
     * BOTH the routing census and candidate generation, not twice.
-    * `counts` may be null only when `maxBucketSize <= 0` (exact,
-    * uncapped semantics).
+    * Without a census (`counts` = None) the semantics are exact and
+    * uncapped.
     */
   private def simHashCandidatesFromBanded(
       banded: DataFrame,
-      counts: DataFrame,
+      counts: Option[DataFrame],
       idCol: String,
       maxDistance: Int,
       bands: Int,
       maxBucketSize: Int,
       neighborWindow: Int,
-      handle: StorageHandle = StorageHandle.unmanaged,
+      handle: StorageHandle,
   ): DataFrame = {
-    require(64 % bands == 0, s"bands=$bands must divide 64")
-    val width = 64 / bands
-    val joinable =
-      if (maxBucketSize <= 0) banded
-      else banded.join(counts.where(col("_n") <= maxBucketSize), Seq("_q", "_k"), "left_semi")
-    val a = joinable.select(col(idCol).as("id_a"), col("_sh").as("_sh_a"), col("_q"), col("_k"))
-    val b = joinable.select(col(idCol).as("id_b"), col("_sh").as("_sh_b"), col("_q"), col("_k"))
-    val joined = a.join(b, Seq("_q", "_k"))
-      .where(col("id_a") < col("id_b"))
-      .select(col("id_a"), col("id_b"),
-        hammingDistance(col("_sh_a"), col("_sh_b")).as("hamming"))
-    val all =
-      if (maxBucketSize <= 0) joined
-      else {
-        import org.apache.spark.sql.expressions.Window
-        val hot = banded.join(counts.where(col("_n") > maxBucketSize), Seq("_q", "_k"), "left_semi")
-        // pass 1 — full-hash star: group hot members by the full hash,
-        // link everyone to the group's min id. Window-min over the hash
-        // partition — one shuffle bounded by hot-bucket membership,
-        // never a pairwise join; hamming-0 recall is complete.
-        val hotDocs = hot.select(col(idCol), col("_sh")).distinct()
-        val starWin = Window.partitionBy("_sh")
-        val stars = hotDocs.withColumn("_rep", min(col(idCol)).over(starWin))
-          .where(col(idCol) =!= col("_rep"))
-          .select(col("_rep").as("id_a"), col(idCol).as("id_b"),
-            lit(0).cast(IntegerType).as("hamming"))
-        // pass 2 — sorted neighbors: within each oversized bucket, order
-        // members by full hash and compare each to its next
-        // `neighborWindow` neighbors (lead() over one window sort — a
-        // single shuffle bounded by hot membership, output bounded by
-        // membership × window). Recovers hamming 1..k pairs the capped
-        // join sacrificed, when their non-band bits sort them nearby.
-        val sortWin = Window.partitionBy("_q", "_k").orderBy(col("_sh"), col(idCol))
-        val leads = array((1 to neighborWindow).map(i =>
-          lead(struct(col(idCol).as("nid"), col("_sh").as("nsh")), i).over(sortWin)): _*)
-        // window exprs are illegal inside a generator: project the lead
-        // array first, explode in a second select
-        val neighbors = hot.select(col(idCol), col("_sh"), leads.as("_leads"))
-          .select(col(idCol), col("_sh"), explode(col("_leads")).as("_nb"))
-          .where(col("_nb.nid").isNotNull)
-          .select(
-            least(col(idCol), col("_nb.nid")).as("id_a"),
-            greatest(col(idCol), col("_nb.nid")).as("id_b"),
-            hammingDistance(col("_sh"), col("_nb.nsh")).as("hamming"))
-        // pass 3 — sub-band refinement of hot buckets (see Scaladoc):
-        // re-key each hot member by 8 slices of the non-band bits and
-        // run the ordinary capped pairwise join inside the refined
-        // groups; still-hot sub-buckets get their own sorted-neighbor
-        // window (a strictly more local sort than pass 2's).
-        //
-        // Refinement targets the CAP-ADJACENT regime only (buckets up
-        // to 8·cap). Round 16 MEASURED both sides of this gate at
-        // sf100 (5M docs — ALL 2048 (band,key) buckets saturated, max
-        // 29,095 members, zero cool/cap-adjacent membership; SCALE.md):
-        //
-        //  - WITH the gate, the pass recovers nothing at that density
-        //    and recall vs the exact All-Pairs truth is 65.2%
-        //    (167/256 window pairs, zero false positives), 84 of the
-        //    89 losses inside the hamming ≤ 7 envelope — the measured
-        //    PRICE of the gate;
-        //  - WITHOUT the gate (tried this round), the refined
-        //    sub-buckets are individually cool (~227 members) and the
-        //    join is feasible, but its SURVIVOR SET is not: on a
-        //    templated corpus the ~5·10¹⁰ sub-pair evaluations pass
-        //    the hamming filter in bulk (shared-template tokens pin
-        //    hashes together regardless of true Jaccard — the same
-        //    force that saturated the buckets), and two runs exhausted
-        //    47 GB and then 60 GB of shuffle spill before the
-        //    candidate set even reached verification. The explosion is
-        //    SEMANTIC — past saturation density the 64-bit signal no
-        //    longer discriminates, so candidate volume is inherently
-        //    quadratic — not an implementation artifact.
-        //
-        // The gate is therefore load-shedding at SimHash's semantic
-        // boundary: beyond it the pass degrades to star+sorted-
-        // neighbor, and the Jaccard-recall contract at that density
-        // belongs to MinHash banding, which keys on shingle content,
-        // does not saturate, and is hash-exact at sf100
-        // (minhash_near_dups_sample).
-        val subBandMaxBucket = 8L * maxBucketSize
-        val subWidth = (64 - width) / 8
-        // at maxDistance = 0 the star pass already gives COMPLETE recall
-        // inside hot buckets (equal hashes land in one star group), so
-        // the sub-band machinery would explode hot members 8× to
-        // recover nothing — skip it
-        val subRecovered = if (subWidth < 1 || maxDistance == 0) joined.limit(0) else {
-          val subMask = (1L << subWidth) - 1
-          // _sh with band _q's slice compacted out; static when-chain
-          // over q (bands is a plan-time constant), codegen-friendly
-          val rem = (0 until bands).map { q =>
-            val hi =
-              if (q == bands - 1) lit(0L)
-              else shiftleft(shiftrightunsigned(col("_sh"), (q + 1) * width), q * width)
-            val lo =
-              if (q == 0) lit(0L)
-              else col("_sh").bitwiseAND(lit((1L << (q * width)) - 1))
-            q -> hi.bitwiseOR(lo)
-          }.foldLeft(lit(0L)) { case (acc, (q, e)) => when(col("_q") === q, e).otherwise(acc) }
-          // the (q, k, r, sk) identity collapses to ONE 64-bit hashed
-          // key: the sub machinery shuffles its rows three times
-          // (census, the pairwise join's two sides, the sub-window
-          // sort) — one 8-byte key column instead of four narrows
-          // every one of those exchanges. A hash collision between two
-          // of the ≤ bands·2^width·8·2^subWidth live keys (~2^26 at
-          // the defaults, ~2^-13 birthday probability per run) MERGES
-          // two sub-buckets. Usually that only means extra candidates
-          // (filtered by the same hamming bound — pure cost), but if
-          // the merged census count crosses maxBucketSize it can
-          // demote a genuinely cool sub-bucket to the sorted-window
-          // path and sacrifice hamming≤7 pairs that path misses — so
-          // the sub-band contract below holds up to this negligible
-          // collision probability, not absolutely.
-          val hotAdjacent = banded.join(
-            counts.where(col("_n") > maxBucketSize && col("_n") <= subBandMaxBucket),
-            Seq("_q", "_k"), "left_semi")
-          // persisted: `sub` feeds THREE consumers (its census, the
-          // cool pairwise join, the hot sorted-window) and `subCounts`
-          // two — without the persists each consumer re-runs the
-          // hot-adjacent semi-join + 8-way explode from the banded
-          // cache, three more passes over hot membership (guide §2.4)
-          val sub = handle.persist(hotAdjacent
-            .select(col(idCol), col("_sh"), col("_q"), col("_k"), rem.as("_rem"))
-            .select(col(idCol), col("_sh"),
-              explode(array((0 until 8).map { r =>
-                xxhash64(col("_q"), col("_k"), lit(r),
-                  shiftrightunsigned(col("_rem"), r * subWidth)
-                    .bitwiseAND(lit(subMask)))
-              }: _*)).as("_skey")))
-          val subCounts = handle.persist(sub.groupBy("_skey").agg(count(lit(1)).as("_n")))
-          val subCool = sub.join(
-            subCounts.where(col("_n") <= maxBucketSize), Seq("_skey"), "left_semi")
-          val sa2 = subCool.select(col(idCol).as("id_a"), col("_sh").as("_sh_a"), col("_skey"))
-          val sb2 = subCool.select(col(idCol).as("id_b"), col("_sh").as("_sh_b"), col("_skey"))
-          val subJoined = sa2.join(sb2, Seq("_skey"))
-            .where(col("id_a") < col("id_b"))
-            .select(col("id_a"), col("id_b"),
-              hammingDistance(col("_sh_a"), col("_sh_b")).as("hamming"))
-          val subHot = sub.join(
-            subCounts.where(col("_n") > maxBucketSize), Seq("_skey"), "left_semi")
-          val subSortWin = Window.partitionBy("_skey")
-            .orderBy(col("_sh"), col(idCol))
-          val subLeads = array((1 to neighborWindow).map(i =>
-            lead(struct(col(idCol).as("nid"), col("_sh").as("nsh")), i).over(subSortWin)): _*)
-          val subNeighbors = subHot
-            .select(col(idCol), col("_sh"), subLeads.as("_leads"))
-            .select(col(idCol), col("_sh"), explode(col("_leads")).as("_nb"))
-            .where(col("_nb.nid").isNotNull)
-            .select(
-              least(col(idCol), col("_nb.nid")).as("id_a"),
-              greatest(col(idCol), col("_nb.nid")).as("id_b"),
-              hammingDistance(col("_sh"), col("_nb.nsh")).as("hamming"))
-          subJoined.union(subNeighbors)
-        }
-        joined.union(stars).union(neighbors).union(subRecovered)
+    val bandKey = Seq("_q", "_k")
+    // the pairwise join of cool buckets and pass 2's sorted neighbors
+    // inside hot ones (see Scaladoc)
+    val capped = cappedBucketPairs(banded, idCol, bandKey, counts, maxBucketSize, neighborWindow)
+    val all = counts.fold(capped) { counts =>
+      // pass 1 — full-hash star: group hot members by the full hash,
+      // link everyone to the group's min id. Window-min over the hash
+      // partition — one shuffle bounded by hot-bucket membership,
+      // never a pairwise join; hamming-0 recall is complete.
+      val hotDocs = banded.join(counts.where(col("_n") > maxBucketSize), bandKey, "left_semi")
+        .select(col(idCol), col("_sh")).distinct()
+      val stars = hotDocs.withColumn("_rep", min(col(idCol)).over(Window.partitionBy("_sh")))
+        .where(col(idCol) =!= col("_rep"))
+        .select(col("_rep").as("id_a"), col(idCol).as("id_b"),
+          lit(0).cast(IntegerType).as("hamming"))
+      // pass 3 — sub-band refinement of hot buckets (see Scaladoc):
+      // re-key each hot member by 8 slices of the non-band bits and
+      // run the ordinary capped pairwise join inside the refined
+      // groups; still-hot sub-buckets get their own sorted-neighbor
+      // window (a strictly more local sort than pass 2's).
+      //
+      // Refinement targets the CAP-ADJACENT regime only (buckets up
+      // to 8·cap). Round 16 MEASURED both sides of this gate at
+      // sf100 (5M docs — ALL 2048 (band,key) buckets saturated, max
+      // 29,095 members, zero cool/cap-adjacent membership; SCALE.md):
+      //
+      //  - WITH the gate, the pass recovers nothing at that density
+      //    and recall vs the exact All-Pairs truth is 65.2%
+      //    (167/256 window pairs, zero false positives), 84 of the
+      //    89 losses inside the hamming ≤ 7 envelope — the measured
+      //    PRICE of the gate;
+      //  - WITHOUT the gate (tried this round), the refined
+      //    sub-buckets are individually cool (~227 members) and the
+      //    join is feasible, but its SURVIVOR SET is not: on a
+      //    templated corpus the ~5·10¹⁰ sub-pair evaluations pass
+      //    the hamming filter in bulk (shared-template tokens pin
+      //    hashes together regardless of true Jaccard — the same
+      //    force that saturated the buckets), and two runs exhausted
+      //    47 GB and then 60 GB of shuffle spill before the
+      //    candidate set even reached verification. The explosion is
+      //    SEMANTIC — past saturation density the 64-bit signal no
+      //    longer discriminates, so candidate volume is inherently
+      //    quadratic — not an implementation artifact.
+      //
+      // The gate is therefore load-shedding at SimHash's semantic
+      // boundary: beyond it the pass degrades to star+sorted-
+      // neighbor, and the Jaccard-recall contract at that density
+      // belongs to MinHash banding, which keys on shingle content,
+      // does not saturate, and is hash-exact at sf100
+      // (minhash_near_dups_sample).
+      val width = 64 / bands
+      val subWidth = (64 - width) / 8
+      // at maxDistance = 0 the star pass already gives COMPLETE recall
+      // inside hot buckets (equal hashes land in one star group), so
+      // the sub-band machinery would explode hot members 8× to
+      // recover nothing — skip it
+      val subRecovered = if (subWidth < 1 || maxDistance == 0) Nil else {
+        // _sh with band _q's slice compacted out; static when-chain
+        // over q (bands is a plan-time constant), codegen-friendly
+        val rem = (0 until bands).map { q =>
+          val hi =
+            if (q == bands - 1) lit(0L)
+            else shiftleft(shiftrightunsigned(col("_sh"), (q + 1) * width), q * width)
+          val lo =
+            if (q == 0) lit(0L)
+            else col("_sh").bitwiseAND(lit((1L << (q * width)) - 1))
+          q -> hi.bitwiseOR(lo)
+        }.foldLeft(lit(0L)) { case (acc, (q, e)) => when(col("_q") === q, e).otherwise(acc) }
+        // the (q, k, r, sk) identity collapses to ONE 64-bit hashed
+        // key: the sub machinery shuffles its rows three times
+        // (census, the pairwise join's two sides, the sub-window
+        // sort) — one 8-byte key column instead of four narrows
+        // every one of those exchanges. A hash collision between two
+        // of the ≤ bands·2^width·8·2^subWidth live keys (~2^26 at
+        // the defaults, ~2^-13 birthday probability per run) MERGES
+        // two sub-buckets. Usually that only means extra candidates
+        // (filtered by the same hamming bound — pure cost), but if
+        // the merged census count crosses maxBucketSize it can
+        // demote a genuinely cool sub-bucket to the sorted-window
+        // path and sacrifice hamming≤7 pairs that path misses — so
+        // the sub-band contract below holds up to this negligible
+        // collision probability, not absolutely.
+        val hotAdjacent = banded.join(
+          counts.where(col("_n") > maxBucketSize && col("_n") <= 8L * maxBucketSize),
+          bandKey, "left_semi")
+        // persisted: `sub` feeds THREE consumers (its census, the
+        // cool pairwise join, the hot sorted-window) and `subCounts`
+        // two — without the persists each consumer re-runs the
+        // hot-adjacent semi-join + 8-way explode from the banded
+        // cache, three more passes over hot membership (guide §2.4)
+        val sub = handle.persist(hotAdjacent
+          .select(col(idCol), col("_sh"), col("_q"), col("_k"), rem.as("_rem"))
+          .select(col(idCol), col("_sh"),
+            explode(array(bitSlices(col("_rem"), 8, subWidth).zipWithIndex.map {
+              case (slice, r) => xxhash64(col("_q"), col("_k"), lit(r), slice)
+            }: _*)).as("_skey")))
+        val subCounts = handle.persist(bucketCounts(sub, "_skey"))
+        Seq(cappedBucketPairs(sub, idCol, Seq("_skey"), Some(subCounts),
+          maxBucketSize, neighborWindow))
       }
+      (capped +: stars +: subRecovered).reduce(_ union _)
+    }
     // hamming is a pure function of the two full hashes, so every copy
     // of a pair (one per shared band) carries the SAME distance — filter
     // BEFORE the dedup aggregate: far collisions (the vast majority on
@@ -641,7 +627,6 @@ object Dedup {
     * smallStar's output.
     */
   private def largeStar(edges: DataFrame): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val bidir = edges.select(explode(array(
       struct(col("_eu").as("u"), col("_ev").as("v")),
       struct(col("_ev").as("u"), col("_eu").as("v")))).as("_e"))
@@ -663,7 +648,6 @@ object Dedup {
     * rows would falsely read as two parents).
     */
   private def smallStar(edges: DataFrame): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     // canonical edges already point big -> small, so the smaller
     // neighborhood of u is exactly its outgoing edge list
     val withM = edges
@@ -701,10 +685,8 @@ object Dedup {
     * (row-roundtrip to a LogicalRDD leaf) keeps every round's plan
     * constant-size; unlike `localCheckpoint` its backing blocks are the
     * explicit per-round persists, released deterministically, not on GC.
-    * Cache-backed rounds still CHAIN RDD lineage (a lost block
-    * recomputes through every earlier round) — for long jobs on
-    * preemptible clusters pass `checkpointDir` to materialize rounds to
-    * the filesystem instead, cutting recovery to a file re-read.
+    * Cache-backed rounds CHAIN RDD lineage: a lost block recomputes
+    * through every earlier round.
     *
     * Convergence is tested as the correctness property ITSELF: a round's
     * output is checked to be a STAR FOREST (no center appears as a leaf,
@@ -725,16 +707,6 @@ object Dedup {
       idCol: String = "doc_id",
       maxIter: Int = 24,
       handle: StorageHandle = StorageHandle.unmanaged,
-      /** When set, each round materializes to parquet under this dir
-        * instead of the cache — truncating RDD lineage at the
-        * FILESYSTEM, so an executor loss re-reads one round's files
-        * rather than recomputing the whole round chain (cache-only mode
-        * keeps the lineage link between rounds). The long-job-at-scale
-        * option; previous rounds are deleted as the loop advances, the
-        * FINAL round's files back the returned plan — consume the
-        * result, then delete the dir.
-        */
-      checkpointDir: Option[String] = None,
   ): DataFrame = {
     import org.apache.spark.storage.StorageLevel
     val spark = ids.sparkSession
@@ -742,11 +714,6 @@ object Dedup {
     // scaladoc). `.rdd` is lazy — no job runs until the round's count.
     def reRoot(df: DataFrame): DataFrame =
       spark.createDataFrame(df.rdd, df.schema)
-    def roundPath(i: Int) = s"${checkpointDir.get}/cc_round_$i"
-    def deleteRound(i: Int): Unit = if (i >= 0) {
-      val p = new org.apache.hadoop.fs.Path(roundPath(i))
-      p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)
-    }
     // Convergence/validity probe: the edge set IS a star forest iff no
     // center appears as a leaf (a node on both edge sides) and no leaf
     // has two parents. Computed as ONE map-combined aggregation over
@@ -775,32 +742,21 @@ object Dedup {
       .distinct()
       .persist(StorageLevel.MEMORY_AND_DISK)
     var iter = 0
-    // round-0 fast path (cache mode only): near-dup pair sets are often
-    // ALREADY star forests (isolated (a, b) duplicate pairs are one-leaf
-    // stars under the canonical orientation) — probe before contracting
-    // and skip the machinery entirely for the common case. Bounded: on
+    // round-0 fast path: near-dup pair sets are often ALREADY star
+    // forests (isolated (a, b) duplicate pairs are one-leaf stars under
+    // the canonical orientation) — probe before contracting and skip
+    // the machinery entirely for the common case. Bounded: on
     // non-forest inputs it short-circuits, and the initial cache fills
-    // during round 1's contraction regardless. NOT taken in checkpoint
-    // mode — the parquet-files-back-the-result contract requires at
-    // least one written round.
-    var converged = checkpointDir.isEmpty &&
-      starForestViolations(edges) == 0
+    // during round 1's contraction regardless.
+    var converged = starForestViolations(edges) == 0
     try {
       while (iter < maxIter && !converged) {
-        val contracted = smallStar(largeStar(edges))
-        val next = checkpointDir match {
-          case Some(_) =>
-            contracted.write.mode("overwrite").parquet(roundPath(iter))
-            spark.read.parquet(roundPath(iter))
-          case None =>
-            reRoot(contracted).persist(StorageLevel.MEMORY_AND_DISK)
-        }
+        val next = reRoot(smallStar(largeStar(edges))).persist(StorageLevel.MEMORY_AND_DISK)
         // the probe's single scan (see starForestViolations) fully
         // materializes the fresh persist before the previous round's is
         // dropped — one action per round does both jobs
         converged = starForestViolations(next) == 0
-        edges.unpersist() // no-op for a parquet-backed round
-        if (checkpointDir.isDefined) deleteRound(iter - 1)
+        edges.unpersist()
         edges = next
         iter += 1
       }
@@ -812,10 +768,8 @@ object Dedup {
     } catch {
       case e: Throwable =>
         // no surviving consumer on ANY failure (mid-round job error or
-        // the non-convergence throw): release the current frame and the
-        // written rounds the rolling deletion hasn't reached
+        // the non-convergence throw): release the current frame
         edges.unpersist()
-        if (checkpointDir.isDefined) { deleteRound(iter); deleteRound(iter - 1) }
         throw e
     }
     // The converged star forest backs the returned (lazy) plan, so it
@@ -882,7 +836,6 @@ object Dedup {
       textCol: String = "text",
       out: String = "text",
   ): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val paras = df
       .select(col(idCol), posexplode(split(col(textCol), "\n")).as(Seq("_pos", "_para")))
     val firstWin = Window.partitionBy(col("_para"))

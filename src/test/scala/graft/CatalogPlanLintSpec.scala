@@ -3,8 +3,6 @@ package graft
 import java.io.File
 
 import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
-import org.apache.spark.sql.execution.SparkPlan
-import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.execution.joins.{BroadcastNestedLoopJoinExec, CartesianProductExec}
 
@@ -47,17 +45,6 @@ class CatalogPlanLintSpec extends SparkSpec {
     "near_dups_auto_saturated", // the same two single-row invariant aggregates, via the dispatcher
   )
 
-  /** Every physical node, descending through AQE wrappers and subqueries
-    * (plain collect stops at AdaptiveSparkPlanExec's leaf facade).
-    */
-  private def allNodes(p: SparkPlan): Seq[SparkPlan] = {
-    val inner = p match {
-      case a: AdaptiveSparkPlanExec => Seq(a.initialPlan)
-      case _                        => Nil
-    }
-    p +: (p.children ++ p.subqueries ++ inner).flatMap(allNodes)
-  }
-
   test("no catalog query plans a cartesian/nested-loop join or a constant-keyed Exchange") {
     assume(new File(sfDir).exists(), s"$sfDir not present")
     val (planned, unavailable) = Queries.catalog.partition(_.runnable)
@@ -67,7 +54,7 @@ class CatalogPlanLintSpec extends SparkSpec {
         unavailable.map(_.name).mkString(", "))
     val violations = planned.flatMap { e =>
       val name = e.name
-      val nodes = allNodes(e.query(spark, sfDir).queryExecution.executedPlan)
+      val nodes = planNodes(e.query(spark, sfDir))
       val joins = nodes.collect {
         case j: CartesianProductExec => s"$name: CartesianProduct"
         case j: BroadcastNestedLoopJoinExec if !intentionalNestedLoop(name) =>

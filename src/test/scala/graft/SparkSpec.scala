@@ -4,7 +4,9 @@ import java.util.concurrent.{CountDownLatch, TimeUnit}
 import java.util.concurrent.atomic.AtomicInteger
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -13,6 +15,22 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = GraftSession.local(2)
 
   override def afterAll(): Unit = spark.stop()
+
+  /** Every physical node of `df`'s plan, descending through AQE wrappers
+    * (into the initial plan) and subqueries. With AQE on, the top node is
+    * a leaf `AdaptiveSparkPlanExec`, so a plain `executedPlan.collect`
+    * finds nothing beneath it.
+    */
+  def planNodes(df: DataFrame): Seq[SparkPlan] = {
+    def walk(p: SparkPlan): Seq[SparkPlan] = {
+      val inner = p match {
+        case a: AdaptiveSparkPlanExec => Seq(a.initialPlan)
+        case _                        => Nil
+      }
+      p +: (p.children ++ p.subqueries ++ inner).flatMap(walk)
+    }
+    walk(df.queryExecution.executedPlan)
+  }
 
   /** `body`'s result and the number of Spark jobs it started. A listener
     * counts the jobs started between two marker jobs run before and after

@@ -160,12 +160,13 @@ class AnnSpec extends SparkSpec {
     // the vector width.
     import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
     def shuffledTypes(df: org.apache.spark.sql.DataFrame): Seq[String] =
-      df.queryExecution.executedPlan.collect {
+      planNodes(df).collect {
         case e: ShuffleExchangeExec => e.output.map(_.dataType.simpleString)
       }.flatten
     val corpus = vecs(40)
     val queries = vecs(3)
     val lsh = Ann.lshTopK(corpus, queries, k = 3, dim = dim)
+    assert(shuffledTypes(lsh).nonEmpty, "the plan walk found no exchange")
     assert(!shuffledTypes(lsh).exists(_.startsWith("array")),
       s"lshTopK shuffles an array column: ${shuffledTypes(lsh)}")
   }
@@ -179,10 +180,11 @@ class AnnSpec extends SparkSpec {
     // exchange is the slim (id_a, id_b, cosine) distinct.
     import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
     val dedup = Ann.cosineNearDupPairs(vecs(40), threshold = 0.2, dim = dim)
-    val exchanges = dedup.queryExecution.executedPlan.collect {
+    val exchanges = planNodes(dedup).collect {
       case e: ShuffleExchangeExec =>
         e.output.filter(_.dataType.simpleString.startsWith("array")).map(_.name)
     }
+    assert(exchanges.nonEmpty, "the plan walk found no exchange")
     val vectorCarrying = exchanges.filter(_.nonEmpty)
     assert(vectorCarrying.size <= 2,
       s"more than the two band-side exchanges carry vectors: $vectorCarrying")
@@ -368,10 +370,11 @@ class AnnSpec extends SparkSpec {
     // same in-join contract as cosineNearDupPairs: each band side may
     // shuffle its own vector column; no exchange carries both sides'
     // vectors (candidates stay inside the join stage)
-    val exchanges = out.queryExecution.executedPlan.collect {
+    val exchanges = planNodes(out).collect {
       case e: ShuffleExchangeExec =>
         e.output.filter(_.dataType.simpleString.startsWith("array")).map(_.name)
     }
+    assert(exchanges.nonEmpty, "the plan walk found no exchange")
     val vectorCarrying = exchanges.filter(_.nonEmpty)
     assert(vectorCarrying.size <= 2,
       s"more than the two band-side exchanges carry vectors: $vectorCarrying")

@@ -134,6 +134,45 @@ class DedupSpec extends SparkSpec {
     assert(variantPairs.forall(_._3 == h), s"recovered pair must carry hamming $h")
   }
 
+  test("plan shape: capped simHashCandidates with the sub-band pass, and minHashPairs") {
+    import spark.implicits._
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.execution.GenerateExec
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    import org.apache.spark.sql.execution.joins.BaseJoinExec
+    import org.apache.spark.sql.execution.window.WindowExec
+    // cached frames of earlier tests would change which scans read a cache
+    spark.catalog.clearCache()
+    // 20 copies make cap-adjacent buckets (5 < 20 <= 8·5), 60 copies hot
+    // buckets past 8·cap, and the distinct documents cool ones
+    val warm = "weekly status report all services healthy and no incidents logged"
+    val hot = "tuesday report all systems nominal and no anomalies were observed overnight"
+    val corpus = ((1 to 20).map(i => (i.toLong, warm)) ++
+      (101 to 160).map(i => (i.toLong, hot)) ++
+      (201 to 230).map(i => (i.toLong, s"distinct document $i about topic ${i * 7} and more"))
+    ).toDF("doc_id", "text")
+    val sizes = simHashBucketCensus(corpus, bands = 8).collect().map(_.getLong(2))
+    assert(sizes.contains(20L) && sizes.contains(60L) && sizes.exists(_ <= 5L),
+      s"corpus lacks a bucket regime: ${sizes.sorted.toSeq}")
+    def shape(df: DataFrame): Map[String, Int] = {
+      val nodes = planNodes(df)
+      Map(
+        "exchange" -> nodes.count(_.isInstanceOf[ShuffleExchangeExec]),
+        "join" -> nodes.count(_.isInstanceOf[BaseJoinExec]),
+        "window" -> nodes.count(_.isInstanceOf[WindowExec]),
+        "generate" -> nodes.count(_.isInstanceOf[GenerateExec]),
+        "cacheScan" -> nodes.count(_.isInstanceOf[InMemoryTableScanExec]))
+    }
+    val simhash = shape(simHashCandidates(corpus, maxDistance = 3, bands = 8, maxBucketSize = 5))
+    val minhash = shape(minHashPairs(corpus))
+    info(s"simHashCandidates: $simhash; minHashPairs: $minhash")
+    assert(simhash == Map("exchange" -> 5, "join" -> 9, "window" -> 3, "generate" -> 2,
+      "cacheScan" -> 14), s"simHashCandidates plan shape moved: $simhash")
+    assert(minhash == Map("exchange" -> 0, "join" -> 2, "window" -> 0, "generate" -> 0,
+      "cacheScan" -> 3), s"minHashPairs plan shape moved: $minhash")
+  }
+
   test("keepRepresentatives drops near-dup copies, keeps first") {
     val pairs = minHashPairs(docs(), numHashes = 64, bands = 16)
       .where(col("est_jaccard") > 0.5).select("id_a", "id_b")
@@ -228,38 +267,6 @@ class DedupSpec extends SparkSpec {
     assert(got == expected)
   }
 
-  test("duplicate clusters: filesystem-checkpointed rounds label exactly and clean up") {
-    import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_cc_ckpt").toString
-    // the same diameter-40 path graph, but every round materialized to
-    // parquet: lineage (and recovery) is cut at the filesystem
-    val n = 40
-    val ids = (0 to n).map(_.toLong).toDF("doc_id")
-    val pairs = (0 until n).map(i => ((i + 1).toLong, i.toLong)).toDF("id_a", "id_b")
-    val clusters = Dedup.duplicateClusters(ids, pairs, checkpointDir = Some(dir))
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(clusters.size == n + 1 && clusters.values.forall(_ == 0L))
-    // rolling cleanup: only the final round's files may remain
-    val rounds = new java.io.File(dir).listFiles().map(_.getName).toSeq
-    assert(rounds.count(_.startsWith("cc_round_")) == 1,
-      s"previous rounds must be deleted as the loop advances, found $rounds")
-  }
-
-  test("checkpoint mode writes round files even for already-forest inputs") {
-    import spark.implicits._
-    // isolated pairs are already a star forest — the cache-mode fast
-    // path may skip contraction, but checkpoint mode must still write
-    // (the returned plan's contract is files-on-disk, not lineage)
-    val dir = java.nio.file.Files.createTempDirectory("graft_cc_ckpt_ff").toString
-    val ids = Seq(1L, 2L, 3L, 4L).toDF("doc_id")
-    val pairs = Seq((1L, 2L), (3L, 4L)).toDF("id_a", "id_b")
-    val got = Dedup.duplicateClusters(ids, pairs, checkpointDir = Some(dir))
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(got == Map(1L -> 1L, 2L -> 1L, 3L -> 3L, 4L -> 3L))
-    assert(new java.io.File(dir).listFiles().exists(_.getName.startsWith("cc_round_")),
-      "checkpoint mode must materialize the result to the filesystem")
-  }
-
   test("duplicate clusters: managed handle releases the star-forest cache") {
     import spark.implicits._
     // earlier tests run unmanaged pipelines whose caches are session-
@@ -339,7 +346,6 @@ class DedupSpec extends SparkSpec {
   test("near-dup auto-routing: cool corpus routes simhash, saturated routes minhash") {
     import spark.implicits._
     // cool: 4 docs — every census bucket is tiny at any positive cap
-    assert(!simHashSaturated(docs(), maxBucketSize = 10))
     val (coolRoute, coolCands) = nearDupsAuto(docs(), maxBucketSize = 10)
     assert(coolRoute == "simhash")
     val coolPairs = coolCands.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
@@ -350,11 +356,9 @@ class DedupSpec extends SparkSpec {
     // verdict deterministic, no tuning
     val sat = (1 to 3000).map(i => (i.toLong, s"token$i alpha beta gamma delta sample text $i"))
       .toDF("doc_id", "text")
-    assert(simHashSaturated(sat, maxBucketSize = 1))
-    val (satRoute, _) = nearDupsAuto(sat, maxBucketSize = 1)
-    assert(satRoute == "minhash")
+    assert(nearDupsAutoDetail(sat, maxBucketSize = 1)._1 == "minhash")
     // the threshold is the sub-band regime bound (8·cap), derived not
     // tuned: the same corpus under a cap that absorbs its buckets is cool
-    assert(!simHashSaturated(sat, maxBucketSize = 3000))
+    assert(nearDupsAutoDetail(sat, maxBucketSize = 3000)._1 == "simhash")
   }
 }
