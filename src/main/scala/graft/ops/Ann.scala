@@ -255,8 +255,9 @@ object Ann {
     // keeps the per-cluster residue constant as the corpus grows. The
     // default (None) remains the cluster-free oracled fixed point.
     val clusterCol = centroids.map(cs => nearestCentroid(col(vecCol), cs).getField("id").as("_cl"))
-    // scatter: small-file corpora would otherwise compute on one task
-    val rows = Dedup.scatter(corpus).select(Seq(col(idCol), col(vecCol)) ++ clusterCol: _*)
+    // No scatter: on an under-partitioned corpus it would shuffle every
+    // vector inside the persisted signature pass (the lshTopK rule)
+    val rows = corpus.select(Seq(col(idCol), col(vecCol)) ++ clusterCol: _*)
     val (_, pairs) = bandedCosinePairs(rows, clusterCol.map(_ => "_cl").toSeq, Nil,
       threshold, dim, numPlanes, bands, idCol, vecCol, seed, handle)
     pairs.select("id_a", "id_b", "cosine").distinct()
@@ -811,7 +812,8 @@ object Ann {
     // a compiled loop over the k×dim matrix, not k expression branches
     // (k grows with the corpus here; see nearestCentroid)
     val best = nearestCentroid(col(vecCol), centroids)
-    val assigned = Dedup.scatter(corpus)
+    // no scatter, as in cosineNearDupPairs
+    val assigned = corpus
       .select(col(idCol), col(vecCol), best.as("_best"))
       .select(col(idCol), col(vecCol), col("_best").getField("id").as("cluster"),
         col("_best").getField("sim").as("_csim"))

@@ -327,7 +327,9 @@ object IdDecoder {
   /** Compile one attribute's versions from household metadata for the
     * given years (household.yaml shape: top-level ID_Length plus
     * `<attr>: {code: {position: {start, end}}, name: {...}}`, all
-    * year-versioned).
+    * year-versioned). A year without a code position is the reference's
+    * hard error; [[compileOpt]] + [[addAttributeLayouts]] decode
+    * external-file years.
     */
   def compile(
       householdMeta: Meta,
@@ -335,14 +337,14 @@ object IdDecoder {
       years: Seq[Int],
       resolver: ResolverSettings = ResolverSettings(),
   ): Seq[AttrVersion] =
-    years.sorted.map { y =>
-      val resolved = new VersionResolver(householdMeta, y, resolver).getVersion
-      val idLen = resolved("ID_Length").asLong.toInt
-      val attrMeta = resolved(attr)
-      val pos = attrMeta("code")("position")
-      AttrVersion(y, y + 1, idLen,
-        pos("start").asLong.toInt, pos("end").asLong.toInt, parseLabels(attrMeta))
+    compileOpt(householdMeta, attr, years, resolver).map {
+      case Positional(v)         => v
+      case ExternalFile(y, _, _) => throw positionUnavailable(attr, y)
+      case Unavailable(y)        => throw positionUnavailable(attr, y)
     }
+
+  private def positionUnavailable(attr: String, year: Int) = new IllegalArgumentException(
+    s"Code position is not available for $attr in year $year (decoder.py:600)")
 
   /** code -> label map of one resolved attribute. A label resolved to
     * null means "code undefined this year" (household.yaml:406-431:
@@ -375,10 +377,14 @@ object IdDecoder {
   /** Add the decoded attribute column — one `when` branch per distinct
     * year version, no join.
     */
-  def addAttribute(df: DataFrame, versions: Seq[AttrVersion], settings: Settings): DataFrame = {
-    val out = settings.outputCol.getOrElse(settings.name)
+  def addAttribute(df: DataFrame, versions: Seq[AttrVersion], settings: Settings): DataFrame =
+    df.withColumn(settings.outputCol.getOrElse(settings.name), positionalValue(versions, settings))
+
+  /** The positional decode of `versions`: one `when` branch per year
+    * version, NULL outside them. */
+  private def positionalValue(versions: Seq[AttrVersion], settings: Settings): Column = {
     val id = col(settings.idCol)
-    val expr = versions.foldLeft(lit(null).cast(StringType)) { (acc, v) =>
+    versions.foldLeft(lit(null).cast(StringType)) { (acc, v) =>
       val code = codeExpr(id, v)
       val value = settings.aspect match {
         case "code" => code.cast(StringType)
@@ -387,7 +393,6 @@ object IdDecoder {
       when(col(settings.yearCol) >= lit(v.fromYear) && col(settings.yearCol) < lit(v.untilYear),
         value).otherwise(acc)
     }
-    df.withColumn(out, expr)
   }
 
   /** [[addAttribute]] over the FULL availability dispatch ([[compileOpt]]):
@@ -419,8 +424,7 @@ object IdDecoder {
       settings: Settings,
       strict: Boolean = false): DataFrame = {
     layouts.collectFirst { case Unavailable(y) => y }.foreach { y =>
-      throw new IllegalArgumentException(
-        s"Code position is not available for ${settings.name} in year $y (decoder.py:600)")
+      throw positionUnavailable(settings.name, y)
     }
     val out = settings.outputCol.getOrElse(settings.name)
     val positionals = layouts.collect { case Positional(v) => v }
@@ -472,18 +476,7 @@ object IdDecoder {
           joined.withColumn(extCode, checked)
         } else joined
       }
-    val id = col(settings.idCol)
-    val init = lit(null).cast(StringType)
-    val withPos = positionals.foldLeft(init) { (acc, v) =>
-      val code = codeExpr(id, v)
-      val value = settings.aspect match {
-        case "code" => code.cast(StringType)
-        case _      => labelExpr(code, v.labels)
-      }
-      when(col(settings.yearCol) >= lit(v.fromYear) && col(settings.yearCol) < lit(v.untilYear),
-        value).otherwise(acc)
-    }
-    val full = externals.foldLeft(withPos) { (acc, e) =>
+    val full = externals.foldLeft(positionalValue(positionals, settings)) { (acc, e) =>
       val value = settings.aspect match {
         case "code" => col(extCode).cast(StringType)
         case _      => labelExpr(col(extCode), e.labels)

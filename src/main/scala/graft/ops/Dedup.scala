@@ -44,25 +44,6 @@ object Dedup {
     if (few) df.repartition(target) else df
   }
 
-  /** Word k-shingles of the normalized text (k consecutive tokens joined
-    * by a space). Documents shorter than k tokens yield their whole text
-    * as the single shingle.
-    *
-    * PERF: this is a higher-order-function expression and evaluates
-    * INTERPRETED — fine for inspection/debugging at small scale, but
-    * never use it in a per-row hot path: every internal pipeline
-    * (minhash, contamination) goes through the codegen'd kernels
-    * (`minhash_text`, `shingle_hashes`) instead, which are ~60×
-    * faster and carry 8-byte hashes rather than shingle strings.
-    */
-  def shingles(text: Column, k: Int = 3): Column = {
-    val toks = TextOps.tokens(regexp_replace(lower(text), "[^a-z0-9\\s]+", " "))
-    val n = size(toks)
-    when(n <= k, array(concat_ws(" ", toks)))
-      .otherwise(transform(sequence(lit(1), n - k + 1),
-        i => concat_ws(" ", slice(toks, i, lit(k)))))
-  }
-
   /** MinHash signature: `numHashes` independent permutations approximated
     * by seeded xxhash64; signature[i] = min over shingles of
     * hash(shingle, i).

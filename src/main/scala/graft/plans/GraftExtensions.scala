@@ -1,17 +1,22 @@
 package graft.plans
 
+import scala.reflect.ClassTag
+
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 import org.apache.spark.sql.catalyst.util.ArrayData
+import org.apache.spark.sql.types.ArrayType
+import org.apache.spark.unsafe.types.UTF8String
 
 /** Session extensions registering the library's native expressions.
   * Install with `.config("spark.sql.extensions", "graft.plans.GraftExtensions")`.
   *
-  * `range_set_search(value, array(lo...), array(hi...))` — the ranges must
-  * be foldable literals (they come from compiled classification metadata);
-  * the builder folds them into primitive arrays at resolution time so the
-  * per-row path is the codegen'd binary search in [[RangeSetSearch]].
+  * Every SQL function is one row of `functions`: its name, its
+  * expression class, its parameters (whose count is the arity) and a
+  * builder. Constant arguments — sizes, literal arrays of range bounds,
+  * centroids or percentiles — are folded into primitives at resolution
+  * time, so the per-row path is the kernel alone.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
@@ -33,189 +38,116 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     v
   }
 
+  /** Fold a literal array argument through `elem`, which converts each
+    * boxed element and refuses (is undefined on) any other type:
+    * literals fold to boxed values per their SQL type, so e.g. a
+    * toLongArray over boxed Integers would throw ClassCastException.
+    */
+  private def literalArray[T: ClassTag](e: Expression, what: String, kind: String)(
+      elem: PartialFunction[Any, T]): Array[T] = {
+    require(e.foldable, s"$what must be a literal array, got $e")
+    val et = e.dataType.asInstanceOf[ArrayType].elementType
+    val data = e.eval().asInstanceOf[ArrayData]
+    Array.tabulate(data.numElements()) { i =>
+      elem.applyOrElse(data.get(i, et), (other: Any) =>
+        throw new IllegalArgumentException(s"$what must be $kind literals, got $other"))
+    }
+  }
+
+  /** `name(params…)`, built by `build` from exactly `params.length`
+    * arguments. */
+  private def fn(name: String, cls: Class[_], params: String*)(build: Seq[Expression] => Expression) =
+    (new FunctionIdentifier(name), new ExpressionInfo(cls.getName, name),
+      (args: Seq[Expression]) => {
+        require(args.length == params.length, s"$name(${params.mkString(", ")})")
+        build(args)
+      })
+
+  private val functions = Seq(
+    // the ranges come from compiled classification metadata; the
+    // binary search needs them sorted and disjoint
+    fn("range_set_search", classOf[RangeSetSearch], "value", "array(lo...)", "array(hi...)") { a =>
+      def longs(e: Expression) = literalArray(e, "range bounds", "integral") {
+        case l: java.lang.Long    => l.longValue
+        case n: java.lang.Integer => n.longValue
+        case s: java.lang.Short   => s.longValue
+      }
+      val (los, his) = (longs(a(1)), longs(a(2)))
+      // the binary search's correctness contract — enforce it here
+      // too, not only in the Scala RangeSet.search wrapper: unsorted
+      // or overlapping bounds through raw SQL would silently return
+      // wrong indexes
+      require(los.length == his.length,
+        "range_set_search: lo/hi arrays must be the same length")
+      // every range must be well-formed on its own — the pairwise loop
+      // below never inspects the last range, so an inverted [lo > hi)
+      // there would pass and make the binary search silently miss
+      los.indices.foreach { i =>
+        require(los(i) <= his(i),
+          s"range_set_search: inverted range at index $i: [${los(i)}, ${his(i)})")
+      }
+      // per-range lo <= hi above + hi(i) <= lo(i+1) here already
+      // imply lo(i) <= lo(i+1)
+      (0 until los.length - 1).foreach { i =>
+        require(his(i) <= los(i + 1),
+          s"range_set_search: ranges must be sorted and disjoint " +
+            s"(violated at index $i: [${los(i)}, ${his(i)}) then [${los(i + 1)}, ${his(i + 1)}))")
+      }
+      RangeSetSearch(a(0), los, his)
+    },
+    fn("sliding_windows", classOf[SlidingWindows], "tokens", "k", "sep") { a =>
+      require(a(2).foldable, s"sep must be a literal string, got ${a(2)}")
+      val sep = a(2).eval() match {
+        case s: UTF8String => s
+        case other => throw new IllegalArgumentException(s"sep must be a string literal, got $other")
+      }
+      SlidingWindows(a(0), positiveInt(a(1), "k"), sep)
+    },
+    fn("ngram_jaccard_text", classOf[NgramJaccardText], "a", "b", "k") { a =>
+      NgramJaccardText(a(0), a(1), positiveInt(a(2), "k"))
+    },
+    fn("simhash_text", classOf[SimHashText], "text")(a => SimHashText(a(0))),
+    fn("vec_dot", classOf[VecDot], "a", "b")(a => VecDot(a(0), a(1))),
+    fn("shingle_hashes", classOf[ShingleText], "text", "k") { a =>
+      ShingleText(a(0), positiveInt(a(1), "k"))
+    },
+    fn("jaccard_hashes", classOf[JaccardHashes], "a", "b")(a => JaccardHashes(a(0), a(1))),
+    fn("minhash_text", classOf[MinHashText], "text", "numHashes", "k") { a =>
+      MinHashText(a(0), positiveInt(a(1), "numHashes"), positiveInt(a(2), "k"))
+    },
+    fn("winnow_text", classOf[WinnowText], "text", "k", "w") { a =>
+      WinnowText(a(0), positiveInt(a(1), "k"), positiveInt(a(2), "w"))
+    },
+    fn("nearest_centroid", classOf[NearestCentroid], "vec", "flat_matrix", "labels") { a =>
+      val flat = literalArray(a(1), "centroid matrix", "numeric") {
+        case d: java.lang.Double => d.doubleValue
+        case f: java.lang.Float  => f.doubleValue
+      }
+      val labels = literalArray(a(2), "centroid labels", "integral") {
+        case n: java.lang.Integer => n.intValue
+        case l: java.lang.Long    => math.toIntExact(l)
+      }
+      require(labels.nonEmpty, "nearest_centroid: need at least one centroid")
+      require(flat.length % labels.length == 0 && flat.length > 0,
+        s"nearest_centroid: matrix length ${flat.length} not divisible by " +
+          s"label count ${labels.length}")
+      NearestCentroid(a(0), flat, labels)
+    },
+    fn("wq_percentiles", classOf[WeightedPercentilesSketch],
+        "value", "weight", "array(p...)", "maxCentroids") { a =>
+      val ps = literalArray(a(2), "percentile list", "numeric") {
+        case d: java.lang.Double  => d.doubleValue
+        case f: java.lang.Float   => f.doubleValue
+        case n: java.lang.Integer => n.doubleValue
+      }
+      WeightedPercentilesSketch(a(0), a(1), ps.toSeq, positiveInt(a(3), "maxCentroids"))
+    },
+  )
+
   override def apply(ext: SparkSessionExtensions): Unit = {
     // runs inside the operator-optimization fixed point, so the folded
     // predicate is then pushed/pruned by the stock rules in the same pass
     ext.injectOptimizerRule(_ => FoldIsNotNullConditional)
-    ext.injectFunction((
-      new FunctionIdentifier("range_set_search"),
-      new ExpressionInfo(classOf[RangeSetSearch].getName, "range_set_search"),
-      (args: Seq[Expression]) => {
-        require(args.length == 3,
-          "range_set_search(value, array(lo...), array(hi...))")
-        def longs(e: Expression): Array[Long] = {
-          require(e.foldable, s"range bounds must be literal arrays, got $e")
-          // integral literals fold to boxed Integer/Long per their SQL
-          // type — toLongArray on a boxed-Integer array throws CCE
-          val data = e.eval().asInstanceOf[ArrayData]
-          Array.tabulate(data.numElements()) { i =>
-            data.get(i, e.dataType.asInstanceOf[org.apache.spark.sql.types.ArrayType].elementType) match {
-              case l: java.lang.Long    => l.longValue
-              case n: java.lang.Integer => n.longValue
-              case s: java.lang.Short   => s.longValue
-              case other => throw new IllegalArgumentException(
-                s"range bounds must be integral literals, got $other")
-            }
-          }
-        }
-        val (los, his) = (longs(args(1)), longs(args(2)))
-        // the binary search's correctness contract — enforce it here
-        // too, not only in the Scala RangeSet.search wrapper: unsorted
-        // or overlapping bounds through raw SQL would silently return
-        // wrong indexes
-        require(los.length == his.length,
-          "range_set_search: lo/hi arrays must be the same length")
-        // every range must be well-formed on its own — the pairwise loop
-        // below never inspects the last range, so an inverted [lo > hi)
-        // there would pass and make the binary search silently miss
-        los.indices.foreach { i =>
-          require(los(i) <= his(i),
-            s"range_set_search: inverted range at index $i: [${los(i)}, ${his(i)})")
-        }
-        // per-range lo <= hi above + hi(i) <= lo(i+1) here already
-        // imply lo(i) <= lo(i+1)
-        (0 until los.length - 1).foreach { i =>
-          require(his(i) <= los(i + 1),
-            s"range_set_search: ranges must be sorted and disjoint " +
-              s"(violated at index $i: [${los(i)}, ${his(i)}) then [${los(i + 1)}, ${his(i + 1)}))")
-        }
-        RangeSetSearch(args.head, los, his)
-      },
-    ))
-    ext.injectFunction((
-      new FunctionIdentifier("sliding_windows"),
-      new ExpressionInfo(classOf[SlidingWindows].getName, "sliding_windows"),
-      (args: Seq[Expression]) => {
-        require(args.length == 3, "sliding_windows(tokens, k, sep)")
-        val sepArg = args(2)
-        require(sepArg.foldable, s"sep must be a literal string, got $sepArg")
-        val sep = sepArg.eval() match {
-          case s: org.apache.spark.unsafe.types.UTF8String => s
-          case other => throw new IllegalArgumentException(
-            s"sep must be a string literal, got $other")
-        }
-        SlidingWindows(args.head, positiveInt(args(1), "k"), sep)
-      },
-    ))
-    ext.injectFunction((
-      new FunctionIdentifier("ngram_jaccard_text"),
-      new ExpressionInfo(classOf[NgramJaccardText].getName, "ngram_jaccard_text"),
-      (args: Seq[Expression]) => {
-        require(args.length == 3, "ngram_jaccard_text(a, b, k)")
-        NgramJaccardText(args.head, args(1), positiveInt(args(2), "k"))
-      },
-    ))
-    ext.injectFunction((
-      new FunctionIdentifier("simhash_text"),
-      new ExpressionInfo(classOf[SimHashText].getName, "simhash_text"),
-      (args: Seq[Expression]) => {
-        require(args.length == 1, "simhash_text(text)")
-        SimHashText(args.head)
-      },
-    ))
-    ext.injectFunction((
-      new FunctionIdentifier("vec_dot"),
-      new ExpressionInfo(classOf[VecDot].getName, "vec_dot"),
-      (args: Seq[Expression]) => {
-        require(args.length == 2, "vec_dot(a, b)")
-        VecDot(args.head, args(1))
-      },
-    ))
-    ext.injectFunction((
-      new FunctionIdentifier("shingle_hashes"),
-      new ExpressionInfo(classOf[ShingleText].getName, "shingle_hashes"),
-      (args: Seq[Expression]) => {
-        require(args.length == 2, "shingle_hashes(text, k)")
-        ShingleText(args.head, positiveInt(args(1), "k"))
-      },
-    ))
-    ext.injectFunction((
-      new FunctionIdentifier("jaccard_hashes"),
-      new ExpressionInfo(classOf[JaccardHashes].getName, "jaccard_hashes"),
-      (args: Seq[Expression]) => {
-        require(args.length == 2, "jaccard_hashes(a, b)")
-        JaccardHashes(args.head, args(1))
-      },
-    ))
-    ext.injectFunction((
-      new FunctionIdentifier("minhash_text"),
-      new ExpressionInfo(classOf[MinHashText].getName, "minhash_text"),
-      (args: Seq[Expression]) => {
-        require(args.length == 3, "minhash_text(text, numHashes, k)")
-        MinHashText(args.head,
-          positiveInt(args(1), "numHashes"), positiveInt(args(2), "k"))
-      },
-    ))
-    ext.injectFunction((
-      new FunctionIdentifier("winnow_text"),
-      new ExpressionInfo(classOf[WinnowText].getName, "winnow_text"),
-      (args: Seq[Expression]) => {
-        require(args.length == 3, "winnow_text(text, k, w)")
-        WinnowText(args.head, positiveInt(args(1), "k"), positiveInt(args(2), "w"))
-      },
-    ))
-    ext.injectFunction((
-      new FunctionIdentifier("nearest_centroid"),
-      new ExpressionInfo(classOf[NearestCentroid].getName, "nearest_centroid"),
-      (args: Seq[Expression]) => {
-        require(args.length == 3, "nearest_centroid(vec, flat_matrix, labels)")
-        def doubles(e: Expression): Array[Double] = {
-          require(e.foldable, s"centroid matrix must be a literal array, got $e")
-          val et = e.dataType.asInstanceOf[org.apache.spark.sql.types.ArrayType].elementType
-          val data = e.eval().asInstanceOf[ArrayData]
-          Array.tabulate(data.numElements()) { i =>
-            data.get(i, et) match {
-              case d: java.lang.Double => d.doubleValue
-              case f: java.lang.Float  => f.doubleValue
-              case other => throw new IllegalArgumentException(
-                s"centroid matrix must be numeric literals, got $other")
-            }
-          }
-        }
-        def ints(e: Expression): Array[Int] = {
-          require(e.foldable, s"centroid labels must be a literal array, got $e")
-          val et = e.dataType.asInstanceOf[org.apache.spark.sql.types.ArrayType].elementType
-          val data = e.eval().asInstanceOf[ArrayData]
-          Array.tabulate(data.numElements()) { i =>
-            data.get(i, et) match {
-              case n: java.lang.Integer => n.intValue
-              case l: java.lang.Long    => math.toIntExact(l)
-              case other => throw new IllegalArgumentException(
-                s"centroid labels must be integral literals, got $other")
-            }
-          }
-        }
-        val (flat, labels) = (doubles(args(1)), ints(args(2)))
-        require(labels.nonEmpty, "nearest_centroid: need at least one centroid")
-        require(flat.length % labels.length == 0 && flat.length > 0,
-          s"nearest_centroid: matrix length ${flat.length} not divisible by " +
-            s"label count ${labels.length}")
-        NearestCentroid(args.head, flat, labels)
-      },
-    ))
-    ext.injectFunction((
-      new FunctionIdentifier("wq_percentiles"),
-      new ExpressionInfo(classOf[WeightedPercentilesSketch].getName, "wq_percentiles"),
-      (args: Seq[Expression]) => {
-        require(args.length == 4,
-          "wq_percentiles(value, weight, array(p...), maxCentroids)")
-        def doubles(e: Expression): Seq[Double] = {
-          require(e.foldable, s"percentile list must be a literal array, got $e")
-          val et = e.dataType.asInstanceOf[org.apache.spark.sql.types.ArrayType].elementType
-          val data = e.eval().asInstanceOf[ArrayData]
-          Seq.tabulate(data.numElements()) { i =>
-            data.get(i, et) match {
-              case d: java.lang.Double  => d.doubleValue
-              case f: java.lang.Float   => f.doubleValue
-              case n: java.lang.Integer => n.doubleValue
-              case other => throw new IllegalArgumentException(
-                s"percentiles must be numeric literals, got $other")
-            }
-          }
-        }
-        WeightedPercentilesSketch(args.head, args(1),
-          doubles(args(2)), positiveInt(args(3), "maxCentroids"))
-      },
-    ))
+    functions.foreach(ext.injectFunction)
   }
 }

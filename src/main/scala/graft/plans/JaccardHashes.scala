@@ -1,9 +1,9 @@
 package graft.plans
 
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, ExpectsInputTypes, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.types.{DataType, DoubleType}
+import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, LongType}
 
 /** Exact Jaccard over two PRE-COMPUTED sorted-distinct shingle-hash
   * arrays (the output contract of [[ShingleText]]): a single merge walk,
@@ -18,24 +18,15 @@ import org.apache.spark.sql.types.{DataType, DoubleType}
   * pipelines with many pairs per document (SimHash's narrow band keys
   * produce ~50 candidate pairs per doc at sf0.1) shingle each document
   * ONCE at the corpus pass and verify pairs with this O(|a|+|b|) walk,
-  * instead of re-running the full tokenize+hash+set-build kernel twice
+  * instead of re-running the full tokenize+hash+sort kernel twice
   * per candidate pair via `ngram_jaccard_text`.
   */
-final case class JaccardHashes(left: Expression, right: Expression) extends BinaryExpression {
+final case class JaccardHashes(left: Expression, right: Expression)
+    extends BinaryExpression with ExpectsInputTypes {
 
   // sorted-distinct long arrays from shingle_hashes — any other element
   // type would silently read garbage through the unsafe getLong path
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult = {
-    def ok(dt: org.apache.spark.sql.types.DataType) = dt match {
-      case org.apache.spark.sql.types.ArrayType(org.apache.spark.sql.types.LongType, _) => true
-      case _ => false
-    }
-    if (ok(left.dataType) && ok(right.dataType))
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-      s"expects two array<bigint> arguments, got ${left.dataType.catalogString}, ${right.dataType.catalogString}")
-  }
-
+  override def inputTypes = Seq(ArrayType(LongType), ArrayType(LongType))
 
   override def dataType: DataType = DoubleType
   override def nullIntolerant: Boolean = true

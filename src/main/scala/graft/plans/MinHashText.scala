@@ -1,14 +1,14 @@
 package graft.plans
 
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, UnsafeArrayData, XXH64}
+import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, UnaryExpression, UnsafeArrayData, XXH64}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
+import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Native end-to-end MinHash signature of a text column: normalize →
-  * tokenize → k-token shingles (rolling XXH64 combination of token
-  * hashes) → numHashes running minima — all in one static kernel call
-  * per row.
+/** Native end-to-end MinHash signature of a text column: the
+  * [[TextHash]] k-shingle hashes → numHashes running minima, with
+  * signature[i] = min over shingles of XXH64(shingleHash, i) — all in
+  * one static kernel call per row.
   *
   * Why: Spark's higher-order functions (transform/aggregate/filter)
   * evaluate INTERPRETED (no doGenCode) — a signature built from them
@@ -19,14 +19,9 @@ import org.apache.spark.unsafe.types.UTF8String
   * stays inside whole-stage codegen.
   */
 final case class MinHashText(child: Expression, numHashes: Int, k: Int)
-    extends UnaryExpression {
+    extends UnaryExpression with ExpectsInputTypes {
 
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    if (child.dataType == org.apache.spark.sql.types.StringType)
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-      s"expects a string argument, got ${child.dataType.catalogString}")
-
+  override def inputTypes = Seq(StringType)
 
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
   override def nullIntolerant: Boolean = true
@@ -46,63 +41,19 @@ final case class MinHashText(child: Expression, numHashes: Int, k: Int)
 
 object MinHashText {
 
-  private val SHINGLE_SEED = 0x9E3779B97F4A7C15L
-
-  /** The kernel: lowercase, ASCII characters outside [a-z0-9] are separators, while every non-ASCII byte is a TOKEN byte (byte-level robustness: multibyte scripts tokenize by their ASCII gaps; the flip side is that Unicode punctuation/whitespace does NOT separate), token
-    * hashes via XXH64 over UTF-8 bytes, shingle hash = XXH64 chain over
-    * the window's token hashes, signature[i] = min over shingles of
-    * XXH64(shingleHash, i). Texts with <= k tokens contribute one
-    * whole-text shingle.
-    */
   def compute(text: UTF8String, numHashes: Int, k: Int): UnsafeArrayData = {
-    val bytes = text.getBytes
-    // token hashes in one scan (lowercasing ASCII inline; non-alnum = gap)
-    var tokenHashes = new Array[Long](16)
-    var nTokens = 0
-    var h = 0L
-    var inTok = false
-    var i = 0
-    while (i <= bytes.length) {
-      val c: Int = if (i < bytes.length) bytes(i) & 0xFF else ' '
-      val lc = if (c >= 'A' && c <= 'Z') c + 32 else c
-      // TOKENIZER COPY: keep byte-for-byte in sync with NgramJaccardText.tokenHashes
-      val alnum = (lc >= 'a' && lc <= 'z') || (lc >= '0' && lc <= '9') || lc >= 0x80
-      if (alnum) {
-        h = XXH64.hashLong(lc.toLong, if (inTok) h else SHINGLE_SEED)
-        inTok = true
-      } else if (inTok) {
-        if (nTokens == tokenHashes.length)
-          tokenHashes = java.util.Arrays.copyOf(tokenHashes, nTokens * 2)
-        tokenHashes(nTokens) = h
-        nTokens += 1
-        inTok = false
-      }
-      i += 1
-    }
+    val shingles = TextHash.shingleHashes(text, k)
     val mins = new Array[Long](numHashes)
     java.util.Arrays.fill(mins, Long.MaxValue)
-    def addShingle(sh: Long): Unit = {
+    var s = 0
+    while (s < shingles.length) {
       var p = 0
       while (p < numHashes) {
-        val hp = XXH64.hashLong(sh, p.toLong)
+        val hp = XXH64.hashLong(shingles(s), p.toLong)
         if (hp < mins(p)) mins(p) = hp
         p += 1
       }
-    }
-    if (nTokens <= k) {
-      var sh = SHINGLE_SEED
-      var t = 0
-      while (t < nTokens) { sh = XXH64.hashLong(tokenHashes(t), sh); t += 1 }
-      addShingle(sh)
-    } else {
-      var j = 0
-      while (j + k <= nTokens) {
-        var sh = SHINGLE_SEED
-        var t = j
-        while (t < j + k) { sh = XXH64.hashLong(tokenHashes(t), sh); t += 1 }
-        addShingle(sh)
-        j += 1
-      }
+      s += 1
     }
     UnsafeArrayData.fromPrimitiveArray(mins)
   }

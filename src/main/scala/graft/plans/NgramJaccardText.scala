@@ -1,28 +1,22 @@
 package graft.plans
 
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, XXH64}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, ExpectsInputTypes, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.types.{DataType, DoubleType}
+import org.apache.spark.sql.types.{DataType, DoubleType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Native exact n-gram Jaccard similarity between two text columns:
-  * |A∩B| / |A∪B| over distinct k-token shingles, where shingles are the
-  * rolling XXH64 combination of token hashes (same tokenizer as
-  * [[MinHashText]]; 64-bit hashing makes set collisions negligible, so
-  * the value equals the string-shingle Jaccard). One kernel call per
-  * pair — the higher-order-function formulation re-shingles both texts
-  * interpreted per row and was measured 60s+ for 5000 pairs at sf0.1.
+  * |A∩B| / |A∪B| over the distinct [[TextHash]] k-shingle hashes
+  * (64-bit hashing makes set collisions negligible, so the value equals
+  * the string-shingle Jaccard): the [[JaccardHashes]] merge walk over
+  * both texts' `shingle_hashes` arrays. One kernel call per pair — the
+  * higher-order-function formulation re-shingles both texts interpreted
+  * per row and was measured 60s+ for 5000 pairs at sf0.1.
   */
 final case class NgramJaccardText(left: Expression, right: Expression, k: Int)
-    extends BinaryExpression {
+    extends BinaryExpression with ExpectsInputTypes {
 
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    if (left.dataType == org.apache.spark.sql.types.StringType &&
-        right.dataType == org.apache.spark.sql.types.StringType)
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-      s"expects two string arguments, got ${left.dataType.catalogString}, ${right.dataType.catalogString}")
-
+  override def inputTypes = Seq(StringType, StringType)
 
   override def dataType: DataType = DoubleType
   override def nullIntolerant: Boolean = true
@@ -40,61 +34,6 @@ final case class NgramJaccardText(left: Expression, right: Expression, k: Int)
 }
 
 object NgramJaccardText {
-
-  private val SEED = 0x9E3779B97F4A7C15L
-
-  private[plans] def tokenHashes(text: UTF8String): Array[Long] = {
-    val bytes = text.getBytes
-    var out = new Array[Long](16)
-    var n = 0
-    var h = 0L
-    var inTok = false
-    var i = 0
-    while (i <= bytes.length) {
-      val c: Int = if (i < bytes.length) bytes(i) & 0xFF else ' '
-      val lc = if (c >= 'A' && c <= 'Z') c + 32 else c
-      val alnum = (lc >= 'a' && lc <= 'z') || (lc >= '0' && lc <= '9') || lc >= 0x80
-      if (alnum) {
-        h = XXH64.hashLong(lc.toLong, if (inTok) h else SEED)
-        inTok = true
-      } else if (inTok) {
-        if (n == out.length) out = java.util.Arrays.copyOf(out, n * 2)
-        out(n) = h; n += 1
-        inTok = false
-      }
-      i += 1
-    }
-    java.util.Arrays.copyOf(out, n)
-  }
-
-  private[plans] def shingleSet(toks: Array[Long], k: Int): java.util.HashSet[java.lang.Long] = {
-    val set = new java.util.HashSet[java.lang.Long]()
-    if (toks.length <= k) {
-      var sh = SEED
-      var t = 0
-      while (t < toks.length) { sh = XXH64.hashLong(toks(t), sh); t += 1 }
-      set.add(sh)
-    } else {
-      var j = 0
-      while (j + k <= toks.length) {
-        var sh = SEED
-        var t = j
-        while (t < j + k) { sh = XXH64.hashLong(toks(t), sh); t += 1 }
-        set.add(sh)
-        j += 1
-      }
-    }
-    set
-  }
-
-  def compute(a: UTF8String, b: UTF8String, k: Int): Double = {
-    val sa = shingleSet(tokenHashes(a), k)
-    val sb = shingleSet(tokenHashes(b), k)
-    if (sa.isEmpty && sb.isEmpty) return 0.0
-    var inter = 0
-    val it = sa.iterator()
-    while (it.hasNext) if (sb.contains(it.next())) inter += 1
-    val union = sa.size() + sb.size() - inter
-    if (union == 0) 0.0 else inter.toDouble / union
-  }
+  def compute(a: UTF8String, b: UTF8String, k: Int): Double =
+    JaccardHashes.compute(TextHash.sortedShingles(a, k), TextHash.sortedShingles(b, k))
 }

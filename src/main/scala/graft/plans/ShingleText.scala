@@ -1,31 +1,26 @@
 package graft.plans
 
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, UnaryExpression, UnsafeArrayData}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
+import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Native shingle extraction: the DISTINCT rolling k-token shingle
-  * hashes of a text, as array<long> — one kernel call per row inside
-  * whole-stage codegen. Shares [[NgramJaccardText]]'s tokenizer and
-  * rolling XXH64 combination, so `shingle_hashes(a) ∩ shingle_hashes(b)`
-  * counts exactly what `ngram_jaccard_text(a, b, k)` measures.
+/** Native shingle extraction: the DISTINCT [[TextHash]] k-shingle
+  * hashes of a text, ascending, as array<long> — one kernel call per row
+  * inside whole-stage codegen. `ngram_jaccard_text(a, b, k)` merge-walks
+  * the same arrays, so `shingle_hashes(a) ∩ shingle_hashes(b)` counts
+  * exactly what it measures.
   *
-  * This exists because the higher-order-function shingle formulation
-  * ([[graft.ops.Dedup.shingles]]) evaluates INTERPRETED (LambdaFunction
-  * is CodegenFallback): an explode over it costs ~26 s for 5000 docs at
-  * sf0.1, vs sub-second through this kernel — and hashing also slims
-  * every downstream exchange from shingle STRINGS to 8-byte keys.
+  * This exists because a higher-order-function shingle formulation
+  * evaluates INTERPRETED (LambdaFunction is CodegenFallback): an explode
+  * over one cost ~26 s for 5000 docs at sf0.1, vs sub-second through
+  * this kernel — and hashing also slims every downstream exchange from
+  * shingle STRINGS to 8-byte keys.
   */
-final case class ShingleText(child: Expression, k: Int) extends UnaryExpression {
+final case class ShingleText(child: Expression, k: Int)
+    extends UnaryExpression with ExpectsInputTypes {
 
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    if (child.dataType == org.apache.spark.sql.types.StringType)
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-      s"expects a string argument, got ${child.dataType.catalogString}")
-
+  override def inputTypes = Seq(StringType)
 
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
   override def nullIntolerant: Boolean = true
@@ -43,14 +38,5 @@ final case class ShingleText(child: Expression, k: Int) extends UnaryExpression 
 }
 
 object ShingleText {
-  def compute(text: UTF8String, k: Int): ArrayData = {
-    val set = NgramJaccardText.shingleSet(NgramJaccardText.tokenHashes(text), k)
-    val out = new Array[Long](set.size())
-    val it = set.iterator()
-    var i = 0
-    while (it.hasNext) { out(i) = it.next(); i += 1 }
-    // deterministic order for reproducible dumps/tests
-    java.util.Arrays.sort(out)
-    new GenericArrayData(out)
-  }
+  def compute(text: UTF8String, k: Int): UnsafeArrayData = TextHash.sortedShingles(text, k)
 }

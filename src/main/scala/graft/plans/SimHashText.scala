@@ -1,24 +1,19 @@
 package graft.plans
 
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, XXH64}
+import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.types.{DataType, LongType}
+import org.apache.spark.sql.types.{DataType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Native 64-bit SimHash of a text column: bit i of the result is the
-  * sign of Σ_tokens (bit i of XXH64(token) ? +1 : -1), computed in one
-  * kernel call per row (same tokenizer as [[MinHashText]]). Replaces the
+  * sign of Σ_tokens (bit i of the [[TextHash]] token hash ? +1 : -1),
+  * computed in one kernel call per row. Replaces the
   * explode + 64-partial-sum aggregate: no shuffle, no interpreted
   * higher-order functions.
   */
-final case class SimHashText(child: Expression) extends UnaryExpression {
+final case class SimHashText(child: Expression) extends UnaryExpression with ExpectsInputTypes {
 
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    if (child.dataType == org.apache.spark.sql.types.StringType)
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-      s"expects a string argument, got ${child.dataType.catalogString}")
-
+  override def inputTypes = Seq(StringType)
 
   override def dataType: DataType = LongType
   override def nullIntolerant: Boolean = true
@@ -37,31 +32,18 @@ final case class SimHashText(child: Expression) extends UnaryExpression {
 
 object SimHashText {
 
-  private val TOKEN_SEED = 0x9E3779B97F4A7C15L
-
   def compute(text: UTF8String): Long = {
-    val bytes = text.getBytes
+    val tokens = TextHash.tokenHashes(text)
     val counts = new Array[Int](64)
-    var h = 0L
-    var inTok = false
-    var i = 0
-    while (i <= bytes.length) {
-      val c: Int = if (i < bytes.length) bytes(i) & 0xFF else ' '
-      val lc = if (c >= 'A' && c <= 'Z') c + 32 else c
-      // TOKENIZER COPY: keep byte-for-byte in sync with NgramJaccardText.tokenHashes
-      val alnum = (lc >= 'a' && lc <= 'z') || (lc >= '0' && lc <= '9') || lc >= 0x80
-      if (alnum) {
-        h = XXH64.hashLong(lc.toLong, if (inTok) h else TOKEN_SEED)
-        inTok = true
-      } else if (inTok) {
-        var b = 0
-        while (b < 64) {
-          if (((h >>> b) & 1L) == 1L) counts(b) += 1 else counts(b) -= 1
-          b += 1
-        }
-        inTok = false
+    var t = 0
+    while (t < tokens.length) {
+      val h = tokens(t)
+      var b = 0
+      while (b < 64) {
+        if (((h >>> b) & 1L) == 1L) counts(b) += 1 else counts(b) -= 1
+        b += 1
       }
-      i += 1
+      t += 1
     }
     var out = 0L
     var b = 0

@@ -1,7 +1,7 @@
 package graft.plans
 
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
@@ -27,13 +27,9 @@ import org.apache.spark.unsafe.types.UTF8String
   * whole-document window.
   */
 final case class WinnowText(child: Expression, k: Int, w: Int)
-    extends UnaryExpression {
+    extends UnaryExpression with ExpectsInputTypes {
 
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    if (child.dataType == StringType)
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-      s"expects a string argument, got ${child.dataType.catalogString}")
+  override def inputTypes = Seq(StringType)
 
   override def dataType: DataType = WinnowText.outType
   override def nullIntolerant: Boolean = true

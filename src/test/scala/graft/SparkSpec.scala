@@ -7,6 +7,8 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+import org.apache.spark.sql.execution.streaming.state.StateStore
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -14,17 +16,23 @@ import org.scalatest.funsuite.AnyFunSuite
 trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = GraftSession.local(2)
 
-  override def afterAll(): Unit = spark.stop()
+  // The state-store maintenance task is JVM-wide and outlives the
+  // session (catalog rows and EventStreamsSpec run stateful streams):
+  // stop it with the session, or it keeps failing to reach the stopped
+  // session's coordinator during later suites of the test JVM.
+  override def afterAll(): Unit = try StateStore.stop() finally spark.stop()
 
   /** Every physical node of `df`'s plan, descending through AQE wrappers
-    * (into the initial plan) and subqueries. With AQE on, the top node is
-    * a leaf `AdaptiveSparkPlanExec`, so a plain `executedPlan.collect`
-    * finds nothing beneath it.
+    * (into the initial plan), subqueries and the plans of persisted
+    * frames. With AQE on, the top node is a leaf `AdaptiveSparkPlanExec`,
+    * and a cached frame is a leaf `InMemoryTableScanExec`, so a plain
+    * `executedPlan.collect` finds nothing beneath either.
     */
   def planNodes(df: DataFrame): Seq[SparkPlan] = {
     def walk(p: SparkPlan): Seq[SparkPlan] = {
       val inner = p match {
         case a: AdaptiveSparkPlanExec => Seq(a.initialPlan)
+        case c: InMemoryTableScanExec => Seq(c.relation.cachedPlan)
         case _                        => Nil
       }
       p +: (p.children ++ p.subqueries ++ inner).flatMap(walk)

@@ -20,7 +20,7 @@ object MetaProps extends Properties("meta-algebra") {
   property("year spec string = naive expansion of parts") = forAll(
     Gen.nonEmptyListOf(Gen.oneOf(
       yearGen.map(y => (y.toString, List(y))),
-      for { a <- yearGen; b <- yearGen.suchThat(_ >= a) }
+      for { a <- yearGen; b <- Gen.choose(a, bounds.last) }
         yield (s"$a-$b", (a to b).toList),
     ))) { parts =>
     val spec = parts.map(_._1).mkString(",")

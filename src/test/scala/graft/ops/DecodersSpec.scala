@@ -232,6 +232,31 @@ Urban_Rural:
     assert(ex.getMessage.contains("not available"))
   }
 
+  test("D2 compile refuses external-file and unavailable years like the reference") {
+    // household.yaml's County shape: no code position before 1392, an
+    // external ID->code file for 1387-1391, nothing before 1387
+    val household = Meta.fromYaml("""
+ID_Length: 10
+County:
+  code:
+    position:
+      1383: null
+      1392: {start: 2, end: 4}
+    external_file:
+      1383: null
+      1387: counties
+      1392: null
+  name: {1: A}
+""")
+    assert(IdDecoder.compile(household, "County", Seq(1395)).map(_.posStart) == Seq(2))
+    for (year <- Seq(1385, 1388)) {
+      val ex = intercept[IllegalArgumentException](
+        IdDecoder.compile(household, "County", Seq(year, 1395)))
+      assert(ex.getMessage.contains(
+        s"Code position is not available for County in year $year (decoder.py:600)"), ex.getMessage)
+    }
+  }
+
   test("D2 strict mode mirrors the reference's zero-miss assert on external mappings") {
     import spark.implicits._
     val labels = Map(1L -> "A", 2L -> "B")
