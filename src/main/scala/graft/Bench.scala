@@ -148,19 +148,16 @@ object Bench {
     // that were pure machine contention (load_avg 2->11.7 across the
     // whole run, regressed queries contiguous in run order) — whole-run
     // before/after load could not localize it. Each run records the
-    // 1-min load average sampled right after it. When the machine was
-    // already loaded (> cpus/4) before the first query, every query takes
-    // up to two extra runs, so at least one sample has a chance of clean
-    // machine state. The gate reads the sample taken before the run, not
-    // the per-run samples: those include the bench's own load, which
-    // alone trips cpus/4 on a small box (every query took 5 runs at 4
-    // cores). min() over all runs still measures the plan.
-    val extraRuns = if (loadBefore > cpus.toDouble / 4.0) 2 else 0
+    // 1-min load average sampled right after it, for diagnosis only:
+    // the run count is fixed at three. A 1-min load sampled before the
+    // first query still carries whatever ran just before the bench (an
+    // `sbt compile` alone tripped a cpus/4 gate), so it cannot decide
+    // how many runs a query gets.
     val results: Seq[(String, (Seq[Double], Seq[Double]))] = names.map { name =>
       val runs = scala.collection.mutable.ArrayBuffer.empty[Double]
       val loads = scala.collection.mutable.ArrayBuffer.empty[Double]
       def run(): Unit = { runs += runOnce(name); loads += osBean.getSystemLoadAverage }
-      for (_ <- 1 to 3 + extraRuns) run()
+      for (_ <- 1 to 3) run()
       System.err.println(f"[bench] $name%-24s ${runs.min}%8.2fs  (runs: ${runs.map(r => f"$r%.2f").mkString(", ")}; load: ${loads.map(l => f"$l%.1f").mkString(", ")})")
       name -> (runs.toSeq, loads.toSeq)
     }

@@ -944,7 +944,7 @@ items:
     */
   def a1CsvRoundtrip(s: SparkSession, dir: String): DataFrame = {
     import CleanOps._
-    val tmp = s"/tmp/graft_a1_csv_${dir.replaceAll("[^0-9a-zA-Z]", "_")}"
+    val tmp = graft.engine.Scratch.dir(s"graft_a1_csv:$dir")
     T(s, dir, "supplier")
       .select(col("s_suppkey"), col("s_name"), col("s_acctbal"))
       .write.mode("overwrite").option("header", "true").csv(tmp)
@@ -970,7 +970,7 @@ items:
     */
   def a3HttpParquet(s: SparkSession, dir: String): DataFrame = {
     val cust = T(s, dir, "customer")
-    val tmp = scratchDir("a3_http", dir)
+    val tmp = graft.engine.Scratch.dir(s"graft_a3_http:$dir")
     cust.write.mode("overwrite").parquet(tmp)
     val parts = new java.io.File(tmp).listFiles()
       .filter(f => f.isFile && f.getName.endsWith(".parquet"))
@@ -990,7 +990,7 @@ items:
     */
   def jsonlRoundtrip(s: SparkSession, dir: String): DataFrame = {
     val docs = T(s, dir, "documents")
-    val tmp = scratchDir("jsonl", dir)
+    val tmp = graft.engine.Scratch.dir(s"graft_jsonl:$dir")
     RawSources.writeJsonl(docs, tmp)
     RawSources.readJsonl(s, tmp, docs.schema)
       .select(docs.columns.map(col).toSeq: _*)
@@ -1006,7 +1006,7 @@ items:
     */
   def orcRoundtrip(s: SparkSession, dir: String): DataFrame = {
     val docs = T(s, dir, "documents")
-    val tmp = scratchDir("orc", dir)
+    val tmp = graft.engine.Scratch.dir(s"graft_orc:$dir")
     RawSources.writeOrc(docs, tmp)
     RawSources.readOrc(s, tmp, docs.schema)
       .select(docs.columns.map(col).toSeq: _*)
@@ -1025,7 +1025,7 @@ items:
   def zorderRoundtrip(s: SparkSession, dir: String): DataFrame = {
     val orders = T(s, dir, "orders").select("o_orderkey", "o_custkey")
     val dims = Seq(col("o_custkey") % 1024, col("o_orderkey") % 1024)
-    val tmp = scratchDir("zorder", dir)
+    val tmp = graft.engine.Scratch.dir(s"graft_zorder:$dir")
     Layout.writeZOrdered(orders, tmp, dims, bits = 10, numFiles = 8)
     s.read.parquet(tmp)
       .select(col("o_orderkey"), col("o_custkey"),
@@ -1047,7 +1047,7 @@ items:
     */
   def compactRoundtrip(s: SparkSession, dir: String): DataFrame = {
     val docs = T(s, dir, "documents")
-    val base = scratchDir("compact", dir)
+    val base = graft.engine.Scratch.dir(s"graft_compact:$dir")
     docs.repartition(64).write.mode("overwrite").parquet(s"$base/shattered")
     Layout.compact(s, s"$base/shattered", s"$base/compacted", targetFileBytes = 4L * 1024 * 1024)
     s.read.parquet(s"$base/compacted")
@@ -1231,15 +1231,18 @@ items:
     FROM (""" + e12Sql + ")"
 
   /** Weighted median (p50 value) per year — group-level companion of the
-    * per-row quantile.
+    * per-row quantile. The percentile value does not depend on tie
+    * order, so unlike e12_quantile it needs no ID tie-break. The
+    * operator returns doubles; the cents are exact in a double and go
+    * back to BIGINT, the oracle's type.
     */
   def e12bWeightedMedian(s: SparkSession, dir: String): DataFrame = {
     val df = T(s, dir, "orders").select(
       year(col("o_orderdate")).as("Year"),
-      col("o_orderkey").as("ID"),
       cents(col("o_totalprice")).as("Values"),
       (lit(1L) + col("o_orderkey") % 7L).as("Weight"))
-    Stats.weightedPercentileValue(df, "Values", "Weight", Seq("Year"), 0.5, "median_cents")
+    Stats.quantileTable(df, "Values", "Weight", Seq("Year"), Seq(0.5), Seq("median_cents"))
+      .withColumn("median_cents", col("median_cents").cast(LongType))
   }
 
   private val e12bSql = """
@@ -1282,18 +1285,15 @@ items:
     * the semantics of both paths are gated by e12_quantile /
     * e12b_weighted_median / e12c_median_sketch).
     */
-  def e12WindowHiCard(s: SparkSession, dir: String): DataFrame = {
-    val df = T(s, dir, "lineitem").select(col("l_orderkey").as("G"),
-      col("l_linenumber").as("ID"), // addQuantile's deterministic tie-break
-      col("l_quantity").as("V"), cents(col("l_extendedprice")).as("W"))
-    Stats.weightedPercentileValue(df, "V", "W", Seq("G"), 0.5)
-  }
+  def e12WindowHiCard(s: SparkSession, dir: String): DataFrame =
+    Stats.quantileTable(hiCardLineitem(s, dir), "V", "W", Seq("G"))
 
-  def e12SketchHiCard(s: SparkSession, dir: String): DataFrame = {
-    val df = T(s, dir, "lineitem").select(col("l_orderkey").as("G"),
+  def e12SketchHiCard(s: SparkSession, dir: String): DataFrame =
+    Stats.quantileTable(hiCardLineitem(s, dir), "V", "W", Seq("G"), useSketch = true)
+
+  private def hiCardLineitem(s: SparkSession, dir: String): DataFrame =
+    T(s, dir, "lineitem").select(col("l_orderkey").as("G"),
       col("l_quantity").as("V"), cents(col("l_extendedprice")).as("W"))
-    WeightedQuantileSketch.weightedPercentileSketch(df, "V", "W", Seq("G"), 0.5)
-  }
 
   private val e12cSql = """
     WITH s AS (
@@ -3906,7 +3906,7 @@ items:
     import org.apache.spark.sql.streaming.Trigger
     val streamDir = stageEventsWithSentinel(s, dir)
     val schema = s.read.parquet(s"$dir/events.parquet").schema
-    val base = scratchDir("streamsink", dir)
+    val base = graft.engine.Scratch.dir(s"graft_streamsink:$dir")
     deleteRecursively(new java.io.File(base)) // fresh checkpoint per invocation
     val out = s"$base/out"; val ckpt = s"$base/ckpt"
     def runOnce(): Unit = withStreamShufflePartitions(s, 8) {
@@ -3932,7 +3932,7 @@ items:
     }
     // finally-guarded: a stream failure or tripped require must still
     // release the staged input dir (out/ckpt are covered by the
-    // scratchDir shutdown hook — they have to outlive this method for
+    // Scratch shutdown hook — they have to outlive this method for
     // the returned readback plan)
     try {
       runOnce()
@@ -3972,7 +3972,7 @@ items:
     val streamDir = stageEventsWithSentinel(s, dir, timeSplits = 10)
     val nFiles = streamDir.toFile.listFiles().count(_.getName.endsWith(".parquet"))
     val schema = s.read.parquet(s"$dir/events.parquet").schema
-    val base = scratchDir("streamrec", dir)
+    val base = graft.engine.Scratch.dir(s"graft_streamrec:$dir")
     def start(out: String, ckpt: String) = {
       val src = s.readStream.schema(schema)
         .option("maxFilesPerTrigger", "1").parquet(streamDir.toString)
@@ -4090,7 +4090,7 @@ items:
     // bounded stream gates (hourly grid, per-nation) keep memory sinks;
     // corpus-bounded ones land in checkpointed parquet and read back
     // through the _spark_metadata manifest.
-    val base = scratchDir("dedupstream", dir)
+    val base = graft.engine.Scratch.dir(s"graft_dedupstream:$dir")
     deleteRecursively(new java.io.File(base))
     withStreamShufflePartitions(s, 8) {
       val q = dd.writeStream.format("parquet")
@@ -4124,35 +4124,14 @@ items:
       }
     } else Seq(java.nio.file.Files.copy(src, dstDir.resolve(s"$prefix.parquet")))
 
-  /** Remove a staged temp directory once its streaming run has drained.
-    * Package-visible so RealPipeline's A9 cache shares ONE scratch
-    * lifecycle (registry + shutdown hook) instead of a parallel copy.
+  /** Remove a staged temp directory once its streaming run has drained,
+    * or a scratch dir a gate wants fresh on entry. The scratch dirs
+    * themselves live and die with [[graft.engine.Scratch]].
     */
-  private[graft] def deleteRecursively(f: java.io.File): Unit = {
+  private def deleteRecursively(f: java.io.File): Unit = {
     val kids = f.listFiles()
     if (kids != null) kids.foreach(deleteRecursively)
     f.delete(): Unit
-  }
-
-  /** Per-JVM-unique scratch directory for gates that write and read back
-    * from disk. Keying on the fixture dir ALONE made two concurrent runs
-    * over the same fixture (bench alongside correctness) race on
-    * overwrite/delete of the same path; the process id disambiguates
-    * them while staying stable WITHIN a run, so repeated invocations in
-    * one JVM (bench reps) reuse — and therefore self-clean via the
-    * fresh-delete each gate does on entry — the same directory. A
-    * shutdown hook removes everything this JVM registered, so nothing
-    * accumulates across processes either.
-    */
-  private val scratchRegistry =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-  Runtime.getRuntime.addShutdownHook(new Thread(() =>
-    scratchRegistry.forEach(p => deleteRecursively(new java.io.File(p)))))
-  private[graft] def scratchDir(tag: String, dir: String): String = {
-    val slug = dir.replaceAll("[^0-9a-zA-Z]", "_")
-    val p = s"/tmp/graft_${tag}_${slug}_p${ProcessHandle.current().pid()}"
-    scratchRegistry.add(p)
-    p
   }
 
   private val eventsDedupStreamSql = """
@@ -4689,7 +4668,7 @@ items:
     // FILE sink: session rows are population-bounded (users × sessions),
     // which grows with the corpus — a memory sink funnels them through
     // the driver (see eventsDedupStream's maxResultSize note)
-    val base = scratchDir("sessionstream", dir)
+    val base = graft.engine.Scratch.dir(s"graft_sessionstream:$dir")
     deleteRecursively(new java.io.File(base))
     withStreamShufflePartitions(s, 8) {
       val q = src
@@ -4750,7 +4729,7 @@ items:
       .as[graft.streaming.EventStreams.Event]
     // FILE sink: session rows are population-bounded — same
     // maxResultSize rationale as eventsDedupStream
-    val base = scratchDir("fmgwsstream", dir)
+    val base = graft.engine.Scratch.dir(s"graft_fmgwsstream:$dir")
     deleteRecursively(new java.io.File(base))
     withStreamShufflePartitions(s, 8) {
       val q = graft.streaming.EventStreams.sessionize(typed, gapSeconds = 1800)
@@ -4853,7 +4832,7 @@ items:
     // the per-batch floor is a commit per store × 4 store types × 2 sides.
     // FILE sink: the joined view→purchase pairs are corpus-bounded —
     // same maxResultSize rationale as eventsDedupStream
-    val base = scratchDir("ssjoinstream", dir)
+    val base = graft.engine.Scratch.dir(s"graft_ssjoinstream:$dir")
     deleteRecursively(new java.io.File(base))
     withStreamShufflePartitions(s, 8) {
       val q = joined
@@ -4996,7 +4975,7 @@ items:
     val docs = T(s, dir, "documents")
     // bounded driver scalar (one row): the synthetic base/increment split
     val bound = (docs.agg(max("doc_id")).head.getLong(0) + 1L) / 2L
-    val tmp = scratchDir("winnow_idx", dir)
+    val tmp = graft.engine.Scratch.dir(s"graft_winnow_idx:$dir")
     TextOps.winnowIndex(docs.where(col("doc_id") < bound))
       .write.mode("overwrite").parquet(tmp)
     TextOps.incrementalNearDups(docs.where(col("doc_id") >= bound), s.read.parquet(tmp))

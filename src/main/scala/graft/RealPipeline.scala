@@ -627,11 +627,12 @@ object RealPipeline {
     * concurrent processes never race (pid), and fingerprint collisions
     * across different synthetic inputs (the expenditure and income
     * generators differ on home's codes at 1400) can never serve each
-    * other's data (family). Delegates to [[Queries.scratchDir]] so ONE
-    * registry + shutdown hook owns every scratch path in the JVM.
+    * other's data (family). Delegates to [[graft.engine.Scratch]], the
+    * one registry + shutdown hook that owns every scratch path in the
+    * JVM.
     */
   private def cacheDirFor(dir: String, family: String): String =
-    Queries.scratchDir(s"realdag_$family", dir)
+    graft.engine.Scratch.dir(s"graft_realdag_$family:$dir")
 
   private def incomeRepo(s: SparkSession, dir: String): TableRepo = {
     require(RealMeta.available, "reference metadata corpus not found")

@@ -90,8 +90,10 @@ class Api(
 
   /** E3 with the reference's classification-type auto-detect
     * (api.py:313-325): when no explicit code column is given, the
-    * presence of the default commodity column ("Code") vs the default
-    * job column ("Job_Code") decides; when one IS given, a one-column
+    * presence of the default commodity column vs the default job
+    * column decides (`columns.commodity_code` / `columns.job_code` of
+    * the settings overlay: "Code" and "Job_Code" unless renamed,
+    * default_settings.yaml:73-78); when one IS given, a one-column
     * magnitude probe decides — commodity codes are <= 10 000 for at
     * least 90% of rows, occupation codes are larger. The reference
     * scans the full column (api.py:313-325); so do we while the
@@ -114,8 +116,8 @@ class Api(
         // pandas (api.py:313-325), so the null average means commodity
         val frac = if (share.isNullAt(0)) 1.0 else share.getDouble(0)
         (if (frac < 0.9) "occupation" else "commodity") -> c
-      case None if df.columns.contains("Code")     => "commodity" -> "Code"
-      case None if df.columns.contains("Job_Code") => "occupation" -> "Job_Code"
+      case None if df.columns.contains(settings.commodityCodeCol) => "commodity" -> settings.commodityCodeCol
+      case None if df.columns.contains(settings.jobCodeCol)       => "occupation" -> settings.jobCodeCol
       case None => throw new IllegalArgumentException("Missing Code Column")
     }
     repo.addClassification(df,

@@ -113,6 +113,4 @@ object Argham {
   }
 
   def ofInts(is: Long*): Argham = apply(MList(is.toVector.map(MInt(_))))
-  def ofRange(start: Long, end: Long): Argham =
-    apply(Meta.map(Meta.k("start") -> MInt(start), Meta.k("end") -> MInt(end)))
 }

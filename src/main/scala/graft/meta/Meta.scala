@@ -34,12 +34,6 @@ sealed trait Meta {
     case MStr(s) => s.trim.toLong
     case other   => throw new IllegalArgumentException(s"not an int: $other")
   }
-  def asDouble: Double = this match {
-    case MInt(i) => i.toDouble
-    case MDbl(d) => d
-    case MStr(s) => s.trim.toDouble
-    case other   => throw new IllegalArgumentException(s"not a double: $other")
-  }
   def asBool: Boolean = this match {
     case MBool(b) => b
     case other    => throw new IllegalArgumentException(s"not a bool: $other")

@@ -145,27 +145,11 @@ object Stats {
       groupby: Seq[String] = Seq("Year"), out: String = "Percentile",
   ): DataFrame = binned(df, valueCol, weightCol, groupby, out, 100)
 
-  /** Weighted percentile VALUE per group: the smallest value whose
-    * cumulative weight share reaches `p` (the group-level companion to
-    * the per-row [[addQuantile]]; p=0.5 is the weighted median). One
-    * window pass + one hash aggregate.
-    */
-  def weightedPercentileValue(
-      df: DataFrame,
-      valueCol: String,
-      weightCol: String = "Weight",
-      groupby: Seq[String] = Seq("Year"),
-      p: Double = 0.5,
-      out: String = "percentile_value",
-  ): DataFrame =
-    addQuantile(df, valueCol, weightCol, groupby, "_q")
-      .where(col("_q") >= p)
-      .groupBy(groupby.map(col): _*)
-      .agg(min(col(valueCol)).as(out))
-
   /** Per-group weighted percentile VALUES, any number of `ps` in one
-    * pass — the public entry point that owns the window-vs-sketch
-    * choice (SURVEY §4):
+    * pass — the one operator that returns them (p = 0.5 is the weighted
+    * median), and the one that owns the window-vs-sketch choice
+    * (SURVEY §4). Each percentile is the LOWER weighted percentile: the
+    * smallest value whose cumulative weight share reaches p.
     *
     *   - `useSketch = false` (default): EXACT. One window pass sorts
     *     every row within its group to build cumulative weight shares,
@@ -204,7 +188,9 @@ object Stats {
         require(outs.length == ps.length, s"outs (${outs.length}) must match ps (${ps.length})")
         outs
       } else ps.map(p => "p" + BigDecimal(p * 100).underlying.stripTrailingZeros.toPlainString.replace(".", "_"))
-    lazy val clean = df.where(col(valueCol).isNotNull && col(weightCol).isNotNull && col(weightCol) > 0)
+    // the one rule for which rows count, on both routes
+    val valid = col(valueCol).isNotNull && col(weightCol).isNotNull && col(weightCol) > 0
+    lazy val clean = df.where(valid)
     if (useSketch) {
       val native = df.sparkSession.sessionState.catalog.isRegisteredFunction(
         org.apache.spark.sql.catalyst.FunctionIdentifier("wq_percentiles"))
@@ -219,25 +205,23 @@ object Stats {
       // percentiles) while the filtered routes drop it — so the native
       // route also counts valid rows IN THE SAME aggregate (no extra
       // pass) and filters the all-invalid groups out.
-      val valid = col(valueCol).isNotNull && col(weightCol).isNotNull && col(weightCol) > 0
-      val (agg, in) =
-        if (native) (WeightedQuantileSketch.weightedPercentilesNativeAgg(ps, maxCentroids), df)
-        else (WeightedQuantileSketch.weightedPercentilesAgg(ps, maxCentroids), clean)
-      val base = in.groupBy(groupby.map(col): _*)
+      val g = groupby.map(col)
+      val (v, w) = (col(valueCol).cast("double"), col(weightCol).cast("double"))
       val qs =
         if (native)
-          base.agg(
-            agg(col(valueCol).cast("double"), col(weightCol).cast("double")).as("_qs"),
+          df.groupBy(g: _*).agg(
+            WeightedQuantileSketch.weightedPercentilesNativeAgg(ps, maxCentroids)(v, w).as("_qs"),
             count(when(valid, 1)).as("_nvalid"),
           ).where(col("_nvalid") > 0)
         else
-          base.agg(agg(col(valueCol).cast("double"), col(weightCol).cast("double")).as("_qs"))
-      qs.select(groupby.map(col) ++ names.zipWithIndex.map { case (n, i) =>
+          clean.groupBy(g: _*)
+            .agg(WeightedQuantileSketch.weightedPercentilesAgg(ps, maxCentroids)(v, w).as("_qs"))
+      qs.select(g ++ names.zipWithIndex.map { case (n, i) =>
         element_at(col("_qs"), i + 1).as(n)
       }: _*)
     } else {
       // one window pass shared by every p; min(value | share >= p) per p
-      // is the same lower-percentile rule as weightedPercentileValue.
+      // is the lower-percentile rule the sketch's bufPercentile applies.
       val aggs = ps.zip(names).map { case (p, n) =>
         min(when(col("_q") >= p, col(valueCol).cast("double"))).as(n)
       }

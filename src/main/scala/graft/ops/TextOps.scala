@@ -149,16 +149,6 @@ object TextOps {
       .agg(min(col(idCol)).as(idCol), count(lit(1)).as("dup_count"))
       .withColumnRenamed("_fp", "fingerprint")
 
-  /** Exact dedup keeping full rows: min_by on the id within each
-    * fingerprint group. Still one shuffle.
-    */
-  def exactDedupRows(df: DataFrame, textCol: String = "text", idCol: String = "doc_id"): DataFrame = {
-    val cols = df.columns
-    df.groupBy(fingerprint(col(textCol)).as("_fp"))
-      .agg(min_by(struct(cols.map(col): _*), col(idCol)).as("_row"))
-      .select(cols.map(c => col(s"_row.$c").as(c)): _*)
-  }
-
   /** The fingerprint/shingle text normalization as a token array:
     * lower-case, non-alphanumerics to spaces, whitespace-split. The
     * shared vocabulary view for corpus statistics ([[tfidfTopTerms]],

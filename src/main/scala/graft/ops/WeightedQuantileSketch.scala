@@ -1,16 +1,17 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame, Encoder, Encoders}
+import org.apache.spark.sql.{Column, Encoder, Encoders}
 import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
 import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.functions._
 
 /** One-pass weighted-quantile sketch (SURVEY §4 optional #2): a
   * MERGEABLE bounded-centroid histogram aggregated map-side, for the
-  * regime where the window formulation ([[Stats.addQuantile]] /
-  * [[Stats.weightedPercentileValue]]) is the wrong tool — extreme group
-  * cardinality, where shuffling and sorting every row by group is the
-  * bottleneck and only percentile VALUES per group are wanted.
+  * regime where the window formulation ([[Stats.addQuantile]], the
+  * default route of [[Stats.quantileTable]]) is the wrong tool —
+  * extreme group cardinality, where shuffling and sorting every row by
+  * group is the bottleneck and only percentile VALUES per group are
+  * wanted.
   *
   * The buffer keeps up to `maxCentroids` (value, weight) centroids
   * sorted by value; equal values coalesce exactly, and past capacity
@@ -26,14 +27,16 @@ import org.apache.spark.sql.functions._
   *     never the rows, so cost at 100 TB is bounded by group count;
   *   - the reported percentile is the LOWER weighted percentile: the
   *     smallest centroid whose cumulative weight reaches p × total
-  *     (same rule as [[Stats.weightedPercentileValue]]);
+  *     (the rule of [[Stats.quantileTable]]'s window route);
   *   - ONE buffer answers ANY number of percentiles
   *     ([[WeightedPercentiles]] — p25/p50/p75 from a single pass), the
   *     usual production shape.
   *
   * The reference's quantile machinery (calculator/quantile.py:119-146)
   * is window-shaped and stays the default; this is the scale escape
-  * hatch, not a replacement.
+  * hatch, not a replacement, reached through
+  * `Stats.quantileTable(useSketch = true)`, which picks the native or
+  * the udaf form for the session.
   */
 object WeightedQuantileSketch {
 
@@ -163,44 +166,4 @@ object WeightedQuantileSketch {
   def weightedPercentilesNativeAgg(ps: Seq[Double], maxCentroids: Int = 128): (Column, Column) => Column =
     (v, w) => call_function("wq_percentiles", v, w,
       lit(ps.toArray), lit(maxCentroids))
-
-  /** The sketch aggregate for THIS session: the native
-    * TypedImperativeAggregate when [[graft.plans.GraftExtensions]] is
-    * installed (the library default — no per-row encoder round-trip),
-    * else the bit-identical Aggregator/udaf twin, so a plain
-    * SparkSession without `spark.sql.extensions` configured still works
-    * instead of failing analysis with an opaque unresolved-function
-    * error on `wq_percentiles`.
-    */
-  def percentilesAggFor(
-      spark: org.apache.spark.sql.SparkSession,
-      ps: Seq[Double],
-      maxCentroids: Int = 128,
-  ): (Column, Column) => Column = {
-    val native = spark.sessionState.catalog.isRegisteredFunction(
-      org.apache.spark.sql.catalyst.FunctionIdentifier("wq_percentiles"))
-    if (native) weightedPercentilesNativeAgg(ps, maxCentroids)
-    else weightedPercentilesAgg(ps, maxCentroids)
-  }
-
-  /** Per-group lower weighted percentile VALUE via the sketch — the
-    * one-pass sibling of [[Stats.weightedPercentileValue]]. Null values
-    * and null/non-positive weights are dropped, as in the window path
-    * (the native aggregate's update drops them row-side; the explicit
-    * where keeps the scan-level filter pushdown too).
-    */
-  def weightedPercentileSketch(
-      df: DataFrame,
-      valueCol: String,
-      weightCol: String = "Weight",
-      groupby: Seq[String] = Seq("Year"),
-      p: Double = 0.5,
-      out: String = "percentile_value",
-      maxCentroids: Int = 128,
-  ): DataFrame = {
-    val agg = percentilesAggFor(df.sparkSession, Seq(p), maxCentroids)
-    df.where(col(valueCol).isNotNull && col(weightCol).isNotNull && col(weightCol) > 0)
-      .groupBy(groupby.map(col): _*)
-      .agg(element_at(agg(col(valueCol).cast("double"), col(weightCol).cast("double")), 1).as(out))
-  }
 }

@@ -28,8 +28,8 @@ import graft.ops.WeightedQuantileSketch.WQBuf
   * IS the cost. Here `update` reads the two doubles straight off the
   * `InternalRow` — no tuple, no encoder, one branch for the null/
   * non-positive-weight drop (the same filter
-  * [[graft.ops.WeightedQuantileSketch.weightedPercentileSketch]]
-  * applies before the Aggregator form).
+  * [[graft.ops.Stats.quantileTable]] applies before the Aggregator
+  * form).
   *
   * The buffer stays the primitive-parallel-array [[WQBuf]]; shuffle/
   * spill serialization is a flat ByteBuffer of doubles (4-byte length

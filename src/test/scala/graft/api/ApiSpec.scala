@@ -113,6 +113,10 @@ items:
     intercept[IllegalArgumentException] {
       a.addClassificationAuto(Seq((1400, 1L)).toDF("Year", "X"))
     }
+    // the default columns come from the settings overlay, not literals
+    val renamed = new Api(spark, repo, settings = Settings.fromYaml("columns: {commodity_code: Item}"))
+    val dfItem = Seq((1400, 123L), (1400, 9999L)).toDF("Year", "Item")
+    assert(renamed.addClassificationAuto(dfItem).columns.contains("Commodity"))
   }
 
   test("settings overlay: user doc over package doc over packaged defaults") {

@@ -78,12 +78,12 @@ class StatsPropSpec extends SparkSpec {
       (1400, 1L, 10.0, 1L), (1400, 2L, 20.0, 1L), (1400, 3L, 30.0, 8L),
     ).toDF("Year", "ID", "x", "Weight")
     // cum shares: 10 -> .1, 20 -> .2, 30 -> 1.0; first value reaching .5 is 30
-    val m = Stats.weightedPercentileValue(df, "x", "Weight", Seq("Year"), 0.5)
+    val m = Stats.quantileTable(df, "x", "Weight", Seq("Year"), Seq(0.5))
       .collect()(0).getDouble(1)
     assert(m == 30.0)
     // unweighted median of the same values would be 20
-    val unw = Stats.weightedPercentileValue(
-      df.withColumn("Weight", lit(1L)), "x", "Weight", Seq("Year"), 0.5)
+    val unw = Stats.quantileTable(
+      df.withColumn("Weight", lit(1L)), "x", "Weight", Seq("Year"), Seq(0.5))
       .collect()(0).getDouble(1)
     assert(unw == 20.0)
   }

@@ -6,11 +6,11 @@ import org.apache.spark.sql.functions._
 class WeightedQuantileSketchSpec extends SparkSpec {
 
   private def windowMedian(df: org.apache.spark.sql.DataFrame): Map[Int, Double] =
-    Stats.weightedPercentileValue(df, "v", "w", Seq("g"), 0.5, "m")
+    Stats.quantileTable(df, "v", "w", Seq("g"))
       .collect().map(r => r.getInt(0) -> r.getDouble(1)).toMap
 
   private def sketchMedian(df: org.apache.spark.sql.DataFrame, k: Int = 128): Map[Int, Double] =
-    WeightedQuantileSketch.weightedPercentileSketch(df, "v", "w", Seq("g"), 0.5, "m", k)
+    Stats.quantileTable(df, "v", "w", Seq("g"), useSketch = true, maxCentroids = k)
       .collect().map(r => r.getInt(0) -> r.getDouble(1)).toMap
 
   test("exact when distinct values fit the centroid capacity — equals the window path") {
@@ -20,8 +20,7 @@ class WeightedQuantileSketchSpec extends SparkSpec {
     val rows = rnd.shuffle(for {
       g <- Seq(1, 2); v <- 1 to 40
     } yield (g, v.toDouble, (rnd.nextInt(9) + 1).toDouble))
-      .zipWithIndex.map { case ((g, v, w), i) => (g, v, w, i.toLong) }
-    val df = rows.toDF("g", "v", "w", "ID")
+    val df = rows.toDF("g", "v", "w")
     assert(sketchMedian(df) == windowMedian(df))
   }
 
@@ -44,6 +43,7 @@ class WeightedQuantileSketchSpec extends SparkSpec {
       (1, None, Some(99.0)), (1, Some(100.0), None), (1, Some(100.0), Some(0.0)),
     ).toDF("g", "v", "w")
     assert(sketchMedian(df) == Map(1 -> 2.0))
+    assert(windowMedian(df) == Map(1 -> 2.0))
   }
 
   test("compression keeps the estimate close when distinct values exceed capacity") {
@@ -51,8 +51,8 @@ class WeightedQuantileSketchSpec extends SparkSpec {
     // 10_000 distinct uniform values, capacity 64: estimate must land
     // near the true weighted median (uniform -> ~0.5 quantile value)
     val rnd = new scala.util.Random(7)
-    val rows = (1 to 10000).map(i => (1, rnd.nextDouble() * 1000.0, 1.0, i.toLong))
-    val df = rows.toDF("g", "v", "w", "ID")
+    val rows = (1 to 10000).map(_ => (1, rnd.nextDouble() * 1000.0, 1.0))
+    val df = rows.toDF("g", "v", "w")
     val exact = windowMedian(df)(1)
     val est = sketchMedian(df, k = 64)(1)
     assert(math.abs(est - exact) < 50.0, // 5% of the range for k=64
@@ -68,7 +68,7 @@ class WeightedQuantileSketchSpec extends SparkSpec {
     val got = df.groupBy("g").agg(multi(col("v"), col("w")).as("q")).collect()
       .map(r => r.getInt(0) -> r.getSeq[Double](1)).toMap
     for (p <- Seq(0.25, 0.5, 0.75)) {
-      val single = WeightedQuantileSketch.weightedPercentileSketch(df, "v", "w", Seq("g"), p, "m")
+      val single = Stats.quantileTable(df, "v", "w", Seq("g"), Seq(p), useSketch = true)
         .collect().map(r => r.getInt(0) -> r.getDouble(1)).toMap
       val idx = Seq(0.25, 0.5, 0.75).indexOf(p)
       single.foreach { case (g, m) => assert(got(g)(idx) == m, s"g=$g p=$p") }
@@ -148,7 +148,7 @@ class WeightedQuantileSketchSpec extends SparkSpec {
     val df = Seq((1, 42.0, 3.0)).toDF("g", "v", "w")
     assert(sketchMedian(df) == Map(1 -> 42.0))
     val empty = df.where(col("v") < 0)
-    assert(WeightedQuantileSketch.weightedPercentileSketch(empty, "v", "w", Seq("g")).count() == 0)
+    assert(Stats.quantileTable(empty, "v", "w", Seq("g"), useSketch = true).count() == 0)
   }
 
   test("Stats.quantileTable: window and sketch paths agree within capacity, same schema") {
@@ -205,7 +205,7 @@ class WeightedQuantileSketchSpec extends SparkSpec {
 
   test("quantileTable sketch path works without GraftExtensions (udaf fallback)") {
     // simulate a plain SparkSession: a new session with wq_percentiles
-    // dropped from the registry — percentilesAggFor must route to the
+    // dropped from the registry — quantileTable must route to the
     // Aggregator/udaf twin instead of failing analysis
     val s2 = spark.newSession()
     s2.sessionState.functionRegistry.dropFunction(
@@ -216,7 +216,5 @@ class WeightedQuantileSketchSpec extends SparkSpec {
     val df = Seq((1, 1.0, 1.0), (1, 2.0, 1.0), (1, 3.0, 1.0)).toDF("g", "v", "w")
     val out = Stats.quantileTable(df, "v", "w", Seq("g"), Seq(0.5), useSketch = true)
     assert(out.collect().map(r => r.getInt(0) -> r.getDouble(1)).toMap == Map(1 -> 2.0))
-    val direct = WeightedQuantileSketch.weightedPercentileSketch(df, "v", "w", Seq("g"))
-    assert(direct.collect().map(r => r.getInt(0) -> r.getDouble(1)).toMap == Map(1 -> 2.0))
   }
 }
