@@ -1523,7 +1523,7 @@ items:
   private def iscBucketed(s: SparkSession, dir: String): (DataFrame, DataFrame) = {
     val h = java.lang.Long.toHexString(
       scala.util.hashing.MurmurHash3.stringHash(dir).toLong & 0xFFFFFFFFL)
-    val base = s"${System.getProperty("java.io.tmpdir")}/graft_isc_bucketed_$h"
+    val base = graft.engine.Scratch.dir(s"graft_isc_bucketed:$dir")
     val (factT, regT) = iscBucketedTables.computeIfAbsent(dir, d => {
       val (ft, rt) = (s"graft_isc_fact_$h", s"graft_isc_reg_$h")
       graft.sources.RawSources.writeBucketed(
@@ -2757,8 +2757,8 @@ items:
 
   /** The planted-copy query again, but with `maxBucketSize` = 50 —
     * BELOW sf0.01's largest (band,key) bucket (88 members) — so the
-    * hot-bucket census, the capped pairwise join, AND the star +
-    * sorted-neighbor recovery passes all execute under hash
+    * hot-bucket census, the capped pairwise pass, AND the star +
+    * sorted-neighbor recovery rules all execute under hash
     * verification, not just in DedupSpec. The oracle is identical:
     * planted copies have hamming-0 hashes, and hamming-0 recall is
     * complete under the cap (pairwise for cool buckets, the full-hash

@@ -254,9 +254,10 @@ class Api(
     * it to a Hamming bound — similarity ≈ 1 - hamming/64, so
     * maxDistance = ⌊(1-threshold)·64⌋, with 16 bands pigeonholing
     * recall to distance 15 and the hot-bucket cap keeping the narrow
-    * 4-bit keys join-safe (returns (id_a, id_b, hamming)); `"cosine"` —
-    * sign-LSH over `vecCol` (dim required) — filters exact cosine
-    * (returns (id_a, id_b, cosine)).
+    * 4-bit keys pair-safe (returns (id_a, id_b, hamming); building it
+    * runs one job, the bucket census readout, and needs integral ids);
+    * `"cosine"` — sign-LSH over `vecCol` (dim required) — filters exact
+    * cosine (returns (id_a, id_b, cosine)).
     */
   def nearDuplicatePairs(
       df: DataFrame,

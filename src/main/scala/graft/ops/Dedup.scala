@@ -1,6 +1,7 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame}
+import graft.plans.{BandedHash, HashPair, SimHashBuckets}
+import org.apache.spark.sql.{Column, DataFrame, Encoders, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -205,44 +206,6 @@ object Dedup {
   private def bucketCounts(rows: DataFrame, keys: String*): DataFrame =
     rows.groupBy(keys.map(col): _*).agg(count(lit(1)).as("_n"))
 
-  /** Hamming-scored pairs (id_a, id_b, hamming) of SimHashed rows
-    * `(idCol, _sh, keys…)` bucketed on `keys`. Without a census every
-    * bucket runs the pairwise [[bandSelfJoin]]. With one (`counts`, as
-    * `(keys…, _n)`), only buckets of at most `cap` members do; each larger
-    * bucket orders its members by full hash and compares each to its next
-    * `window` neighbors (lead() over one window sort — a single shuffle
-    * bounded by hot membership, output bounded by membership × window).
-    */
-  private def cappedBucketPairs(
-      rows: DataFrame,
-      idCol: String,
-      keys: Seq[String],
-      counts: Option[DataFrame],
-      cap: Int,
-      window: Int,
-  ): DataFrame = {
-    def sized(keep: Column) = counts.fold(rows)(c => rows.join(c.where(keep), keys, "left_semi"))
-    val joined = bandSelfJoin(sized(col("_n") <= cap), idCol, keys, Seq("_sh"))
-      .select(col("id_a"), col("id_b"), hammingDistance(col("_sh_a"), col("_sh_b")).as("hamming"))
-    if (counts.isEmpty) joined
-    else {
-      val sortWin = Window.partitionBy(keys.map(col): _*).orderBy(col("_sh"), col(idCol))
-      val leads = array((1 to window).map(i =>
-        lead(struct(col(idCol).as("nid"), col("_sh").as("nsh")), i).over(sortWin)): _*)
-      // window exprs are illegal inside a generator: project the lead
-      // array first, explode in a second select
-      val neighbors = sized(col("_n") > cap)
-        .select(col(idCol), col("_sh"), leads.as("_leads"))
-        .select(col(idCol), col("_sh"), explode(col("_leads")).as("_nb"))
-        .where(col("_nb.nid").isNotNull)
-        .select(
-          least(col(idCol), col("_nb.nid")).as("id_a"),
-          greatest(col(idCol), col("_nb.nid")).as("id_b"),
-          hammingDistance(col("_sh"), col("_nb.nsh")).as("hamming"))
-      joined.union(neighbors)
-    }
-  }
-
   /** The banding projection shared by [[simHashCandidates]] and
     * [[simHashBucketCensus]]: one row per (doc, band) carrying the
     * band's [[bitSlices]] key, as `(idCol, _sh, _q, _k)`.
@@ -251,26 +214,6 @@ object Dedup {
     require(64 % bands == 0, s"bands=$bands must divide 64")
     hashed.select(col(idCol), col("_sh"),
       posexplode(array(bitSlices(col("_sh"), bands, 64 / bands): _*)).as(Seq("_q", "_k")))
-  }
-
-  /** The corpus SimHashed and banded ONCE through `handle`, with its
-    * bucket census persisted beside it when `cap` > 0. The census (at
-    * most bands·2^width rows) is joined back as left-semi filters, so no
-    * count column rides the pairwise join. The capped candidate path
-    * reads it three times (cool, hot and cap-adjacent filters);
-    * unpersisted, each read re-aggregates the full banded frame — three
-    * extra passes over n·bands rows at corpus scale (guide §2.4).
-    */
-  private def persistedBands(
-      df: DataFrame,
-      textCol: String,
-      idCol: String,
-      bands: Int,
-      cap: Int,
-      handle: StorageHandle,
-  ): (DataFrame, Option[DataFrame]) = {
-    val banded = handle.persist(bandedSlices(simHashes(df, textCol, idCol), idCol, bands))
-    (banded, if (cap > 0) Some(handle.persist(bucketCounts(banded, "_q", "_k"))) else None)
   }
 
   /** Per-(band, key) bucket census of [[simHashCandidates]]'s banding:
@@ -292,8 +235,8 @@ object Dedup {
     * the saturation boundary round 16 measured instead of documenting
     * the hand-off: run the SimHash bucket census; if the corpus is
     * COOL (no (band, key) bucket holds more than 8·maxBucketSize
-    * members — the regime [[simHashCandidates]]' pass 3 is gated to,
-    * past which no SimHash pass guarantees recall) use banded SimHash
+    * members — the regime [[simHashCandidates]]' sub-band pass is gated
+    * to, past which no SimHash pass guarantees recall) use banded SimHash
     * candidates (one 64-bit hash per doc — the cheaper signature); if
     * SATURATED, the 8-bit band keyspace has collapsed under corpus
     * density and the recall contract belongs to MinHash banding, whose
@@ -307,7 +250,7 @@ object Dedup {
     * `handle`): the routing census and, on the cool route, candidate
     * generation both read that single pass — at 100 TB the census is
     * then a near-free aggregate over cached slim rows, the price of
-    * not discovering mid-job that the banded join's hot buckets have
+    * not discovering mid-job that the bucket pass's hot buckets have
     * quadratic mass.
     */
   def nearDupsAuto(
@@ -327,11 +270,18 @@ object Dedup {
 
   /** [[nearDupsAuto]] plus the routing census itself —
     * (route, candidate pairs, (_q, _k, _n) census). The census is the
-    * already-persisted ≤ bands·2^(64/bands)-row frame the routing
-    * decision aggregated, handed out so callers that need a saturation
-    * readout (the gate queries) don't re-hash the corpus a second time
-    * to reconstruct it (guide §2.4: the census costs a full
-    * corpus-hash pass at scale).
+    * persisted ≤ bands·2^(64/bands)-row frame the routing decision
+    * read, handed out so callers that need a saturation readout (the
+    * gate queries) don't re-hash the corpus a second time to
+    * reconstruct it (guide §2.4: the census costs a full corpus-hash
+    * pass at scale).
+    *
+    * The routing readout is ONE job: a `collect` of the census rows
+    * over `maxBucketSize`. It decides the route (any row past
+    * 8·maxBucketSize means saturated) and, on the SimHash route, is the
+    * over-cap set [[simHashCandidates]]' kernel classifies buckets and
+    * pairs by — shipped with the kernel's tasks, so candidate
+    * generation needs no census join and no dedup shuffle.
     */
   def nearDupsAutoDetail(
       df: DataFrame,
@@ -344,98 +294,121 @@ object Dedup {
       handle: StorageHandle = StorageHandle.unmanaged,
   ): (String, DataFrame, DataFrame) = {
     require(maxBucketSize > 0, "saturation is defined relative to a positive cap")
-    val (banded, census) = persistedBands(df, textCol, idCol, bands, maxBucketSize, handle)
-    val counts = census.get
-    // count(), not isEmpty: isEmpty's limit-1 job can leave the census
-    // cache PARTIALLY filled, and on the saturated route banded is
-    // dropped next — un-filled census partitions would then recompute
-    // through a fresh corpus-hash pass. The full count (over the cached
-    // banded rows, ≤ bands·2^width groups) materializes every census
-    // partition in one tiny job.
-    val saturated = counts.where(col("_n") > 8L * maxBucketSize).count() > 0
-    if (saturated) {
+    val banded = handle.persist(bandedSlices(simHashes(df, textCol, idCol), idCol, bands))
+    val census = handle.persist(bucketCounts(banded, "_q", "_k"))
+    // a full collect, not a limit-1 probe: it materializes every census
+    // partition, so the census cache stays complete after banded is
+    // dropped on the saturated route (un-filled partitions would
+    // recompute through a fresh corpus-hash pass)
+    val overCap = census.where(col("_n") > maxBucketSize).collect()
+    if (overCap.exists(_.getLong(2) > 8L * maxBucketSize)) {
       // MinHash keys on shingle content, not SimHash slices — the
       // banded cache is useless on that route; drop it before the
       // heavy pass rather than letting it squat on executor memory.
-      // `counts` stays: the count() readout above already materialized
-      // its (tiny) cache independent of banded, and detail callers
-      // aggregate it for the saturation evidence.
       banded.unpersist()
       ("minhash",
         minHashCandidates(df, textCol, idCol, bands = minhashBands, handle = handle),
-        counts)
+        census)
     } else
-      ("simhash", simHashCandidatesFromBanded(banded, census, idCol, maxDistance, bands,
-        maxBucketSize, neighborWindow = 8, handle).select("id_a", "id_b"),
-        counts)
+      ("simhash", simHashKernelPairs(banded, hotBuckets(overCap), idCol, maxDistance, bands,
+        maxBucketSize, neighborWindow = 8).select("id_a", "id_b"),
+        census)
   }
+
+  /** Over-cap `(_q, _k, _n)` census rows as the kernel's
+    * `(band, key, members)` set. A null-hash bucket (null text) stays
+    * out: its documents never pair.
+    */
+  private def hotBuckets(rows: Array[Row]): Seq[(Int, Long, Long)] =
+    rows.toSeq.filterNot(_.isNullAt(1)).map(r => (r.getInt(0), r.getLong(1), r.getLong(2)))
 
   /** SimHash near-dup candidates: bucket by the `bands` equal bit-slices
     * of the 64-bit hash (any pair within Hamming distance `bands - 1`
     * shares at least one exact slice — pigeonhole), then verify distance
-    * ≤ maxDistance. Equi-join on bucket keys, never all-pairs.
+    * ≤ maxDistance inside each bucket. Never all-pairs. Returns
+    * `(id_a, id_b, hamming)` with id_a < id_b, each pair once. Ids must
+    * be integral; null ids and null hashes never pair.
     *
     * Pick `bands` from the distance bound you need: 4×16-bit slices
     * guarantee recall to distance 3; 8×8-bit to distance 7. More bands
     * = stronger guarantee but smaller key space (2^(64/bands)) and so
     * quadratically more bucket collisions.
     *
+    * The work is one sorted pass per bucket ([[graft.plans.SimHashBuckets]]):
+    * the banded rows are hash-partitioned on (band, key) and sorted by
+    * (band, key, hash, id), and the kernel walks each bucket in hash
+    * order. A pair that shares several bands meets in several buckets;
+    * it is EMITTED only from the LOWEST cool band it shares, which the
+    * kernel decides from the two full hashes and the over-cap bucket
+    * set alone. So no bucket needs another's output and no dedup
+    * shuffle runs.
+    *
     * `maxBucketSize` (> 0 to enable) is the hot-bucket cap that makes
-    * the self-join safe at corpus scale: templated corpora concentrate
+    * the pass safe at corpus scale: templated corpora concentrate
     * SimHash bytes (the sf0.1 testdata puts 22% of all documents into
     * ONE (band,key) bucket at bands=8), so Σ bucket² grows quadratically
-    * with corpus size unless bounded. Buckets larger than the cap are
-    * excluded from the pairwise join — capping the join at
-    * Σ bucket² ≤ n·cap, linear in n — and recovered by two linear
-    * passes over the oversized buckets' members:
+    * with corpus size unless bounded. A census `collect` (one job over
+    * the ≤ bands·2^width census rows) names the buckets over the cap.
+    * Buckets within it compare every two members — Σ bucket² ≤ n·cap,
+    * linear in n. Each larger bucket is recovered by linear rules over
+    * its members, sorted by full hash:
     *
-    *   1. a FULL-HASH STAR: members grouped by the full 64-bit hash,
-    *      everyone linked to the group's min id — hamming-0 recall
-    *      inside hot buckets is COMPLETE (as rep->member links, which
-    *      close transitively), linear in group size;
-    *   2. a SORTED-NEIGHBOR pass: within each oversized bucket, members
-    *      sorted by full hash and each compared to its next
+    *   1. a FULL-HASH STAR: each run of equal hashes linked to its min
+    *      id — hamming-0 recall inside hot buckets is COMPLETE (as
+    *      rep->member links, which close transitively);
+    *   2. a SORTED-NEIGHBOR window: each member compared to its next
     *      `neighborWindow` neighbors (the sorted-window technique of
     *      Manku et al.'s SimHash dedup) — recovers hamming
-    *      1..maxDistance pairs whose remaining bits sort nearby, at
-    *      cost hot-membership × window, linear in n;
-    *   3. a SUB-BAND pass: each oversized bucket's members re-bucket by
+    *      1..maxDistance pairs whose remaining bits sort nearby;
+    *   3. a SUB-BAND pass, in CAP-ADJACENT buckets (≤ 8·maxBucketSize
+    *      members) when maxDistance > 0: the members regroup by each of
     *      8 slices of the REMAINING 64−width bits (7-bit slices at
-    *      bands = 8), and sub-buckets back under the cap run the
-    *      ordinary pairwise join. This keeps the pigeonhole guarantee
+    *      bands = 8), exactly inside their parent bucket; sub-buckets
+    *      within the cap compare every two members, larger ones run the
+    *      sorted-neighbor window. This keeps the pigeonhole guarantee
     *      alive INSIDE hot buckets: a pair at hamming ≤ 7 total has ≤ 7
     *      differing bits in the 56 non-band bits, which cannot corrupt
     *      all 8 sub-slices — so it shares a clean sub-slice and meets
     *      in that sub-bucket (unless the sub-bucket is itself still
-    *      hot, where the sorted-neighbor window applies within the
-    *      refined group). Cost is bounded exactly like the main join:
-    *      Σ sub-bucket² ≤ (8·hot-membership)·cap. Added after the 100×
-    *      sweep measured the residual for real: at 500k docs the
-    *      corpus's agreeing-band buckets crossed the cap (1603–2541
+    *      hot, where the window applies within the refined group).
+    *      Added after the 100× sweep measured the residual: at 500k
+    *      docs the agreeing-band buckets crossed the cap (1603–2541
     *      members vs cap 1000) and 61/255 true pairs fell into the
     *      sacrificed tail; all 61 carried an agreeing sub-slice, and
-    *      this pass restores them (SCALE.md round 15). The pass is
-    *      gated to the CAP-ADJACENT regime (parent ≤ 8·cap) — round 16
-    *      measured why on both sides; see the pass-3 comment.
+    *      this pass restores them (SCALE.md round 15).
     *
-    * The residual sacrificed tail, in the CAP-ADJACENT regime the
-    * sub-band pass covers (hot buckets of size ≤ 8·maxBucketSize), is
-    * pairs at distance 1..maxDistance that meet ONLY inside oversized
-    * buckets, disagree on EVERY sub-slice there (possible only at
-    * hamming ≥ 8 — outside the banding guarantee to begin with), and
-    * sort more than `neighborWindow` apart in every hot (sub-)bucket.
-    * (One birthday-negligible caveat: an xxhash64 sub-key collision
-    * (~2^-13/run) that pushes a merged sub-bucket past maxBucketSize
-    * can demote a cool sub-bucket and sacrifice hamming ≤ 7 pairs —
-    * the characterization above holds up to that probability.)
-    * Buckets hotter than 8·maxBucketSize fall back to the
-    * star+sorted-neighbor passes alone, where pairs at any hamming
-    * 1..maxDistance can still be sacrificed if their hashes sort more
-    * than `neighborWindow` apart — MEASURED at sf100 as 65.2% recall
-    * with perfect precision at full saturation (SCALE.md round 16);
-    * at that density the recall contract belongs to MinHash banding.
-    * With the cap the output is a documented subset; with
-    * maxBucketSize = 0 semantics are exact.
+    * Recovered pairs that share a cool band are dropped (the cool
+    * pass emits them); the rest — pairs meeting only in hot buckets —
+    * can be recovered in several buckets and take the operator's only
+    * `distinct()`, over that small set.
+    *
+    * The sub-band gate is load-shedding at SimHash's semantic boundary,
+    * measured on both sides at sf100 (5M docs, ALL 2048 (band,key)
+    * buckets saturated, max 29,095 members; SCALE.md round 16): with
+    * the gate, recall vs the exact All-Pairs truth is 65.2% (167/256
+    * window pairs, zero false positives); without it, the refined
+    * sub-buckets are individually cool but on a templated corpus their
+    * ~5·10¹⁰ sub-pair evaluations pass the hamming filter in bulk
+    * (shared-template tokens pin hashes together regardless of true
+    * Jaccard), and two runs exhausted 47 GB and then 60 GB of shuffle
+    * spill. Past saturation density the 64-bit signal no longer
+    * discriminates; the recall contract there belongs to MinHash
+    * banding ([[nearDupsAuto]] routes to it).
+    *
+    * The residual sacrificed tail, in the cap-adjacent regime, is pairs
+    * at distance 1..maxDistance that meet ONLY inside over-cap buckets,
+    * disagree on EVERY sub-slice there (possible only at hamming ≥ 8 —
+    * outside the banding guarantee to begin with), and sort more than
+    * `neighborWindow` apart in every hot (sub-)bucket. Buckets hotter
+    * than 8·maxBucketSize run star + window alone, where pairs at any
+    * hamming 1..maxDistance can be sacrificed if their hashes sort
+    * more than `neighborWindow` apart. With the cap the output is this
+    * documented subset; with maxBucketSize = 0 it is exact.
+    *
+    * Memory per bucket, in one task: a cool bucket buffers its ≤ cap
+    * members (the whole bucket when uncapped); a cap-adjacent bucket
+    * its ≤ 8·cap members plus one sort key each; a saturated bucket
+    * streams through a ring of `neighborWindow` members.
     */
   def simHashCandidates(
       df: DataFrame,
@@ -447,138 +420,52 @@ object Dedup {
       neighborWindow: Int = 8,
       handle: StorageHandle = StorageHandle.unmanaged,
   ): DataFrame = {
-    val (banded, counts) = persistedBands(df, textCol, idCol, bands, maxBucketSize, handle)
-    simHashCandidatesFromBanded(banded, counts, idCol, maxDistance, bands,
-      maxBucketSize, neighborWindow, handle)
+    val hashed = bandedSlices(simHashes(df, textCol, idCol), idCol, bands)
+    if (maxBucketSize <= 0)
+      simHashKernelPairs(hashed, Nil, idCol, maxDistance, bands, 0, neighborWindow)
+    else {
+      // persisted: the census readout and the kernel both read it
+      val banded = handle.persist(hashed)
+      val overCap = bucketCounts(banded, "_q", "_k").where(col("_n") > maxBucketSize).collect()
+      simHashKernelPairs(banded, hotBuckets(overCap), idCol, maxDistance, bands,
+        maxBucketSize, neighborWindow)
+    }
   }
 
-  /** [[simHashCandidates]] from an already-banded (and persisted) slice
-    * frame plus its census — the shared-pass entry point
-    * [[nearDupsAuto]] routes through so the corpus is hashed once for
-    * BOTH the routing census and candidate generation, not twice.
-    * Without a census (`counts` = None) the semantics are exact and
-    * uncapped.
+  /** [[simHashCandidates]] over an already-banded `(idCol, _sh, _q, _k)`
+    * frame and its over-cap bucket set (empty when uncapped): the
+    * shared entry point [[nearDupsAuto]] routes through, so the corpus
+    * is hashed once for both the routing census and the candidates.
+    * The banded rows are shuffled once on (band, key); the cool and the
+    * hot kernel passes read that one exchange.
     */
-  private def simHashCandidatesFromBanded(
+  private def simHashKernelPairs(
       banded: DataFrame,
-      counts: Option[DataFrame],
+      overCap: Seq[(Int, Long, Long)],
       idCol: String,
       maxDistance: Int,
       bands: Int,
       maxBucketSize: Int,
       neighborWindow: Int,
-      handle: StorageHandle,
   ): DataFrame = {
-    val bandKey = Seq("_q", "_k")
-    // the pairwise join of cool buckets and pass 2's sorted neighbors
-    // inside hot ones (see Scaladoc)
-    val capped = cappedBucketPairs(banded, idCol, bandKey, counts, maxBucketSize, neighborWindow)
-    val all = counts.fold(capped) { counts =>
-      // pass 1 — full-hash star: group hot members by the full hash,
-      // link everyone to the group's min id. Window-min over the hash
-      // partition — one shuffle bounded by hot-bucket membership,
-      // never a pairwise join; hamming-0 recall is complete.
-      val hotDocs = banded.join(counts.where(col("_n") > maxBucketSize), bandKey, "left_semi")
-        .select(col(idCol), col("_sh")).distinct()
-      val stars = hotDocs.withColumn("_rep", min(col(idCol)).over(Window.partitionBy("_sh")))
-        .where(col(idCol) =!= col("_rep"))
-        .select(col("_rep").as("id_a"), col(idCol).as("id_b"),
-          lit(0).cast(IntegerType).as("hamming"))
-      // pass 3 — sub-band refinement of hot buckets (see Scaladoc):
-      // re-key each hot member by 8 slices of the non-band bits and
-      // run the ordinary capped pairwise join inside the refined
-      // groups; still-hot sub-buckets get their own sorted-neighbor
-      // window (a strictly more local sort than pass 2's).
-      //
-      // Refinement targets the CAP-ADJACENT regime only (buckets up
-      // to 8·cap). Round 16 MEASURED both sides of this gate at
-      // sf100 (5M docs — ALL 2048 (band,key) buckets saturated, max
-      // 29,095 members, zero cool/cap-adjacent membership; SCALE.md):
-      //
-      //  - WITH the gate, the pass recovers nothing at that density
-      //    and recall vs the exact All-Pairs truth is 65.2%
-      //    (167/256 window pairs, zero false positives), 84 of the
-      //    89 losses inside the hamming ≤ 7 envelope — the measured
-      //    PRICE of the gate;
-      //  - WITHOUT the gate (tried this round), the refined
-      //    sub-buckets are individually cool (~227 members) and the
-      //    join is feasible, but its SURVIVOR SET is not: on a
-      //    templated corpus the ~5·10¹⁰ sub-pair evaluations pass
-      //    the hamming filter in bulk (shared-template tokens pin
-      //    hashes together regardless of true Jaccard — the same
-      //    force that saturated the buckets), and two runs exhausted
-      //    47 GB and then 60 GB of shuffle spill before the
-      //    candidate set even reached verification. The explosion is
-      //    SEMANTIC — past saturation density the 64-bit signal no
-      //    longer discriminates, so candidate volume is inherently
-      //    quadratic — not an implementation artifact.
-      //
-      // The gate is therefore load-shedding at SimHash's semantic
-      // boundary: beyond it the pass degrades to star+sorted-
-      // neighbor, and the Jaccard-recall contract at that density
-      // belongs to MinHash banding, which keys on shingle content,
-      // does not saturate, and is hash-exact at sf100
-      // (minhash_near_dups_sample).
-      val width = 64 / bands
-      val subWidth = (64 - width) / 8
-      // at maxDistance = 0 the star pass already gives COMPLETE recall
-      // inside hot buckets (equal hashes land in one star group), so
-      // the sub-band machinery would explode hot members 8× to
-      // recover nothing — skip it
-      val subRecovered = if (subWidth < 1 || maxDistance == 0) Nil else {
-        // _sh with band _q's slice compacted out; static when-chain
-        // over q (bands is a plan-time constant), codegen-friendly
-        val rem = (0 until bands).map { q =>
-          val hi =
-            if (q == bands - 1) lit(0L)
-            else shiftleft(shiftrightunsigned(col("_sh"), (q + 1) * width), q * width)
-          val lo =
-            if (q == 0) lit(0L)
-            else col("_sh").bitwiseAND(lit((1L << (q * width)) - 1))
-          q -> hi.bitwiseOR(lo)
-        }.foldLeft(lit(0L)) { case (acc, (q, e)) => when(col("_q") === q, e).otherwise(acc) }
-        // the (q, k, r, sk) identity collapses to ONE 64-bit hashed
-        // key: the sub machinery shuffles its rows three times
-        // (census, the pairwise join's two sides, the sub-window
-        // sort) — one 8-byte key column instead of four narrows
-        // every one of those exchanges. A hash collision between two
-        // of the ≤ bands·2^width·8·2^subWidth live keys (~2^26 at
-        // the defaults, ~2^-13 birthday probability per run) MERGES
-        // two sub-buckets. Usually that only means extra candidates
-        // (filtered by the same hamming bound — pure cost), but if
-        // the merged census count crosses maxBucketSize it can
-        // demote a genuinely cool sub-bucket to the sorted-window
-        // path and sacrifice hamming≤7 pairs that path misses — so
-        // the sub-band contract below holds up to this negligible
-        // collision probability, not absolutely.
-        val hotAdjacent = banded.join(
-          counts.where(col("_n") > maxBucketSize && col("_n") <= 8L * maxBucketSize),
-          bandKey, "left_semi")
-        // persisted: `sub` feeds THREE consumers (its census, the
-        // cool pairwise join, the hot sorted-window) and `subCounts`
-        // two — without the persists each consumer re-runs the
-        // hot-adjacent semi-join + 8-way explode from the banded
-        // cache, three more passes over hot membership (guide §2.4)
-        val sub = handle.persist(hotAdjacent
-          .select(col(idCol), col("_sh"), col("_q"), col("_k"), rem.as("_rem"))
-          .select(col(idCol), col("_sh"),
-            explode(array(bitSlices(col("_rem"), 8, subWidth).zipWithIndex.map {
-              case (slice, r) => xxhash64(col("_q"), col("_k"), lit(r), slice)
-            }: _*)).as("_skey")))
-        val subCounts = handle.persist(bucketCounts(sub, "_skey"))
-        Seq(cappedBucketPairs(sub, idCol, Seq("_skey"), Some(subCounts),
-          maxBucketSize, neighborWindow))
-      }
-      (capped +: stars +: subRecovered).reduce(_ union _)
-    }
-    // hamming is a pure function of the two full hashes, so every copy
-    // of a pair (one per shared band) carries the SAME distance — filter
-    // BEFORE the dedup aggregate: far collisions (the vast majority on
-    // narrow band keys) never enter the shuffle, and the groupBy only
-    // dedups surviving near pairs
-    all.where(col("hamming") <= maxDistance)
-      .groupBy("id_a", "id_b")
-      .agg(min(col("hamming")).as("hamming"))
+    val idType = banded.schema(idCol).dataType
+    require(Seq(ByteType, ShortType, IntegerType, LongType).contains(idType),
+      s"simhash candidates need an integral id column; $idCol is $idType")
+    val rows = banded.where(col(idCol).isNotNull && col("_sh").isNotNull)
+      .select(col(idCol).cast(LongType).as("id"), col("_sh").as("sh"),
+        col("_q").as("q"), col("_k").as("k"))
+      .repartition(col("q"), col("k"))
+      .sortWithinPartitions("q", "k", "sh", "id")
+      .as(Encoders.product[BandedHash])
+    def pass(hot: Boolean): DataFrame = rows.mapPartitions { it =>
+      val kernel = new SimHashBuckets(bands, maxDistance, maxBucketSize, neighborWindow, overCap)
+      if (hot) kernel.hotPairs(it) else kernel.coolPairs(it)
+    }(Encoders.product[HashPair]).toDF("id_a", "id_b", "hamming")
+    val pairs =
+      if (overCap.isEmpty) pass(hot = false)
+      else pass(hot = false).union(pass(hot = true).distinct())
+    pairs.select(col("id_a").cast(idType).as("id_a"), col("id_b").cast(idType).as("id_b"),
+      col("hamming"))
   }
 
   /** Keep one representative per near-duplicate cluster: drop every row

@@ -16,11 +16,23 @@ import org.scalatest.funsuite.AnyFunSuite
 trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = GraftSession.local(2)
 
+  private val tempDirs = new java.util.concurrent.ConcurrentLinkedQueue[java.nio.file.Path]()
+
+  /** A fresh temp directory named `prefix…`, deleted when the suite ends. */
+  def tempDir(prefix: String): java.nio.file.Path = {
+    val d = java.nio.file.Files.createTempDirectory(prefix)
+    tempDirs.add(d)
+    d
+  }
+
   // The state-store maintenance task is JVM-wide and outlives the
   // session (catalog rows and EventStreamsSpec run stateful streams):
   // stop it with the session, or it keeps failing to reach the stopped
   // session's coordinator during later suites of the test JVM.
-  override def afterAll(): Unit = try StateStore.stop() finally spark.stop()
+  override def afterAll(): Unit =
+    try StateStore.stop()
+    finally try spark.stop()
+    finally tempDirs.forEach(d => org.apache.commons.io.FileUtils.deleteQuietly(d.toFile))
 
   /** Every physical node of `df`'s plan, descending through AQE wrappers
     * (into the initial plan), subqueries and the plans of persisted

@@ -180,7 +180,7 @@ items:
       val avg = a.averageTable(weighted, Seq("Gross_Expenditure"), Seq("Year", "ID", "Urban_Rural"))
       a.adjustByEquivalenceScale(a.addDecile(avg), Seq("Gross_Expenditure"))
     }
-    val cacheDir = java.nio.file.Files.createTempDirectory("graft_api_jobs").toString
+    val cacheDir = tempDir("graft_api_jobs").toString
     val cached = new Api(spark, HbsFixtures.repo(spark, cacheDir = Some(cacheDir)))
     // the first load writes the A9 entries, which is a job of its own
     cached.loadTable("Expenditures", years)

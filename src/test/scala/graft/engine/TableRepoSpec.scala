@@ -122,7 +122,7 @@ food:
   }
 
   test("A9 cache: cache_result table persists and is reused") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_cache").toString
+    val dir = tempDir("graft_cache").toString
     val r = repo(cacheDir = Some(dir))
     r.table("Expenditures", Seq(1400)).count()
     val cached = new java.io.File(dir).listFiles().filter(_.getName.startsWith("Expenditures_1400_"))
@@ -134,7 +134,7 @@ food:
 
   test("A9 cache with bucketed layout: cached loads read bucketed and skip shuffles") {
     import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
-    val dir = java.nio.file.Files.createTempDirectory("graft_cache_bucketed").toString
+    val dir = tempDir("graft_cache_bucketed").toString
     val cfg = RepoConfig(cacheDir = Some(dir),
       cacheBucketKeys = Seq("ID"), cacheBucketCount = 4)
     val r = HbsFixtures.repo(spark, config = Some(cfg))

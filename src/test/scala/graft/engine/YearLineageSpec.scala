@@ -91,7 +91,7 @@ class YearLineageSpec extends SparkSpec {
   }
 
   test("A9 reads carry the year only for entries written with the lineage marker") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_year_lineage").toFile
+    val dir = tempDir("graft_year_lineage").toFile
     val written = repo(Some(dir.toString)).table("Expenditures", years)
     val entries = dir.listFiles().map(_.getName).filter(_.startsWith("Expenditures_")).sorted
     assert(entries.length == 2 && entries.forall(_.endsWith("_year.parquet")), entries.toSeq)

@@ -80,7 +80,7 @@ class AnnSpec extends SparkSpec {
     val df = vecs(120)
     val q = df.where(col("vec_id") < 3)
     val centroids = Ann.hyperplanes(4, dim, seed = 7L)
-    val tmp = java.nio.file.Files.createTempDirectory("graft_ivf_i8_spec").toString
+    val tmp = tempDir("graft_ivf_i8_spec").toString
     try {
       Ann.ivfWriteInt8(df, tmp, centroids)
       // the stored payload really is int8
@@ -128,7 +128,7 @@ class AnnSpec extends SparkSpec {
     import spark.implicits._
     val df = vecs(300)
     val centroids = Ann.hyperplanes(8, dim, seed = 5)
-    val path = java.nio.file.Files.createTempDirectory("graft_ivf").toString + "/corpus"
+    val path = tempDir("graft_ivf").toString + "/corpus"
     Ann.ivfWrite(df, path, centroids)
     // partition layout on disk: one dir per cluster
     val dirs = new java.io.File(path).listFiles().filter(_.getName.startsWith("cluster="))

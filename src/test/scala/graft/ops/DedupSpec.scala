@@ -60,8 +60,9 @@ class DedupSpec extends SparkSpec {
   test("simhash banding pigeonhole: candidates cover ALL pairs within distance bands-1") {
     import spark.implicits._
     // random-ish corpus: brute-force every pair's Hamming distance and
-    // assert the banded candidate set is a superset at the guaranteed
-    // bound (bands-1), for both 4x16 and 8x8 configurations
+    // assert the uncapped banded candidate set is exactly the pairs
+    // within the guaranteed bound (bands-1) that share a band, for both
+    // 4x16 and 8x8 configurations
     val corpus = (1 to 60).map(i =>
       (i.toLong, s"shared base text ${"word " * (i % 7)} plus variant token$i and tail ${i % 5}"))
       .toDF("doc_id", "text")
@@ -71,11 +72,14 @@ class DedupSpec extends SparkSpec {
     } yield (a, b, java.lang.Long.bitCount(sh(a) ^ sh(b)))
     for (bands <- Seq(4, 8)) {
       val bound = bands - 1
-      val expected = allPairs.collect { case (a, b, d) if d <= bound => (a, b) }.toSet
+      val width = 64 / bands
+      def shareBand(a: Long, b: Long) = (0 until bands).exists(q =>
+        ((sh(a) ^ sh(b)) >>> (q * width) & ((1L << width) - 1)) == 0)
+      val expected = allPairs.collect { case (a, b, d) if d <= bound && shareBand(a, b) => (a, b) }
       val got = simHashCandidates(corpus, maxDistance = bound, bands = bands)
-        .select("id_a", "id_b").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-      assert(expected.subsetOf(got),
-        s"bands=$bands missed ${expected.diff(got)} (pigeonhole violated)")
+        .select("id_a", "id_b").collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
+      assert(got.sorted == expected.sorted,
+        s"bands=$bands missed ${expected.diff(got)}, extra ${got.diff(expected)}")
     }
   }
 
@@ -168,9 +172,13 @@ class DedupSpec extends SparkSpec {
     val minhash = shape(minHashPairs(corpus))
     info(s"simHashCandidates: $simhash; minHashPairs: $minhash")
     // planNodes re-walks a persisted plan under every scan of it, so
-    // nodes inside shared persisted passes count once per scan
-    assert(simhash == Map("exchange" -> 38, "join" -> 15, "window" -> 3, "generate" -> 28,
-      "cacheScan" -> 39), s"simHashCandidates plan shape moved: $simhash")
+    // nodes inside shared persisted passes count once per scan. SimHash:
+    // the banded cache (its scatter exchange) read by the cool and hot
+    // kernel passes, one (band, key) exchange per pass (the second is
+    // reused at run time) and the hot pairs' distinct — no join, no window
+    assert(simhash == Map("exchange" -> 5, "join" -> 0, "window" -> 0, "generate" -> 2,
+      "cacheScan" -> 2), s"simHashCandidates plan shape moved: $simhash")
+    assert(simhash("window") == 0, "the SimHash path must not plan a WindowExec")
     assert(minhash == Map("exchange" -> 19, "join" -> 9, "window" -> 0, "generate" -> 10,
       "cacheScan" -> 19), s"minHashPairs plan shape moved: $minhash")
   }

@@ -2,7 +2,6 @@ package graft.ops
 
 import graft.SparkSpec
 import org.apache.spark.sql.functions._
-import java.nio.file.Files
 
 class LayoutSpec extends SparkSpec {
 
@@ -49,7 +48,7 @@ class LayoutSpec extends SparkSpec {
 
   test("writeZOrdered: disjoint per-file z-ranges, z-sorted rows, narrow 2-D envelopes") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("graft_zorder").toString + "/t"
+    val dir = tempDir("graft_zorder").toString + "/t"
     val grid = for { x <- 0 until 32; y <- 0 until 32 } yield (x, y)
     val df = grid.toDF("x", "y")
     Layout.writeZOrdered(df, dir, Seq(col("x"), col("y")), bits = 5, numFiles = 8)
@@ -88,7 +87,7 @@ class LayoutSpec extends SparkSpec {
 
   test("compact rewrites many small files into the byte-budgeted count, losslessly") {
     import spark.implicits._
-    val base = Files.createTempDirectory("graft_compact").toString
+    val base = tempDir("graft_compact").toString
     val df = (1L to 5000L).map(i => (i, s"row $i " + ("x" * 100))).toDF("id", "text")
     df.repartition(40).write.parquet(s"$base/src")
     def files(p: String) = new java.io.File(p).listFiles()
@@ -136,7 +135,7 @@ class LayoutSpec extends SparkSpec {
 
   test("z-order pruning proof: row-group stats skip scans on EVERY dimension") {
     import spark.implicits._
-    val base = Files.createTempDirectory("graft_zprune").toString
+    val base = tempDir("graft_zprune").toString
     // 128x128 grid; z-ordered vs x-sorted control — the control prunes
     // only its sort key, which is exactly the deficiency z-order fixes
     val grid = for { x <- 0 until 128; y <- 0 until 128 } yield (x, y)
@@ -171,7 +170,7 @@ class LayoutSpec extends SparkSpec {
 
   test("compact sizing feedback: recompression-shifted output lands within 2x of target") {
     import spark.implicits._
-    val base = Files.createTempDirectory("graft_compact_fb").toString
+    val base = tempDir("graft_compact_fb").toString
     // uncompressed source, snappy destination: the first-pass estimate
     // (from SOURCE bytes) overshoots the file count badly — the measured
     // rewrite must correct it

@@ -1,6 +1,5 @@
 package graft.sources
 
-import java.nio.file.Files
 
 import graft.SparkSpec
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
@@ -15,7 +14,7 @@ class BucketedJoinSpec extends SparkSpec {
 
   test("co-bucketed tables sort-merge join without any exchange") {
     import spark.implicits._
-    val base = Files.createTempDirectory("graft_bucketed").toString
+    val base = tempDir("graft_bucketed").toString
     val fact = (1L to 1000L).map(i => (i % 97, s"r$i", i)).toDF("hid", "payload", "v")
     val dim = (0L until 97L).map(i => (i, s"h$i")).toDF("hid", "label")
 

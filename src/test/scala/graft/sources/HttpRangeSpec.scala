@@ -15,7 +15,7 @@ import org.apache.hadoop.fs.Path
 class HttpRangeSpec extends SparkSpec {
 
   private lazy val (root, port, counters) = {
-    val dir = Files.createTempDirectory("graft_httprange")
+    val dir = tempDir("graft_httprange")
     Files.write(dir.resolve("blob.bin"), Array.tabulate[Byte](10000)(i => (i % 251).toByte))
     val (p, c) = LoopbackHttpServer.serve(dir.toString)
     (dir, p, c)

@@ -36,7 +36,7 @@ columns: {}
   }
 
   test("urban/rural csv clean-then-union end to end") {
-    val dir = Files.createTempDirectory("graft_csv").toString
+    val dir = tempDir("graft_csv").toString
     Files.createDirectories(java.nio.file.Paths.get(s"$dir/1400"))
     Files.writeString(java.nio.file.Paths.get(s"$dir/1400/U1400U01.csv"),
       "ADDRESS,VAL\n10000001,1.5\n10000002,2.5\n")
@@ -51,7 +51,7 @@ columns: {}
 
   test("partitioned write + year-pruned read") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("graft_part").toString + "/t"
+    val dir = tempDir("graft_part").toString + "/t"
     val df = Seq((1399, 1L), (1399, 2L), (1400, 3L)).toDF("Year", "ID")
     RawSources.writePartitioned(df, dir)
     val pruned = RawSources.readPartitioned(spark, dir, Seq(1400))
@@ -63,7 +63,7 @@ columns: {}
 
   test("csv sink round-trips") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("graft_csvout").toString + "/out"
+    val dir = tempDir("graft_csvout").toString + "/out"
     RawSources.writeCsv(Seq((1L, "a"), (2L, "b")).toDF("id", "name"), dir)
     val back = spark.read.option("header", "true").csv(dir)
     assert(back.count() == 2)
@@ -71,7 +71,7 @@ columns: {}
 
   test("jsonl sink + declared-schema scan round-trips hostile content losslessly") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("graft_jsonl").toString + "/out"
+    val dir = tempDir("graft_jsonl").toString + "/out"
     // newlines, quotes, backslashes, unicode, empty string, nulls — the
     // content a real scraped corpus contains
     val docs = Seq(
@@ -95,7 +95,7 @@ columns: {}
     val files = new java.io.File(dir).listFiles().map(_.getName)
     assert(files.exists(_.endsWith(".json.gz")), files.mkString(","))
     // a corrupt line must not kill the scan (PERMISSIVE null-fill)
-    val bad = Files.createTempDirectory("graft_jsonl_bad").toString
+    val bad = tempDir("graft_jsonl_bad").toString
     java.nio.file.Files.write(java.nio.file.Paths.get(bad, "part-0.json"),
       "{\"doc_id\": 9, \"text\": \"ok\", \"lang\": \"en\"}\nnot json at all\n".getBytes("UTF-8"))
     val tolerant = RawSources.readJsonl(spark, bad, docs.schema)
@@ -105,7 +105,7 @@ columns: {}
 
   test("orc sink + declared-schema scan round-trips losslessly and prunes/pushes down") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("graft_orc").toString + "/out"
+    val dir = tempDir("graft_orc").toString + "/out"
     val docs = Seq(
       (1L, "line one\nline two", 1.5),
       (2L, "unicode éü中文", 2.5),
@@ -127,7 +127,7 @@ columns: {}
 
   test("A3: parquet over HTTP reads losslessly via ranged requests, pushdown intact") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("graft_http").toString + "/served"
+    val dir = tempDir("graft_http").toString + "/served"
     val docs = (1L to 500L).map(i => (i, s"doc $i " + ("x" * (i % 37).toInt), i * 1.5))
       .toDF("doc_id", "text", "score")
     docs.repartition(3).write.parquet(dir)

@@ -241,12 +241,12 @@ class EventStreamsSpec extends SparkSpec {
   test("checkpoint resume is exactly-once: a restarted query processes only new " +
     "files and restored state suppresses duplicates from before the restart") {
     import spark.implicits._
-    val srcDir = java.nio.file.Files.createTempDirectory("graft_ckpt_src")
-    val outDir = java.nio.file.Files.createTempDirectory("graft_ckpt_out").toString + "/out"
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_ckpt_state").toString
+    val srcDir = tempDir("graft_ckpt_src")
+    val outDir = tempDir("graft_ckpt_out").toString + "/out"
+    val ckpt = tempDir("graft_ckpt_state").toString
 
     def stage(name: String, events: Seq[Event]): Unit = {
-      val tmp = java.nio.file.Files.createTempDirectory("graft_ckpt_stage")
+      val tmp = tempDir("graft_ckpt_stage")
       events.toDF().coalesce(1).write.mode("overwrite").parquet(tmp.toString)
       val part = tmp.toFile.listFiles().find(_.getName.endsWith(".parquet")).get
       java.nio.file.Files.copy(part.toPath, srcDir.resolve(name))
