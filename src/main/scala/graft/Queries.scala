@@ -3,6 +3,8 @@ package graft
 import graft.meta._
 import graft.ops._
 import graft.sources.{LoopbackHttpServer, RawSources}
+import graft.streaming.StreamGate
+import graft.streaming.StreamGate.{Copies, FileSink, MemorySink, Sentinel}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -3845,218 +3847,122 @@ items:
            count(*) AS n, CAST(sum(${centsSql("value")}) AS BIGINT) AS value_cents
     FROM events GROUP BY 1, 2"""
 
-  /** The SAME hourly aggregation executed by the Structured Streaming
-    * engine: file-source readStream over the events parquet, watermarked
-    * incremental aggregation, AvailableNow trigger draining the backlog
-    * as a real streaming query into a complete-mode memory sink. The
-    * result must equal the batch plan's (and the DuckDB oracle's) output
-    * exactly — batch/stream parity on the same input is the property
-    * that makes the streaming path trustworthy for backfills.
+  /** The hourly aggregation of [[eventsWindowAgg]] over an events stream,
+    * watermarked on event time. A sentinel row (see
+    * [[graft.streaming.StreamGate.Sentinel]]) must flow into the
+    * aggregation: a `user_id != -1` filter here gets predicate-pushed
+    * BELOW the EventTimeWatermark node, so the watermark would never see
+    * the bumped timestamp and the final 2 hours of windows would stay open
+    * (observed: 3370 of 3385 rows). Its window is dropped on readback
+    * instead, by [[beforeSentinelHour]].
     */
-  def eventsWindowStream(s: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.streaming.Trigger
-    val path = s"$dir/events.parquet"
-    val schema = s.read.parquet(path).schema
-    // the file stream source wants a directory (its arrival-monitoring
-    // unit); stage the single file into one
-    val streamDir = java.nio.file.Files.createTempDirectory("graft_stream_gate")
-    stageParquet(java.nio.file.Paths.get(path), streamDir, "events")
-    val name = "events_stream_" + java.util.UUID.randomUUID.toString.replace("-", "")
-    val src = s.readStream.schema(schema).parquet(streamDir.toString)
-    val agg = src
-      // derive an event-time column for windowing (encoding-robust)
-      .withColumn("_event_time", tsEventTimeOf(src))
+  private def hourlyStream(src: StreamGate.Source): DataFrame = {
+    val ev = src.events()
+    ev.withColumn("_event_time", tsEventTimeOf(ev))
       .withWatermark("_event_time", "2 hours")
       .groupBy(col("event_type"), window(col("_event_time"), "1 hour"))
       .agg(count(lit(1)).as("n"), sum(cents(col("value"))).as("value_cents"))
       .select(col("event_type"),
         unix_timestamp(col("window.start")).as("hour_epoch"),
         col("n"), col("value_cents"))
-    withStreamShufflePartitions(s, 8) {
-      val q = agg.writeStream.format("memory").queryName(name)
-        .outputMode("complete").trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-    }
-    // the resolved plan holds the memory sink's rows, so the catalog name
-    // and staged source dir can be released immediately — repeated
-    // bench/gate runs must not accumulate sink tables or temp dirs
-    val out = s.table(name)
-    s.catalog.dropTempView(name)
-    deleteRecursively(streamDir.toFile)
-    out
   }
 
-  /** Streaming PARQUET FILE SINK with checkpointed exactly-once commit —
-    * the sink-side evidence the other streaming gates (all memory-sink)
-    * don't carry: real pipelines land files, and the contract that makes
-    * a file-landing stream trustworthy is the checkpoint + `_spark_metadata`
-    * manifest protocol (a batch's files count only once the manifest
-    * commits; readers go through the manifest, so half-written batches
-    * are invisible). The gate runs the hourly aggregation as an
-    * AvailableNow stream in APPEND mode (file sinks are append-only, so
-    * windows must CLOSE to emit — the staged sentinel advances the
-    * watermark past every real window), then STARTS THE STREAM AGAIN on
-    * the same checkpoint with no new input and requires zero new rows —
-    * restart idempotence, the exactly-once property under the recovery
-    * path — and finally reads the directory back through the manifest
-    * for the hash compare against the same batch oracle as
-    * `events_window_agg`.
+  /** Hourly windows up to the last real hour of the events: drops the
+    * sentinel's window, one day past the real data (a bounded driver
+    * scalar pins the boundary). */
+  private def beforeSentinelHour(s: SparkSession, dir: String): Column = {
+    val ev = T(s, dir, "events")
+    col("hour_epoch") <= (ev.agg(max(tsUsOf(ev))).head().getLong(0) / 3600000000L) * 3600L
+  }
+
+  /** The SAME hourly aggregation run by the Structured Streaming engine
+    * into a complete-mode memory sink. Its result must equal the batch
+    * plan's (and the DuckDB oracle's) exactly: batch/stream parity on the
+    * same input is what makes the streaming path trustworthy for
+    * backfills.
     */
-  def eventsStreamSink(s: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.streaming.Trigger
-    val streamDir = stageEventsWithSentinel(s, dir)
-    val schema = s.read.parquet(s"$dir/events.parquet").schema
-    val base = graft.engine.Scratch.dir(s"graft_streamsink:$dir")
-    deleteRecursively(new java.io.File(base)) // fresh checkpoint per invocation
-    val out = s"$base/out"; val ckpt = s"$base/ckpt"
-    def runOnce(): Unit = withStreamShufflePartitions(s, 8) {
-      val src = s.readStream.schema(schema).parquet(streamDir.toString)
-      val q = src
-        .withColumn("_event_time", tsEventTimeOf(src))
-        .withWatermark("_event_time", "2 hours")
-        // NOTE: the sentinel row must flow into the aggregation — a
-        // `user_id != -1` filter here gets predicate-pushed BELOW the
-        // EventTimeWatermark node, so the watermark would never see the
-        // bumped timestamp and the final 2 hours of windows would stay
-        // open (observed: 3370 of 3385 rows). Its one bumped-day window
-        // row is dropped on readback instead.
-        .groupBy(col("event_type"), window(col("_event_time"), "1 hour"))
-        .agg(count(lit(1)).as("n"), sum(cents(col("value"))).as("value_cents"))
-        .select(col("event_type"),
-          unix_timestamp(col("window.start")).as("hour_epoch"),
-          col("n"), col("value_cents"))
-        .writeStream.format("parquet")
-        .option("path", out).option("checkpointLocation", ckpt)
-        .outputMode("append").trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-    }
-    // finally-guarded: a stream failure or tripped require must still
-    // release the staged input dir (out/ckpt are covered by the
-    // Scratch shutdown hook — they have to outlive this method for
-    // the returned readback plan)
-    try {
-      runOnce()
-      val afterFirst = s.read.parquet(out).count()
-      runOnce() // same checkpoint, no new input: must be a no-op
-      val afterSecond = s.read.parquet(out).count()
+  val eventsWindowStream: StreamGate = new StreamGate(Copies(1), MemorySink, hourlyStream)
+
+  /** Streaming PARQUET FILE SINK with checkpointed exactly-once commit:
+    * a file-landing stream is trustworthy through the checkpoint +
+    * `_spark_metadata` manifest protocol (a batch's files count once the
+    * manifest commits, and readers go through it, so half-written batches
+    * are invisible). The hourly aggregation runs in APPEND mode (windows
+    * must CLOSE to emit, hence the sentinel), then STARTS AGAIN on the
+    * same checkpoint with no new input and must emit zero new rows:
+    * restart idempotence, the exactly-once property under the recovery
+    * path. The oracle is `events_window_agg`'s.
+    */
+  val eventsStreamSink: StreamGate = new StreamGate(Sentinel(1, beforeSentinelHour), FileSink,
+    hourlyStream,
+    check = r => {
+      val afterFirst = r.sinkRows.count()
+      r.restart() // same checkpoint, no new input: must be a no-op
+      val afterSecond = r.sinkRows.count()
       require(afterSecond == afterFirst,
         s"restart on the same checkpoint emitted rows: $afterFirst -> $afterSecond")
-      require(new java.io.File(s"$out/_spark_metadata").exists(),
-        "file sink wrote no _spark_metadata manifest — exactly-once readback contract missing")
-    } finally deleteRecursively(streamDir.toFile)
-    // drop the sentinel's own window (one row, one day past the real
-    // data; bounded driver scalar pins the boundary)
-    val ev = T(s, dir, "events")
-    val maxRealHour = (ev.agg(max(tsUsOf(ev))).head.getLong(0) / 3600000000L) * 3600L
-    s.read.parquet(out).where(col("hour_epoch") <= maxRealHour)
-  }
+    })
+
+  private val streamRecoveryGate =
+    new StreamGate(Sentinel(10, beforeSentinelHour), FileSink, hourlyStream)
 
   /** CRASH-RECOVERY evidence for the checkpointed file sink:
     * [[eventsStreamSink]] proves a COMPLETED run restarts as a no-op;
-    * this gate proves recovery from an INTERRUPTED run — the failure
-    * mode checkpoints exist for. The corpus replays as ~10 time-ordered
-    * files + sentinel with maxFilesPerTrigger=1; the first stream start
-    * is KILLED mid-replay (await the first committed micro-batch, then
-    * stop(), which aborts the in-flight batch); a second start on the
-    * same checkpoint must drain the remainder such that the final
-    * manifest readback still hash-equals the batch oracle — no lost
-    * windows from the committed prefix, no duplicated windows from the
-    * re-run batch, and any part-files orphaned by the kill invisible
-    * because readers go through `_spark_metadata`. Micro-batches at this
-    * sf are fast, so catching the stream mid-flight is retried (fresh
-    * scratch per attempt) and the interruption is REQUIRED, never
-    * silently downgraded to a completed-run restart.
+    * this row proves recovery from an INTERRUPTED run. The corpus replays
+    * as ~10 time-ordered files + sentinel, one file per trigger; the first
+    * start is KILLED after its first committed micro-batch (stop() aborts
+    * the in-flight batch), and a second start on the same checkpoint must
+    * drain the rest so that the manifest readback still equals the batch
+    * oracle: no windows lost from the committed prefix, none duplicated by
+    * the re-run batch, and part files orphaned by the kill invisible.
+    * Micro-batches at this sf are fast, so catching the stream mid-flight
+    * is retried (fresh sink per attempt) and the interruption is
+    * REQUIRED, never downgraded to a completed-run restart.
     */
-  def eventsStreamRecovery(s: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.streaming.Trigger
-    val streamDir = stageEventsWithSentinel(s, dir, timeSplits = 10)
-    val nFiles = streamDir.toFile.listFiles().count(_.getName.endsWith(".parquet"))
-    val schema = s.read.parquet(s"$dir/events.parquet").schema
-    val base = graft.engine.Scratch.dir(s"graft_streamrec:$dir")
-    def start(out: String, ckpt: String) = {
-      val src = s.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1").parquet(streamDir.toString)
-      src.withColumn("_event_time", tsEventTimeOf(src))
-        .withWatermark("_event_time", "2 hours")
-        .groupBy(col("event_type"), window(col("_event_time"), "1 hour"))
-        .agg(count(lit(1)).as("n"), sum(cents(col("value"))).as("value_cents"))
-        .select(col("event_type"),
-          unix_timestamp(col("window.start")).as("hour_epoch"),
-          col("n"), col("value_cents"))
-        .writeStream.format("parquet")
-        .option("path", out).option("checkpointLocation", ckpt)
-        .outputMode("append").trigger(Trigger.AvailableNow()).start()
-    }
-    // one recovery attempt; Right(out) when the kill landed mid-replay,
-    // Left(()) when the replay outran the poll and the attempt is void
-    def attempt(i: Int): Either[Unit, String] = withStreamShufflePartitions(s, 8) {
-      val out = s"$base/a$i/out"; val ckpt = s"$base/a$i/ckpt"
-      deleteRecursively(new java.io.File(s"$base/a$i"))
-      val q1 = start(out, ckpt)
-      val deadline = System.nanoTime + 120L * 1000 * 1000 * 1000
-      while (q1.isActive && q1.recentProgress.isEmpty && System.nanoTime < deadline)
-        Thread.sleep(2)
-      val caughtLive = q1.isActive
-      // a batch aborted mid-commit may surface as a StreamingQueryException
-      // here — for this gate that IS the crash being simulated; recovery
-      // must work from whatever state the checkpoint holds
-      q1.stop()
-      try q1.awaitTermination()
-      catch { case scala.util.control.NonFatal(_) => () }
-      val committed = q1.recentProgress.map(_.batchId).distinct.length
-      if (!caughtLive || committed == 0 || committed >= nFiles) Left(())
-      else {
-        val q2 = start(out, ckpt) // same checkpoint: resume, not restart
-        q2.awaitTermination()
-        require(new java.io.File(s"$out/_spark_metadata").exists(),
-          "recovered file sink wrote no _spark_metadata manifest")
-        Right(out)
+  def eventsStreamRecovery(s: SparkSession, dir: String): DataFrame =
+    streamRecoveryGate.staged(s, dir) { st =>
+      // one recovery attempt; Right(sink) when the kill landed mid-replay,
+      // Left(()) when the replay outran the poll and the attempt is void
+      def attempt(i: Int): Either[Unit, String] = {
+        val at = st.freshSink(s"a$i")
+        val q1 = st.start(at)
+        val deadline = System.nanoTime + 120L * 1000 * 1000 * 1000
+        while (q1.isActive && q1.recentProgress.isEmpty && System.nanoTime < deadline)
+          Thread.sleep(2)
+        val caughtLive = q1.isActive
+        // stop() aborts the in-flight batch and waits for the query thread;
+        // a batch aborted mid-commit stays as the stopped query's exception,
+        // and for this gate that IS the crash being simulated: recovery
+        // must work from whatever state the checkpoint holds
+        q1.stop()
+        val committed = q1.recentProgress.map(_.batchId).distinct.length
+        if (!caughtLive || committed == 0 || committed >= st.nFiles) Left(())
+        else {
+          st.drain(at) // same checkpoint: resume, not restart
+          require(st.manifested(at), "recovered file sink wrote no _spark_metadata manifest")
+          Right(at)
+        }
       }
-    }
-    try {
-      val out = (1 to 5).iterator.map(attempt).collectFirst { case Right(o) => o }
+      val at = (1 to 5).iterator.map(attempt).collectFirst { case Right(a) => a }
         .getOrElse(sys.error(
-          s"could not interrupt the $nFiles-file replay mid-stream in 5 attempts — " +
+          s"could not interrupt the ${st.nFiles}-file replay mid-stream in 5 attempts — " +
             "the crash-recovery evidence is gone; raise timeSplits"))
-      val ev = T(s, dir, "events")
-      val maxRealHour = (ev.agg(max(tsUsOf(ev))).head.getLong(0) / 3600000000L) * 3600L
-      s.read.parquet(out).where(col("hour_epoch") <= maxRealHour)
-    } finally deleteRecursively(streamDir.toFile)
-  }
+      st.read(at)
+    }
 
   /** Stream-static enrichment join: the events STREAM joins the static
     * nation dim (user_id mod 25 as the synthetic FK) and aggregates per
-    * nation — the lookup-enrichment shape of a streaming pipeline. The
-    * static side is planned per micro-batch as an ordinary broadcast
-    * hash join (the stream never shuffles for the join); the oracle is
-    * the same join+aggregate in batch SQL, so the gate asserts
-    * batch/stream parity through a REAL AvailableNow run.
+    * nation. The static side is planned per micro-batch as an ordinary
+    * broadcast hash join (the stream never shuffles for the join); the
+    * oracle is the same join+aggregate in batch SQL.
     */
-  def eventsEnrichStream(s: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.streaming.Trigger
-    val path = s"$dir/events.parquet"
-    val schema = s.read.parquet(path).schema
-    val streamDir = java.nio.file.Files.createTempDirectory("graft_enrich_stream")
-    stageParquet(java.nio.file.Paths.get(path), streamDir, "events")
-    val nation = s.read.parquet(s"$dir/nation.parquet")
-      .select(col("n_nationkey"), col("n_name"))
-    val name = "events_enrich_" + java.util.UUID.randomUUID.toString.replace("-", "")
-    val enriched = s.readStream.schema(schema).parquet(streamDir.toString)
+  val eventsEnrichStream: StreamGate = new StreamGate(Copies(1), MemorySink,
+    src => src.events()
       .withColumn("n_nationkey", (col("user_id") % 25).cast(IntegerType))
-      .join(nation, Seq("n_nationkey"))
+      .join(T(src.s, src.dir, "nation").select(col("n_nationkey"), col("n_name")), Seq("n_nationkey"))
       .groupBy(col("n_name"))
-      .agg(count(lit(1)).as("n_events"), sum(cents(col("value"))).as("value_cents"))
-    withStreamShufflePartitions(s, 8) {
-      val q = enriched.writeStream.format("memory").queryName(name)
-        .outputMode("complete").trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-    }
-    val out = s.table(name).orderBy("n_name")
-    s.catalog.dropTempView(name)
-    deleteRecursively(streamDir.toFile)
-    out
-  }
-
+      .agg(count(lit(1)).as("n_events"), sum(cents(col("value"))).as("value_cents")),
+    readback = _.orderBy("n_name"))
   private val eventsEnrichStreamSql = """
     SELECT n.n_name, count(*) AS n_events,
            CAST(sum(CAST(round(e.value*100,0) AS BIGINT)) AS BIGINT) AS value_cents
@@ -4069,71 +3975,17 @@ items:
     * the stream back to exactly the original rows — which is what the
     * oracle (a plain SELECT over events) asserts.
     */
-  def eventsDedupStream(s: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.streaming.Trigger
-    val path = s"$dir/events.parquet"
-    val schema = s.read.parquet(path).schema
-    val streamDir = java.nio.file.Files.createTempDirectory("graft_dedup_stream")
-    stageParquet(java.nio.file.Paths.get(path), streamDir, "copy_a")
-    stageParquet(java.nio.file.Paths.get(path), streamDir, "copy_b")
-    val src = s.readStream.schema(schema).parquet(streamDir.toString)
-    val stream = src
+  val eventsDedupStream: StreamGate = new StreamGate(Copies(2), FileSink,
+    src => {
+      val ev = src.events()
       // compare at microsecond precision — DuckDB's epoch_us(ts) is the
       // oracle-side equivalent for either ts encoding
-      .withColumn("ts_us", tsUsOf(src))
-      .withColumn("ts", timestamp_micros(col("ts_us")))
-    val dd = graft.streaming.EventStreams.dedupEvents(stream, Seq("event_id"))
-    // FILE sink, not memory: the deduped output is corpus-bounded (every
-    // surviving event), and a memory sink funnels it through the
-    // driver — at 100× the design corpus the sf10 bench tripped
-    // spark.driver.maxResultSize (1.1 GiB of task results). Aggregate-
-    // bounded stream gates (hourly grid, per-nation) keep memory sinks;
-    // corpus-bounded ones land in checkpointed parquet and read back
-    // through the _spark_metadata manifest.
-    val base = graft.engine.Scratch.dir(s"graft_dedupstream:$dir")
-    deleteRecursively(new java.io.File(base))
-    withStreamShufflePartitions(s, 8) {
-      val q = dd.writeStream.format("parquet")
-        .option("path", s"$base/out").option("checkpointLocation", s"$base/ckpt")
-        .outputMode("append").trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-    }
-    val out = s.read.parquet(s"$base/out")
-      .select(col("event_id"), col("ts_us"), col("user_id"), col("event_type"),
-        col("value"), col("props"))
-      .orderBy("event_id")
-    deleteRecursively(streamDir.toFile)
-    out
-  }
-
-  /** Stage a parquet input — a single FILE or a Spark-written DIRECTORY
-    * of part files — into a stream-source directory. `Files.copy` on a
-    * directory copies only the (empty) directory entry, which at
-    * inflated SFs (fixture tables are directories there) silently
-    * staged ZERO input files: every single-file streaming gate returned
-    * 0 rows in the sf1 oracle sweep. Returns the staged paths.
-    */
-  private def stageParquet(src: java.nio.file.Path, dstDir: java.nio.file.Path,
-      prefix: String): Seq[java.nio.file.Path] =
-    if (java.nio.file.Files.isDirectory(src)) {
-      val parts = src.toFile.listFiles()
-        .filter(f => f.isFile && f.getName.endsWith(".parquet")).sortBy(_.getName)
-      require(parts.nonEmpty, s"$src contains no parquet part files")
-      parts.zipWithIndex.toSeq.map { case (f, i) =>
-        java.nio.file.Files.copy(f.toPath, dstDir.resolve(f"${prefix}_$i%04d.parquet"))
-      }
-    } else Seq(java.nio.file.Files.copy(src, dstDir.resolve(s"$prefix.parquet")))
-
-  /** Remove a staged temp directory once its streaming run has drained,
-    * or a scratch dir a gate wants fresh on entry. The scratch dirs
-    * themselves live and die with [[graft.engine.Scratch]].
-    */
-  private def deleteRecursively(f: java.io.File): Unit = {
-    val kids = f.listFiles()
-    if (kids != null) kids.foreach(deleteRecursively)
-    f.delete(): Unit
-  }
-
+      val stream = ev.withColumn("ts_us", tsUsOf(ev))
+        .withColumn("ts", timestamp_micros(col("ts_us")))
+      graft.streaming.EventStreams.dedupEvents(stream, Seq("event_id"))
+    },
+    readback = _.select(col("event_id"), col("ts_us"), col("user_id"), col("event_type"),
+      col("value"), col("props")).orderBy("event_id"))
   private val eventsDedupStreamSql = """
     SELECT event_id, epoch_us(ts) AS ts_us, user_id, event_type, value, props
     FROM events"""
@@ -4555,124 +4407,20 @@ items:
            CAST(sum(CAST(round(value*100,0) AS BIGINT)) AS BIGINT) AS value_cents
     FROM sess GROUP BY user_id, sid"""
 
-  /** The native session_window sessionizer executed by the Structured
-    * Streaming engine — the streaming twin of [[eventsSessionWindow]]
-    * (same groupBy, same 30-minute gap), proving the scaladoc's
-    * "streaming-capable with a watermark unchanged" claim under a REAL
-    * AvailableNow run against the same DuckDB oracle. Append-mode
-    * session windows only emit once the watermark passes a session's
-    * end, so a finite backlog would hold its tail sessions in state
-    * forever; the standard drain technique applies — stage ONE
-    * far-future sentinel event (max ts + 1 day, user_id -1) alongside
-    * the real file, which advances the global watermark past every real
-    * session's end on the no-data flush batch. The sentinel's own
-    * session stays unemitted (its end is beyond the final watermark)
-    * and is filtered defensively. At scale this is exactly how a
-    * backfill drain works: the watermark, not the job's end, releases
-    * state — bounded memory regardless of corpus size.
-    */
-  /** Stage the events file plus a far-future sentinel event (corpus max
-    * ts + 1 day, user_id -1 — encoding-robust) into a fresh stream
-    * directory: the watermark-advance drain used by the append-mode
-    * streaming gate rows. The max-ts lookup is a one-scalar metadata
-    * read.
-    *
-    * `timeSplits` > 1 stages the corpus as that many TIME-ORDERED files
-    * with strictly increasing modification times (FileStreamSource
-    * admits files oldest-mod-time first), so a `maxFilesPerTrigger=1`
-    * reader replays the corpus as ≥ timeSplits+1 real micro-batches with
-    * the watermark advancing monotonically between them — sessions from
-    * early chunks emit (and their state evicts) MID-RUN, not only at the
-    * sentinel drain. Time-ordering is what makes the split safe: chunk
-    * i+1's min event time is ≥ chunk i's max, so nothing ever lands
-    * behind the watermark and the multi-batch result stays hash-equal to
-    * the batch oracle.
-    */
-  private def stageEventsWithSentinel(s: SparkSession, dir: String,
-      timeSplits: Int = 1): java.nio.file.Path = {
-    val path = s"$dir/events.parquet"
-    val batch = s.read.parquet(path)
-    // an empty fixture would stage an empty sentinel file: the watermark
-    // would never advance and the streaming gates would silently return
-    // zero rows — make the precondition loud instead
-    require(!batch.isEmpty, s"$path is empty: sentinel watermark drain needs at least one event")
-    val schema = batch.schema
-    val streamDir = java.nio.file.Files.createTempDirectory("graft_session_stream")
-    def stamp(p: java.nio.file.Path, seq: Int): Unit =
-      java.nio.file.Files.setLastModifiedTime(p,
-        java.nio.file.attribute.FileTime.fromMillis(1700000000000L + seq * 60000L))
-    if (timeSplits <= 1) {
-      // single-batch staging need not be time-ordered: all data files
-      // share one stamp, only the sentinel must sort last
-      stageParquet(java.nio.file.Paths.get(path), streamDir, "events")
-        .foreach(p => stamp(p, 0))
-    } else {
-      // PARALLEL time-range chunking: repartitionByRange assigns
-      // ascending ts ranges to ascending partition ids, and partitionBy
-      // writes one file per (task = chunk) — a distributed range sort,
-      // not a single-partition ntile window (which at 1M+ events made
-      // staging dominate the gate)
-      val chunkDir = java.nio.file.Files.createTempDirectory("graft_session_chunks")
-      batch.repartitionByRange(timeSplits, col("ts"))
-        .withColumn("_chunk", spark_partition_id())
-        .write.partitionBy("_chunk").mode("overwrite").parquet(chunkDir.toString)
-      val chunks = chunkDir.toFile.listFiles()
-        .filter(f => f.isDirectory && f.getName.startsWith("_chunk="))
-        .sortBy(f => f.getName.stripPrefix("_chunk=").toInt)
-      require(chunks.nonEmpty, "range chunking produced no chunks")
-      chunks.zipWithIndex.foreach { case (d, i) =>
-        val part = d.listFiles().find(_.getName.endsWith(".parquet"))
-          .getOrElse(sys.error(s"chunk ${d.getName} part file missing"))
-        val p = streamDir.resolve(f"part_${i + 1}%03d.parquet")
-        java.nio.file.Files.copy(part.toPath, p)
-        stamp(p, i + 1)
-      }
-      deleteRecursively(chunkDir.toFile)
-    }
-    val bumped = schema("ts").dataType match {
-      case LongType => (max(col("ts")) + lit(86400L * 1000000000L)).as("ts")
-      case dt       => (max(col("ts")).cast(TimestampType) + expr("INTERVAL 1 DAY")).cast(dt).as("ts")
-    }
-    val sentTs = batch.agg(bumped)
-    val sentinel = batch.limit(1).drop("ts").crossJoin(sentTs)
-      .withColumn("user_id", lit(-1L))
-      .select(schema.fieldNames.map(col).toSeq: _*)
-    val sentDir = java.nio.file.Files.createTempDirectory("graft_session_sent")
-    sentinel.coalesce(1).write.mode("overwrite").parquet(sentDir.toString)
-    val part = sentDir.toFile.listFiles().find(_.getName.endsWith(".parquet"))
-      .getOrElse(sys.error("sentinel part file missing"))
-    val sentPath = streamDir.resolve("zz_sentinel.parquet")
-    java.nio.file.Files.copy(part.toPath, sentPath)
-    java.nio.file.Files.setLastModifiedTime(sentPath,
-      java.nio.file.attribute.FileTime.fromMillis(1700000000000L + (timeSplits + 1) * 60000L))
-    deleteRecursively(sentDir.toFile)
-    streamDir
-  }
+  /** Session rows of a real user: drops the sentinel's (user_id -1). */
+  private def notSentinelUser(s: SparkSession, dir: String): Column = col("user_id") =!= -1L
 
-  /** session_window parity under a REAL multi-micro-batch run: the
-    * corpus replays as 5 time-ordered files + sentinel with
-    * maxFilesPerTrigger=1, so watermark advance and state eviction
-    * happen across ≥6 genuine micro-batches (not one bulk batch + one
-    * drain) — and the result still hashes equal to the batch oracle.
+  /** The native session_window sessionizer run by the Structured
+    * Streaming engine — the streaming twin of [[eventsSessionWindow]]
+    * (same groupBy, same 30-minute gap) against the same DuckDB oracle.
+    * The corpus replays as 5 time-ordered files + sentinel, one file per
+    * trigger, so watermark advance and state eviction cross ≥6 genuine
+    * micro-batches (not one bulk batch + one drain).
     */
-  def eventsSessionStream(s: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.streaming.Trigger
-    val timeSplits = 5
-    val schema = s.read.parquet(s"$dir/events.parquet").schema
-    val streamDir = stageEventsWithSentinel(s, dir, timeSplits)
-    // actual staged file count (range chunking may produce fewer chunks
-    // than requested on a low-cardinality ts domain)
-    val nFiles = streamDir.toFile.listFiles().count(_.getName.endsWith(".parquet"))
-    val src = s.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1").parquet(streamDir.toString)
-    // FILE sink: session rows are population-bounded (users × sessions),
-    // which grows with the corpus — a memory sink funnels them through
-    // the driver (see eventsDedupStream's maxResultSize note)
-    val base = graft.engine.Scratch.dir(s"graft_sessionstream:$dir")
-    deleteRecursively(new java.io.File(base))
-    withStreamShufflePartitions(s, 8) {
-      val q = src
-        .withColumn("_et", tsEventTimeOf(src))
+  val eventsSessionStream: StreamGate = new StreamGate(Sentinel(5, notSentinelUser), FileSink,
+    src => {
+      val ev = src.events()
+      ev.withColumn("_et", tsEventTimeOf(ev))
         .withWatermark("_et", "2 hours")
         .groupBy(col("user_id"), session_window(col("_et"), "30 minutes").as("sw"))
         .agg(count(lit(1)).as("n_events"), sum(cents(col("value"))).as("value_cents"))
@@ -4680,75 +4428,51 @@ items:
           unix_micros(col("sw.start")).as("start_us"),
           unix_micros(col("sw.end")).as("end_us"),
           col("n_events"), col("value_cents"))
-        .writeStream.format("parquet")
-        .option("path", s"$base/out").option("checkpointLocation", s"$base/ckpt")
-        .outputMode("append").trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
+    },
+    check = r => {
       // loud evidence the run was genuinely multi-batch: one admitted
       // file per trigger → ≥ timeSplits+1 micro-batches (a silent fall
       // back to bulk admission would still hash-match, hiding the very
-      // state-handoff this gate exists to exercise)
-      val nBatches = q.recentProgress.map(_.batchId).distinct.length
+      // state-handoff this gate exists to exercise). The staged file
+      // count is the actual one: range chunking may produce fewer chunks
+      // than requested on a low-cardinality ts domain.
+      val nFiles = r.nFiles
+      val nBatches = r.query.recentProgress.map(_.batchId).distinct.length
       require(nBatches >= nFiles,
         s"expected >= $nFiles micro-batches (maxFilesPerTrigger=1 over " +
           s"$nFiles staged files), got $nBatches")
       require(nFiles >= 3, // data chunks + sentinel: multi-batch or bust
         s"staging produced only $nFiles files — the multi-batch evidence is gone")
-    }
-    val out = s.read.parquet(s"$base/out").where(col("user_id") =!= -1L)
-      .orderBy("user_id", "start_us")
-    deleteRecursively(streamDir.toFile)
-    out
-  }
+    },
+    readback = _.orderBy("user_id", "start_us"))
 
   /** The CUSTOM-STATE sessionizer ([[graft.streaming.EventStreams
     * .sessionize]], flatMapGroupsWithState + event-time timeout) under a
-    * real AvailableNow run, oracled — until now this escape-hatch path
-    * had only MemoryStream specs while its built-in siblings
-    * (events_session_window/_stream) carried oracles. Closed sessions
-    * emit in-batch; each user's final OPEN session emits via event-time
-    * TIMEOUT when the sentinel advances the watermark — so the oracle
-    * exercises exactly the state-eviction path that bounds memory on an
-    * unbounded stream. The state machine works in epoch MILLIS
-    * (java.sql.Timestamp.getTime) with a strict `>` gap rule, and the
-    * oracle mirrors both (epoch_ms, gap > 1800000). Event values are
-    * projected to integer cents BEFORE sessionization so the state's
-    * running double sum is exact and order-independent — same-millisecond
-    * ties then cannot perturb the hash.
+    * real stream, oracled like its built-in siblings. Closed sessions emit
+    * in-batch; each user's final OPEN session emits via event-time TIMEOUT
+    * when the sentinel advances the watermark, so the oracle exercises the
+    * state-eviction path that bounds memory on an unbounded stream. The
+    * state machine works in epoch MILLIS with a strict `>` gap rule, and
+    * the oracle mirrors both (epoch_ms, gap > 1800000). Values become
+    * integer cents BEFORE sessionization, so the state's running double
+    * sum is exact and same-millisecond ties cannot perturb the hash.
     */
-  def eventsSessionizeFmgws(s: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.streaming.Trigger
-    val schema = s.read.parquet(s"$dir/events.parquet").schema
-    val streamDir = stageEventsWithSentinel(s, dir)
-    val src = s.readStream.schema(schema).parquet(streamDir.toString)
-    import s.implicits._
-    val typed = src.select(col("event_id"),
-      tsEventTimeOf(src).as("ts"),
-      col("user_id"), col("event_type"),
-      cents(col("value")).cast(DoubleType).as("value"))
-      .as[graft.streaming.EventStreams.Event]
-    // FILE sink: session rows are population-bounded — same
-    // maxResultSize rationale as eventsDedupStream
-    val base = graft.engine.Scratch.dir(s"graft_fmgwsstream:$dir")
-    deleteRecursively(new java.io.File(base))
-    withStreamShufflePartitions(s, 8) {
-      val q = graft.streaming.EventStreams.sessionize(typed, gapSeconds = 1800)
-        .toDF()
-        .writeStream.format("parquet")
-        .option("path", s"$base/out").option("checkpointLocation", s"$base/ckpt")
-        .outputMode("append").trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-    }
-    val out = s.read.parquet(s"$base/out").where(col("user_id") =!= -1L)
-      .select(col("user_id"),
-        unix_millis(col("session_start")).as("start_ms"),
-        unix_millis(col("session_end")).as("end_ms"),
-        col("n_events"), col("total_value").as("total_c"))
-      .orderBy("user_id", "start_ms")
-    deleteRecursively(streamDir.toFile)
-    out
-  }
-
+  val eventsSessionizeFmgws: StreamGate = new StreamGate(Sentinel(1, notSentinelUser), FileSink,
+    src => {
+      import src.s.implicits._
+      val ev = src.events()
+      val typed = ev.select(col("event_id"),
+        tsEventTimeOf(ev).as("ts"),
+        col("user_id"), col("event_type"),
+        cents(col("value")).cast(DoubleType).as("value"))
+        .as[graft.streaming.EventStreams.Event]
+      graft.streaming.EventStreams.sessionize(typed, gapSeconds = 1800).toDF()
+    },
+    readback = _.select(col("user_id"),
+      unix_millis(col("session_start")).as("start_ms"),
+      unix_millis(col("session_end")).as("end_ms"),
+      col("n_events"), col("total_value").as("total_c"))
+      .orderBy("user_id", "start_ms"))
   private val eventsSessionizeFmgwsSql = """
     WITH e AS (
       SELECT user_id, event_id, epoch_ms(ts) AS ms,
@@ -4772,83 +4496,38 @@ items:
            CAST(CAST(sum(c) AS BIGINT) AS DOUBLE) AS total_c
     FROM x GROUP BY user_id, sid"""
 
-  /** Stream-stream interval join through a REAL AvailableNow run: each
-    * `view` event joins `purchase` events of the same user within 30
-    * minutes after it — the attribution shape. The two sides are
-    * SEPARATE file-stream sources over the same staged events file
-    * (distinct lineage, so key columns resolve without self-join
-    * ambiguity), each watermarked; the join condition time-bounds the
-    * purchase side in both directions, which is what lets the join
-    * evict state at watermark + horizon. Inner join ⇒ every match
-    * emits in append mode once both sides arrive, so the AvailableNow
-    * run must reproduce the batch interval join the oracle computes —
-    * the stream-stream sibling of events_enrich_stream's stream-static
-    * parity. Timestamps compare at microsecond precision on BOTH
-    * engines (the oracle joins on epoch_us arithmetic, not raw
-    * nanosecond timestamps, mirroring Spark's micros event time).
+  /** Stream-stream interval join: each `view` event joins `purchase`
+    * events of the same user within 30 minutes after it — the attribution
+    * shape. The two sides are SEPARATE file-stream sources over the same
+    * staged events (distinct lineage, so key columns resolve without
+    * self-join ambiguity), each watermarked; the join condition
+    * time-bounds the purchase side in both directions, which lets the
+    * join evict state at watermark + horizon. Inner join ⇒ every match
+    * emits in append mode, so the run must reproduce the oracle's batch
+    * interval join, compared at microsecond precision on both engines
+    * (epoch_us arithmetic, mirroring Spark's micros event time). Its
+    * per-batch floor is a state-store commit per partition × 4 store
+    * types × 2 sides.
     */
-  /** State-partition sizing (applies to every stateful gate row): a
-    * streaming query's state-store count is frozen from
-    * spark.sql.shuffle.partitions at FIRST start (it lives in the
-    * checkpoint), and per-batch cost includes a commit per store — so
-    * state partitioning must be sized to the STREAM's key volume, not
-    * the batch session default. This helper runs `body` with a
-    * stream-appropriate partition count and restores the session
-    * setting afterwards.
-    *
-    * SINGLE-THREADED ASSUMPTION: this mutates the SHARED session conf
-    * for the duration of `body`. Verify/Bench run catalog queries
-    * sequentially, so nothing else plans inside the window; if the
-    * harness ever runs queries concurrently on one SparkSession, a
-    * batch query planned here would inherit the stream's partition
-    * count (no per-query writeStream conf path exists to scope it).
-    */
-  private def withStreamShufflePartitions[T](s: SparkSession, n: Int)(body: => T): T = {
-    val key = "spark.sql.shuffle.partitions"
-    val prev = s.conf.get(key)
-    s.conf.set(key, n.toString)
-    try body finally s.conf.set(key, prev)
-  }
-
-  def eventsStreamJoin(s: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.streaming.Trigger
-    val path = s"$dir/events.parquet"
-    val schema = s.read.parquet(path).schema
-    val streamDir = java.nio.file.Files.createTempDirectory("graft_ss_join")
-    stageParquet(java.nio.file.Paths.get(path), streamDir, "events")
-    def side(evType: String, idAs: String, tsAs: String) = {
-      val src = s.readStream.schema(schema).parquet(streamDir.toString)
-      src.where(col("event_type") === evType)
-        .select(col("event_id").as(idAs), col("user_id"),
-          tsEventTimeOf(src).as(tsAs), col("value"))
-        .withWatermark(tsAs, "2 hours")
-    }
-    val views = side("view", "view_id", "view_time").drop("value")
-    val purchases = side("purchase", "purchase_id", "purchase_time")
-    val joined = graft.streaming.EventStreams.intervalJoin(
-      views, purchases, Seq("user_id"), "view_time", "purchase_time",
-      horizonSeconds = 1800)
-    // state partitions sized to the stream (see withStreamShufflePartitions):
-    // the per-batch floor is a commit per store × 4 store types × 2 sides.
-    // FILE sink: the joined view→purchase pairs are corpus-bounded —
-    // same maxResultSize rationale as eventsDedupStream
-    val base = graft.engine.Scratch.dir(s"graft_ssjoinstream:$dir")
-    deleteRecursively(new java.io.File(base))
-    withStreamShufflePartitions(s, 8) {
-      val q = joined
+  val eventsStreamJoin: StreamGate = new StreamGate(Copies(1), FileSink,
+    src => {
+      def side(evType: String, idAs: String, tsAs: String) = {
+        val ev = src.events()
+        ev.where(col("event_type") === evType)
+          .select(col("event_id").as(idAs), col("user_id"),
+            tsEventTimeOf(ev).as(tsAs), col("value"))
+          .withWatermark(tsAs, "2 hours")
+      }
+      val views = side("view", "view_id", "view_time").drop("value")
+      val purchases = side("purchase", "purchase_id", "purchase_time")
+      graft.streaming.EventStreams.intervalJoin(
+        views, purchases, Seq("user_id"), "view_time", "purchase_time",
+        horizonSeconds = 1800)
         .select(views("user_id"), col("view_id"), col("purchase_id"),
           (unix_micros(col("purchase_time")) - unix_micros(col("view_time"))).as("lag_us"),
           cents(col("value")).as("value_cents"))
-        .writeStream.format("parquet")
-        .option("path", s"$base/out").option("checkpointLocation", s"$base/ckpt")
-        .outputMode("append").trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-    }
-    val out = s.read.parquet(s"$base/out").orderBy("view_id", "purchase_id")
-    deleteRecursively(streamDir.toFile)
-    out
-  }
-
+    },
+    readback = _.orderBy("view_id", "purchase_id"))
   private val eventsStreamJoinSql = """
     SELECT v.user_id, v.event_id AS view_id, p.event_id AS purchase_id,
            epoch_us(p.ts) - epoch_us(v.ts) AS lag_us,
@@ -5087,9 +4766,12 @@ items:
 
   /** One catalog row. The oracle SQL is built on first use, so a row
     * whose SQL is generated from the corpus costs nothing until asked for.
+    * `query` is the row's result; `plan` builds the same DataFrame without
+    * running anything a streaming row runs to produce it (for a batch row
+    * the two are one function).
     */
-  final class CatalogEntry(val name: String, val query: QueryFn, sql: => String,
-      val corpus: CorpusUse) {
+  final class CatalogEntry(val name: String, val query: QueryFn, val plan: QueryFn,
+      sql: => String, val corpus: CorpusUse) {
     lazy val oracleSql: String = sql
     /** The query can run in this environment. */
     def runnable: Boolean = corpus == NoCorpus || RealMeta.available
@@ -5105,7 +4787,11 @@ items:
 
   private def entry(name: String, query: QueryFn, sql: => String,
       corpus: CorpusUse = NoCorpus): CatalogEntry =
-    new CatalogEntry(name, query, sql, corpus)
+    new CatalogEntry(name, query, query, sql, corpus)
+
+  /** A row run by a [[StreamGate]]: its stream starts in `query` only. */
+  private def streamEntry(name: String, gate: StreamGate, sql: => String): CatalogEntry =
+    new CatalogEntry(name, gate.run, gate.plan, sql, NoCorpus)
 
   /** Every query with its DuckDB oracle SQL; ordered for stable bench
     * diffs. Every row carries an oracle SQL. 21 rows need the reference
@@ -5224,14 +4910,15 @@ items:
     entry("ann_pipeline", annPipeline _, annPipelineSql),
     entry("skew_salted_agg", skewSaltedAgg _, skewSaltedSql),
     entry("events_window_agg", eventsWindowAgg _, eventsWindowSql),
-    entry("events_window_stream", eventsWindowStream _, eventsWindowSql),
-    entry("events_stream_sink", eventsStreamSink _, eventsWindowSql),
-    entry("events_stream_recovery", eventsStreamRecovery _, eventsWindowSql),
-    entry("events_dedup_stream", eventsDedupStream _, eventsDedupStreamSql),
+    streamEntry("events_window_stream", eventsWindowStream, eventsWindowSql),
+    streamEntry("events_stream_sink", eventsStreamSink, eventsWindowSql),
+    new CatalogEntry("events_stream_recovery", eventsStreamRecovery, streamRecoveryGate.plan,
+      eventsWindowSql, NoCorpus),
+    streamEntry("events_dedup_stream", eventsDedupStream, eventsDedupStreamSql),
     entry("events_sessionize", eventsSessionize _, eventsSessionizeSql),
     entry("events_session_window", eventsSessionWindow _, eventsSessionWindowSql),
-    entry("events_session_stream", eventsSessionStream _, eventsSessionWindowSql),
-    entry("events_sessionize_fmgws", eventsSessionizeFmgws _, eventsSessionizeFmgwsSql),
+    streamEntry("events_session_stream", eventsSessionStream, eventsSessionWindowSql),
+    streamEntry("events_sessionize_fmgws", eventsSessionizeFmgws, eventsSessionizeFmgwsSql),
     entry("asof_join", asofJoinQ _, asofJoinSql),
     entry("asof_join_forward", asofJoinForwardQ _, asofJoinForwardSql),
     entry("asof_join_nearest", asofJoinNearestQ _, asofJoinNearestSql),
@@ -5242,8 +4929,8 @@ items:
     entry("events_daily_active", eventsDailyActive _, eventsDailyActiveSql),
     entry("skew_salted_join", skewSaltedJoin _, skewSaltedJoinSql),
     entry("approx_distinct", approxDistinct _, approxDistinctSql),
-    entry("events_enrich_stream", eventsEnrichStream _, eventsEnrichStreamSql),
-    entry("events_stream_join", eventsStreamJoin _, eventsStreamJoinSql),
+    streamEntry("events_enrich_stream", eventsEnrichStream, eventsEnrichStreamSql),
+    streamEntry("events_stream_join", eventsStreamJoin, eventsStreamJoinSql),
     entry("tfidf_topk", tfidfTopK _, tfidfTopKSql),
     entry("ngram_topk", ngramTopK _, ngramTopKSql),
     entry("winnow_fingerprints", winnowFingerprintsQ _, winnowFingerprintsSql),

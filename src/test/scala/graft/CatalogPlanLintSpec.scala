@@ -13,6 +13,11 @@ import org.apache.spark.sql.execution.joins.{BroadcastNestedLoopJoinExec, Cartes
   * partition). Queries whose SEMANTICS are all-pairs against a small,
   * broadcast side declare themselves below with the reason.
   *
+  * Streaming rows are linted through [[Queries.CatalogEntry.plan]]: the
+  * unstarted streaming DataFrame must analyse, and the walk must start no
+  * streaming query (a streaming plan has no physical form before
+  * `start()`).
+  *
   * Rows tagged as needing the reference metadata corpus are planned only
   * where the corpus is present; the run log names the rows left out. An
   * untagged row that reads the corpus fails here, so the test also
@@ -52,9 +57,11 @@ class CatalogPlanLintSpec extends SparkSpec {
     if (unavailable.nonEmpty)
       info(s"not planned, reference metadata corpus absent (${unavailable.size}): " +
         unavailable.map(_.name).mkString(", "))
-    val violations = planned.flatMap { e =>
+    val (violations, started) = streamsStartedDuring(planned.flatMap { e =>
       val name = e.name
-      val nodes = planNodes(e.query(spark, sfDir))
+      val df = e.plan(spark, sfDir)
+      if (df.isStreaming) df.queryExecution.assertAnalyzed()
+      val nodes = if (df.isStreaming) Nil else planNodes(df)
       val joins = nodes.collect {
         case j: CartesianProductExec => s"$name: CartesianProduct"
         case j: BroadcastNestedLoopJoinExec if !intentionalNestedLoop(name) =>
@@ -68,7 +75,9 @@ class CatalogPlanLintSpec extends SparkSpec {
         }
       }.flatten
       joins ++ constShuffles
-    }
+    })
+    assert(started == 0 && spark.streams.active.isEmpty,
+      s"planning the catalog started $started streaming queries")
     assert(violations.isEmpty, s"plan lint violations:\n${violations.mkString("\n")}")
   }
 }

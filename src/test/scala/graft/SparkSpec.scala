@@ -9,6 +9,8 @@ import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
 import org.apache.spark.sql.execution.streaming.state.StateStore
+import org.apache.spark.sql.streaming.StreamingQueryListener
+import org.apache.spark.sql.streaming.StreamingQueryListener.{QueryProgressEvent, QueryStartedEvent, QueryTerminatedEvent}
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -26,7 +28,7 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   // The state-store maintenance task is JVM-wide and outlives the
-  // session (catalog rows and EventStreamsSpec run stateful streams):
+  // session (EventStreamsSpec and StreamGateSpec run stateful streams):
   // stop it with the session, or it keeps failing to reach the stopped
   // session's coordinator during later suites of the test JVM.
   override def afterAll(): Unit =
@@ -84,5 +86,21 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
       assert(ended.await(30, TimeUnit.SECONDS), "the end marker never reached the listener")
       (result, jobs.get)
     } finally sc.removeSparkListener(listener)
+  }
+
+  /** `body`'s result and the number of streaming queries it started.
+    * Spark posts a query's started event to the session's listeners
+    * synchronously inside `start()`, so the count is complete when `body`
+    * returns.
+    */
+  def streamsStartedDuring[T](body: => T): (T, Int) = {
+    val started = new AtomicInteger
+    val listener = new StreamingQueryListener {
+      override def onQueryStarted(e: QueryStartedEvent): Unit = started.incrementAndGet(): Unit
+      override def onQueryProgress(e: QueryProgressEvent): Unit = ()
+      override def onQueryTerminated(e: QueryTerminatedEvent): Unit = ()
+    }
+    spark.streams.addListener(listener)
+    try (body, started.get) finally spark.streams.removeListener(listener)
   }
 }
