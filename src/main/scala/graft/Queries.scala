@@ -2505,12 +2505,8 @@ items:
     */
   def minhashNearDups(s: SparkSession, dir: String): DataFrame = {
     val docs = T(s, dir, "documents")
-    val cands = Dedup.minHashCandidates(docs, bands = 32)
-    val a = docs.select(col("doc_id").as("id_a"), col("text").as("_ta"))
-    val b = docs.select(col("doc_id").as("id_b"), col("text").as("_tb"))
-    cands.join(a, Seq("id_a")).join(b, Seq("id_b"))
-      .select(col("id_a"), col("id_b"),
-        round(Dedup.ngramJaccard(col("_ta"), col("_tb")), 6).as("jaccard"))
+    Dedup.pairJaccard(docs, Dedup.minHashCandidates(docs, bands = 32))
+      .select(col("id_a"), col("id_b"), round(col("jaccard"), 6).as("jaccard"))
       .where(col("jaccard") >= 0.6)
       .orderBy("id_a", "id_b")
   }
@@ -2618,25 +2614,18 @@ items:
     * the whole corpus, and the row degenerates to exact equality with
     * `minhash_near_dups`.
     *
-    * Catalyst legitimately pushes the window predicate through the
-    * verify joins into the candidate join's two sides — so the PLAN
-    * restricts banding to sampled docs rather than post-filtering 5M
-    * docs' pairs. For MinHash this is semantics-preserving, not a gate
-    * weakening: banding recall is a PER-PAIR property (a pair collides
-    * iff its own two signatures agree on a band, independent of every
-    * other document — no cap, no bucket interaction), so the windowed
-    * sub-corpus pair set is identical either way. The full-corpus
-    * run's feasibility evidence stays with the unsampled
+    * The window filters verified pairs: the candidate and verify caches
+    * hold every pair of the full corpus. Banding recall is a PER-PAIR
+    * property (a pair collides iff its own two signatures agree on a
+    * band, independent of every other document — no cap, no bucket
+    * interaction), so the windowed pair set is the sub-corpus pair set.
+    * The full-corpus run's feasibility evidence stays with the unsampled
     * `minhash_near_dups` row, benched at every sf.
     */
   def minhashNearDupsSample(s: SparkSession, dir: String): DataFrame = {
     val docs = T(s, dir, "documents")
-    val cands = Dedup.minHashCandidates(docs, bands = 32)
-    val a = docs.select(col("doc_id").as("id_a"), col("text").as("_ta"))
-    val b = docs.select(col("doc_id").as("id_b"), col("text").as("_tb"))
-    cands.join(a, Seq("id_a")).join(b, Seq("id_b"))
-      .select(col("id_a"), col("id_b"),
-        round(Dedup.ngramJaccard(col("_ta"), col("_tb")), 6).as("jaccard"))
+    Dedup.pairJaccard(docs, Dedup.minHashCandidates(docs, bands = 32))
+      .select(col("id_a"), col("id_b"), round(col("jaccard"), 6).as("jaccard"))
       .where(col("jaccard") >= 0.6)
       .where(expr("(id_a div 100000000) % 50 = 0 AND (id_b div 100000000) % 50 = 0"))
       .orderBy("id_a", "id_b")
@@ -2876,20 +2865,13 @@ items:
     */
   def simhashNearDups(s: SparkSession, dir: String): DataFrame = {
     val docs = T(s, dir, "documents")
+    // SimHash's 8-bit band keys are unselective (~50 candidate pairs per
+    // doc at sf0.1); pairJaccard shingles each document once for all of
+    // its pairs
     val cands = Dedup.simHashCandidates(docs, maxDistance = 16, bands = 8,
       maxBucketSize = 1000)
-      .select("id_a", "id_b")
-    // SimHash's 8-bit band keys are unselective: ~1.5 M candidate pairs
-    // for 60 k docs at sf0.1 (~50 pairs per doc). Shingle each document
-    // ONCE (codegen'd kernel, sorted-distinct hash array) and verify
-    // each pair with a merge-walk jaccard — re-tokenizing both texts per
-    // pair via ngram_jaccard_text costs ~50× the shingle work per doc.
-    val sh = docs.select(col("doc_id"), Dedup.shingleHashes(col("text")).as("_sh"))
-    val a = sh.select(col("doc_id").as("id_a"), col("_sh").as("_sha"))
-    val b = sh.select(col("doc_id").as("id_b"), col("_sh").as("_shb"))
-    cands.join(a, Seq("id_a")).join(b, Seq("id_b"))
-      .select(col("id_a"), col("id_b"),
-        round(Dedup.jaccardHashes(col("_sha"), col("_shb")), 6).as("jaccard"))
+    Dedup.pairJaccard(docs, cands)
+      .select(col("id_a"), col("id_b"), round(col("jaccard"), 6).as("jaccard"))
       .where(col("jaccard") >= 0.6)
       .orderBy("id_a", "id_b")
   }
@@ -2934,16 +2916,9 @@ items:
   def nearDupsAutoQ(s: SparkSession, dir: String): DataFrame = {
     val docs = T(s, dir, "documents").where(col("doc_id") < 100000000L)
     val (route, cands) = Dedup.nearDupsAuto(docs)
-    // shingle each doc ONCE and share the frame across both verify-join
-    // sides (without the persist Spark re-runs the shingle kernel per
-    // side — gate cost masking operator cost in the bench)
-    val sh = docs.select(col("doc_id"), Dedup.shingleHashes(col("text")).as("_sh"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val a = sh.select(col("doc_id").as("id_a"), col("_sh").as("_sha"))
-    val b = sh.select(col("doc_id").as("id_b"), col("_sh").as("_shb"))
-    cands.join(a, Seq("id_a")).join(b, Seq("id_b"))
+    Dedup.pairJaccard(docs, cands)
       .select(lit(route).as("route"), col("id_a"), col("id_b"),
-        round(Dedup.jaccardHashes(col("_sha"), col("_shb")), 6).as("jaccard"))
+        round(col("jaccard"), 6).as("jaccard"))
       .where(col("jaccard") >= 0.6)
       .orderBy("id_a", "id_b")
   }
@@ -3014,8 +2989,7 @@ items:
       .select((col("doc_id") + lit(plantedShift)).as("doc_id"), col("text"))
     // the constructed corpus feeds THREE passes (dispatcher hashing,
     // verify shingling, the census readout) — persist it so the
-    // union-of-transforms is built once, and persist the shingle frame
-    // so the verify join's two sides share one shingle pass
+    // union-of-transforms is built once
     val full = corpus.unionByName(planted)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val cap = 10
@@ -3024,13 +2998,8 @@ items:
     // call here re-hashed the 24k-doc corpus a SECOND time to rebuild
     // the exact frame the dispatcher had just aggregated
     val (route, cands, census) = Dedup.nearDupsAutoDetail(full, maxBucketSize = cap)
-    val sh = full.select(col("doc_id"), Dedup.shingleHashes(col("text")).as("_sh"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val a = sh.select(col("doc_id").as("id_a"), col("_sh").as("_sha"))
-    val b = sh.select(col("doc_id").as("id_b"), col("_sh").as("_shb"))
-    val verified = cands.join(a, Seq("id_a")).join(b, Seq("id_b"))
-      .select(col("id_a"), col("id_b"),
-        round(Dedup.jaccardHashes(col("_sha"), col("_shb")), 6).as("jaccard"))
+    val verified = Dedup.pairJaccard(full, cands)
+      .select(col("id_a"), col("id_b"), round(col("jaccard"), 6).as("jaccard"))
       .where(col("jaccard") >= 0.6)
     val saturatedBuckets = census
       .agg(sum(when(col("_n") > 8L * cap, 1L).otherwise(0L)).as("_sat"))
@@ -3508,7 +3477,8 @@ items:
     */
   def dedupClusters(s: SparkSession, dir: String): DataFrame = {
     val docs = T(s, dir, "documents")
-    val pairs = minhashNearDups(s, dir).select("id_a", "id_b")
+    val pairs = Dedup.pairJaccard(docs, Dedup.minHashCandidates(docs, bands = 32))
+      .where(round(col("jaccard"), 6) >= 0.6)
     Dedup.duplicateClusters(docs.select("doc_id"), pairs)
       .orderBy("doc_id")
   }
@@ -3543,9 +3513,11 @@ items:
     */
   def dedupClustersSample(s: SparkSession, dir: String): DataFrame = {
     val docs = T(s, dir, "documents")
-      .where(expr("(doc_id div 100000000) % 50 = 0"))
-    val pairs = minhashNearDupsSample(s, dir).select("id_a", "id_b")
-    Dedup.duplicateClusters(docs.select("doc_id"), pairs)
+    val pairs = Dedup.pairJaccard(docs, Dedup.minHashCandidates(docs, bands = 32))
+      .where(round(col("jaccard"), 6) >= 0.6)
+      .where(expr("(id_a div 100000000) % 50 = 0 AND (id_b div 100000000) % 50 = 0"))
+    Dedup.duplicateClusters(docs.where(expr("(doc_id div 100000000) % 50 = 0")).select("doc_id"),
+      pairs)
       .orderBy("doc_id")
   }
 
@@ -3581,7 +3553,8 @@ items:
   def dedupBestQuality(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val docs = T(s, dir, "documents")
-    val pairs = minhashNearDups(s, dir).select("id_a", "id_b")
+    val pairs = Dedup.pairJaccard(docs, Dedup.minHashCandidates(docs, bands = 32))
+      .where(round(col("jaccard"), 6) >= 0.6)
     val clusters = Dedup.duplicateClusters(docs.select("doc_id"), pairs)
     val scored = docs.select(col("doc_id"), TextOps.qualityScore(col("text")).as("quality"))
     val win = Window.partitionBy("cluster_id").orderBy(col("quality").desc, col("doc_id").asc)
@@ -5068,5 +5041,7 @@ items:
     // the full 13+9-scan union + metadata-compiled projections — the
     // cost being tracked is plan compilation + single-pass execution,
     // not a cached-parquet read
-    "real_total_expenditure")
+    "real_total_expenditure",
+    // appended so the earlier rows keep their "mins" positions
+    "events_stream_recovery", "events_sessionize_fmgws")
 }

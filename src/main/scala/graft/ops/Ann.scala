@@ -51,9 +51,10 @@ object Ann {
   }
 
   /** Shared all-pairs spine of [[bruteForceTopK]] / [[int8TopK]]:
-    * `corpus` (idCol, _cvec) is scanned exactly once with no shuffle
-    * (scatter guards the single-file case); `q` (queryIdCol, _qvec)
-    * must be small — it is broadcast.
+    * `corpus` (idCol, _cvec) is scanned exactly once and no vector is
+    * shuffled (no scatter: on a single-file corpus it would shuffle
+    * every vector to spread the scoring); `q` (queryIdCol, _qvec) must
+    * be small — it is broadcast.
     */
   private def crossScoreTopK(
       corpus: DataFrame,
@@ -62,7 +63,7 @@ object Ann {
       idCol: String,
       queryIdCol: String,
   ): DataFrame = {
-    val scored = Dedup.scatter(corpus)
+    val scored = corpus
       .crossJoin(broadcast(q))
       .where(col(idCol) =!= col(queryIdCol))
       .select(col(queryIdCol), col(idCol).as("neighbor_id"),
@@ -475,7 +476,8 @@ object Ann {
     val fine = centroids
       .select(col(centroidIdCol).as("_fid"), col(centroidVecCol).as("_fvec"))
       .withColumn("_cell", assignCluster(col("_fvec"), coarse))
-    val probed = Dedup.scatter(corpus)
+    // no scatter, as in crossScoreTopK
+    val probed = corpus
       .select(col(idCol), col(vecCol),
         probeClusters(col(vecCol), coarse, probes).as("_probes"))
       .select(col(idCol), col(vecCol), explode(col("_probes")).as("_cell"))
@@ -517,7 +519,7 @@ object Ann {
     require(centroids.nonEmpty, "need at least one centroid")
     if (centroids.size <= kThreshold) {
       val best = nearestCentroid(col(vecCol), centroids)
-      Dedup.scatter(corpus).select(col(idCol), best.as("_best"))
+      corpus.select(col(idCol), best.as("_best"))
         .select(col(idCol), col("_best").getField("id").as("cluster"),
           col("_best").getField("sim").as("centroid_sim"))
     } else {
@@ -584,7 +586,8 @@ object Ann {
       vecCol: String = "embedding",
   ): DataFrame = {
     val scale = 1L << 24
-    Dedup.scatter(corpus)
+    // no scatter, as in crossScoreTopK
+    corpus
       // assignment in its own projection: a generator select strips the
       // struct-field aliases assignCluster's argmax relies on
       .select(assignCluster(col(vecCol), centroids).as("cluster"), col(vecCol))

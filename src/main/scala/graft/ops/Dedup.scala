@@ -88,10 +88,12 @@ object Dedup {
     }: _*)
   }
 
-  /** Candidate near-duplicate pairs via banded LSH. Returns distinct
-    * (idCol_a, idCol_b) with a < b plus the estimated Jaccard from
-    * signature agreement. The self-join is on (band, key) — an equi
-    * shuffle join on a high-cardinality key, the 100 TB-safe shape.
+  /** Candidate near-duplicate pairs via banded LSH: distinct
+    * (id_a, id_b) with id_a < id_b, persisted through `handle`. The
+    * self-join is on (band, key) — an equi shuffle join on a
+    * high-cardinality key, the 100 TB-safe shape. Unmanaged mode fills
+    * the pair cache at once and releases the full-corpus signature
+    * cache behind it.
     */
   def minHashCandidates(
       df: DataFrame,
@@ -101,8 +103,14 @@ object Dedup {
       bands: Int = 16,
       k: Int = 3,
       handle: StorageHandle = StorageHandle.unmanaged,
-  ): DataFrame =
-    minHashPairs(df, textCol, idCol, numHashes, bands, k, handle).select("id_a", "id_b")
+  ): DataFrame = {
+    val (sigs, candidates) = minHashBanding(df, textCol, idCol, numHashes, bands, k, handle)
+    if (!handle.managed) {
+      candidates.count()
+      sigs.unpersist()
+    }
+    candidates
+  }
 
   /** Candidate pairs with the MinHash Jaccard estimate (fraction of
     * agreeing signature positions).
@@ -116,8 +124,38 @@ object Dedup {
       k: Int = 3,
       handle: StorageHandle = StorageHandle.unmanaged,
   ): DataFrame = {
-    // persist signatures: computed once, reused by both join sides and
-    // the estimate join (one small row per document — the thing you'd
+    val (sigs, candidates) = minHashBanding(df, textCol, idCol, numHashes, bands, k, handle)
+    // signature agreement, statically unrolled (numHashes is a plan-time
+    // constant): the aggregate(zip_with(...)) form runs BOTH lambdas
+    // interpreted per surviving pair — this chain of element_at
+    // comparisons stays in whole-stage codegen
+    val agree = (0 until numHashes).map { i =>
+      when(element_at(col("_f_a"), i + 1) === element_at(col("_f_b"), i + 1), 1L)
+        .otherwise(0L)
+    }.reduce(_ + _)
+    // only for surviving distinct pairs, over signatures pruned to their
+    // participants. Unmanaged mode releases the FULL-CORPUS signature
+    // cache as soon as the pair-bounded one is filled (the largest cached
+    // intermediate — same discipline as Ann.cosineNearDupPairs); a
+    // managed handle stays lazy and defers every release to the caller.
+    onBothSides(candidates, sigs, col("_sig"), idCol, handle, releaseDocs = true)
+      .select(col("id_a"), col("id_b"), (agree / lit(numHashes.toDouble)).as("est_jaccard"))
+  }
+
+  /** The persisted signatures `(idCol, _sig)` and distinct candidate
+    * pairs `(id_a, id_b)` of [[minHashCandidates]] and [[minHashPairs]].
+    */
+  private def minHashBanding(
+      df: DataFrame,
+      textCol: String,
+      idCol: String,
+      numHashes: Int,
+      bands: Int,
+      k: Int,
+      handle: StorageHandle,
+  ): (DataFrame, DataFrame) = {
+    // persist signatures: computed once, reused by banding and the
+    // estimate join (one small row per document — the thing you'd
     // write to disk at corpus scale)
     val sigs = handle.persist(minHashSignatures(df, textCol, idCol, numHashes, k))
     // candidate generation on SLIM rows (id, band, key) only: band
@@ -126,36 +164,61 @@ object Dedup {
     val banded = sigs.select(col(idCol),
       explode(bandKeys(col("_sig"), numHashes, bands)).as("_band"))
       .select(col(idCol), col("_band.band").as("_b"), col("_band.key").as("_k"))
-    // persist: the pair set feeds both the participant-id prune and the
-    // final estimate join
-    val candidates = handle.persist(bandSelfJoin(banded, idCol, Seq("_b", "_k"))
-      .select("id_a", "id_b").distinct())
-    // signature agreement only for surviving distinct pairs: prune the
-    // cached signatures to pair participants. Unmanaged mode materializes
-    // the pair-bounded result and releases the FULL-CORPUS signature
-    // cache eagerly (the largest cached intermediate — same discipline as
-    // Ann.cosineNearDupPairs); a managed handle stays lazy and defers
-    // every release to the caller.
-    val pairIds = candidates.select(col("id_a").as(idCol))
-      .union(candidates.select(col("id_b").as(idCol))).distinct()
-    val pruned = handle.persist(sigs.join(pairIds, Seq(idCol), "left_semi"))
-    if (!handle.managed) {
-      pruned.count()
-      sigs.unpersist()
-    }
-    val sa = pruned.select(col(idCol).as("id_a"), col("_sig").as("_sig_a"))
-    val sb = pruned.select(col(idCol).as("id_b"), col("_sig").as("_sig_b"))
-    // static unrolling (numHashes is a plan-time constant): the
-    // aggregate(zip_with(...)) form runs BOTH lambdas interpreted per
-    // surviving pair — this chain of element_at comparisons stays in
-    // whole-stage codegen
-    val agree = (0 until numHashes).map { i =>
-      when(element_at(col("_sig_a"), i + 1) === element_at(col("_sig_b"), i + 1), 1L)
-        .otherwise(0L)
-    }.reduce(_ + _)
-    candidates.join(sa, Seq("id_a")).join(sb, Seq("id_b"))
-      .select(col("id_a"), col("id_b"), (agree / lit(numHashes.toDouble)).as("est_jaccard"))
+    // persist: the pair set feeds the participant prune and the join
+    // that follow it
+    (sigs, handle.persist(bandSelfJoin(banded, idCol, Seq("_b", "_k"))
+      .select("id_a", "id_b").distinct()))
   }
+
+  /** `pairs` (id_a, id_b, …) with a per-document `feature` of `docs` joined
+    * onto both sides as `_f_a` / `_f_b` — the verify tail behind every
+    * candidate filter. `docs` is pruned to the pair participants before
+    * `feature` is computed, and the pruned frame is persisted through
+    * `handle`, so each participant is featurized once for both sides and
+    * non-participants never are. `pairs` is persisted too: it feeds both
+    * the participant prune and the join. With an unmanaged handle and
+    * `releaseDocs`, the pruned cache is filled at once and `docs` — then
+    * a full-corpus cache — released.
+    */
+  private def onBothSides(
+      pairs: DataFrame,
+      docs: DataFrame,
+      feature: Column,
+      idCol: String,
+      handle: StorageHandle,
+      releaseDocs: Boolean = false,
+  ): DataFrame = {
+    val kept = handle.persist(pairs)
+    val ids = kept.select(col("id_a").as(idCol))
+      .union(kept.select(col("id_b").as(idCol))).distinct()
+    val pruned = handle.persist(
+      docs.join(ids, Seq(idCol), "left_semi").select(col(idCol), feature.as("_f")))
+    if (releaseDocs && !handle.managed) {
+      pruned.count()
+      docs.unpersist()
+    }
+    kept
+      .join(pruned.select(col(idCol).as("id_a"), col("_f").as("_f_a")), Seq("id_a"))
+      .join(pruned.select(col(idCol).as("id_b"), col("_f").as("_f_b")), Seq("id_b"))
+  }
+
+  /** Exact n-gram Jaccard of every candidate pair: `(id_a, id_b,
+    * jaccard)` for each row of `pairs` (id_a, id_b) whose two documents
+    * are in `df` — the verify step behind every near-dup filter. Each
+    * participating document is shingled once ([[shingleHashes]], k = 3),
+    * its shingles persisted through `handle`, and each pair scored with
+    * the [[jaccardHashes]] merge walk; documents in no pair are never
+    * shingled. A pair listed twice is scored twice.
+    */
+  def pairJaccard(
+      df: DataFrame,
+      pairs: DataFrame,
+      textCol: String = "text",
+      idCol: String = "doc_id",
+      handle: StorageHandle = StorageHandle.unmanaged,
+  ): DataFrame =
+    onBothSides(pairs, df, shingleHashes(col(textCol)), idCol, handle)
+      .select(col("id_a"), col("id_b"), jaccardHashes(col("_f_a"), col("_f_b")).as("jaccard"))
 
   /** 64-bit SimHash per document: bit i of the result is the sign of
     * Σ_tokens (bit i of the token hash ? +1 : -1). One native kernel
@@ -169,10 +232,6 @@ object Dedup {
   ): DataFrame =
     scatter(df).select(col(idCol),
       call_function("simhash_text", col(textCol)).as("_sh"))
-
-  /** Hamming distance between two 64-bit SimHashes. */
-  def hammingDistance(a: Column, b: Column): Column =
-    bit_count(a.bitwiseXOR(b))
 
   /** The `bands` `width`-bit slices of a 64-bit signature, lowest slice
     * first: `(sig >> b·width) & mask` — the band keys of every banded
@@ -653,27 +712,22 @@ object Dedup {
   }
 
   /** Exact n-gram Jaccard similarity between two text columns —
-    * |A∩B| / |A∪B| over distinct k-shingles. Use to verify LSH
-    * candidates; O(pair count), not O(n²). Resolves to the native
-    * kernel (graft.plans.NgramJaccardText) — the array_intersect-over-
-    * HOF-shingles formulation re-shingles interpreted per pair and was
-    * ~40× slower at sf0.1.
+    * |A∩B| / |A∪B| over distinct k-shingles, per row. To verify
+    * candidate pairs use [[pairJaccard]], which shingles each document
+    * once instead of once per pair.
     */
   def ngramJaccard(textA: Column, textB: Column, k: Int = 3): Column =
-    call_function("ngram_jaccard_text", textA, textB, lit(k))
+    jaccardHashes(shingleHashes(textA, k), shingleHashes(textB, k))
 
   /** The sorted-distinct k-shingle hash array of a text — the
-    * precomputed verify-side input for [[jaccardHashes]]. One codegen'd
-    * kernel call per row (graft.plans.ShingleText).
+    * verify-side input for [[jaccardHashes]]. One codegen'd kernel call
+    * per row (graft.plans.ShingleText).
     */
   def shingleHashes(text: Column, k: Int = 3): Column =
     call_function("shingle_hashes", text, lit(k))
 
   /** Exact Jaccard over two [[shingleHashes]] arrays: a merge walk, no
-    * per-pair tokenization. Equal by construction to
-    * `ngramJaccard(textA, textB, k)` on the source texts — use this when
-    * documents participate in many candidate pairs, so each document is
-    * shingled once instead of once per pair.
+    * per-pair tokenization (graft.plans.JaccardHashes).
     */
   def jaccardHashes(a: Column, b: Column): Column =
     call_function("jaccard_hashes", a, b)

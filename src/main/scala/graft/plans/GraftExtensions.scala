@@ -103,9 +103,6 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       }
       SlidingWindows(a(0), positiveInt(a(1), "k"), sep)
     },
-    fn("ngram_jaccard_text", classOf[NgramJaccardText], "a", "b", "k") { a =>
-      NgramJaccardText(a(0), a(1), positiveInt(a(2), "k"))
-    },
     fn("simhash_text", classOf[SimHashText], "text")(a => SimHashText(a(0))),
     fn("vec_dot", classOf[VecDot], "a", "b")(a => VecDot(a(0), a(1))),
     fn("shingle_hashes", classOf[ShingleText], "text", "k") { a =>

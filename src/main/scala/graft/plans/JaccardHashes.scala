@@ -11,15 +11,14 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, LongType}
   * 0.0 — but note [[ShingleText]] never emits an empty array: token-free
   * texts carry the seed shingle, so through the text kernels two
   * token-free documents score 1.0 (deliberately: empty/placeholder rows
-  * are mutual duplicates for dedup purposes, same convention as
-  * [[NgramJaccardText]]).
+  * are mutual duplicates for dedup purposes).
   *
-  * This is the verify-side complement of `shingle_hashes`: candidate
+  * This is the verify-side complement of [[ShingleText]]: candidate
   * pipelines with many pairs per document (SimHash's narrow band keys
   * produce ~50 candidate pairs per doc at sf0.1) shingle each document
-  * ONCE at the corpus pass and verify pairs with this O(|a|+|b|) walk,
-  * instead of re-running the full tokenize+hash+sort kernel twice
-  * per candidate pair via `ngram_jaccard_text`.
+  * ONCE and verify pairs with this O(|a|+|b|) walk, instead of
+  * re-running the full tokenize+hash+sort kernel twice per candidate
+  * pair (`graft.ops.Dedup.pairJaccard`).
   */
 final case class JaccardHashes(left: Expression, right: Expression)
     extends BinaryExpression with ExpectsInputTypes {

@@ -7,9 +7,9 @@ import org.apache.spark.unsafe.types.UTF8String
 
 /** Native shingle extraction: the DISTINCT [[TextHash]] k-shingle
   * hashes of a text, ascending, as array<long> — one kernel call per row
-  * inside whole-stage codegen. `ngram_jaccard_text(a, b, k)` merge-walks
-  * the same arrays, so `shingle_hashes(a) ∩ shingle_hashes(b)` counts
-  * exactly what it measures.
+  * inside whole-stage codegen. [[JaccardHashes]] merge-walks two of
+  * these arrays; `graft.ops.Dedup.pairJaccard` shingles each candidate
+  * document once and scores its pairs that way.
   *
   * This exists because a higher-order-function shingle formulation
   * evaluates INTERPRETED (LambdaFunction is CodegenFallback): an explode

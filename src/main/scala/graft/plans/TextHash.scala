@@ -5,7 +5,7 @@ import org.apache.spark.unsafe.Platform
 import org.apache.spark.unsafe.types.UTF8String
 
 /** How the text kernels ([[MinHashText]], [[SimHashText]],
-  * [[ShingleText]], [[NgramJaccardText]]) turn text into hashes, coded
+  * [[ShingleText]]) turn text into hashes, coded
   * once: exact filter-then-verify pipelines depend on the filter and the
   * verify step hashing shingles the same way.
   *

@@ -464,7 +464,11 @@ class AnnSpec extends SparkSpec {
   }
 
   test("frame route carries no k-proportional literal in its plan; the flat route does") {
-    val df = vecs(50)
+    // parquet-backed: over an in-memory relation the optimizer evaluates
+    // the flat route's projection itself, and no kernel is left in the plan
+    val path = tempDir("graft_ann_literal").toString + "/corpus"
+    vecs(50).write.parquet(path)
+    val df = spark.read.parquet(path)
     val k = 40
     val ctrs = testCentroids(k)
     val flatPlanMax = maxPlanBakedElems(Ann.assignClustersAuto(df, ctrs, kThreshold = 4096))
@@ -520,5 +524,31 @@ class AnnSpec extends SparkSpec {
     assert(dist == lit0,
       s"only-literal ${(lit0 -- dist).take(3)}; only-distributed ${(dist -- lit0).take(3)}")
     assert(lit0.size < corpus.count(), "fixture must actually drop planted duplicates")
+  }
+
+  test("no embedding vector enters a shuffle exchange on a single-file corpus (top-k, assignment, k-means)") {
+    // a one-file corpus has fewer partitions than cores, which is where a
+    // round-robin scatter would shuffle every (id, embedding) row
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    val path = tempDir("graft_ann_onefile").toString + "/corpus"
+    vecs(60).coalesce(1).write.parquet(path)
+    val corpus = spark.read.parquet(path)
+    assert(corpus.rdd.getNumPartitions < spark.sparkContext.defaultParallelism)
+    def vectorExchanges(df: DataFrame): Seq[String] =
+      planNodes(df).collect {
+        case e: ShuffleExchangeExec if e.output.exists(_.dataType.simpleString.startsWith("array")) =>
+          e.output.map(a => s"${a.name}:${a.dataType.simpleString}").mkString(",")
+      }
+    val ctrs = testCentroids(12)
+    val plans = Seq(
+      "bruteForceTopK" -> Ann.bruteForceTopK(corpus, corpus.where(col("vec_id") < 2), k = 3),
+      "int8TopK" -> Ann.int8TopK(corpus, corpus.where(col("vec_id") < 2), k = 3),
+      "assignClustersAuto (flat)" -> Ann.assignClustersAuto(corpus, ctrs, kThreshold = 4096),
+      "assignClustersAuto (frame)" -> Ann.assignClustersAuto(corpus, ctrs, kThreshold = 4),
+      "kmeansMeans" -> Ann.kmeansMeans(corpus, ctrs.map(_._2).toArray))
+    for ((name, df) <- plans) assert(df.count() > 0, s"$name returned nothing")
+    val offenders = plans.map { case (name, df) => name -> vectorExchanges(df) }.filter(_._2.nonEmpty)
+    assert(offenders.isEmpty, s"vectors shuffled: ${offenders.mkString("; ")}")
   }
 }

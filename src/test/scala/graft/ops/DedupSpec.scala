@@ -353,6 +353,65 @@ class DedupSpec extends SparkSpec {
     assert(j > 0.7 && j < 1.0)
   }
 
+  test("pairJaccard: set Jaccard of the shingle arrays per listed pair; only participants are shingled") {
+    import spark.implicits._
+    import org.apache.spark.sql.execution.columnar.InMemoryRelation
+    // earlier tests leave session-lifetime caches; the count below reads
+    // only this test's
+    spark.catalog.clearCache()
+    val rnd = new scala.util.Random(13)
+    val words = Vector("alpha", "beta", "gamma", "delta", "eps", "zeta", "eta", "theta", "iota")
+    val corpus = (1 to 40).map { i =>
+      (i.toLong, Seq.fill(2 + rnd.nextInt(12))(words(rnd.nextInt(words.size))).mkString(" "))
+    }.toDF("doc_id", "text")
+    // (1, 2) listed twice; doc 100 is not in the corpus; docs 13..39 are
+    // in no pair
+    val listed = Seq((1L, 2L), (1L, 2L), (3L, 7L), (5L, 9L), (2L, 9L), (10L, 11L),
+      (12L, 40L), (7L, 100L)) ++ (1 to 20).map(_ => (1L + rnd.nextInt(12), 1L + rnd.nextInt(12)))
+    val shingles = corpus.select(col("doc_id"), shingleHashes(col("text"))).collect()
+      .map(r => r.getLong(0) -> r.getSeq[Long](1).toSet).toMap
+    val expected = listed.filter { case (a, b) => shingles.contains(a) && shingles.contains(b) }
+      .map { case (a, b) =>
+        val (x, y) = (shingles(a), shingles(b))
+        (a, b, (x & y).size.toDouble / (x | y).size)
+      }.sorted
+    val out = pairJaccard(corpus, listed.toDF("id_a", "id_b"))
+    val got = out.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq.sorted
+    assert(got == expected)
+    // the shingle cache, counted as it filled: one row per distinct
+    // participant in the corpus, not one per corpus document
+    val cachedRows = out.queryExecution.withCachedData
+      .collect { case r: InMemoryRelation if r.output.exists(_.name.startsWith("_f")) => r.cacheBuilder }
+      .distinct
+      .filter(_.isCachedColumnBuffersLoaded)
+      .map(_.rowCountStats.value)
+    val participants = listed.flatMap { case (a, b) => Seq(a, b) }.toSet.filter(shingles.contains)
+    assert(cachedRows == Seq(participants.size.toLong), s"shingle cache rows $cachedRows")
+    assert(participants.size < shingles.size)
+    // a managed handle owns every cache the operator pinned
+    spark.catalog.clearCache()
+    val handle = StorageHandle()
+    assert(pairJaccard(corpus, listed.toDF("id_a", "id_b"), handle = handle).count() == expected.size)
+    handle.release(blocking = true)
+    assert(spark.sparkContext.getPersistentRDDs.isEmpty, "release() must drop the pair and shingle caches")
+  }
+
+  test("no main source but ops/Dedup.scala scores Jaccard") {
+    import java.nio.file.{Files, Paths}
+    import scala.jdk.CollectionConverters._
+    import scala.util.Using
+    val main = Paths.get(sys.props("user.dir"), "src", "main")
+    val files = Using.resource(Files.walk(main))(_.iterator().asScala
+      .filter(p => Files.isRegularFile(p) && p.toString.endsWith(".scala")).toList)
+    val home = main.resolve("scala/graft/ops/Dedup.scala")
+    assert(files.contains(home), s"$home not found under $main")
+    // a call of the Column helper or of the SQL function; the function's
+    // registration row in GraftExtensions names it without calling it
+    val call = """jaccardHashes\s*\(|jaccard_hashes\s*\(|call_function\(\s*"jaccard_hashes"""".r
+    val offenders = files.filter(p => p != home && call.findFirstIn(Files.readString(p)).isDefined)
+    assert(offenders.isEmpty, s"verify pairs with Dedup.pairJaccard instead: ${offenders.mkString(", ")}")
+  }
+
   test("near-dup auto-routing: cool corpus routes simhash, saturated routes minhash") {
     import spark.implicits._
     // cool: 4 docs — every census bucket is tiny at any positive cap

@@ -127,7 +127,7 @@ class KernelSpec extends SparkSpec {
     * lowercase is ASCII k, but the byte-level tokenizer keeps its three
     * bytes as token bytes), the empty string, a whitespace-only string,
     * and texts with fewer than, exactly and more than k = 3 tokens.
-    * `b` is the partner text of `ngram_jaccard_text(a, b, 3)`.
+    * `b` is the partner text of the Jaccard column.
     */
   private val pinRows = Seq(
     (1, "The Quick, BROWN fox -- jumps over the lazy dog!!", "the quick brown fox jumps over a lazy dog"),
@@ -143,9 +143,10 @@ class KernelSpec extends SparkSpec {
 
   /** id -> (simhash_text(a), xxhash64(minhash_text(a, 64, 3)),
     * xxhash64(shingle_hashes(a, 3)), size(shingle_hashes(a, 3)),
-    * ngram_jaccard_text(a, b, 3)). Measured before the kernels shared
-    * one text-hash core; any change here changes every stored
-    * signature. */
+    * jaccard_hashes(shingle_hashes(a, 3), shingle_hashes(b, 3))).
+    * Measured before the kernels shared one text-hash core (the Jaccard
+    * column then through a per-pair text kernel); any change here
+    * changes every stored signature. */
   private val pinned: Map[Int, (Long, Long, Long, Int, Double)] = Map(
     1 -> (5157910130007421081L, -1820110402592627152L, -267627422666032005L, 7, 0.4),
     2 -> (5631218898600577L, -5109123150871578928L, -3965786100782625471L, 4, 0.0),
@@ -169,7 +170,8 @@ class KernelSpec extends SparkSpec {
           xxhash64(call_function("minhash_text", col("a"), lit(64), lit(3))),
           xxhash64(call_function("shingle_hashes", col("a"), lit(3))),
           size(call_function("shingle_hashes", col("a"), lit(3))),
-          call_function("ngram_jaccard_text", col("a"), col("b"), lit(3)))
+          call_function("jaccard_hashes", call_function("shingle_hashes", col("a"), lit(3)),
+            call_function("shingle_hashes", col("b"), lit(3))))
         val got = out.collect().map(r => r.getInt(0) ->
           (r.getLong(1), r.getLong(2), r.getLong(3), r.getInt(4), r.getDouble(5))).toMap
         assert(got == pinned, s"$mode path:\n${got.toSeq.sortBy(_._1).mkString("\n")}")
