@@ -153,11 +153,18 @@ object Bench {
     // first query still carries whatever ran just before the bench (an
     // `sbt compile` alone tripped a cpus/4 gate), so it cannot decide
     // how many runs a query gets.
+    // whole-stage classes compiled over each query's timed runs: Spark's
+    // codegen cache holds 100 classes, so a query whose classes do not fit
+    // compiles again on every run
+    val compileCount = org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME
+    val compiles = scala.collection.mutable.LinkedHashMap.empty[String, Long]
     val results: Seq[(String, (Seq[Double], Seq[Double]))] = names.map { name =>
       val runs = scala.collection.mutable.ArrayBuffer.empty[Double]
       val loads = scala.collection.mutable.ArrayBuffer.empty[Double]
       def run(): Unit = { runs += runOnce(name); loads += osBean.getSystemLoadAverage }
+      val compiled0 = compileCount.getCount
       for (_ <- 1 to 3) run()
+      compiles(name) = compileCount.getCount - compiled0
       System.err.println(f"[bench] $name%-24s ${runs.min}%8.2fs  (runs: ${runs.map(r => f"$r%.2f").mkString(", ")}; load: ${loads.map(l => f"$l%.1f").mkString(", ")})")
       name -> (runs.toSeq, loads.toSeq)
     }
@@ -179,12 +186,19 @@ object Bench {
     }
     def ctlJson(m: Iterable[(String, Double)]) =
       ListMap(m.toSeq.map { case (k, v) => k -> fixed(v, 3) }: _*)
+    // drift across the run itself: the geometric mean of end/start per
+    // control, which needs no baseline for this host
+    val driftRun = {
+      val rs = controlsEnd.toSeq.flatMap { case (k, v) => controlsStart.get(k).filter(_ > 0).map(v / _) }
+      if (rs.isEmpty) None else Some(math.exp(rs.map(math.log).sum / rs.size))
+    }
     val ctl = ListMap(
       "start" -> ctlJson(controlsStart),
       "end" -> ctlJson(controlsEnd),
       "baseline" -> ctlJson(controlBaseline),
       "drift_start" -> drift(controlsStart).map(fixed(_, 3)),
-      "drift_end" -> drift(controlsEnd).map(fixed(_, 3)))
+      "drift_end" -> drift(controlsEnd).map(fixed(_, 3)),
+      "drift_run" -> driftRun.map(fixed(_, 3)))
     spark.stop()
     // Full artifact first (complete per-query mins + raw runs + load
     // samples) for any consumer capturing whole stdout...
@@ -193,6 +207,7 @@ object Bench {
       "queries" -> byQuery((runs, _) => fixed(runs.min, 3)),
       "runs" -> byQuery((runs, _) => runs.map(fixed(_, 3))),
       "load" -> byQuery((_, loads) => loads.map(fixed(_, 2))),
+      "compiles" -> ListMap(compiles.toSeq: _*),
       "controls" -> ctl,
       "load_avg_before" -> loadBefore, "load_avg_after" -> loadAfter,
       "errors" -> errors,

@@ -69,7 +69,7 @@ object Queries {
     def addAttribute(df: DataFrame, settings: Meta): DataFrame = df
   }
   private def ctx(year: Int, table: String): Pipeline.Context =
-    Pipeline.Context(year, table, NoProvider)
+    Pipeline.Context(Seq(year), table, NoProvider)
 
   // ------------------------------------------------------------------ A/B/C
 
@@ -417,7 +417,7 @@ object Queries {
     val df = T(s, dir, "orders").select(col("o_orderkey").as("OrderKey"),
       col("o_custkey").as("CustKey"), cents(col("o_totalprice")).as("Total_Cents"))
     Pipeline.run(df, Seq(Pipeline.Join("customer", Seq("CustKey"))),
-      Pipeline.Context(1400, "orders", provider))
+      Pipeline.Context(Seq(1400), "orders", provider))
   }
 
   private val c12Sql = s"""

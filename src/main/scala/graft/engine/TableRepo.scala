@@ -4,7 +4,10 @@ import scala.util.control.NonFatal
 
 import graft.meta._
 import graft.ops._
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.ops.Pipeline.EraYear
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.execution.datasources.{FileStatusCache, HadoopFsRelation, InMemoryFileIndex, LogicalRelation, PartitionSpec}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 
@@ -20,15 +23,24 @@ import org.apache.spark.sql.types.StructType
   *     (the reference's pd.concat == UNION ALL with null-fill), then this
   *     table's `instructions` pipeline.
   *
-  * Everything stays ONE Catalyst plan per (table, year) — the reference's
+  * Everything stays ONE Catalyst plan per (table, era) — the reference's
   * eager step-by-step materialization becomes lazy plan construction, so
   * predicate pushdown and column pruning reach the leaf scans of the whole
-  * DAG. Multi-year = union of per-year plans (partition-prunable when the
-  * storage layout is Year-partitioned).
+  * DAG. An *era* is a maximal set of the requested years whose whole
+  * build resolves identically: the same resolved schema for the table and
+  * every table it reaches, the same clean spec for every original table,
+  * the same weights source and the same E18 availability. A multi-year
+  * table is one plan per era, unioned, with `Year` carried as data
+  * ([[Pipeline.EraYear]]): an era's raw files are read as one relation when
+  * they can be, each row's year taken from its file. A table whose steps
+  * do not keep years apart ([[Pipeline.yearsApart]]) is built once per year
+  * within its era, as a union.
   *
   * The A9 result cache persists a built table as parquet keyed by a
   * dependency fingerprint (schema tree + dependency sizes), mirroring
-  * data_engine.py:515-610's size-based invalidation.
+  * data_engine.py:515-610's size-based invalidation. There is one entry
+  * per (table, year); an era writes its entries in one job and reads them
+  * as one scan.
   *
   * Building a plan starts no Spark job: the per-year metadata decorators
   * read the survey years off the plan ([[YearLineage]]), and A9 reads
@@ -63,13 +75,13 @@ final case class RepoConfig(
     cacheBucketKeys: Seq[String] = Seq.empty,
     cacheBucketCount: Int = 16,
     /** Driver-side parallelism for multi-year plan BUILDS (C17): the
-      * per-year metadata compile + analysis chains are independent, and
+      * metadata compile + analysis chains of a table's eras (and of the
+      * years of a table built once per year) are independent, and
       * building them sequentially makes the driver the bottleneck at
-      * archive width (~0.9s/year × 39 years measured). Builds are pure
-      * plan construction (any embedded actions — distinct-years probes,
-      * A9 cache writes — are per-year and thread-safe in Spark), so
-      * concurrency changes wall-clock only, never the composed plan.
-      * 1 disables.
+      * archive width. Builds are pure plan construction (any embedded
+      * actions — distinct-years probes, A9 cache writes — are per-era and
+      * thread-safe in Spark), so concurrency changes wall-clock only,
+      * never the composed plan. 1 disables.
       */
     buildParallelism: Int = math.min(8, Runtime.getRuntime.availableProcessors()),
 )
@@ -112,27 +124,101 @@ class TableRepo(
     YearParser.tableYearPairs(Seq(name), years, config.availability).map(_._2)
 
   def table(name: String, years: Seq[Int]): DataFrame = {
-    val parts = buildYears(availableYears(name, years))(y => load(name, y))
+    val parts = buildAll(eras(name, availableYears(name, years))) { era =>
+      load(name, era).map(df => if (era.size == 1) df else df.drop(EraYear))
+    }
     require(parts.nonEmpty, s"table $name has no data for years $years")
     CleanOps.unionAll(parts)
   }
 
-  /** Year-order-preserving, optionally parallel per-year build (see
-    * [[RepoConfig.buildParallelism]]). Small requests stay sequential —
-    * pool handoff costs more than it saves under ~4 years.
+  /** Order-preserving, optionally parallel builds (see
+    * [[RepoConfig.buildParallelism]]).
     */
-  private def buildYears(years: Seq[Int])(build: Int => Option[DataFrame]): Seq[DataFrame] =
-    if (years.size < 4 || config.buildParallelism <= 1) years.flatMap(build(_))
+  private def buildAll[A, B](items: Seq[A])(build: A => Option[B]): Seq[B] =
+    if (items.size < 2 || config.buildParallelism <= 1) items.flatMap(build(_))
     else {
       import scala.collection.parallel.CollectionConverters._
       import scala.collection.parallel.ForkJoinTaskSupport
-      val par = years.par
+      val par = items.par
       val pool = new java.util.concurrent.ForkJoinPool(config.buildParallelism)
       try {
         par.tasksupport = new ForkJoinTaskSupport(pool)
         par.map(build(_)).seq.flatten
       } finally pool.shutdown()
     }
+
+  // metadata is immutable per repo, so each (table, year) resolves once
+  private val resolvedSchemas = new java.util.concurrent.ConcurrentHashMap[(String, Int), Meta]()
+  private val cleanSpecs =
+    new java.util.concurrent.ConcurrentHashMap[(String, Int), CleanOps.TableCleanSpec]()
+
+  /** `name`'s schema entry resolved for `year`; MNull when it has none. */
+  private def resolved(name: String, year: Int): Meta =
+    resolvedSchemas.computeIfAbsent((name, year), _ => schemaMeta.get(name)
+      .map(m => new VersionResolver(m, year, config.resolver).getVersion).getOrElse(MNull))
+
+  private def cleanSpec(name: String, year: Int): CleanOps.TableCleanSpec =
+    cleanSpecs.computeIfAbsent((name, year), _ =>
+      CleanOps.compileSpec(tablesMeta(name), year, config.resolver))
+
+  private def tableList(tableSchema: Meta): Seq[String] =
+    tableSchema.get("table_list") match {
+      case None              => Seq.empty
+      case Some(MStr(t))     => Seq(t)
+      case Some(MList(ts))   => ts.map(_.asStr)
+      case other             => throw new IllegalArgumentException(s"bad table_list: $other")
+    }
+
+  private def steps(tableSchema: Meta): Vector[Pipeline.Step] =
+    Pipeline.compile(tableSchema.get("instructions").getOrElse(MNull))
+
+  /** `name` and every table it reaches through `next`, each once. */
+  private def reached(name: String)(next: String => Seq[String]): Seq[String] = {
+    val seen = scala.collection.mutable.LinkedHashSet[String](name)
+    var frontier = next(name)
+    while (frontier.nonEmpty) {
+      frontier.foreach(seen.add)
+      // prune against seen: a diamond-shaped DAG would otherwise
+      // multiply duplicate entries per level (exponential walk), and a
+      // cyclic table_list would never terminate
+      frontier = frontier.flatMap(next).distinct.filterNot(seen.contains)
+    }
+    seen.toSeq
+  }
+
+  /** What `name`'s build for `year` depends on: equal keys, equal builds
+    * but for the year. It covers the resolved schema of every table the
+    * build reaches (`table_list` and `join`), the clean spec of every
+    * original one, their E18 availability, and the year's weights source.
+    */
+  private def eraKey(name: String, year: Int): Seq[Any] =
+    reached(name) { t =>
+      val m = resolved(t, year)
+      tableList(m) ++ steps(m).collect { case Pipeline.Join(j, _) => j }
+    }.map { t =>
+      (t, resolved(t, year), if (originalTables(t)) Some(cleanSpec(t, year)) else None,
+        availableYears(t, Seq(year)).nonEmpty)
+    } :+ (year <= config.externalWeightsYearMax)
+
+  /** `years` grouped into eras, in order of first appearance. */
+  private def eras(name: String, years: Seq[Int]): Seq[Seq[Int]] = {
+    val keyed = years.map(y => eraKey(name, y) -> y)
+    keyed.map(_._1).distinct.map(k => keyed.collect { case (`k`, y) => y })
+  }
+
+  /** Whether an era can build `name` once for all its years: `Some` of
+    * whether `Year` then holds each row's year, or `None` when the table
+    * is built once per year. A table's `Year` is taken to hold it only
+    * when every table in its `table_list` can be built once too. A
+    * bucketed A9 entry is one catalog table per year, so a table cached
+    * in that layout is built per year.
+    */
+  private def yearsApart(name: String, year: Int): Option[Boolean] = {
+    val m = resolved(name, year)
+    if (useCache(m) && config.cacheBucketKeys.nonEmpty) None
+    else Pipeline.yearsApart(steps(m),
+      yearIn = !originalTables(name) && tableList(m).forall(yearsApart(_, year).contains(true)))
+  }
 
   /** E1 `form="raw"`: the raw source verbatim. */
   def rawTable(name: String, years: Seq[Int]): DataFrame = {
@@ -144,8 +230,7 @@ class TableRepo(
   /** E1 `form="cleaned"`: typed/renamed, values untouched — no pipeline. */
   def cleanedTable(name: String, years: Seq[Int]): DataFrame = {
     val parts = availableYears(name, years).flatMap { y =>
-      rawReader(name, y).map(raw =>
-        CleanOps.cleanTable(raw, CleanOps.compileSpec(tablesMeta(name), y, config.resolver)))
+      rawReader(name, y).map(raw => CleanOps.cleanTable(raw, cleanSpec(name, y)))
     }
     require(parts.nonEmpty, s"table $name has no data for years $years")
     CleanOps.unionAll(parts)
@@ -177,44 +262,92 @@ class TableRepo(
       if (localSchema.isNull) schemaMeta else Meta.deepMerge(schemaMeta, localSchema),
       rawReader, classifications, householdMeta, externalWeights, depSize, config)
 
-  /** Build one (table, year); None when the raw source is absent (the
-    * reference drops empty tables from concats, data_engine.py:643-645).
+  /** Build one table over one era; None when no raw source is present
+    * (the reference drops empty tables from concats,
+    * data_engine.py:643-645). A multi-year era's frame carries each row's
+    * year in [[Pipeline.EraYear]].
     */
-  def load(name: String, year: Int): Option[DataFrame] = {
-    val tableSchema = schemaMeta.get(name)
-      .map(m => new VersionResolver(m, year, config.resolver).getVersion)
-      .getOrElse(MNull)
-    if (originalTables(name)) {
-      rawReader(name, year).map { raw =>
-        val spec = CleanOps.compileSpec(tablesMeta(name), year, config.resolver)
-        applyInstructions(CleanOps.cleanTable(raw, spec), tableSchema, name, year)
-      }
+  def load(name: String, years: Seq[Int]): Option[DataFrame] = {
+    val tableSchema = resolved(name, years.head)
+    if (years.size > 1 && yearsApart(name, years.head).isEmpty) {
+      val parts = buildAll(years)(y => load(name, Seq(y)).map(_.withColumn(EraYear, lit(y))))
+      if (parts.isEmpty) None else Some(CleanOps.unionAll(parts))
+    } else if (originalTables(name)) {
+      // opening a raw source lists its files: an era opens its years' at once
+      val raws = buildAll(years)(y => rawReader(name, y).map(y -> _))
+      def build(raw: DataFrame, ys: Seq[Int]) =
+        applyInstructions(CleanOps.cleanTable(raw, cleanSpec(name, years.head)), tableSchema, name, ys)
+      if (raws.isEmpty) None
+      else if (years.size == 1) Some(build(raws.head._2, years))
+      // the clean reads each raw column's type, and a union would coerce
+      // the years' columns to one: years whose raw columns differ are
+      // cleaned apart
+      else if (raws.map(_._2.schema.map(f => f.name -> f.dataType).toSet).distinct.size > 1)
+        Some(CleanOps.unionAll(raws.map { case (y, raw) => build(raw, Seq(y)).withColumn(EraYear, lit(y)) }))
+      else Some(build(eraLeaf(raws), years))
     } else if (tableSchema.isNull) {
       throw new NoSuchElementException(s"Table name $name is not available in schema")
     } else {
-      val cached = if (useCache(tableSchema)) readCache(name, year) else None
+      val cached = if (useCache(tableSchema)) readCache(name, years) else None
       cached.orElse {
-        val deps = tableSchema.get("table_list") match {
-          case Some(MStr(t))     => Seq(t)
-          case Some(MList(ts))   => ts.map(_.asStr)
-          case other             => throw new IllegalArgumentException(s"bad table_list: $other")
-        }
-        val children = deps.flatMap(d => load(d, year))
+        val children = buildAll(tableList(tableSchema))(load(_, years))
         if (children.isEmpty) None
         else {
-          val built = applyInstructions(CleanOps.unionAll(children), tableSchema, name, year)
-          if (useCache(tableSchema)) Some(writeCache(built, name, year)) else Some(built)
+          val built = applyInstructions(CleanOps.unionAll(children), tableSchema, name, years)
+          if (useCache(tableSchema)) Some(writeCache(built, name, years)) else Some(built)
         }
       }
     }
   }
 
-  private def applyInstructions(df: DataFrame, tableSchema: Meta, name: String, year: Int): DataFrame =
-    tableSchema.get("instructions") match {
-      case None | Some(MNull) => df
-      case Some(instr) =>
-        Pipeline.run(df, Pipeline.compile(instr), Pipeline.Context(year, name, this))
+  private def applyInstructions(df: DataFrame, tableSchema: Meta, name: String, years: Seq[Int]): DataFrame =
+    steps(tableSchema) match {
+      case Seq() => df
+      case ss    => Pipeline.run(df, ss, Pipeline.Context(years, name, this))
     }
+
+  /** One era's per-year frames as one frame, with each row's year in
+    * [[Pipeline.EraYear]]. Frames that are bare scans of files in one
+    * format, with equal options and schema, become ONE scan of all their
+    * files, and each row's year comes from its file
+    * (`_metadata.file_path`). A union of per-year scans would not do:
+    * Catalyst pushes projections and filters through a `Union`, so every
+    * year would keep its own leaf stage and its own generated class.
+    * Other frames are unioned, each with its year as a literal.
+    */
+  private def eraLeaf(frames: Seq[(Int, DataFrame)]): DataFrame = {
+    def scan(df: DataFrame): Option[HadoopFsRelation] = df.queryExecution.analyzed match {
+      case l: LogicalRelation => l.relation match {
+        case r: HadoopFsRelation if r.location.isInstanceOf[InMemoryFileIndex] &&
+            r.partitionSchema.isEmpty && r.bucketSpec.isEmpty && !l.isStreaming &&
+            l.output.map(_.name) == r.dataSchema.fieldNames.toSeq => Some(r)
+        case _ => None
+      }
+      case _ => None
+    }
+    val scans = frames.map(f => scan(f._2))
+    // `_metadata.file_path` holds a file's path as `Path.toString` prints it
+    lazy val files = frames.map { case (y, df) =>
+      y -> df.inputFiles.toSeq.map(f => new Path(new java.net.URI(f)).toString)
+    }
+    val oneScan = frames.size > 1 && scans.forall(_.isDefined) &&
+      scans.flatten.map(r => (r.fileFormat.getClass, r.options - "path", r.dataSchema)).distinct.size == 1 &&
+      files.flatMap(_._2).distinct.size == files.map(_._2.size).sum
+    if (!oneScan) CleanOps.unionAll(frames.map { case (y, df) => df.withColumn(EraYear, lit(y)) })
+    else {
+      val r = scans.head.get
+      // the per-year reads listed these paths, so the session's file
+      // status cache answers this listing and no job starts
+      val index = new InMemoryFileIndex(r.sparkSession, scans.flatten.flatMap(_.location.rootPaths),
+        r.options, None, FileStatusCache.getOrCreate(r.sparkSession), Some(PartitionSpec.emptySpec))
+      val all = spark.baseRelationToDataFrame(r.copy(location = index)(r.sparkSession))
+      val path = col("_metadata.file_path")
+      val year = files.init.tail.foldLeft(when(path.isin(files.head._2: _*), files.head._1)) {
+        case (acc, (y, fs)) => acc.when(path.isin(fs: _*), y)
+      }.otherwise(lit(files.last._1))
+      all.withColumn(EraYear, year)
+    }
+  }
 
   // ------------------------------------------------------------------ cache (A9)
 
@@ -234,25 +367,8 @@ class TableRepo(
     * misread.
     */
   private def fingerprint(name: String, year: Int): String = {
-    def depsOf(n: String): Seq[String] = schemaMeta.get(n)
-      .map(m => new VersionResolver(m, year, config.resolver).getVersion)
-      .flatMap(_.get("table_list")).map {
-        case MStr(t)   => Seq(t)
-        case MList(ts) => ts.map(_.asStr)
-        case _         => Seq.empty
-      }.getOrElse(Seq.empty)
-    val seen = scala.collection.mutable.LinkedHashSet[String](name)
-    var frontier = depsOf(name)
-    while (frontier.nonEmpty) {
-      frontier.foreach(seen.add)
-      // prune against seen: a diamond-shaped DAG would otherwise
-      // multiply duplicate entries per level (exponential walk), and a
-      // cyclic table_list would never terminate
-      frontier = frontier.flatMap(depsOf).distinct.filterNot(seen.contains)
-    }
-    val parts = seen.toSeq.sorted.map { t =>
-      val schemaStr = schemaMeta.get(t).map(m =>
-        new VersionResolver(m, year, config.resolver).getVersion.toString).getOrElse("")
+    val parts = reached(name)(t => tableList(resolved(t, year))).sorted.map { t =>
+      val schemaStr = schemaMeta.get(t).map(_ => resolved(t, year).toString).getOrElse("")
       s"$t:${depSize(t, year).getOrElse(-1L)}:${schemaStr.hashCode}"
     }
     val layout =
@@ -263,9 +379,11 @@ class TableRepo(
   }
 
   /** An entry's name. A `yearMarked` entry was written from a plan whose
-    * lineage shows `Year` is the literal `year` in every row, so its reads
-    * project `Year` as that literal again and keep the lineage a plain
-    * parquet scan loses. Other entries read `Year` from the files.
+    * `Year` is known to be `year` in every row: its lineage shows the
+    * literal, or an era build kept years apart. Its reads project `Year`
+    * again, as that literal or from an era's file-path map, and keep the
+    * lineage a plain parquet scan loses. Other entries read `Year` from
+    * the files.
     */
   private def cacheEntry(name: String, year: Int, yearMarked: Boolean): String =
     s"${name}_${year}_${fingerprint(name, year)}${if (yearMarked) "_year" else ""}"
@@ -311,10 +429,17 @@ class TableRepo(
   private def withLiteralYear(df: DataFrame, year: Int): DataFrame =
     df.withColumn("Year", lit(year).cast(df.schema("Year").dataType))
 
-  private def readCache(name: String, year: Int): Option[DataFrame] =
-    Seq(true, false).iterator.map(marked => (marked, cacheEntry(name, year, marked)))
+  /** Whether `year`'s entry of `name` is marked, and its name, if written. */
+  private def cached(name: String, year: Int): Option[(Boolean, String)] =
+    Seq(true, false).iterator.map(marked => marked -> cacheEntry(name, year, marked))
       .find { case (_, entry) => pathExists(cachePath(entry)) }
-      .map { case (marked, entry) =>
+
+  /** The era's entries, read as one scan when every year has one. */
+  private def readCache(name: String, years: Seq[Int]): Option[DataFrame] = {
+    val found = years.map(y => cached(name, y).map(y -> _))
+    if (found.exists(_.isEmpty)) None
+    else found.flatten match {
+      case Seq((year, (marked, entry))) =>
         val p = cachePath(entry)
         val t = cacheTableName(entry)
         val df =
@@ -330,26 +455,57 @@ class TableRepo(
                 spark, t, p, config.cacheBucketKeys, config.cacheBucketCount)
             else plain
           }
-        if (marked) withLiteralYear(df, year) else df
-      }
+        Some(if (marked) withLiteralYear(df, year) else df)
+      case entries =>
+        val df = eraLeaf(entries.map { case (y, (_, entry)) => y -> readParquet(cachePath(entry)) })
+        // a marked era reads `Year` from the file-path map, as a marked
+        // single year reads it from a literal
+        Some(if (entries.forall(_._2._1))
+          df.withColumn("Year", col(EraYear).cast(df.schema("Year").dataType))
+        else df)
+    }
+  }
 
-  private def writeCache(df: DataFrame, name: String, year: Int): DataFrame = {
-    val keys = bucketKeysFor(df)
-    // a literal Year would hide the bucket layout's partitioning on a Year key
-    val marked = df.columns.contains("Year") && !keys.contains("Year") &&
-      YearLineage.of(df).contains(Seq(year))
-    val entry = cacheEntry(name, year, marked)
-    val p = cachePath(entry)
-    val written =
-      if (keys.nonEmpty) {
-        graft.sources.RawSources.writeBucketed(df, cacheTableName(entry), p, keys, config.cacheBucketCount)
-        spark.table(cacheTableName(entry))
-      } else {
-        df.write.mode("overwrite").parquet(p)
-        cacheSchemas.put(p, df.schema)
-        readParquet(p)
-      }
-    if (marked) withLiteralYear(written, year) else written
+  private def writeCache(df: DataFrame, name: String, years: Seq[Int]): DataFrame = years match {
+    case Seq(year) =>
+      val keys = bucketKeysFor(df)
+      // a literal Year would hide the bucket layout's partitioning on a Year key
+      val marked = df.columns.contains("Year") && !keys.contains("Year") &&
+        YearLineage.of(df).contains(Seq(year))
+      val entry = cacheEntry(name, year, marked)
+      val p = cachePath(entry)
+      val written =
+        if (keys.nonEmpty) {
+          graft.sources.RawSources.writeBucketed(df, cacheTableName(entry), p, keys, config.cacheBucketCount)
+          spark.table(cacheTableName(entry))
+        } else {
+          df.write.mode("overwrite").parquet(p)
+          cacheSchemas.put(p, df.schema)
+          readParquet(p)
+        }
+      if (marked) withLiteralYear(written, year) else written
+    case _ =>
+      // one job writes every year's entry, as one directory per year of
+      // a write partitioned by the era year; `Year` holds each row's year
+      // wherever the era keeps years apart
+      val marked = df.columns.contains("Year") && yearsApart(name, years.head).contains(true)
+      val schema = df.drop(EraYear).schema
+      val tmp = new Path(s"${config.cacheDir.get}/_era_${java.util.UUID.randomUUID}")
+      val fs = tmp.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      try {
+        df.write.partitionBy(EraYear).parquet(tmp.toString)
+        years.distinct.foreach { y =>
+          val p = new Path(cachePath(cacheEntry(name, y, marked)))
+          val part = new Path(tmp, s"$EraYear=$y")
+          fs.delete(p, true)
+          // a year without rows has no directory; it gets an empty entry
+          if (!fs.exists(part))
+            spark.createDataFrame(java.util.Collections.emptyList[Row](), schema).write.parquet(p.toString)
+          else if (!fs.rename(part, p)) throw new java.io.IOException(s"could not move $part to $p")
+          cacheSchemas.put(p.toString, schema)
+        }
+      } finally fs.delete(tmp, true)
+      readCache(name, years).get
   }
 
   // ------------------------------------------------------------------ weights (E6)
@@ -397,17 +553,22 @@ class TableRepo(
     * (data_engine.py:700-754).
     */
   def weights(years: Seq[Int], adjustForHouseholdSize: Boolean = false): DataFrame = {
-    val parts = years.map { y =>
-      if (y <= config.externalWeightsYearMax) {
-        val ext = externalWeights.getOrElse(
-          throw new IllegalStateException(s"no external weights source for year $y"))
-        ext.where(col("Year") === y).select(col("Year"), col("ID"), col("Weight"))
-      } else {
-        val hh = load("household_information", y).getOrElse(
-          throw new IllegalStateException(s"household_information missing for $y"))
-        hh.select(lit(y).as("Year"), col("ID"), col("Weight"))
-      }
+    val (external, surveyed) = years.partition(_ <= config.externalWeightsYearMax)
+    val fromExternal = external.headOption.map { y =>
+      val ext = externalWeights.getOrElse(
+        throw new IllegalStateException(s"no external weights source for year $y"))
+      ext.where(col("Year").isin(external: _*)).select(col("Year"), col("ID"), col("Weight"))
     }
+    val fromHousehold = buildAll(eras("household_information", surveyed)) { era =>
+      val hh = load("household_information", era)
+      // an era's frame holds the years whose source is present
+      val present = hh.fold(Seq.empty[Int])(df =>
+        if (era.size == 1) era else YearLineage.of(df, EraYear).getOrElse(era))
+      era.filterNot(present.contains).headOption.foreach(y =>
+        throw new IllegalStateException(s"household_information missing for $y"))
+      hh.map(_.select(Pipeline.yearOf(era).as("Year"), col("ID"), col("Weight")))
+    }
+    val parts = fromExternal.toSeq ++ fromHousehold
     val w = CleanOps.unionAll(parts)
     if (!adjustForHouseholdSize) w
     else {

@@ -3,7 +3,7 @@ package graft.engine
 import scala.util.Try
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.catalyst.expressions.{Alias, Attribute, Cast, ExprId, Expression, Literal, NamedExpression}
+import org.apache.spark.sql.catalyst.expressions.{Alias, Attribute, CaseWhen, Cast, ExprId, Expression, Literal, NamedExpression}
 import org.apache.spark.sql.catalyst.plans.{Cross, ExistenceJoin, Inner, LeftAnti, LeftOuter, LeftSemi, RightOuter}
 import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Join, LogicalPlan, Project, UnaryNode, Union}
 import org.apache.spark.sql.types.IntegerType
@@ -11,11 +11,17 @@ import org.apache.spark.sql.types.IntegerType
 /** The survey years a frame's year column can hold, read off its analyzed
   * plan instead of probed from its data, so asking starts no Spark job.
   *
-  * Every per-year branch the engine builds projects its year as a literal
-  * (`add_year`, the weights table, a marked A9 cache read), and the
+  * Every single-year branch the engine builds projects its year as a
+  * literal (`add_year`, the weights table, a marked A9 cache read). A
+  * multi-year era's leaf is one relation over every year's files, and
+  * projects its year from the file-path map: a `CASE` on
+  * `_metadata.file_path` whose every value is a literal year. The
   * operators above pass that column through. The walk follows the column's
   * attribute down the plan:
-  *   - a `Project` that aliases a literal, or a cast of one, gives that year;
+  *   - a `Project` that aliases a literal, a `CASE` whose every value
+  *     (`ELSE` included) is one, or a cast of either gives those years; an
+  *     alias of an attribute, or of a cast of one, passes the attribute's
+  *     years through the cast;
   *   - `Union` takes the union of its branches' years;
   *   - `Join`, from a side whose rows it keeps, and `Aggregate` grouping
   *     keys pass the year through, and so does a unary node whose child
@@ -45,8 +51,7 @@ object YearLineage {
         .flatMap(through(a.child, _, k => a.groupingExpressions.exists(_.semanticEquals(k))))
     case u: Union =>
       val i = u.output.indexWhere(_.exprId == id)
-      val branches = if (i < 0) Seq(None) else u.children.map(c => yearsOf(c, c.output(i).exprId))
-      if (branches.forall(_.isDefined)) Some(branches.flatten.reduce(_ ++ _)) else None
+      if (i < 0) None else all(u.children.map(c => yearsOf(c, c.output(i).exprId)))
     case j: Join =>
       def carries(side: LogicalPlan) = side.output.exists(_.exprId == id)
       j.joinType match {
@@ -63,18 +68,29 @@ object YearLineage {
     * year, or an attribute of `child` (renamed or not) that `passes`.
     */
   private def through(child: LogicalPlan, e: NamedExpression,
-                      passes: Attribute => Boolean): Option[Set[Int]] = e match {
-    case a: Attribute if passes(a) => yearsOf(child, a.exprId)
-    case Alias(a: Attribute, _) if passes(a) => yearsOf(child, a.exprId)
-    case Alias(v, _) if isLiteral(v) => literalYear(v).map(Set(_))
+                      passes: Attribute => Boolean): Option[Set[Int]] = {
+    val v = e match { case Alias(x, _) => x; case x => x }
+    valuesOf(child, v, passes).flatMap(vs => all(vs.map(literalYear(_).map(Set(_)))))
+  }
+
+  /** The values a projected expression can take, as literals: an attribute
+    * of `child` that `passes` (its years), a literal, a `CASE` whose every
+    * value (`ELSE` included) is one of these, or a cast of any of them.
+    */
+  private def valuesOf(child: LogicalPlan, v: Expression,
+                       passes: Attribute => Boolean): Option[Seq[Expression]] = v match {
+    case a: Attribute =>
+      if (passes(a)) yearsOf(child, a.exprId).map(_.toSeq.map(Literal(_))) else None
+    case l: Literal => Some(Seq(l))
+    case c: Cast => valuesOf(child, c.child, passes).map(_.map(x => c.withNewChildren(Seq(x))))
+    case CaseWhen(branches, Some(otherwise)) =>
+      val vs = (branches.map(_._2) :+ otherwise).map(valuesOf(child, _, passes))
+      if (vs.forall(_.isDefined)) Some(vs.flatten.flatten) else None
     case _ => None
   }
 
-  private def isLiteral(e: Expression): Boolean = e match {
-    case _: Literal => true
-    case c: Cast => isLiteral(c.child)
-    case _ => false
-  }
+  private def all(years: Seq[Option[Set[Int]]]): Option[Set[Int]] =
+    if (years.forall(_.isDefined)) Some(years.flatten.foldLeft(Set.empty[Int])(_ ++ _)) else None
 
   /** The literal as the probe reads it, `CAST(year AS INT)`; a null or a
     * value that does not cast gives `None`, so the probe reports it.

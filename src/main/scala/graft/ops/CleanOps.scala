@@ -217,13 +217,14 @@ object CleanOps {
   /** B1-B4: raw DataFrame -> cleaned DataFrame in one projection.
     * Columns absent from metadata follow the `missings` policy
     * (data_cleaner.py:157-179); matching is case-insensitive on upper()
-    * like the reference's `column_name.upper()`.
+    * like the reference's `column_name.upper()`. A multi-year era's
+    * [[Pipeline.EraYear]] passes through.
     */
   def cleanTable(raw: DataFrame, spec: TableCleanSpec): DataFrame = {
     val specByRaw = spec.columns.map(c => c.rawName.toUpperCase -> c).toMap
     val rawTypes = raw.schema.fields.map(f => f.name -> f.dataType).toMap
     val projections = raw.columns.toSeq.flatMap { c =>
-      specByRaw.get(c.toUpperCase) match {
+      if (c == Pipeline.EraYear) Some(col(c)) else specByRaw.get(c.toUpperCase) match {
         case Some(cs) => Some(cleanColumn(cs.copy(rawName = c), rawTypes(c)))
         case None if spec.dropped(c.toUpperCase) => None
         case None if spec.missings == "error" =>

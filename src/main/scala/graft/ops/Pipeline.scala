@@ -36,12 +36,59 @@ object Pipeline {
     */
   type FnRegistry = Map[String, DataFrame => DataFrame]
 
+  /** The steps run over one era: a set of survey years whose builds
+    * resolve identically. A frame built for one year holds that year's
+    * rows; a frame built for several carries each row's year in
+    * [[EraYear]].
+    */
   final case class Context(
-      year: Int,
+      years: Seq[Int],
       tableName: String,
       provider: TableProvider,
       functions: FnRegistry = StandardFunctions.registry,
-  )
+  ) {
+    require(years.nonEmpty, s"no years to build $tableName for")
+  }
+
+  /** The column in which a multi-year era's frames carry each row's
+    * survey year, from the leaf up, whether or not the table adds `Year`.
+    * The engine drops it from the tables it returns.
+    */
+  val EraYear = "graft_era_year"
+
+  /** Each row's survey year in a frame built for `years`. */
+  def yearOf(years: Seq[Int]): Column =
+    if (years.size == 1) lit(years.head) else col(EraYear)
+
+  /** Whether running `steps` over a frame that holds several years gives,
+    * for every year, the rows that running them over that year alone
+    * gives — `Some` of whether `Year` still holds each row's year after
+    * them, or `None`. `yearIn`: whether it does before them.
+    *
+    * Row-wise steps qualify. So do the steps that key on `Year` while it
+    * holds each row's year: the decorators, a groupby-sum or a join on
+    * keys that include it, and the registry functions (row-wise, or
+    * grouped by `(Year, ID)`). Any other step does not.
+    */
+  def yearsApart(steps: Seq[Step], yearIn: Boolean): Option[Boolean] =
+    steps.foldLeft(Option(yearIn)) {
+      case (None, _) => None
+      case (Some(live), step) => step match {
+        case AddYear => Some(true)
+        case AddTableName | ApplyFilter(_) => Some(live)
+        case CreateColNumeric(name, _) => Some(live && name != "Year")
+        case CreateColCategorical(name, _) => Some(live && name != "Year")
+        case ApplyOrder(cols) => Some(live && cols.exists(_._1 == "Year"))
+        case Melt(drop, ids, varName, valueName) =>
+          Some(live && ids.contains("Year") && !drop.contains("Year") &&
+            varName != "Year" && valueName != "Year")
+        case GroupBySum(keys, _) => if (live && keys.contains("Year")) Some(true) else None
+        case Join(_, columns) => if (live && columns.contains("Year")) Some(true) else None
+        case ExternalFunction(name) =>
+          if (live && StandardFunctions.registry.contains(name)) Some(true) else None
+        case AddWeights | AddClassification(_) | AddAttribute(_) => if (live) Some(true) else None
+      }
+    }
 
   sealed trait Step
   case object AddYear extends Step
@@ -167,8 +214,12 @@ object Pipeline {
   def run(df: DataFrame, steps: Seq[Step], ctx: Context): DataFrame =
     steps.foldLeft(df)((acc, s) => runStep(acc, s, ctx))
 
+  /** The era-year column, when `df` carries it, appended to `cols`. */
+  private def withEraYear(df: DataFrame, cols: Seq[String]): Seq[String] =
+    if (df.columns.contains(EraYear) && !cols.contains(EraYear)) cols :+ EraYear else cols
+
   def runStep(df: DataFrame, step: Step, ctx: Context): DataFrame = step match {
-    case AddYear       => df.withColumn("Year", lit(ctx.year))
+    case AddYear       => df.withColumn("Year", yearOf(ctx.years))
     case AddTableName  => df.withColumn("Table_Name", lit(ctx.tableName))
     case AddWeights    => ctx.provider.addWeights(df)
     case AddClassification(s) => ctx.provider.addClassification(df, s)
@@ -178,7 +229,7 @@ object Pipeline {
       // project to exact list + inline casts (data_engine.py:334-345)
       df.select(cols.map { case (c, t) =>
         t.map(tt => col(c).cast(sparkType(tt)).as(c)).getOrElse(col(c))
-      }: _*)
+      } ++ withEraYear(df, Nil).map(col): _*)
 
     case CreateColNumeric(name, Left(i)) => df.withColumn(name, lit(i))
     case CreateColNumeric(name, Right(e)) =>
@@ -207,7 +258,8 @@ object Pipeline {
     case GroupBySum(keys, valueCols) =>
       val targets = valueCols.getOrElse {
         df.schema.fields.collect {
-          case f if !keys.contains(f.name) && f.dataType.isInstanceOf[NumericType] => f.name
+          case f if !keys.contains(f.name) && f.name != EraYear &&
+            f.dataType.isInstanceOf[NumericType] => f.name
         }.toSeq
       }
       require(targets.nonEmpty,
@@ -225,26 +277,34 @@ object Pipeline {
       // CASE chain evaluated per join row, +40% query time).
       // foldLeft, not reduce: zero keys (a global `.groupby([]).sum()`
       // chain) must stay a valid global aggregate, not empty.reduce
-      df.groupBy(keys.map(col): _*).agg(aggs.head, aggs.tail: _*)
+      // the era year is a key too: it equals the `Year` key wherever
+      // [[yearsApart]] lets an era run this step
+      df.groupBy(withEraYear(df, keys).map(col): _*).agg(aggs.head, aggs.tail: _*)
         .filter(keys.map(col(_).isNotNull).foldLeft(lit(true))(_ && _))
 
     case Melt(drop, ids, varName, valueName) =>
       val dropped = df.drop(drop: _*)
-      val values = dropped.columns.filterNot(ids.contains).toSeq
+      val idCols = withEraYear(dropped, ids)
+      val values = dropped.columns.filterNot(idCols.contains).toSeq
       // pandas .stack() drops NaN -> filter nulls after unpivot
-      dropped.unpivot(ids.map(col).toArray, values.map(col).toArray, varName, valueName)
+      dropped.unpivot(idCols.map(col).toArray, values.map(col).toArray, varName, valueName)
         .filter(col(valueName).isNotNull)
 
     case ExternalFunction(name) =>
-      ctx.functions.getOrElse(name,
+      val out = ctx.functions.getOrElse(name,
         throw new IllegalArgumentException(s"unregistered function $name"))(df)
+      // a registry function that groups by (Year, ID) drops the era year;
+      // `Year` holds it wherever [[yearsApart]] lets an era run this step
+      if (df.columns.contains(EraYear) && !out.columns.contains(EraYear))
+        out.withColumn(EraYear, col("Year").cast(IntegerType))
+      else out
 
     case Join(tableName, columns) =>
       // inner merge with recursively-built table for the years present
       // (data_engine.py:434-449). Broadcast only when the provider marks
       // the table dimension-sized; fact-fact joins shuffle (AQE picks the
       // strategy) instead of OOMing the driver at scale.
-      val other0 = ctx.provider.table(tableName, Seq(ctx.year))
+      val other0 = ctx.provider.table(tableName, ctx.years)
       val other = if (ctx.provider.broadcastable(tableName)) broadcast(other0) else other0
       df.join(other, columns, "inner")
   }

@@ -180,10 +180,22 @@ Weighted_Total:
     assert(w(HbsFixtures.U1) == 2L && w(HbsFixtures.R1) == 4L)
   }
 
-  test("C17 multi-year concat unions per-year builds") {
+  test("C17 multi-year concat builds one branch per era") {
+    import org.apache.spark.sql.catalyst.expressions.Alias
+    import org.apache.spark.sql.catalyst.plans.logical.Project
     val multi = repo().table("Expenditures", Seq(1399, 1400))
     assert(multi.count() == 12) // same fixture rows built for both years
     assert(multi.select("Year").distinct().count() == 2)
+    // both years resolve identically: one era, so the annualization runs
+    // once over the union of the years' raw frames
+    val annualized = multi.queryExecution.analyzed.collect {
+      case p: Project if p.projectList.exists {
+        case a: Alias => a.name == "Gross_Expenditure"
+        case _ => false
+      } => p
+    }
+    assert(annualized.size == 1)
+    assert(!multi.columns.contains(graft.ops.Pipeline.EraYear))
   }
 
   test("external weights source used for years <= 1395") {

@@ -114,4 +114,33 @@ class YearLineageSpec extends SparkSpec {
     assert(unmarked.schema("Year").dataType == marked.schema("Year").dataType)
     assert(rows(unmarked) == markedRows)
   }
+
+  test("a data-carried era year, from a merged raw relation and from an A9 era entry, gives the era's years") {
+    import org.apache.spark.sql.execution.datasources.LogicalRelation
+    def relations(df: DataFrame) = df.queryExecution.analyzed.collect { case l: LogicalRelation => l }.size
+    val era = 1390 to 1393
+    val raw = tempDir("graft_year_lineage_era").toString
+    EraFixtures.writeRaw(raw, era)
+    val food = EraFixtures.repo(spark, raw).table("food", era)
+    assert(relations(food) == 1)
+    assert(YearLineage.of(food) == Some(era))
+    assert(food.select("Year").distinct().collect().map(_.getInt(0)).sorted.toSeq == era)
+
+    val cache = tempDir("graft_year_lineage_era_cache").toString
+    val written = EraFixtures.repo(spark, raw, Some(cache)).table("Expenditures", era)
+    val entries = new java.io.File(cache).listFiles().map(_.getName).filter(_.startsWith("Expenditures_"))
+    assert(entries.length == era.size && entries.forall(_.endsWith("_year.parquet")), entries.toSeq)
+    // a new repo reads the era's entries as one parquet scan
+    val r = EraFixtures.repo(spark, raw, Some(cache))
+    val read = r.table("Expenditures", era)
+    assert(relations(read) == 1)
+    assert(YearLineage.of(read) == Some(era))
+    assert(read.schema == written.schema)
+    assert(rows(read) == rows(written))
+    assert(rows(read) == rows(era.map(y => r.table("Expenditures", Seq(y))).reduce(_.unionByName(_))))
+    // the same rows as a frame the user built are probed
+    val user = userBuilt(read.where(col("Year") =!= 1391))
+    assert(YearLineage.of(user).isEmpty)
+    assert(r.yearsOf(user) == era.filter(_ != 1391))
+  }
 }

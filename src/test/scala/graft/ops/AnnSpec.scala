@@ -6,18 +6,36 @@ import org.apache.spark.sql.functions._
 class AnnSpec extends SparkSpec {
 
   private val dim = 16
+
+  /** `df` written to parquet and read back. Over an in-memory relation the
+    * optimizer's `ConvertToLocalRelation` evaluates a per-row projection
+    * at plan time, in interpreted mode, so the codegen'd kernels would not
+    * run.
+    */
+  private def viaParquet(df: org.apache.spark.sql.DataFrame) = {
+    val path = tempDir("graft_ann_corpus").toString + "/corpus"
+    df.write.parquet(path)
+    spark.read.parquet(path)
+  }
+
+  /** Deterministic pseudo-random vectors, read from parquet. */
   private def vecs(n: Int) = {
     import spark.implicits._
-    // deterministic pseudo-random vectors
-    (0 until n).map { i =>
+    viaParquet((0 until n).map { i =>
       val v = Array.tabulate(dim) { d =>
         var x = 77L + i * 131L + d * 31L
         x ^= x >>> 12; x ^= x << 25; x ^= x >>> 27
         ((x * 0x2545F4914F6CDD1DL >>> 11).toFloat / (1L << 53).toFloat) * 2f - 1f
       }
       (i.toLong, v.toSeq)
-    }.toDF("vec_id", "embedding")
+    }.toDF("vec_id", "embedding"))
   }
+
+  /** The names of the native kernels left in `df`'s optimized plan. */
+  private def kernels(df: org.apache.spark.sql.DataFrame): Set[String] =
+    df.queryExecution.optimizedPlan.flatMap(_.expressions.flatMap(_.collect {
+      case e if e.getClass.getPackage.getName == "graft.plans" => e.getClass.getSimpleName
+    })).toSet
 
   test("brute-force top-k: self excluded, ranks dense, cosine descending") {
     val df = vecs(50)
@@ -219,10 +237,11 @@ class AnnSpec extends SparkSpec {
       base.zipWithIndex.map { case (v, d) => (v + (if (d == i % dim) 0.001 * i else 0.0)).toFloat }.toSeq
     val cA = Array.tabulate(dim)(d => if (d == 0) 1.0 else 0.01)
     val cB = Array.tabulate(dim)(d => if (d == 1) 1.0 else 0.01)
-    val df = ((0 until 20).map(i => (i.toLong, around(cA, i))) ++
-      (20 until 40).map(i => (i.toLong, around(cB, i)))).toDF("vec_id", "embedding")
+    val df = viaParquet(((0 until 20).map(i => (i.toLong, around(cA, i))) ++
+      (20 until 40).map(i => (i.toLong, around(cB, i)))).toDF("vec_id", "embedding"))
     // init centroids NEAR the groups but off their means
     val init = Array(cA.map(_ * 0.5), cB.map(_ * 0.5))
+    assert(kernels(Ann.kmeansMeans(df, init))("NearestCentroid"))
     val step1 = Ann.kmeansStep(df, init)
     // each new centroid ~ its group mean: dominant axis ≈ 1.0, not 0.5
     assert(math.abs(step1(0)(0) - 1.0) < 0.01, s"centroid 0 axis0 = ${step1(0)(0)}")
@@ -453,9 +472,14 @@ class AnnSpec extends SparkSpec {
     def asMap(out: org.apache.spark.sql.DataFrame) = out.collect()
       .map(r => r.getAs[Long]("vec_id") ->
         (r.getAs[Int]("cluster"), r.getAs[Double]("centroid_sim"))).toMap
-    val flat = asMap(Ann.assignClustersAuto(df, ctrs, kThreshold = 4096))
+    val flatDf = Ann.assignClustersAuto(df, ctrs, kThreshold = 4096)
     // kThreshold below k forces the two-level frame route; full probe
-    val routed = asMap(Ann.assignClustersAuto(df, ctrs, kThreshold = 8))
+    val routedDf = Ann.assignClustersAuto(df, ctrs, kThreshold = 8)
+    // the frame route assigns its k-row centroid frame in memory; its
+    // corpus side scores through the dot-product kernel
+    assert(kernels(flatDf)("NearestCentroid") && kernels(routedDf)("VecDot"))
+    val flat = asMap(flatDf)
+    val routed = asMap(routedDf)
     assert(flat.size == 150 && routed.size == 150)
     assert(routed == flat, {
       val bad = flat.keys.filter(k => routed.get(k) != flat.get(k)).take(3)
@@ -464,11 +488,7 @@ class AnnSpec extends SparkSpec {
   }
 
   test("frame route carries no k-proportional literal in its plan; the flat route does") {
-    // parquet-backed: over an in-memory relation the optimizer evaluates
-    // the flat route's projection itself, and no kernel is left in the plan
-    val path = tempDir("graft_ann_literal").toString + "/corpus"
-    vecs(50).write.parquet(path)
-    val df = spark.read.parquet(path)
+    val df = vecs(50)
     val k = 40
     val ctrs = testCentroids(k)
     val flatPlanMax = maxPlanBakedElems(Ann.assignClustersAuto(df, ctrs, kThreshold = 4096))

@@ -63,7 +63,7 @@ class CleanOpsSpec extends SparkSpec {
     val df = Seq((1L, 1), (2L, 3)).toDF("ID", "Area")
     val out = Pipeline.run(df,
         Seq(Pipeline.CreateColCategorical("Kind", cats)),
-        Pipeline.Context(1400, "t", null))
+        Pipeline.Context(Seq(1400), "t", null))
       .collect().map(r => r.getLong(0) -> r.getString(2)).toMap
     // row 1: urban -> rural (Area in [1,2]) -> settlement (self == rural)
     // row 2: urban, untouched by both later rules
